@@ -12,7 +12,8 @@ re-expressed Spark-first:
   aligned blocks carrying per-block max-impact metadata
   (ref semantics: Lucene 10.4 Lucene101PostingsFormat, consumed via
   solr/core/src/java/org/apache/solr/update/DirectUpdateHandler2.java:513)
-- BM25 (k1=1.2, b=0.75) top-k retrieval with block-max pruning
+- BM25 (k1=1.2, b=0.75) top-k retrieval through one recursive boolean
+  query evaluator
   (ref: solr/core/src/java/org/apache/solr/search/similarities/BM25SimilarityFactory.java:41-51)
 - a relational operator layer mirroring Solr streaming expressions
   (ref: solr/solrj-streaming/) as thin DataFrame combinators

@@ -1,20 +1,23 @@
-"""BM25 top-k query engine with block-max pruning.
+"""BM25 top-k query engine.
 
 Reproduces the reference /select retrieval path
 (solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:1633-1916:
 filter -> score -> top-k priority queue; distributed merge in
-handler/component/QueryComponent.java:970) as a DataFrame plan:
+handler/component/QueryComponent.java:970) as a DataFrame plan.  Every
+query — classic string, flat ParsedQuery or BoolQuery — is one recursive
+boolean tree (QueryParser.jj:135-172), evaluated by one walker
+(SearchEngine._search_tree); per boolean node:
 
-  postings blocks (bucket-pruned scan, term pushdown)
-    -> [optional] block-max pruning against a threshold from a cheap pass
-       (pure-SHOULD term queries only — MUST / phrases / expansions make
-       the theta bound unsound, see the guard in search())
-    -> vectorized decode + BM25 score (mapInPandas, numpy)
-    -> unioned with phrase frames (position intersection) and
+  postings blocks (bucket-pruned scan, term pushdown) of the node's
+  distinct term children
+    -> vectorized decode + BM25 score (mapInPandas, numpy), rows tagged
+       MUST/SHOULD by term
+    -> unioned with phrase frames (position intersection),
        dictionary-expansion frames (prefix/wildcard/fuzzy/range/synonym
-       disjunction groups, each one clause)
+       disjunction groups, each one clause) and sub-query frames
     -> groupBy(doc_id) sum + boolean semantics (MUST clause count,
-       MUST_NOT anti-join, liveDocs tombstone anti-join)
+       minimum-should-match, MUST_NOT anti-join)
+then, at the root: liveDocs tombstone anti-join
     -> orderBy(score desc, doc_id asc).limit(k)    [TakeOrderedAndProject]
     -> join docs for url (two-phase fetch).
 
@@ -27,14 +30,8 @@ dl is the SmallFloat-quantized doc length (1-byte norms, decoded through the
 256-entry table — FieldLengthFeature.java:74-88 semantics), exactly as
 Lucene's BM25 length cache does.
 
-Block-max pruning (Lucene block-max WAND capability, MaxScoreCollector.java:
-45-58, adapted for a distributed batch engine): postings blocks are aligned
-on global doc_id ranges, so for block b the quantity
-  ub(b) = sum over query terms t of idf_t * max_impact(t, b)
-upper-bounds every doc score in that range.  A cheap pass scores ONLY the
-rarest term's postings; the k-th best partial score is a valid lower bound
-theta on the final k-th best full score, and every block with ub(b) < theta
-is skipped before decode.  Pruning never changes results (tested A/B).
+The postings and dictionary store per-block / per-term ``max_impact``
+(Lucene impacts); no query path reads it.
 """
 
 from __future__ import annotations
@@ -43,6 +40,7 @@ import json
 import math
 import os
 import re
+from collections import Counter
 from typing import Iterator
 
 import numpy as np
@@ -66,41 +64,6 @@ from apache___solr_spark.query.parser import (
     parse_query_tree,
 )
 
-
-def _apply_synonyms(pq: ParsedQuery, synonyms: dict[str, list[str]]) -> ParsedQuery:
-    """Rewrite term clauses whose term has synonyms into disjunction
-    (expansion) clauses; MUST_NOT terms exclude every synonym.  Returns a
-    copy — the caller's ParsedQuery is never mutated.  SINGLE-word
-    synonyms only: string queries with multi-word synonyms route through
-    the tree evaluator before reaching here (search() checks
-    _tree_has_multiword_synonym); on a programmatic ParsedQuery a
-    multi-word value is a non-dictionary term and silently matches
-    nothing — use the string/tree path for phrase alternatives."""
-    import copy
-
-    from apache___solr_spark.query.parser import Clause
-
-    pq = copy.deepcopy(pq)
-    for occur, bucket in (("MUST", pq.must), ("SHOULD", pq.should)):
-        for t in [t for t in bucket if t in synonyms]:
-            bucket.remove(t)
-            pq.expand.append(
-                Clause(
-                    occur=occur,
-                    kind="synonym",
-                    value=t,
-                    boost=pq.boosts.pop(t, 1.0),
-                )
-            )
-    for t in [t for t in pq.must_not if t in synonyms]:
-        pq.must_not.extend(x for x in synonyms[t] if x not in pq.must_not)
-    return pq
-
-
-def phrase_label(ptoks: list[str]) -> str:
-    """Clause label for a phrase in the scored stream (terms never contain
-    spaces or quotes, so labels cannot collide with terms)."""
-    return '"' + " ".join(ptoks) + '"'
 
 def bm25_idf(n_docs: int, df: int, dtype=np.float32):
     return dtype(math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
@@ -717,7 +680,7 @@ class SearchEngine:
         "lmjelinekmercer", "boolean") or a Similarity instance
         (query/similarities.py — the SchemaSimilarityFactory analog).
         Non-BM25 similarities score term queries only; phrase/span clauses
-        raise, and block-max θ pruning is disabled (BM25 impacts)."""
+        raise."""
         from apache___solr_spark.query.similarities import get_similarity
 
         self.spark = spark
@@ -869,29 +832,6 @@ class SearchEngine:
             fn, schema=f"term string, doc_id long, score {self._sql_t}"
         )
 
-    def _theta(
-        self,
-        meta: pd.DataFrame,
-        weight_by_term: dict[str, float],
-        boost_by_term: dict[str, float],
-        k: int,
-    ) -> float:
-        """Lower bound on the k-th best final score: fully score the rarest
-        term alone; partial scores lower-bound full scores (sound because
-        every similarity kernel is non-negative)."""
-        scorable = meta[meta["df"] >= k]
-        if scorable.empty:
-            return 0.0
-        rarest = scorable.sort_values(["df", "term"]).iloc[0]["term"]
-        blocks = self._blocks_for([rarest])
-        part = self._scored(
-            blocks, {rarest: weight_by_term[rarest]}, boost_by_term
-        )
-        rows = part.orderBy(F.col("score").desc()).limit(k).collect()
-        if len(rows) < k:
-            return 0.0
-        return float(rows[-1]["score"])
-
     def _expand_cond(self, cl):
         """Dictionary-filter Column for a prefix/wildcard/fuzzy/range clause
         (the FST-seek predicate), or ``None`` for the enumerable kinds
@@ -997,14 +937,18 @@ class SearchEngine:
         nb = self.postings.join(tdf, "term")
         if salts is not None:
             nb = nb.filter(F.col("salt").isin(salts))
+        return self._docs_of(nb).distinct()
+
+    def _docs_of(self, blocks: DataFrame) -> DataFrame:
+        """doc_id of every posting in ``blocks`` — the lightest decode
+        (doc gaps only), for clauses that only exclude."""
         return (
-            nb.select("term", "salt", "n_docs", "doc_gaps")
+            blocks.select("term", "salt", "n_docs", "doc_gaps")
             .mapInPandas(
                 _decode_docs_fn(self.cfg.salt_range),
                 schema="term string, doc_id long",
             )
             .select("doc_id")
-            .distinct()
         )
 
     def _phrase_frame(
@@ -1503,7 +1447,7 @@ class SearchEngine:
         scores identically to span_near/complex_phrase — and idf = the
         summed idfs of every slot member (SpanWeight aggregation).
 
-        Scale shape: identical to the flat path — bucket- and salt-gated
+        Scale shape: identical to the phrase path — bucket- and salt-gated
         scan, one positions decode, per-doc interval algebra inside the
         Arrow batch (candidates already passed the every-slot gate, so
         the per-doc Python matcher runs on the tiny qualifying set, like
@@ -1634,7 +1578,7 @@ class SearchEngine:
 
     def search(
         self,
-        query: str | ParsedQuery,
+        query: str | ParsedQuery | BoolQuery,
         k: int = 10,
         start: int = 0,
         prune: bool = True,
@@ -1651,6 +1595,13 @@ class SearchEngine:
     ) -> DataFrame:
         """Top-k docs for a query. Returns (rank, doc_id[, url], score).
 
+        ``query``: a classic-grammar string, a :class:`ParsedQuery` or a
+        :class:`BoolQuery` — every form is evaluated by the one recursive
+        evaluator (:meth:`_search_tree`, see :meth:`_as_tree`).
+
+        ``prune`` is accepted and ignored, so that existing callers keep
+        working: no query path prunes by a score bound.
+
         ``default_op``: Solr's q.op — with "AND", bare clauses bind as
         MUST (Lucene AND_OPERATOR promote/demote semantics).
 
@@ -1658,11 +1609,7 @@ class SearchEngine:
         reference's most-used request param): each entry is a query whose
         full DocSet intersects the main query's matches BEFORE top-k
         without contributing score (ConstantScore filter semantics — a
-        MUST clause would add its BM25 score; fq must not).  Theta
-        pruning is disabled when a filter is present: theta bounds the
-        global k-th best score, but top-k among the filtered subset can
-        legitimately include docs below that bound.  Salt-level MUST
-        pruning stays on (it only drops ranges that cannot match at all).
+        MUST clause would add its BM25 score; fq must not).
 
         ``doc_filter`` restricts scoring to an explicit (small) doc_id set —
         the rescoring path (ReRankQParserPlugin semantics): the postings scan
@@ -1677,382 +1624,58 @@ class SearchEngine:
         reference's FunctionQuery clauses.
         """
         filter_docset = _filter_docset
-        if fq:
-            for f in fq:
-                ds = self.docset(f)
-                filter_docset = (
-                    ds
-                    if filter_docset is None
-                    else filter_docset.join(ds, "doc_id", "left_semi")
-                )
-        if isinstance(query, str):
-            tree = parse_query_tree(
-                query, analyze_fn=self._analyze, default_op=default_op
+        for f in fq or []:
+            ds = self.docset(f)
+            filter_docset = (
+                ds
+                if filter_docset is None
+                else filter_docset.join(ds, "doc_id", "left_semi")
             )
-            if self.synonyms and self._tree_has_multiword_synonym(tree):
-                # phrase alternatives need the recursive evaluator — the
-                # flat path's expansion groups are term-only
-                return self._search_tree(
-                    tree,
-                    k=k,
-                    start=start,
-                    with_url=with_url,
-                    doc_filter=doc_filter,
-                    bf=bf,
-                    boost=boost,
-                    _docset=_docset,
-                    _filter_docset=filter_docset,
-                    should_combine=should_combine,
-                    tie=tie,
-                )
-            try:
-                pq = lower_tree(tree)
-            except NotFlatQuery:
-                # nested boolean structure (BooleanQuery nesting,
-                # QueryParser.jj:135-172 recursive Clause/Query productions)
-                # -> the recursive evaluator
-                return self._search_tree(
-                    tree,
-                    k=k,
-                    start=start,
-                    with_url=with_url,
-                    doc_filter=doc_filter,
-                    bf=bf,
-                    boost=boost,
-                    _docset=_docset,
-                    _filter_docset=filter_docset,
-                    should_combine=should_combine,
-                    tie=tie,
-                )
-        elif isinstance(query, BoolQuery):
-            # programmatic tree (dismax/edismax dispatch, mm support)
-            return self._search_tree(
-                query,
-                k=k,
-                start=start,
-                with_url=with_url,
-                doc_filter=doc_filter,
-                bf=bf,
-                boost=boost,
-                _docset=_docset,
-                _filter_docset=filter_docset,
-                should_combine=should_combine,
-                tie=tie,
-            )
-        else:
-            pq = query
-        spark = self.spark
-        if pq.is_empty:
-            schema = f"rank int, doc_id long, url string, score {self._sql_t}"
-            return spark.createDataFrame([], schema)
-
-        empty_schema = f"rank int, doc_id long, url string, score {self._sql_t}"
-        if self.synonyms:
-            pq = _apply_synonyms(pq, self.synonyms)
-        # resolve dictionary-expanded clauses (prefix/wildcard/fuzzy/range)
-        exp_groups: list[tuple[str, str, list[str], float]] = []
-        exclude_exp_terms: list[str] = []
-        exclude_exp_frames: list[DataFrame] = []
-        for cl in pq.expand:
-            matched = self._expand_clause(
-                cl, max_expansions=None if cl.occur == "MUST_NOT" else 128
-            )
-            if cl.occur == "MUST_NOT":
-                if matched is None:  # overflowed the literal cap
-                    exclude_exp_frames.append(self._excluded_docs_df(cl))
-                else:
-                    exclude_exp_terms.extend(matched)
-                continue
-            if not matched:
-                if cl.occur == "MUST":
-                    return spark.createDataFrame([], empty_schema)
-                continue
-            exp_groups.append((cl.label, cl.occur, matched, cl.boost))
-
-        terms = pq.scoring_terms
-        phrase_terms = [
-            t
-            for ph in pq.scoring_phrases + pq.must_not_phrases
-            for t in ph
-            if t not in terms
-        ]
-        group_terms = [t for g in exp_groups for t in g[2]]
-        meta = self._term_meta(
-            list(dict.fromkeys(terms + phrase_terms + group_terms))
-        )
-        found = set(meta["term"])
-        terms = [t for t in terms if t in found]
-        must = [t for t in pq.must if t in found]
-        scoring_phrases = [
-            ph for ph in pq.scoring_phrases if all(t in found for t in ph)
-        ]
-        if pq.must and len(must) < len(pq.must):
-            # a required term is absent from the corpus -> empty result
-            return spark.createDataFrame([], empty_schema)
-        if any(
-            any(t not in found for t in ph) for ph in pq.must_phrases
-        ):
-            # a required phrase can never match
-            return spark.createDataFrame([], empty_schema)
-        if not terms and not scoring_phrases and not exp_groups:
-            return spark.createDataFrame([], empty_schema)
-        if not self.sim.supports_phrases and (
-            scoring_phrases or pq.must_not_phrases
-        ):
-            raise NotImplementedError(
-                f"similarity {self.sim.name!r} scores term queries only; "
-                "phrase clauses need BM25 (see query/similarities.py)"
-            )
-        idf_by_term = self._weights(meta)
-        # per-clause boosts travel separately from the statistic weight (the
-        # kernel decides how they compose: multiplied into idf for BM25/
-        # classic, a plain score multiplier for the LM family); the same
-        # (weight, boost) pair feeds scoring AND theta/ub pruning.
-        term_boosts = {
-            t: float(pq.boosts.get(t, 1.0))
-            for t in terms
-            if pq.boosts.get(t, 1.0) != 1.0
-        }
-
-        blocks = self._blocks_for(terms) if terms else None
-
-        if doc_filter is not None and blocks is not None:
-            salts = sorted({int(d) // self.cfg.salt_range for d in doc_filter})
-            blocks = blocks.filter(F.col("salt").isin(salts))
-        if doc_filter is not None:
-            prune = False  # the scan is already tiny; theta pass costs more
-        if filter_docset is not None:
-            # theta bounds the GLOBAL k-th best partial score; top-k among
-            # the fq-filtered subset may include docs below that bound.
-            prune = False
-        if should_combine != "sum":
-            # theta is a SUM-of-partials bound; unsound under dismax combine
-            prune = False
-        if _docset:
-            # theta is a TOP-K bound (k-th best partial score); a DocSet
-            # wants every match, so the pass is unsound here.  Salt-level
-            # MUST pruning below stays on — it only drops ranges that
-            # cannot contain a qualifying doc.
-            prune = False
-
-        # theta pruning is only sound for pure-SHOULD queries: theta is the
-        # k-th best PARTIAL score over docs containing the rarest term, and
-        # under MUST semantics those docs need not satisfy the other required
-        # terms, so theta would overestimate the true qualifying threshold and
-        # silently drop correct results (adversarial A/B fixture in
-        # tests/test_index_query.py::test_must_prune_adversarial).  MUST
-        # queries still get the salt-level pruning below, which is sound.
-        # ... and phrase clauses are excluded from ub(salt), so any phrase
-        # in the query also disables the theta pass.
-        if (
-            prune
-            and self.sim.prunable  # ub(salt) is built from BM25 impacts
-            and blocks is not None
-            and not pq.must_not
-            and not exclude_exp_terms
-            and not exclude_exp_frames
-            and not must
-            and not scoring_phrases
-            and not pq.must_not_phrases
-            and not exp_groups
-        ):
-            term_meta = meta[meta["term"].isin(terms)]
-            # θ must bound the COLLECTOR depth (start+k), not the page
-            # size: offset paging returns ranks start+1..start+k, and a
-            # k-deep bound would prune the very docs those ranks hold
-            theta = self._theta(
-                term_meta, idf_by_term, term_boosts, int(start) + k
-            )
-            if theta > 0.0:
-                # per-term scores are float32-rounded, so a doc score can sit
-                # one ulp ABOVE the float64 upper bound — prune with a small
-                # relative slack so boundary ties are never dropped (the
-                # prune-on == prune-off invariant is enforced by tests).
-                cutoff = theta * (1.0 - 1e-4)
-                idf_expr = F.create_map(
-                    *[
-                        x
-                        for t in terms
-                        for x in (
-                            F.lit(t),
-                            F.lit(
-                                idf_by_term[t] * term_boosts.get(t, 1.0)
-                            ),
-                        )
-                    ]
-                )
-                ub = (
-                    blocks.select(
-                        "salt",
-                        (idf_expr[F.col("term")] * F.col("max_impact")).alias("ub"),
-                    )
-                    .groupBy("salt")
-                    .agg(F.sum("ub").alias("ub"))
-                    .filter(F.col("ub") >= cutoff)
-                    .select("salt")
-                )
-                blocks = blocks.join(ub, "salt", "left_semi")
-
-        if must and blocks is not None:
-            # a doc range can only contain MUST-satisfying docs if every
-            # MUST term has postings in that range — prune the rest up front.
-            must_blocks = (
-                blocks.filter(F.col("term").isin(must))
-                .groupBy("salt")
-                .agg(F.count_distinct("term").alias("nt"))
-                .filter(F.col("nt") == len(must))
-                .select("salt")
-            )
-            blocks = blocks.join(must_blocks, "salt", "left_semi")
-
-        frames = []
-        if blocks is not None:
-            frames.append(self._scored(blocks, idf_by_term, term_boosts))
-        for ph in scoring_phrases:
-            frames.append(
-                self._phrase_frame(
-                    ph,
-                    idf_by_term,
-                    boost=float(pq.boosts.get(phrase_label(ph), 1.0)),
-                    slop=int(pq.slops.get(phrase_label(ph), 0)),
-                    lucene_sloppy=self._sloppy_lucene,
-                ).select(F.lit(phrase_label(ph)).alias("term"), "doc_id", "score")
-            )
-        # NB: the loop variable must not shadow the ``boost`` parameter
-        for label, _occur, matched, gboost in exp_groups:
-            # one disjunction clause: any matching expansion term matches
-            # the clause; its score is the sum of the matched terms' scores
-            gb = self._blocks_for(matched)
-            gscored = self._scored(
-                gb, idf_by_term, {t: float(gboost) for t in matched}
-            )
-            frames.append(
-                gscored.groupBy("doc_id")
-                .agg(F.sum("score").cast(self._sql_t).alias("score"))
-                .select(F.lit(label).alias("term"), "doc_id", "score")
-            )
-        scored = frames[0]
-        for fr in frames[1:]:
-            scored = scored.unionByName(fr)
-        if doc_filter is not None:
-            scored = scored.filter(F.col("doc_id").isin([int(d) for d in doc_filter]))
-        must_labels = (
-            must
-            + [phrase_label(ph) for ph in pq.must_phrases]
-            + [label for label, occ, _m, _b in exp_groups if occ == "MUST"]
-        )
-        if should_combine == "max":
-            # MaxScoreQParserPlugin.java: optional (SHOULD) clauses combine
-            # as DisjunctionMax(tie) — max + tie * sum(others) — while MUST
-            # clauses keep their summed contribution
-            is_must = (
-                F.col("term").isin(must_labels)
-                if must_labels
-                else F.lit(False)
-            )
-            s_should = F.when(~is_must, F.col("score"))
-            dismax = F.coalesce(
-                F.max(s_should)
-                + F.lit(float(tie)) * (F.sum(s_should) - F.max(s_should)),
-                F.lit(0.0),
-            )
-            agg = scored.groupBy("doc_id").agg(
-                (
-                    F.coalesce(
-                        F.sum(F.when(is_must, F.col("score"))), F.lit(0.0)
-                    )
-                    + dismax
-                ).alias("_s"),
-                F.count(
-                    F.when(F.col("term").isin(must_labels), 1)
-                ).alias("_nmust"),
-            )
-        elif should_combine != "sum":
-            raise ValueError(f"unknown should_combine {should_combine!r}")
-        else:
-            agg = scored.groupBy("doc_id").agg(
-                F.sum("score").alias("_s"),
-                F.count(
-                    F.when(F.col("term").isin(must_labels), 1)
-                ).alias("_nmust"),
-            )
-        if must_labels:
-            agg = agg.filter(F.col("_nmust") == len(must_labels))
-        if self.deletes is not None:
-            # liveDocs semantics: deleted docs remain in the postings but
-            # never surface (DirectUpdateHandler2 deleteById -> tombstones)
-            agg = agg.join(self.deletes, "doc_id", "left_anti")
-        # must_not terms never enter meta; _blocks_for of an absent term is
-        # just an empty scan, so no existence filter is needed here
-        exclude_terms = list(pq.must_not) + exclude_exp_terms
-        if exclude_terms:
-            nb = self._blocks_for(exclude_terms)
-            # exclusion only needs doc ids — the constant boolean kernel
-            # sidesteps LM kernels dividing by a zero weight
-            from apache___solr_spark.query.similarities import BooleanSimilarity
-
-            excluded = self._scored(
-                nb,
-                {t: 0.0 for t in exclude_terms},
-                kernel=BooleanSimilarity().kernel(
-                    self.stats["avgdl"], dtype=self._dtype
-                ),
-            ).select("doc_id").distinct()
-            agg = agg.join(excluded, "doc_id", "left_anti")
-        for fr in exclude_exp_frames:
-            # distributed prohibited-clause doc sets (literal-cap overflow)
-            agg = agg.join(fr, "doc_id", "left_anti")
-        for ph in pq.must_not_phrases:
-            if any(t not in found for t in ph):
-                continue  # phrase cannot match any doc -> excludes nothing
-            agg = agg.join(
-                self._phrase_frame(
-                    ph,
-                    idf_by_term,
-                    slop=int(pq.slops.get(phrase_label(ph), 0)),
-                    lucene_sloppy=self._sloppy_lucene,
-                ).select("doc_id"),
-                "doc_id",
-                "left_anti",
-            )
-
-        if filter_docset is not None:
-            agg = agg.join(filter_docset, "doc_id", "left_semi")
-        if _docset == "scored":
-            return agg.select(
-                "doc_id", F.col("_s").cast(self._sql_t).alias("score")
-            )
-        if _docset:
-            return agg.select("doc_id")
-        return self._finalize(
-            self._apply_funcs(
-                agg.select(
-                    "doc_id", F.col("_s").cast(self._sql_t).alias("score")
-                ),
-                bf,
-                boost,
-            ),
-            k,
-            with_url,
+        return self._search_tree(
+            self._as_tree(query, default_op),
+            k=k,
             start=start,
+            with_url=with_url,
+            doc_filter=doc_filter,
+            bf=bf,
+            boost=boost,
+            _docset=_docset,
+            _filter_docset=filter_docset,
+            should_combine=should_combine,
+            tie=tie,
         )
+
+    def _as_tree(self, query, default_op: str = "OR"):
+        """The tree :meth:`_search_tree` evaluates for a search() input: a
+        BoolQuery as given, a ParsedQuery as its one-level tree, a string
+        parsed — and, when it lowers to a flat ParsedQuery, evaluated as
+        that query's tree, so root-level repeated terms score once."""
+        if isinstance(query, ParsedQuery):
+            return query.to_tree()
+        if not isinstance(query, str):
+            return query
+        tree = parse_query_tree(
+            query, analyze_fn=self._analyze, default_op=default_op
+        )
+        try:
+            return lower_tree(tree).to_tree()
+        except NotFlatQuery:
+            return tree
 
     def docset(self, query: str | ParsedQuery) -> DataFrame:
         """Full matching DocSet (search/BitDocSet.java / fq DocSet analog):
         EVERY matching doc_id, no top-k, no scores, no two-phase fetch —
         the input SimpleFacets-style components aggregate over.  Same
-        boolean/expansion/deletion semantics as search(); theta pruning is
-        forced off (it is a top-k bound, unsound for a full DocSet)."""
-        return self.search(query, prune=False, _docset=True).select("doc_id")
+        boolean/expansion/deletion semantics as search()."""
+        return self.search(query, _docset=True).select("doc_id")
 
     def scored_docset(
         self, query, fq: list | None = None
     ) -> DataFrame:
         """Every matching (doc_id, score) — the full scored result set the
         CollapsingQParserPlugin collector sees (it needs scores for ALL
-        matches to pick each group's best, not just the global top-k).
-        Theta pruning forced off for the same reason as :meth:`docset`."""
-        return self.search(query, prune=False, fq=fq, _docset="scored")
+        matches to pick each group's best, not just the global top-k)."""
+        return self.search(query, fq=fq, _docset="scored")
 
     def collapsed_search(
         self,
@@ -2154,7 +1777,7 @@ class SearchEngine:
         order.append(F.col("doc_id").asc())
         rows = (
             full.orderBy(*order)
-            .limit(int(start) + int(k))
+            .limit(min(int(start) + int(k), int(self.stats["N"])))
             .select("doc_id", "url", "score")
             .collect()
         )[int(start):]
@@ -2174,24 +1797,25 @@ class SearchEngine:
 
     def explain_scores(self, query: str | ParsedQuery, k: int = 10) -> DataFrame:
         """debugQuery=true explain analog (response debug component,
-        Lucene Explanation tree): per-(doc, term) score contributions for
-        the top-k hits of a FLAT term/boolean query, flattened to rows
+        Lucene Explanation tree): per-clause score contributions for the
+        top-k hits of a FLAT term/boolean query, flattened to rows
 
-            (rank, doc_id, term, weight, boost, contribution, score)
+            (rank, doc_id, clause, term, weight, boost, contribution, score)
 
         where sum(contribution) over a doc's rows equals its score (float
-        tolerance).  Dictionary-expanded clauses (prefix/wildcard/fuzzy/
-        range) are explained per matched term.  A phrase clause is one row
-        — term = the phrase label, contribution = its PhraseQuery-style
-        score, weight = the summed constituent-term weights (the idf sum
-        Lucene reports in its phrase Explanation); MUST_NOT phrases only
-        exclude and so contribute no rows.  Nested-tree queries raise —
-        a nested disjunction's contribution is not clause-separable in
-        this flattened shape (honest subset; the reference emits a nested
-        Explanation tree there)."""
+        tolerance).  A term clause is one row (clause = term = the term).
+        A phrase or dictionary-expanded (prefix/wildcard/fuzzy/range/
+        group/synonym) clause is one row too — term = the clause label,
+        contribution = the clause score, weight = the summed constituent /
+        matched-term weights (the idf sum Lucene reports in its phrase
+        Explanation); MUST_NOT clauses only exclude and so contribute no
+        rows.  This is the leaf projection of :meth:`explain_scores_tree`
+        over the query's one-level tree.  Nested-tree queries raise — a
+        nested disjunction's contribution is not clause-separable in this
+        flattened shape (honest subset; use explain_scores_tree)."""
         if isinstance(query, str):
             try:
-                pq = lower_tree(
+                query = lower_tree(
                     parse_query_tree(query, analyze_fn=self._analyze)
                 )
             except NotFlatQuery as exc:
@@ -2200,121 +1824,19 @@ class SearchEngine:
                     "queries; use explain_scores_tree for nested boolean "
                     f"structure: {exc}"
                 ) from exc
-        else:
-            pq = query
-        hits = self.search(pq, k=k).select("rank", "doc_id", "score")
-        doc_ids = [int(r["doc_id"]) for r in hits.collect()]
-        empty = (
+        schema = (
             "rank int, doc_id long, clause string, term string, "
             f"weight double, boost double, contribution {self._sql_t}, "
             f"score {self._sql_t}"
         )
-        if not doc_ids:
-            return self.spark.createDataFrame([], empty)
-        if self.synonyms:
-            pq = _apply_synonyms(pq, self.synonyms)
-        # same clause resolution as the flat search path: each scoring term
-        # and each expanded SHOULD/MUST group is its OWN clause — a term
-        # matched both directly and via a wildcard group contributes twice,
-        # exactly as search() scores it
-        clauses: list[tuple[str, list[str], float]] = []
-        for t in pq.scoring_terms:
-            clauses.append((t, [t], float(pq.boosts.get(t, 1.0))))
-        for cl in pq.expand:
-            if cl.occur == "MUST_NOT":
-                continue
-            matched = self._expand_clause(cl)
-            if matched:
-                clauses.append((cl.label, matched, float(cl.boost)))
-        phrase_terms = {t for ph in pq.scoring_phrases for t in ph}
-        all_terms = sorted(
-            {t for _, ts, _ in clauses for t in ts} | phrase_terms
-        )
-        if not all_terms:
-            return self.spark.createDataFrame([], empty)
-        meta = self._term_meta(all_terms)
-        weights = self._weights(meta)
-        found = set(meta["term"])
-        salts = sorted({d // self.cfg.salt_range for d in doc_ids})
-        parts = []
-        winfo_rows = []
-        for label, ts, boost in clauses:
-            ts = [t for t in ts if t in found]
-            if not ts:
-                continue
-            blocks = self._blocks_for(ts).filter(F.col("salt").isin(salts))
-            scored = self._scored(
-                blocks,
-                weights,
-                {t: boost for t in ts} if boost != 1.0 else None,
-            ).filter(F.col("doc_id").isin(doc_ids))
-            parts.append(scored.withColumn("clause", F.lit(label)))
-            winfo_rows.extend(
-                # composite weights (e.g. IB-H3's (lambda, p)) surface
-                # their primary statistic
-                (
-                    label,
-                    t,
-                    float(
-                        weights[t][0]
-                        if isinstance(weights[t], tuple)
-                        else weights[t]
-                    ),
-                    boost,
-                )
-                for t in ts
-            )
-
-        def _primary(w) -> float:
-            return float(w[0] if isinstance(w, tuple) else w)
-
-        # phrase clauses: one row each — exactly the per-phrase frame
-        # search() sums (term = phrase label), scoped to the hit docs
-        for ph in pq.scoring_phrases:
-            if any(t not in found for t in ph):
-                continue
-            label = phrase_label(ph)
-            pboost = float(pq.boosts.get(label, 1.0))
-            pf = self._phrase_frame(
-                ph,
-                weights,
-                boost=pboost,
-                slop=int(pq.slops.get(label, 0)),
-                salts=salts,
-                lucene_sloppy=self._sloppy_lucene,
-            ).filter(F.col("doc_id").isin(doc_ids))
-            parts.append(
-                pf.select(
-                    F.lit(label).alias("term"), "doc_id", "score"
-                ).withColumn("clause", F.lit(label))
-            )
-            winfo_rows.append(
-                (
-                    label,
-                    label,
-                    sum(_primary(weights[t]) for t in set(ph)),
-                    pboost,
-                )
-            )
-        if not parts:
-            return self.spark.createDataFrame([], empty)
-        scored_all = parts[0]
-        for p in parts[1:]:
-            scored_all = scored_all.unionByName(p)
-        winfo = self.spark.createDataFrame(
-            winfo_rows, "clause string, term string, weight double, boost double"
-        )
-        return (
-            hits.join(
-                scored_all.withColumnRenamed("score", "contribution"),
-                "doc_id",
-            )
-            .join(F.broadcast(winfo), ["clause", "term"])
-            .select(
-                "rank", "doc_id", "clause", "term", "weight", "boost",
-                "contribution", "score",
-            )
-            .orderBy("rank", "clause", "term")
+        rows = [
+            (rank, d, term, term, weight, boost, c, sc)
+            for rank, d, _p, _o, kind, _l, weight, boost, c, sc, term
+            in self._explain_rows(query.to_tree(), k)
+            if kind != "bool"
+        ]
+        return self.spark.createDataFrame(rows, schema).orderBy(
+            "rank", "clause", "term"
         )
 
     def explain_scores_tree(
@@ -2352,16 +1874,23 @@ class SearchEngine:
             tree = parse_query_tree(query, analyze_fn=self._analyze)
         else:
             tree = query
-        empty = (
+        schema = (
             "rank int, doc_id long, path string, occur string, kind string,"
             " clause string, weight double, boost double,"
             f" contribution double, score {self._sql_t}"
         )
+        rows = [r[:-1] for r in self._explain_rows(tree, k)]
+        return self.spark.createDataFrame(rows, schema).orderBy("rank", "path")
+
+    def _explain_rows(self, tree, k: int) -> list[tuple]:
+        """The explain walker: explain_scores_tree's rows for the top-k
+        hits of ``tree``, each with the node's bare term (its label for a
+        non-term node) appended."""
         hits = self._search_tree(tree, k=k, with_url=False).select(
             "rank", "doc_id", "score"
         ).collect()
         if not hits:
-            return self.spark.createDataFrame([], empty)
+            return []
         doc_ids = [int(r["doc_id"]) for r in hits]
         rank_by_doc = {int(r["doc_id"]): int(r["rank"]) for r in hits}
         score_by_doc = {int(r["doc_id"]): float(r["score"]) for r in hits}
@@ -2606,12 +2135,14 @@ class SearchEngine:
             if not sc:
                 return
             occur, kind, label, weight, boost, _ok = node_info[path]
+            term = node.term if isinstance(node, TermNode) else label
             matched = [d for d in gate if d in sc]
             for d in matched:
                 rows_out.append(
                     (
                         rank_by_doc[d], d, path, occur, kind, label,
                         weight, boost, sc[d] * cum_boost, score_by_doc[d],
+                        term,
                     )
                 )
             if isinstance(node, BoolQuery) and matched:
@@ -2627,9 +2158,7 @@ class SearchEngine:
                     )
 
         emit(tree, "", set(doc_ids), 1.0)
-        return self.spark.createDataFrame(rows_out, empty).orderBy(
-            "rank", "path"
-        )
+        return rows_out
 
     def _apply_funcs(
         self, frame: DataFrame, bf: list | None, boost: list | None
@@ -2709,10 +2238,13 @@ class SearchEngine:
         collector depth is start+rows (SolrIndexSearcher buildTopDocs
         ``len = start + rows``), sliced driver-side like QueryComponent's
         response window.  Ranks stay GLOBAL (page 2 starts at rank
-        start+1)."""
+        start+1).  The depth is capped at the index's doc count, as
+        SolrIndexSearcher caps it at maxDoc: a k=10**9 "every match"
+        request must not size a 10**9-slot top-k heap."""
+        depth = min(int(start) + int(k), int(self.stats["N"]))
         topk_rows = (
             scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(int(start) + k)
+            .limit(depth)
             .collect()
         )[int(start):]
         schema = (
@@ -2744,9 +2276,9 @@ class SearchEngine:
         return self.spark.createDataFrame(out_rows, schema)
 
     def _apply_synonyms_tree(self, tree: BoolQuery) -> BoolQuery:
-        """Tree-path analog of _apply_synonyms: a term with synonyms becomes
-        a disjunction clause; under MUST_NOT the clause excludes every
-        synonym (matching the flat path's exclusion extension).
+        """Query-time synonyms: a term with synonyms becomes a disjunction
+        clause; under MUST_NOT the clause excludes every synonym.  Members
+        of a flat OR group (``Clause(kind="group")``) are not rewritten.
 
         MULTI-WORD synonyms (SynonymGraphFilter's multi-token mappings,
         managed-schema.xml:312 — e.g. "usa" -> "united states"): the term
@@ -2801,22 +2333,6 @@ class SearchEngine:
 
         rw(tree)
         return tree
-
-    def _tree_has_multiword_synonym(self, tree) -> bool:
-        """True when any term in the tree maps to a multi-word synonym —
-        the flat path cannot score phrase alternatives, so search()
-        routes such queries through the recursive evaluator."""
-
-        def any_mw(node) -> bool:
-            if isinstance(node, TermNode):
-                return any(
-                    " " in s for s in self.synonyms.get(node.term, ())
-                )
-            if isinstance(node, BoolQuery):
-                return any(any_mw(c.node) for c in node.children)
-            return False
-
-        return any_mw(tree)
 
     def _ev_root_dismax(self, tree, ev, tie: float):
         """Top-level DisjunctionMax combine for ``_search_tree`` (the
@@ -2907,21 +2423,25 @@ class SearchEngine:
         should_combine: str = "sum",
         tie: float = 0.0,
     ) -> DataFrame:
-        """Recursive BooleanQuery evaluation (BooleanQuery nesting semantics,
-        QueryParser.jj:135-172): each node yields a (doc_id, score) frame of
-        MATCHING docs; a boolean node sums its matching positive children's
-        scores, requires every MUST child, requires >=1 positive match, and
-        anti-joins each MUST_NOT child.  A node whose MUST child can never
-        match short-circuits to empty; a pure-negative node matches nothing
-        (Lucene: a BooleanQuery with only prohibited clauses matches no
-        docs).
+        """The query evaluator behind search(), docset() and
+        scored_docset() — recursive BooleanQuery evaluation (BooleanQuery
+        nesting semantics, QueryParser.jj:135-172): each node yields a
+        (doc_id, score) frame of MATCHING docs; a boolean node sums its
+        matching positive children's scores, requires every MUST child,
+        requires >=1 positive match, and anti-joins each MUST_NOT child.  A
+        node whose MUST child can never match short-circuits to empty; a
+        pure-negative node matches nothing (Lucene: a BooleanQuery with
+        only prohibited clauses matches no docs).
 
-        Scale shape: every leaf is a bucket- and term-pruned postings scan
-        through the same vectorized decode as the flat path; combination is
-        unions + groupBy(doc_id) (one shuffle per boolean level) + left_anti
-        joins — no driver-side evaluation, no collects before top-k.  The
-        flat path's theta pruning does not apply (MUST/nesting make it
-        unsound); salt-level doc_filter pruning still does.
+        Scale shape: a boolean node scores its distinct MUST/SHOULD term
+        children in ONE bucket- and term-pruned postings scan + vectorized
+        decode (rows tagged MUST/SHOULD by term) and reads its MUST_NOT
+        terms in one doc-gaps-only scan; phrases, expansion clauses,
+        sub-queries and a term repeated within the node get their own
+        frames.  Combination is unions + groupBy(doc_id) (one shuffle per
+        boolean level) + left_anti joins — no driver-side evaluation, no
+        collects and no persisted frames before top-k; doc_filter prunes
+        every scan to its salt ranges.
         """
         spark = self.spark
         empty_schema = (
@@ -2934,19 +2454,12 @@ class SearchEngine:
 
         # resolve expansion clauses + collect every concrete term, then one
         # dictionary lookup for all idfs
-        resolved: dict[int, list[str]] = {}
+        resolved: dict[int, list[str] | None] = {}
         leaf_terms: set[str] = set()
-        # terms scored WITHOUT a boost (TermNode boost==1 / unboosted
-        # Clause members) — these share ONE postings scan + decode below
-        # instead of one per leaf; boosted leaves keep the per-leaf path so
-        # the float32 weight*boost rounding stays bit-identical
-        shared_terms: set[str] = set()
 
         def walk(node, occur: str) -> None:
             if isinstance(node, TermNode):
                 leaf_terms.add(node.term)
-                if node.boost == 1.0:
-                    shared_terms.add(node.term)
             elif isinstance(node, PhraseNode):
                 leaf_terms.update(node.toks)
             elif isinstance(node, Clause):
@@ -2955,8 +2468,6 @@ class SearchEngine:
                 if resolved[id(node)] is None:
                     return  # literal-cap overflow: distributed path in ev()
                 leaf_terms.update(resolved[id(node)])
-                if node.boost == 1.0:
-                    shared_terms.update(resolved[id(node)])
             elif isinstance(node, BoolQuery):
                 for c in node.children:
                     # negated scope propagates: clauses under a MUST_NOT
@@ -2982,26 +2493,11 @@ class SearchEngine:
                 b = b.filter(F.col("salt").isin(salts))
             return b
 
-        # one bucket-pruned scan + vectorized decode for EVERY unboosted
-        # leaf term in the tree; leaves slice it by term predicate.  persist
-        # keeps the decode single-pass when several leaves (plan branches)
-        # read it; unpersisted after _finalize materializes the top-k.
-        shared_terms &= found
-        shared: DataFrame | None = None
-        if len(shared_terms) > 1:
-            shared = self._scored(
-                blocks_of(sorted(shared_terms)), idf_by_term
-            ).persist()
-
         def ev(node) -> DataFrame | None:
             """(doc_id, score) of matching docs; None == matches nothing."""
             if isinstance(node, TermNode):
                 if node.term not in found:
                     return None
-                if shared is not None and node.boost == 1.0:
-                    return shared.filter(F.col("term") == node.term).select(
-                        "doc_id", "score"
-                    )
                 return self._scored(
                     blocks_of([node.term]),
                     idf_by_term,
@@ -3035,56 +2531,84 @@ class SearchEngine:
                 matched = [t for t in resolved[id(node)] if t in found]
                 if not matched:
                     return None
-                if shared is not None and node.boost == 1.0:
-                    g = shared.filter(F.col("term").isin(matched))
-                else:
-                    g = self._scored(
-                        blocks_of(matched),
-                        idf_by_term,
-                        {t: float(node.boost) for t in matched},
-                    )
+                g = self._scored(
+                    blocks_of(matched),
+                    idf_by_term,
+                    {t: float(node.boost) for t in matched},
+                )
                 # accumulate in double; the final cast to the configured
                 # score dtype happens once, just before top-k (mirrors the
                 # oracle's f64 accumulation + single final rounding)
                 return g.groupBy("doc_id").agg(F.sum("score").alias("score"))
-            # BoolQuery
+            return ev_bool(node)
+
+        def ev_bool(node: BoolQuery) -> DataFrame | None:
+            # a positive term child that occurs once in this node joins the
+            # node's single scan; a repeated one keeps its own frame, so
+            # (a a) scores a twice
+            n_pos = Counter(
+                c.node.term
+                for c in node.children
+                if isinstance(c.node, TermNode) and c.occur != "MUST_NOT"
+            )
+            scan: dict[str, tuple[bool, float]] = {}  # term -> (MUST, boost)
+            not_terms: list[str] = []
             pos_frames: list[DataFrame] = []
             not_frames: list[DataFrame] = []
-            n_must = 0
+            n_must = n_should = 0
             for c in node.children:
-                fr = ev(c.node)
-                if c.occur == "MUST_NOT":
-                    if fr is not None:
-                        not_frames.append(fr)
+                n, is_must = c.node, c.occur == "MUST"
+                if isinstance(n, TermNode) and c.occur == "MUST_NOT":
+                    if n.term in found:
+                        not_terms.append(n.term)
                     continue
-                if c.occur == "MUST":
-                    if fr is None:
+                if isinstance(n, TermNode) and n_pos[n.term] == 1:
+                    matchable = n.term in found
+                    if matchable:
+                        scan[n.term] = (is_must, float(n.boost))
+                else:
+                    fr = ev(n)
+                    if c.occur == "MUST_NOT":
+                        if fr is not None:
+                            not_frames.append(fr)
+                        continue
+                    matchable = fr is not None
+                    if matchable:
+                        pos_frames.append(
+                            fr.select(
+                                "doc_id",
+                                F.col("score").cast("double").alias("score"),
+                                F.lit(int(is_must)).alias("is_must"),
+                            )
+                        )
+                if not matchable:
+                    if is_must:
                         return None  # a required child can never match
-                    n_must += 1
-                    pos_frames.append(
-                        fr.select(
-                            "doc_id",
-                            F.col("score").cast("double").alias("score"),
-                            F.lit(1).alias("is_must"),
-                        )
+                    continue
+                n_must += is_must
+                n_should += not is_must
+            if scan:
+                must_terms = [t for t, (m, _b) in scan.items() if m]
+                tag = F.col("term").isin(must_terms) if must_terms else F.lit(False)
+                pos_frames.append(
+                    self._scored(
+                        blocks_of(sorted(scan)),
+                        idf_by_term,
+                        {t: b for t, (_m, b) in scan.items()},
+                    ).select(
+                        "doc_id",
+                        F.col("score").cast("double").alias("score"),
+                        tag.cast("int").alias("is_must"),
                     )
-                elif fr is not None:
-                    pos_frames.append(
-                        fr.select(
-                            "doc_id",
-                            F.col("score").cast("double").alias("score"),
-                            F.lit(0).alias("is_must"),
-                        )
-                    )
+                )
             if not pos_frames:
                 return None  # pure-negative / all-absent
-            mm = getattr(node, "mm", 0)
-            if mm:
-                # minimumNumberShouldMatch: no doc can reach mm when fewer
-                # matchable SHOULD children exist (Lucene matches nothing)
-                n_should_matchable = len(pos_frames) - n_must
-                if mm > n_should_matchable:
-                    return None
+            # minimumNumberShouldMatch: no doc can reach mm when fewer
+            # matchable SHOULD children exist (Lucene matches nothing)
+            if node.mm > n_should:
+                return None
+            if not_terms:
+                not_frames.append(self._docs_of(blocks_of(not_terms)))
             u = pos_frames[0]
             for fr in pos_frames[1:]:
                 u = u.unionByName(fr)
@@ -3095,9 +2619,9 @@ class SearchEngine:
             )
             if n_must:
                 agg = agg.filter(F.col("_nm") == n_must)
-            if mm:
+            if node.mm:
                 # matched SHOULD children = positive rows minus MUST rows
-                agg = agg.filter((F.col("_np") - F.col("_nm")) >= mm)
+                agg = agg.filter((F.col("_np") - F.col("_nm")) >= node.mm)
             agg = agg.select("doc_id", "score")
             for nf in not_frames:
                 agg = agg.join(nf.select("doc_id").distinct(), "doc_id", "left_anti")
@@ -3120,8 +2644,6 @@ class SearchEngine:
         else:
             res = ev(tree)
         if res is None:
-            if shared is not None:
-                shared.unpersist()
             return spark.createDataFrame([], empty_schema)
         if doc_filter is not None:
             res = res.filter(F.col("doc_id").isin([int(d) for d in doc_filter]))
@@ -3135,14 +2657,8 @@ class SearchEngine:
                 "doc_id", F.col("score").cast(self._sql_t).alias("score")
             )
         if _docset:
-            # NB: shared stays persisted only within this plan; Spark frees
-            # it with the session — acceptable for the docset path, whose
-            # caller aggregates immediately
             return res.select("doc_id")
         res = res.select("doc_id", F.col("score").cast(self._sql_t).alias("score"))
-        out = self._finalize(
+        return self._finalize(
             self._apply_funcs(res, bf, boost), k, with_url, start=start
         )
-        if shared is not None:
-            shared.unpersist()  # _finalize materialized the top-k
-        return out

@@ -31,7 +31,7 @@ def rerank(
     """ReRankQParserPlugin semantics: first-pass top ``rerank_docs`` by the
     main query, rescored as main + weight * rerank-query score; docs outside
     the first pass are never promoted (matches the reference)."""
-    first = engine.search(query, k=rerank_docs, prune=True, with_url=True)
+    first = engine.search(query, k=rerank_docs, with_url=True)
     # second pass scores ONLY the first-pass winners: search() prunes the
     # postings scan to their salt ranges and filters decode to their ids, so
     # rescoring stays O(rerank_docs) regardless of corpus size (the k=N
@@ -42,7 +42,7 @@ def rerank(
             F.lit(0).alias("rank"), "doc_id", "url", "score"
         ).limit(0)
     second = engine.search(
-        rerank_query, k=len(ids), prune=False, with_url=False, doc_filter=ids
+        rerank_query, k=len(ids), with_url=False, doc_filter=ids
     )
     s2 = second.select("doc_id", F.col("score").alias("_rr"))
     out = (

@@ -27,12 +27,14 @@ recursive ``Query ::= Clause+`` / ``Clause ::= [+|-|NOT] ( Term | "(" Query
 
 Two surfaces:
 
-- :func:`parse_query_tree` returns the full boolean tree (:class:`BoolQuery`).
-- :func:`parse_query` lowers the tree to the flat :class:`ParsedQuery` the
-  fast engine path consumes; a tree that cannot be flattened (nested
-  operators, phrases/boosts inside groups) raises :class:`NotFlatQuery`
-  (a ``NotImplementedError``), which the engine catches to route to its
-  recursive evaluator.
+- :func:`parse_query_tree` returns the full boolean tree (:class:`BoolQuery`),
+  the one shape the engine evaluates.
+- :func:`parse_query` lowers the tree to the flat :class:`ParsedQuery`
+  (deduplicated clause lists, the shape the oracles and programmatic
+  callers use); a tree that cannot be flattened (nested operators,
+  phrases/boosts inside groups) raises :class:`NotFlatQuery` (a
+  ``NotImplementedError``).  :meth:`ParsedQuery.to_tree` turns a flat
+  query back into a one-level tree for the engine.
 """
 
 from __future__ import annotations
@@ -140,15 +142,34 @@ class ParsedQuery:
     def scoring_phrases(self) -> list[list[str]]:
         return self.must_phrases + self.should_phrases
 
-    @property
-    def is_empty(self) -> bool:
-        return not (
-            self.must
-            or self.should
-            or self.must_phrases
-            or self.should_phrases
-            or self.expand
+    def to_tree(self) -> BoolQuery:
+        """The one-level :class:`BoolQuery` this query means: one child per
+        distinct term (a term listed as both MUST and SHOULD is one MUST
+        clause, scored once), one per phrase (duplicates kept, each
+        scores) and one per dictionary-expanded clause."""
+        kids: list[BoolChild] = []
+        must = _dedup(self.must)
+        terms = (
+            ("MUST", must),
+            ("SHOULD", [t for t in _dedup(self.should) if t not in must]),
+            ("MUST_NOT", _dedup(self.must_not)),
         )
+        for occur, ts in terms:
+            for t in ts:
+                kids.append(BoolChild(occur, TermNode(t, self.boosts.get(t, 1.0))))
+        phrases = (
+            ("MUST", self.must_phrases),
+            ("SHOULD", self.should_phrases),
+            ("MUST_NOT", self.must_not_phrases),
+        )
+        for occur, phs in phrases:
+            for ph in phs:
+                node = PhraseNode(list(ph))
+                node.slop = self.slops.get(node.label, 0)
+                node.boost = self.boosts.get(node.label, 1.0)
+                kids.append(BoolChild(occur, node))
+        kids.extend(BoolChild(cl.occur, cl) for cl in self.expand)
+        return BoolQuery(children=kids)
 
 
 _WORD_RE = re.compile(
@@ -382,10 +403,11 @@ def _parse_level(
 
 
 def lower_tree(tree: BoolQuery) -> ParsedQuery:
-    """Flatten a depth-1 tree into the ParsedQuery the fast engine path
-    consumes.  A nested group lowers to a ``Clause(kind='group')`` only when
-    it is a pure disjunction of unboosted plain terms (the historic flat-OR
-    group); anything else raises :class:`NotFlatQuery`."""
+    """Flatten a depth-1 tree into a ParsedQuery (root-level repeated terms
+    collapse to one clause).  A nested group lowers to a
+    ``Clause(kind='group')`` only when it is a pure disjunction of unboosted
+    plain terms (the historic flat-OR group); anything else raises
+    :class:`NotFlatQuery`."""
     if tree.mm:
         raise NotFlatQuery("minimum-should-match needs the tree evaluator")
     pq = ParsedQuery()
@@ -443,6 +465,6 @@ def lower_tree(tree: BoolQuery) -> ParsedQuery:
 
 def parse_query(q: str, analyze_fn=analyze, default_field: str = "text") -> ParsedQuery:
     """Parse ``q`` and lower to the flat ParsedQuery.  Raises
-    :class:`NotFlatQuery` (NotImplementedError) when the query needs the
-    recursive evaluator — ``SearchEngine.search`` handles both."""
+    :class:`NotFlatQuery` (NotImplementedError) when the query has nested
+    structure — ``SearchEngine.search`` takes the string itself either way."""
     return lower_tree(parse_query_tree(q, analyze_fn, default_field))

@@ -36,10 +36,10 @@ matching Lucene's float arithmetic; float64 when cfg.score_dtype says so):
 
 Engine integration notes:
 
-- Block-max (θ) pruning stays gated to BM25 (``prunable``): the stored
-  per-block ``max_impact`` is the BM25 impact upper bound and does not
-  bound other similarities.  Salt-level MUST pruning, bucket pruning, and
-  pushdown are score-independent and apply to every similarity.
+- The stored per-block ``max_impact`` is a BM25 impact upper bound and
+  does not bound other similarities; no query path prunes on it today.
+  Bucket and salt pruning and term pushdown are score-independent and
+  apply to every similarity.
 - Phrase/span clauses score BM25-style (tf = phrase freq, summed idf);
   only BM25 declares ``supports_phrases`` — a phrase query under another
   similarity raises NotImplementedError instead of silently mixing
@@ -78,8 +78,6 @@ class Similarity:
     """Base: subclasses override weight() and kernel()."""
 
     name: str = "base"
-    # θ/block-max pruning uses stored BM25 impacts — only sound for BM25
-    prunable: bool = False
     # phrase/span scoring composes BM25 arithmetic (summed idf weights)
     supports_phrases: bool = False
 
@@ -98,7 +96,6 @@ class BM25Similarity(Similarity):
     """BM25Similarity.java — the reference default (k1=1.2, b=0.75)."""
 
     name: str = "bm25"
-    prunable: bool = True
     supports_phrases: bool = True
     k1: float = 1.2
     b: float = 0.75

@@ -244,7 +244,7 @@ def run_xml_query(
             if isinstance(node, BoolQuery)
             else BoolQuery(children=[BoolChild("MUST", node)])
         )
-        ids = engine.search(tree, prune=False, _docset=True).select("doc_id")
+        ids = engine.search(tree, _docset=True).select("doc_id")
         return _finalize_const(engine, ids, k, _boost(root))
 
     if tag == "SpanNear" and root.get("inOrder", "true") != "true":

@@ -49,6 +49,23 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(build_pyfiles_zip())
 
 
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEM``, else half of the host's RAM capped at 48g: the
+    driver JVM shares the host with the Python workers, and a heap sized
+    past RAM gets the JVM OOM-killed instead of collected."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mb = int(line.split()[1]) // 1024
+                    return f"{min(48 * 1024, mb // 2)}m"
+    except OSError:
+        pass
+    return "48g"
+
+
 def get_spark(
     app_name: str = "apache___solr_spark",
     cores: int | str | None = None,
@@ -62,7 +79,7 @@ def get_spark(
     over unchanged.
     """
     if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cores = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     cores = str(cores)
     master = cores if cores.startswith("local") else f"local[{cores}]"
     n_cores = os.cpu_count() or 8
@@ -81,7 +98,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # local mode: executor and driver share one JVM and one fate, but
         # the executor still runs the heartbeat self-kill designed for real

@@ -12,7 +12,8 @@ from apache___solr_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cores=os.environ.get("TEST_CORES", "8"))
+    cores = min(int(os.environ.get("TEST_CORES", "8")), os.cpu_count() or 1)
+    s = get_spark("tests", cores=cores)
     yield s
 
 

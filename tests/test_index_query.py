@@ -3252,3 +3252,70 @@ def test_mlt_ignores_stale_analyzed_checkpoint(spark, corpus, tmp_path_factory):
         .collect()[0]
     )
     assert got_terms == list(fresh["terms"])
+
+
+# ---------------------------------------------------------------------------
+# One evaluator: every search() input reaches SearchEngine._search_tree.
+# ---------------------------------------------------------------------------
+
+
+def test_search_leaves_no_cached_frames(spark, built):
+    """search(), docset() and scored_docset() persist nothing: the cache
+    manager is empty after each, on nested and flat queries (regression:
+    docset() of a nested query returned while a shared scan frame was
+    still persisted)."""
+    eng = SearchEngine(spark, built, cfg=CFG)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for q in (
+        "(web AND data) OR page",
+        "(web data) AND -(page site)",
+        "web data page",
+        "web AND data -page",
+    ):
+        eng.docset(q).count()
+        assert cache.isEmpty(), ("docset", q)
+        eng.scored_docset(q).count()
+        assert cache.isEmpty(), ("scored_docset", q)
+        eng.search(q, k=5).collect()
+        assert cache.isEmpty(), ("search", q)
+
+
+def test_root_repeated_terms_score_once(spark, built, oracle_idx):
+    """A term repeated at the root of a flat query scores once for string
+    and ParsedQuery inputs (lower_tree dedups it, as oracle_search does).
+    A BoolQuery from parse_query_tree is evaluated as given: each
+    occurrence is its own clause and scores (Lucene's semantics for a
+    repeated SHOULD clause)."""
+    from apache___solr_spark.query.parser import parse_query, parse_query_tree
+
+    eng = SearchEngine(spark, built, cfg=CFG)
+    by_df = sorted(
+        oracle_idx.postings, key=lambda t: (-len(oracle_idx.postings[t]), t)
+    )
+    a, b = by_df[10], by_df[40]
+    for q in (f"{a} {a}", f"{a} {a}^2 {b}"):
+        want = oracle_search(oracle_idx, q, k=10)
+        assert want, q
+        for query in (q, parse_query(q)):
+            got = eng.search(query, k=10).collect()
+            assert [g["doc_id"] for g in got] == [w["doc_id"] for w in want], q
+            for g, w in zip(got, want):
+                assert math.isclose(g["score"], w["score"], rel_tol=1e-6), q
+    once = eng.search(f"{a} {a}", k=10).collect()
+    twice = eng.search(parse_query_tree(f"{a} {a}"), k=10).collect()
+    assert [r["doc_id"] for r in twice] == [r["doc_id"] for r in once]
+    for r1, r2 in zip(once, twice):
+        assert math.isclose(r2["score"], 2 * r1["score"], rel_tol=1e-6)
+
+
+def test_empty_result_schema_follows_with_url(spark, built):
+    """An empty result carries a url column only when with_url asks."""
+    from apache___solr_spark.query.parser import ParsedQuery
+
+    eng = SearchEngine(spark, built, cfg=CFG)
+    for q in ("zzznotaterm", "the and of", ParsedQuery()):
+        assert eng.search(q, with_url=False).columns == [
+            "rank", "doc_id", "score"
+        ], q
+        assert eng.search(q).columns == ["rank", "doc_id", "url", "score"], q
