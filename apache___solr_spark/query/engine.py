@@ -45,6 +45,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,6 +66,12 @@ from apache___solr_spark.query.parser import (
     TermNode,
     lower_tree,
     parse_query_tree,
+)
+
+
+# the (doc_id, score) rows of an empty result, for SearchEngine._page
+_NO_HITS = pa.table(
+    {"doc_id": pa.array([], pa.int64()), "score": pa.array([], pa.float64())}
 )
 
 
@@ -710,6 +720,14 @@ class SearchEngine:
         self.postings = spark.read.parquet(self.paths.postings)
         self.dictionary = spark.read.parquet(self.paths.dictionary)
         self.docs = spark.read.parquet(self.paths.docs)
+        # the same files, for driver-side stored-field reads (_stored)
+        files = self.docs.inputFiles()
+        fs = pafs.FileSystem.from_uri(files[0])[0]
+        self._stored_docs = pads.dataset(
+            [pafs.FileSystem.from_uri(u)[1] for u in files],
+            format="parquet",
+            filesystem=fs,
+        )
         self._dtype = np.float64 if cfg.score_dtype == "float64" else np.float32
         self._sql_t = "double" if cfg.score_dtype == "float64" else "float"
         self._analyze = analyzer_fn(cfg.analyzer)
@@ -1109,13 +1127,12 @@ class SearchEngine:
             toks.extend(self._analyze(w))
         if not ordered:
             toks = sorted(set(toks))
-        schema = f"rank int, doc_id long, url string, score {self._sql_t}"
         if not toks:
-            return self.spark.createDataFrame([], schema)
+            return self._page(_NO_HITS, with_url)
         meta = self._term_meta(sorted(set(toks)))
         found = set(meta["term"])
         if any(t not in found for t in toks):
-            return self.spark.createDataFrame([], schema)
+            return self._page(_NO_HITS, with_url)
         n_docs = self.stats["N"]
         idf_by_term = {
             r["term"]: float(bm25_idf(n_docs, int(r["df"]), dtype=self._dtype))
@@ -1171,14 +1188,13 @@ class SearchEngine:
             else self._analyze(text)
         )
         n = len(toks)
-        schema = f"rank int, doc_id long, url string, score {self._sql_t}"
         if not toks:
-            return self.spark.createDataFrame([], schema)
+            return self._page(_NO_HITS, with_url)
         meta = self._term_meta(sorted(set(toks)))
         found = set(meta["term"])
         qtoks = [t for t in toks if t in found]
         if not qtoks:
-            return self.spark.createDataFrame([], schema)
+            return self._page(_NO_HITS, with_url)
         dtype = self._dtype  # local capture: the kernel ships to executors
         ones = lambda w, b, tfs, dl: np.full(  # noqa: E731
             len(tfs), b, dtype=dtype
@@ -1296,14 +1312,13 @@ class SearchEngine:
         self, query_text: str, k: int, with_url: bool, mode_kw: dict
     ) -> DataFrame:
         toks = self._analyze(query_text)
-        schema = f"rank int, doc_id long, url string, score {self._sql_t}"
         if not toks:
-            return self.spark.createDataFrame([], schema)
+            return self._page(_NO_HITS, with_url)
         cands = self._payload_candidates(
             toks, require_all=mode_kw.get("operator", "phrase") != "or"
         )
         if cands is None:
-            return self.spark.createDataFrame([], schema)
+            return self._page(_NO_HITS, with_url)
         meta = self._term_meta(sorted(set(toks)))
         idf_by_term = {
             r["term"]: float(
@@ -1457,7 +1472,6 @@ class SearchEngine:
             raise NotImplementedError(
                 f"similarity {self.sim.name!r}: span queries need BM25"
             )
-        schema = f"rank int, doc_id long, url string, score {self._sql_t}"
         slots: list[tuple[str, ...]] = []
         unmatchable = False
 
@@ -1489,13 +1503,13 @@ class SearchEngine:
 
         tree = build(spec)
         if unmatchable or not slots:
-            return self.spark.createDataFrame([], schema)
+            return self._page(_NO_HITS, with_url)
         ptoks = [t for s in slots for t in s]
         meta = self._term_meta(sorted(set(ptoks)))
         found = set(meta["term"])
         slots = [tuple(t for t in s if t in found) for s in slots]
         if any(not s for s in slots):
-            return self.spark.createDataFrame([], schema)
+            return self._page(_NO_HITS, with_url)
         ptoks = [t for s in slots for t in s]
         n_docs = self.stats["N"]
         idf_by_term = {
@@ -1542,13 +1556,10 @@ class SearchEngine:
         for raw in phrase.split():
             groups = self._resolve_span_operand(raw, max_expansions)
             if groups is None:
-                return self.spark.createDataFrame(
-                    [], f"rank int, doc_id long, url string, score {self._sql_t}"
-                )
+                return self._page(_NO_HITS, with_url)
             slots.extend(groups)
-        schema = f"rank int, doc_id long, url string, score {self._sql_t}"
         if not slots:
-            return self.spark.createDataFrame([], schema)
+            return self._page(_NO_HITS, with_url)
         ptoks = [t for s in slots for t in s]
         meta = self._term_meta(sorted(set(ptoks)))
         found = set(meta["term"])
@@ -1558,7 +1569,7 @@ class SearchEngine:
             tuple(t for t in s if t in found) for s in slots
         )
         if any(not s for s in slots):
-            return self.spark.createDataFrame([], schema)
+            return self._page(_NO_HITS, with_url)
         ptoks = [t for s in slots for t in s]
         n_docs = self.stats["N"]
         idf_by_term = {
@@ -1775,25 +1786,13 @@ class SearchEngine:
                 col = parse_func_query(key)
             order.append(col.desc() if direction == "desc" else col.asc())
         order.append(F.col("doc_id").asc())
-        rows = (
+        top = (
             full.orderBy(*order)
             .limit(min(int(start) + int(k), int(self.stats["N"])))
-            .select("doc_id", "url", "score")
-            .collect()
-        )[int(start):]
-        schema = f"rank int, doc_id long, url string, score {self._sql_t}"
-        out = [
-            {
-                "rank": int(start) + i + 1,
-                "doc_id": r["doc_id"],
-                "url": r["url"],
-                "score": r["score"],
-            }
-            for i, r in enumerate(rows)
-        ]
-        if not out:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.createDataFrame(out, schema)
+            .select("doc_id", "score")
+            .toArrow()
+        )
+        return self._page(top.slice(int(start)), True, int(start))
 
     def explain_scores(self, query: str | ParsedQuery, k: int = 10) -> DataFrame:
         """debugQuery=true explain analog (response debug component,
@@ -2203,12 +2202,7 @@ class SearchEngine:
         the classic grammar would be unwieldy."""
         vals = sorted({str(v) for v in values if v})
         if not vals:
-            return self.spark.createDataFrame(
-                [],
-                "rank int, doc_id long"
-                + (", url string" if with_url else "")
-                + f", score {self._sql_t}",
-            )
+            return self._page(_NO_HITS, with_url)
         from apache___solr_spark.query.similarities import BooleanSimilarity
 
         scored = self._scored(
@@ -2228,11 +2222,13 @@ class SearchEngine:
     def _finalize(
         self, scored: DataFrame, k: int, with_url: bool, start: int = 0
     ) -> DataFrame:
-        """Top-k + two-phase fields fetch (QueryComponent.java:1000): phase 1
-        ranks on the narrow (doc_id, score) via TakeOrderedAndProject; phase 2
-        fetches display fields for JUST the k winners — the isin predicate
-        prunes the docs scan by parquet row-group stats instead of joining
-        against the full table.
+        """Top-k + two-phase fields fetch (QueryComponent.java:1000).
+        Phase 1 ranks the narrow (doc_id, score) via TakeOrderedAndProject,
+        the query's one Spark action, taken as Arrow.  Phase 2 reads the
+        display fields of JUST the page's docs on the driver (:meth:`_stored`,
+        the per-hit stored-fields read of the reference), from the docs
+        files this engine opened on.  The page is a local Arrow relation,
+        so the caller's collect() runs no Spark job.
 
         ``start``: offset paging (the reference's start/rows params) — the
         collector depth is start+rows (SolrIndexSearcher buildTopDocs
@@ -2242,38 +2238,43 @@ class SearchEngine:
         SolrIndexSearcher caps it at maxDoc: a k=10**9 "every match"
         request must not size a 10**9-slot top-k heap."""
         depth = min(int(start) + int(k), int(self.stats["N"]))
-        topk_rows = (
-            scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        top = (
+            scored.select("doc_id", "score")
+            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(depth)
-            .collect()
-        )[int(start):]
+            .toArrow()
+        )
+        return self._page(top.slice(int(start)), with_url, int(start))
+
+    def _page(self, top: pa.Table, with_url: bool, start: int = 0) -> DataFrame:
+        """The result page (rank, doc_id[, url], score) for ``top``'s
+        (doc_id, score) rows, in rank order, as an Arrow-backed
+        LocalRelation: collecting it runs no Spark job."""
+        ids = top["doc_id"].combine_chunks()
+        cols = {
+            "rank": pa.array(range(start + 1, start + 1 + len(ids)), pa.int32()),
+            "doc_id": ids,
+        }
+        if with_url:
+            cols["url"] = self._stored(ids, "url")
+        cols["score"] = top["score"]
         schema = (
             "rank int, doc_id long"
             + (", url string" if with_url else "")
             + f", score {self._sql_t}"
         )
-        if not topk_rows:
-            return self.spark.createDataFrame([], schema)
-        url_by_id: dict[int, str] = {}
-        if with_url:
-            ids = [r["doc_id"] for r in topk_rows]
-            for r in (
-                self.docs.filter(F.col("doc_id").isin(ids))
-                .select("doc_id", "url")
-                .collect()
-            ):
-                url_by_id[r["doc_id"]] = r["url"]
-        out_rows = []
-        for i, r in enumerate(topk_rows):
-            row = {
-                "rank": int(start) + i + 1,
-                "doc_id": r["doc_id"],
-                "score": r["score"],
-            }
-            if with_url:
-                row["url"] = url_by_id[r["doc_id"]]
-            out_rows.append(row)
-        return self.spark.createDataFrame(out_rows, schema)
+        return self.spark.createDataFrame(pa.table(cols), schema)
+
+    def _stored(self, ids: pa.Array, col: str) -> pa.Array:
+        """Stored field ``col`` of the docs ``ids``, in ``ids`` order: the
+        analog of Lucene's per-hit StoredFields read.  Reads only the docs
+        files listed at engine open (the engine's snapshot) on the driver;
+        the ``doc_id`` predicate prunes their row groups by parquet
+        statistics.  No Spark job."""
+        got = self._stored_docs.to_table(
+            columns=["doc_id", col], filter=pads.field("doc_id").isin(ids)
+        )
+        return got[col].take(pc.index_in(ids, value_set=got["doc_id"]))
 
     def _apply_synonyms_tree(self, tree: BoolQuery) -> BoolQuery:
         """Query-time synonyms: a term with synonyms becomes a disjunction
@@ -2443,12 +2444,6 @@ class SearchEngine:
         collects and no persisted frames before top-k; doc_filter prunes
         every scan to its salt ranges.
         """
-        spark = self.spark
-        empty_schema = (
-            "rank int, doc_id long"
-            + (", url string" if with_url else "")
-            + f", score {self._sql_t}"
-        )
         if self.synonyms:
             tree = self._apply_synonyms_tree(tree)
 
@@ -2644,7 +2639,7 @@ class SearchEngine:
         else:
             res = ev(tree)
         if res is None:
-            return spark.createDataFrame([], empty_schema)
+            return self._page(_NO_HITS, with_url)
         if doc_filter is not None:
             res = res.filter(F.col("doc_id").isin([int(d) for d in doc_filter]))
         if self.deletes is not None:

@@ -52,7 +52,6 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
 from apache___solr_spark.query.parser import (
     BoolChild,
@@ -198,16 +197,10 @@ def _lower(el: ET.Element, analyze_fn, occur: str = "MUST"):
 
 
 def _finalize_const(engine, ids: DataFrame, k: int, score: float) -> DataFrame:
-    hits = (
-        ids.join(engine.docs.select("doc_id", "url"), "doc_id")
-        .orderBy("doc_id")
-        .limit(k)
-        .withColumn("score", F.lit(score).cast(engine._sql_t))
-        .withColumn(
-            "rank", F.row_number().over(Window.orderBy("doc_id"))
-        )
-    )
-    return hits.select("rank", "doc_id", "url", "score")
+    # every hit ties on the constant score, so the engine's (score desc,
+    # doc_id asc) top-k ranks them by doc_id
+    scored = ids.select("doc_id", F.lit(score).cast(engine._sql_t).alias("score"))
+    return engine._finalize(scored, k, with_url=True)
 
 
 def run_xml_query(

@@ -1805,6 +1805,10 @@ def test_start_offset_paging(spark, corpus, built):
     assert [r["doc_id"] for r in page2] == [r["doc_id"] for r in full[10:20]]
     assert [r["score"] for r in page2] == [r["score"] for r in full[10:20]]
     assert [r["rank"] for r in page2] == list(range(11, 21))
+    # each rank's url is its doc's stored url, on a page past the first too
+    url_of = dict(eng.docs.select("doc_id", "url").collect())
+    for r in full + page2:
+        assert r["url"] == url_of[r["doc_id"]], r
     # past the end of the result set -> empty page
     assert eng.search("web data", k=10, start=10_000).count() == 0
     # tree path pages identically
@@ -3319,3 +3323,33 @@ def test_empty_result_schema_follows_with_url(spark, built):
             "rank", "doc_id", "score"
         ], q
         assert eng.search(q).columns == ["rank", "doc_id", "url", "score"], q
+
+
+def test_warm_query_job_counts(spark, built):
+    """On a warm engine a search() runs only the Spark jobs of its scan and
+    top-k (≤2), and its page is a local relation whose collect() runs
+    none; a vocabulary miss runs no job at all."""
+    import uuid
+
+    eng = SearchEngine(spark, built, cfg=CFG)
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+
+    def jobs(name, fn):
+        group = f"{name}-{tag}"
+        sc.setJobGroup(group, "jobs per query")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for q in ("web data", "zzznotaterm"):  # warm the term-meta cache
+        eng.search(q, k=10).collect()
+    page, n_search = jobs("search", lambda: eng.search("web data", k=10))
+    rows, n_collect = jobs("collect", page.collect)
+    assert len(rows) == 10
+    assert n_search <= 2, n_search
+    assert n_collect == 0, n_collect
+    rows, n_miss = jobs("miss", lambda: eng.search("zzznotaterm").collect())
+    assert rows == [] and n_miss == 0, n_miss
