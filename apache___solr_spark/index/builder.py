@@ -12,7 +12,7 @@ DocumentBuilder.toDocument:99-123, re-expressed Spark-first):
           docs write and the segment encoder (no intermediate parquet hop;
           cfg.checkpoint_numbered=True restores one)
         ──numpy segment encode──► packed (term, salt) rows
-        ──repartition(bucket, salt) + sorted streaming merge──► postings
+        ──repartition(bucket, salt) + sorted mapInArrow merge──► postings
         ──metadata agg──► dictionary(term, df, cf, max_impact)
         plus scalar stats(N, avgdl).
 
@@ -33,10 +33,13 @@ failed — see BENCH/BASELINE.md history):
   128-POSTING skip blocks (block_first_docs / block_n / block_max_impacts
   array columns = skip pointers + per-block max-score, Lucene
   Lucene101PostingsFormat impact semantics).
-- encoding is a per-PARTITION streaming pass over rows sorted by
-  (term, salt, doc_id) — groups are delimited with numpy, never one pandas
-  call per group (applyInPandas per (term,salt) group was ~2ms overhead x
-  #groups = the build bottleneck).
+- every postings row is packed by ONE numpy group packer (_pack_groups),
+  all (term, salt) groups of an Arrow batch at once: the map-side encode,
+  the reduce-side merge and optimize() all end in it, and the merge and
+  optimize decode a whole batch with one vbyte pass per column.  There is
+  no per-group Python anywhere (applyInPandas per (term,salt) group was
+  ~2ms overhead x #groups; the pandas per-group merge loop after it was
+  still most of the postings stage).
 - the postings table is written partitioned by pmod(xxhash64(term),
   n_buckets): a query prunes its scan to the buckets of its terms (the
   term-dictionary-seek analog).
@@ -52,20 +55,15 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from apache___solr_spark.analysis.chain import analyzer_fn, extract_text
 from apache___solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from apache___solr_spark.index import checkpoint as ckpt
-from apache___solr_spark.index.codec import (
-    decode_vbyte,
-    delta_decode,
-    delta_encode,
-    encode_vbyte,
-    encode_vbyte_packed,
-)
+from apache___solr_spark.index.codec import decode_vbyte, encode_vbyte_packed
 from apache___solr_spark.index.smallfloat import NORM_TABLE, int_to_byte4_np
 from apache___solr_spark.sources.loaders import read_pages
 
@@ -399,42 +397,106 @@ def _undelta_positions(gaps: np.ndarray, g_tfs: np.ndarray) -> np.ndarray:
     return cs - np.repeat(before, tfs64)
 
 
-def _encode_group_row(
-    cfg: IndexConfig,
+_SEGMENT_COLUMNS = [
+    "term", "salt", "n_docs", "first_doc", "last_doc", "doc_gaps", "tfs",
+    "norms", "positions", "sum_tf", "max_tf", "max_impact",
+    "block_first_docs", "block_n", "block_max_impacts",
+]
+
+
+def _binary_from(buf: np.ndarray, bounds: np.ndarray) -> pa.Array:
+    """Arrow BinaryArray over one byte buffer cut at ``bounds``."""
+    return pa.BinaryArray.from_buffers(
+        pa.binary(),
+        len(bounds) - 1,
+        [
+            None,
+            pa.py_buffer(bounds.astype(np.int32)),
+            pa.py_buffer(np.ascontiguousarray(buf, dtype=np.uint8)),
+        ],
+    )
+
+
+def _pack_groups(
     scorer: _Scorer,
-    term,
-    salt: int,
-    g_ids: np.ndarray,
-    g_tfs: np.ndarray,
-    g_norms: np.ndarray,
-    g_pos: np.ndarray | None = None,
-) -> dict:
-    """One postings row for one (term, salt) group (doc_ids ascending)."""
-    n = g_ids.size
-    base = salt * cfg.salt_range
-    bl_starts = np.arange(0, n, cfg.block_range)
-    g_imp = scorer.impact(g_tfs, g_norms)
-    return {
-        "term": term,
-        "salt": int(salt),
-        "n_docs": int(n),
-        "first_doc": int(g_ids[0]),
-        "last_doc": int(g_ids[-1]),
-        "doc_gaps": encode_vbyte(delta_encode(g_ids, base)),
-        "tfs": encode_vbyte(g_tfs),
-        "norms": g_norms.tobytes(),
-        "positions": (
-            encode_vbyte(_delta_positions(g_pos, g_tfs))
-            if g_pos is not None and g_pos.size
-            else b""
+    salt_range: int,
+    block: int,
+    group_terms: pa.Array,
+    salts: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    norms: np.ndarray,
+    pos_gaps: np.ndarray,
+    gstarts: np.ndarray,
+) -> pa.RecordBatch:
+    """Pack flat postings into one SEGMENT_SCHEMA row per (term, salt)
+    group, all groups of a batch at once.  Group i is the postings
+    [gstarts[i], gstarts[i+1]) with doc_ids ascending; ``group_terms`` and
+    ``salts`` hold one value per group; ``pos_gaps`` holds every posting's
+    tf position values (first raw, rest gaps) or is empty when positions
+    are not stored.  The segment encoder, the merge and optimize all end
+    here, so every postings row in the index is packed by this code."""
+    n = doc_ids.size
+    gends = np.append(gstarts[1:], n)
+    glens = gends - gstarts
+    imp = scorer.impact(tfs, norms)
+    gaps = np.empty(n, dtype=np.int64)
+    gaps[1:] = doc_ids[1:] - doc_ids[:-1]
+    gaps[gstarts] = doc_ids[gstarts] - salts * salt_range
+    gap_buf, gap_bounds = encode_vbyte_packed(gaps, gstarts)
+    tf_buf, tf_bounds = encode_vbyte_packed(tfs, gstarts)
+    pos_buf, pos_bounds = encode_vbyte_packed(
+        pos_gaps, (np.cumsum(tfs) - tfs)[gstarts]
+    )
+
+    # inner skip blocks across ALL groups at once
+    idx_in_group = np.arange(n, dtype=np.int64) - np.repeat(gstarts, glens)
+    bl_starts = np.flatnonzero(idx_in_group % block == 0)
+    bl_counts = -(-glens // block)
+    bl_ends = np.minimum(bl_starts + block, np.repeat(gends, bl_counts))
+    bl_offs = pa.array(np.concatenate(([0], np.cumsum(bl_counts))).astype(np.int32))
+
+    arrays = [
+        group_terms,
+        pa.array(salts),
+        pa.array(glens.astype(np.int32)),
+        pa.array(doc_ids[gstarts]),
+        pa.array(doc_ids[gends - 1]),
+        _binary_from(gap_buf, gap_bounds),
+        _binary_from(tf_buf, tf_bounds),
+        _binary_from(norms, np.append(gstarts, n)),
+        _binary_from(pos_buf, pos_bounds),
+        pa.array(np.add.reduceat(tfs, gstarts)),
+        pa.array(np.maximum.reduceat(tfs, gstarts).astype(np.int32)),
+        pa.array(np.maximum.reduceat(imp, gstarts).astype(np.float32)),
+        pa.ListArray.from_arrays(bl_offs, pa.array(doc_ids[bl_starts])),
+        pa.ListArray.from_arrays(
+            bl_offs, pa.array((bl_ends - bl_starts).astype(np.int32))
         ),
-        "sum_tf": int(g_tfs.sum()),
-        "max_tf": int(g_tfs.max()),
-        "max_impact": np.float32(g_imp.max()),
-        "block_first_docs": g_ids[bl_starts].tolist(),
-        "block_n": np.diff(np.append(bl_starts, n)).astype(np.int32).tolist(),
-        "block_max_impacts": np.maximum.reduceat(g_imp, bl_starts).tolist(),
-    }
+        pa.ListArray.from_arrays(
+            bl_offs,
+            pa.array(np.maximum.reduceat(imp, bl_starts).astype(np.float32)),
+        ),
+    ]
+    return pa.RecordBatch.from_arrays(arrays, names=_SEGMENT_COLUMNS)
+
+
+def _decode_rows(rb: pa.RecordBatch, salt_range: int) -> tuple:
+    """Inverse of :func:`_pack_groups` for a whole batch of postings rows:
+    (doc_ids, tfs, norms, pos_gaps, row_starts) as flat arrays in row order,
+    one vbyte decode per column.  ``row_starts[i]`` is row i's first
+    posting; doc ids come from a segmented cumsum of the gaps that
+    restarts at every row's salt base."""
+    n_docs = rb.column("n_docs").to_numpy().astype(np.int64)
+    row_starts = np.cumsum(n_docs) - n_docs
+    gaps = decode_vbyte(_flat_binary(rb.column("doc_gaps"))).astype(np.int64)
+    cs = np.cumsum(gaps)
+    base = rb.column("salt").to_numpy() * salt_range
+    doc_ids = cs + np.repeat(base - (cs[row_starts] - gaps[row_starts]), n_docs)
+    tfs = decode_vbyte(_flat_binary(rb.column("tfs"))).astype(np.int64)
+    norms = _flat_binary(rb.column("norms"))
+    pos_gaps = decode_vbyte(_flat_binary(rb.column("positions"))).astype(np.int64)
+    return doc_ids, tfs, norms, pos_gaps, row_starts
 
 
 def _segment_encode(cfg: IndexConfig, avgdl: float):
@@ -454,229 +516,118 @@ def _segment_encode(cfg: IndexConfig, avgdl: float):
     salt_range = cfg.salt_range
     block = cfg.block_range
 
-    def _binary_from(buf: np.ndarray, bounds: np.ndarray) -> "pa.Array":
-        import pyarrow as pa
-
-        return pa.BinaryArray.from_buffers(
-            pa.binary(),
-            len(bounds) - 1,
-            [None, pa.py_buffer(bounds.astype(np.int32).tobytes()), pa.py_buffer(buf.tobytes())],
-        )
-
     def run(batches):  # Iterator[pa.RecordBatch] -> Iterator[pa.RecordBatch]
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            terms_col = rb.column(rb.schema.get_field_index("terms"))
-            tfs_col = rb.column(rb.schema.get_field_index("tfs"))
+            terms_col = rb.column("terms")
             lens = pc.list_value_length(terms_col).to_numpy().astype(np.int64)
             if lens.sum() == 0:
                 continue
             # flatten WITHOUT creating Python string objects: the term column
             # stays an Arrow StringArray; grouping runs on its C++-computed
             # dictionary codes.
-            flat_terms = pc.list_flatten(terms_col)
-            enc = pc.dictionary_encode(flat_terms)
+            enc = pc.dictionary_encode(pc.list_flatten(terms_col))
             codes = enc.indices.to_numpy().astype(np.int64)
-            uniques = enc.dictionary
-            tfs = decode_vbyte(_flat_binary(tfs_col)).astype(np.int64)
-            pos_flat = decode_vbyte(
-                _flat_binary(rb.column(rb.schema.get_field_index("positions")))
-            ).astype(np.int64)
-            store_pos = pos_flat.size > 0
-            doc_ids_col = rb.column(rb.schema.get_field_index("doc_id")).to_numpy()
-            doclen_col = rb.column(rb.schema.get_field_index("doclen")).to_numpy()
-            doc_ids = np.repeat(doc_ids_col, lens)
-            norms = np.repeat(int_to_byte4_np(doclen_col.astype(np.int64)), lens)
+            tfs = decode_vbyte(_flat_binary(rb.column("tfs"))).astype(np.int64)
+            pos_flat = decode_vbyte(_flat_binary(rb.column("positions"))).astype(
+                np.int64
+            )
+            doc_ids = np.repeat(rb.column("doc_id").to_numpy(), lens)
+            norms = np.repeat(
+                int_to_byte4_np(rb.column("doclen").to_numpy().astype(np.int64)),
+                lens,
+            )
 
             salts = doc_ids // salt_range
             order = np.lexsort((doc_ids, salts, codes))
-            if store_pos:
-                # flat position offsets of each posting BEFORE reordering
-                pos_sel_starts = (np.cumsum(tfs) - tfs)[order]
+            # flat position offsets of each posting BEFORE reordering
+            pos_sel_starts = (np.cumsum(tfs) - tfs)[order]
             codes, salts, doc_ids, tfs, norms = (
                 codes[order], salts[order], doc_ids[order], tfs[order], norms[order]
             )
-            n = codes.size
             change = (
                 np.flatnonzero((codes[1:] != codes[:-1]) | (salts[1:] != salts[:-1]))
                 + 1
             )
             gstarts = np.concatenate(([0], change))
-            gends = np.concatenate((change, [n]))
-            glens = gends - gstarts
-
-            # whole-batch vectorized math; outputs are zero-copy Arrow arrays
-            imp = scorer.impact(tfs, norms)
-            gaps = np.empty(n, dtype=np.int64)
-            gaps[1:] = doc_ids[1:] - doc_ids[:-1]
-            gaps[gstarts] = doc_ids[gstarts] - salts[gstarts] * salt_range
-            gap_buf, gap_bounds = encode_vbyte_packed(gaps, gstarts)
-            tf_buf, tf_bounds = encode_vbyte_packed(tfs, gstarts)
-            norm_bounds = np.append(gstarts, n)
-            # positions: gather occurrence groups into posting order, delta
-            # per posting, pack per (term, salt) group — all vectorized
-            if store_pos:
+            # positions: gather occurrence groups into posting order, then
+            # delta per posting
+            pgaps = pos_flat
+            if pos_flat.size:
                 new_starts = np.cumsum(tfs) - tfs
                 within = np.arange(pos_flat.size, dtype=np.int64) - np.repeat(
                     new_starts, tfs
                 )
-                pos_sorted = pos_flat[np.repeat(pos_sel_starts, tfs) + within]
-                pgaps = _delta_positions(pos_sorted, tfs)
-                pos_buf, pos_bounds = encode_vbyte_packed(
-                    pgaps, new_starts[gstarts]
+                pgaps = _delta_positions(
+                    pos_flat[np.repeat(pos_sel_starts, tfs) + within], tfs
                 )
-            else:
-                pos_buf = np.empty(0, dtype=np.uint8)
-                pos_bounds = np.zeros(gstarts.size + 1, dtype=np.int64)
-            sum_tf = np.add.reduceat(tfs, gstarts)
-            max_tf = np.maximum.reduceat(tfs, gstarts)
-            max_imp = np.maximum.reduceat(imp, gstarts)
-
-            # inner skip blocks across ALL groups at once
-            idx_in_group = np.arange(n, dtype=np.int64) - np.repeat(gstarts, glens)
-            bl_starts = np.flatnonzero(idx_in_group % block == 0)
-            bl_counts = -(-glens // block)
-            bl_offsets = np.concatenate(([0], np.cumsum(bl_counts)))
-            bl_ends = np.minimum(bl_starts + block, np.repeat(gends, bl_counts))
-            bl_first = doc_ids[bl_starts]
-            bl_n = (bl_ends - bl_starts).astype(np.int32)
-            bl_maximp = np.maximum.reduceat(imp, bl_starts)
-            bl_offs32 = pa.array(bl_offsets.astype(np.int32))
-
-            arrays = [
-                pc.take(uniques, pa.array(codes[gstarts])),
-                pa.array(salts[gstarts]),
-                pa.array(glens.astype(np.int32)),
-                pa.array(doc_ids[gstarts]),
-                pa.array(doc_ids[gends - 1]),
-                _binary_from(gap_buf, gap_bounds),
-                _binary_from(tf_buf, tf_bounds),
-                _binary_from(norms.astype(np.uint8), norm_bounds),
-                _binary_from(pos_buf, pos_bounds),
-                pa.array(sum_tf),
-                pa.array(max_tf.astype(np.int32)),
-                pa.array(max_imp.astype(np.float32)),
-                pa.ListArray.from_arrays(bl_offs32, pa.array(bl_first)),
-                pa.ListArray.from_arrays(bl_offs32, pa.array(bl_n)),
-                pa.ListArray.from_arrays(
-                    bl_offs32, pa.array(bl_maximp.astype(np.float32))
-                ),
-            ]
-            names = [
-                "term", "salt", "n_docs", "first_doc", "last_doc", "doc_gaps",
-                "tfs", "norms", "positions", "sum_tf", "max_tf", "max_impact",
-                "block_first_docs", "block_n", "block_max_impacts",
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            group_terms = enc.dictionary.take(pa.array(codes[gstarts]))
+            yield _pack_groups(
+                scorer, salt_range, block, group_terms, salts[gstarts],
+                doc_ids, tfs, norms, pgaps, gstarts,
+            )
 
     return run
 
 
+def _group_lens(rb: pa.RecordBatch) -> np.ndarray:
+    """Row counts of the consecutive (term, salt) groups of a sorted batch."""
+    terms = rb.column("term")
+    salts = rb.column("salt").to_numpy()
+    change = np.flatnonzero(
+        pc.not_equal(terms[1:], terms[:-1]).to_numpy(zero_copy_only=False)
+        | (salts[1:] != salts[:-1])
+    ) + 1
+    return np.diff(np.concatenate(([0], change, [rb.num_rows])))
+
+
 def _merge_segments(cfg: IndexConfig, avgdl: float):
-    """REDUCE-SIDE merge over rows sorted by (term, salt, first_doc):
-    single-fragment groups pass through without decode; multi-fragment
-    groups (a salt range that straddled two input partitions) are decoded,
-    concatenated in doc order (fragments never overlap), and re-encoded.
-    The streaming carry handles groups spanning Arrow batches.
+    """REDUCE-SIDE merge, a mapInArrow over rows sorted by
+    (term, salt, first_doc).  Per batch, single-fragment groups pass
+    through undecoded, ahead of the merged rows.  Multi-fragment groups (a
+    salt range that straddled input partitions) are decoded with one vbyte
+    pass per column for the whole batch and re-packed by
+    :func:`_pack_groups`: fragments are sorted by first_doc and never
+    overlap, and position gaps are per posting, so the decoded fragments
+    concatenate as they are.  The streaming carry holds back each batch's
+    last group, which may continue in the next batch.
     """
     scorer = _Scorer(cfg, avgdl)
     salt_range = cfg.salt_range
+    block = cfg.block_range
 
-    def merge_region(region: pd.DataFrame) -> pd.DataFrame:
-        terms = region["term"].to_numpy()
-        salts = region["salt"].to_numpy()
-        change = (
-            np.flatnonzero((terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])) + 1
+    def merge_batch(rb: pa.RecordBatch):
+        glens = _group_lens(rb)
+        single = np.repeat(glens == 1, glens)
+        if single.any():
+            yield rb.take(pa.array(np.flatnonzero(single)))
+        if single.all():
+            return
+        multi = rb.take(pa.array(np.flatnonzero(~single)))
+        mlens = glens[glens > 1]
+        first_rows = np.cumsum(mlens) - mlens
+        doc_ids, tfs, norms, pos_gaps, row_starts = _decode_rows(multi, salt_range)
+        yield _pack_groups(
+            scorer, salt_range, block, multi.column("term").take(pa.array(first_rows)),
+            multi.column("salt").to_numpy()[first_rows],
+            doc_ids, tfs, norms, pos_gaps, row_starts[first_rows],
         )
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(region)]))
-        out_rows = []
-        passthrough_idx = []
-        for s, e in zip(starts, ends):
-            if e - s == 1:
-                passthrough_idx.append(s)
-                continue
-            base = int(salts[s]) * salt_range
-            frags = region.iloc[s:e]
-            ids = np.concatenate(
-                [
-                    delta_decode(
-                        decode_vbyte(bytes(g), int(n)).astype(np.int64), base
-                    )
-                    for g, n in zip(frags["doc_gaps"], frags["n_docs"])
-                ]
-            )
-            tf_arrays = [
-                decode_vbyte(bytes(t), int(n)).astype(np.int64)
-                for t, n in zip(frags["tfs"], frags["n_docs"])
-            ]
-            tfs = np.concatenate(tf_arrays)
-            norms = np.concatenate(
-                [np.frombuffer(bytes(x), dtype=np.uint8) for x in frags["norms"]]
-            )
-            order = np.argsort(ids, kind="stable")
-            g_pos = None
-            if any(len(bytes(p)) > 0 for p in frags["positions"]):
-                # decode each fragment to absolute positions, concat in the
-                # fragments' doc order, then gather occurrence groups into
-                # the merged posting order
-                pos_abs = np.concatenate(
-                    [
-                        _undelta_positions(
-                            decode_vbyte(bytes(p), int(st)).astype(np.int64),
-                            tfa,
-                        )
-                        for p, st, tfa in zip(
-                            frags["positions"], frags["sum_tf"], tf_arrays
-                        )
-                    ]
-                )
-                sel = (np.cumsum(tfs) - tfs)[order]
-                otfs = tfs[order]
-                new_starts = np.cumsum(otfs) - otfs
-                within = np.arange(pos_abs.size, dtype=np.int64) - np.repeat(
-                    new_starts, otfs
-                )
-                g_pos = pos_abs[np.repeat(sel, otfs) + within]
-            out_rows.append(
-                _encode_group_row(
-                    cfg, scorer, terms[s], int(salts[s]),
-                    ids[order], tfs[order], norms[order], g_pos,
-                )
-            )
-        frames = []
-        if passthrough_idx:
-            frames.append(region.iloc[passthrough_idx])
-        if out_rows:
-            frames.append(pd.DataFrame(out_rows))
-        return pd.concat(frames, ignore_index=True) if frames else region.iloc[:0]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
+    def run(batches):  # Iterator[pa.RecordBatch] -> Iterator[pa.RecordBatch]
+        carry = None
+        for rb in batches:
             if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
+                rb = pa.Table.from_batches([carry, rb]).combine_chunks()
+                rb = rb.to_batches()[0]
+            if rb.num_rows == 0:
                 continue
-            terms = pdf["term"].to_numpy()
-            salts = pdf["salt"].to_numpy()
-            eq_last = (terms == terms[-1]) & (salts == salts[-1])
-            tail_len = int(np.argmin(eq_last[::-1])) if not eq_last.all() else len(pdf)
-            if tail_len == len(pdf):
-                carry = pdf
-                continue
-            cut = len(pdf) - tail_len
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-            out = merge_region(pdf.iloc[:cut])
-            if not out.empty:
-                yield out
-        if carry is not None and not carry.empty:
-            yield merge_region(carry)
+            cut = rb.num_rows - int(_group_lens(rb)[-1])
+            carry = rb.slice(cut)
+            if cut:
+                yield from merge_batch(rb.slice(0, cut))
+        if carry is not None:
+            yield from merge_batch(carry)
 
     return run
 
@@ -834,7 +785,7 @@ def build_index(
             docs = (
                 analyzed.select("url", "doc_id", "doclen")
                 .observe(obs, *_permutation_metrics())
-                .withColumn("norm_byte", _norm_byte_udf(F.col("doclen")))
+                .withColumn("norm_byte", _norm_byte(F.col("doclen")))
             )
             docs.write.mode("overwrite").parquet(paths.docs)
             m = obs.get
@@ -890,7 +841,7 @@ def build_index(
             blocks = (
                 segments.repartition(merge_parts, bucket_expr, F.col("salt"))
                 .sortWithinPartitions("term", "salt", "first_doc")
-                .mapInPandas(_merge_segments(cfg, stats["avgdl"]), schema=SEGMENT_SCHEMA)
+                .mapInArrow(_merge_segments(cfg, stats["avgdl"]), schema=SEGMENT_SCHEMA)
                 .withColumn("bucket", bucket_expr)
             )
             blocks.write.mode("overwrite").partitionBy("bucket").parquet(paths.postings)
@@ -1009,8 +960,15 @@ def _payload_arrays(pages: DataFrame) -> DataFrame:
     )
 
 
-@F.pandas_udf(T.IntegerType())
-def _norm_byte_udf(doclen: pd.Series) -> pd.Series:
-    return pd.Series(
-        int_to_byte4_np(doclen.to_numpy(dtype=np.int64)).astype(np.int32)
+def _norm_byte(doclen: Column) -> Column:
+    """:func:`~apache___solr_spark.index.smallfloat.int_to_byte4` as a
+    Catalyst expression, so the docs write runs no Python worker: below 8
+    the length is stored verbatim; otherwise, with nb its bit length, the
+    3 bits under the leading 1 plus shift code nb - 3 in the high bits."""
+    nb = F.length(F.bin(doclen))
+    mantissa = F.call_function("shiftright", doclen, nb - 4).bitwiseAND(F.lit(7))
+    return (
+        F.when(doclen < 8, doclen)
+        .otherwise(mantissa.bitwiseOR(F.call_function("shiftleft", nb - 3, F.lit(3))))
+        .cast("int")
     )

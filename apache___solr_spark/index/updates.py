@@ -40,8 +40,8 @@ from apache___solr_spark.index.builder import (
     SEGMENT_SCHEMA,
     IndexPaths,
     _analyze_raw,
+    _norm_byte,
     _segment_encode,
-    _norm_byte_udf,
 )
 
 
@@ -145,7 +145,7 @@ def add_docs(
 
     # docs table rows
     docs = analyzed.select("url", "doc_id", "doclen").withColumn(
-        "norm_byte", _norm_byte_udf(F.col("doclen"))
+        "norm_byte", _norm_byte(F.col("doclen"))
     )
     docs.write.mode("append").parquet(paths.docs)
 
@@ -231,21 +231,23 @@ def optimize(
     term, and re-baseline exact stats (N, avgdl) — after which impacts are
     recomputed against the fresh avgdl, so pruning bounds are tight again.
 
-    One distributed pass over the postings (decode -> filter -> re-encode
-    inside Arrow batches, grouped re-shuffle only to fold (term, salt)
-    fragments), plus narrow rewrites of docs/dictionary.  Returns the new
-    stats dict.
+    One distributed pass over the postings: a grouped re-shuffle folds
+    (term, salt) fragments (the build's merge), then each Arrow batch is
+    decoded in one vectorized pass, postings of deleted docs are dropped,
+    rows left empty vanish, and the rest are re-packed with impacts against
+    the fresh avgdl.  Narrow rewrites of docs/dictionary follow.  Returns
+    the new stats dict.
     """
     import numpy as np
-    import pandas as pd
-    from typing import Iterator
+    import pyarrow as pa
 
     from apache___solr_spark.index.builder import (
+        SEGMENT_SCHEMA,
+        _decode_rows,
+        _merge_segments,
+        _pack_groups,
         _Scorer,
-        _encode_group_row,
-        _undelta_positions,
     )
-    from apache___solr_spark.index.codec import decode_vbyte, delta_decode
 
     paths = IndexPaths(index_dir)
     with open(paths.stats) as f:
@@ -254,7 +256,7 @@ def optimize(
     deletes = load_deletes(spark, index_dir)
     # deletes ship to executors as ONE broadcast sorted numpy int64 array
     # (Arrow collect; ~8 bytes/id — 10^7 deletes is 80 MB, not a Python set
-    # of boxed ints), probed per posting row with searchsorted.
+    # of boxed ints), probed per posting with searchsorted.
     dels_arr = (
         np.sort(deletes.toPandas()["doc_id"].to_numpy(np.int64))
         if deletes is not None
@@ -273,80 +275,43 @@ def optimize(
     avgdl = (total / n_docs) if n_docs else 0.0
     b_dels = spark.sparkContext.broadcast(dels_arr)
     scorer = _Scorer(cfg, avgdl)
-    salt_range = cfg.salt_range
+    salt_range, block = cfg.salt_range, cfg.block_range
 
-    def rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rewrite(batches):  # Iterator[pa.RecordBatch] -> Iterator[pa.RecordBatch]
         dels = b_dels.value  # sorted int64 array, shared across all batches
-        for pdf in batches:
-            out_rows = []
-            for term, salt, n_, gaps_bin, tfs_bin, norms_bin, pos_bin, sum_tf in zip(
-                pdf["term"],
-                pdf["salt"],
-                pdf["n_docs"],
-                pdf["doc_gaps"],
-                pdf["tfs"],
-                pdf["norms"],
-                pdf["positions"],
-                pdf["sum_tf"],
-            ):
-                base = int(salt) * salt_range
-                n = int(n_)
-                ids = delta_decode(
-                    decode_vbyte(bytes(gaps_bin), n).astype(np.int64), base
-                )
-                tfs = decode_vbyte(bytes(tfs_bin), n).astype(np.int64)
-                norms = np.frombuffer(bytes(norms_bin), dtype=np.uint8)
-                pos_bin = bytes(pos_bin)
-                if dels.size:
-                    # sorted-probe: ids is sorted, dels is sorted — a doc is
-                    # deleted iff dels[searchsorted(dels, id)] == id
-                    j = np.searchsorted(dels, ids)
-                    j_clip = np.minimum(j, dels.size - 1)
-                    keep = dels[j_clip] != ids
-                else:
-                    keep = np.ones(n, dtype=bool)
-                if not keep.any():
-                    continue
-                g_pos = None
-                if pos_bin:
-                    pos_abs = _undelta_positions(
-                        decode_vbyte(pos_bin, int(sum_tf)).astype(np.int64),
-                        tfs,
-                    )
-                    if keep.all():
-                        g_pos = pos_abs
-                    else:
-                        # vectorized gather of kept docs' position slices
-                        mask = np.repeat(keep, tfs)
-                        g_pos = pos_abs[mask]
-                out = _encode_group_row(
-                    cfg,
-                    scorer,
-                    term,
-                    int(salt),
-                    ids[keep],
-                    tfs[keep],
-                    norms[keep],
-                    g_pos,
-                )
-                out_rows.append(out)
-            if out_rows:
-                yield pd.DataFrame(out_rows)
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            doc_ids, tfs, norms, pos_gaps, row_starts = _decode_rows(rb, salt_range)
+            if dels.size:
+                # sorted probe: a doc is deleted iff dels[searchsorted] == id
+                j = np.minimum(np.searchsorted(dels, doc_ids), dels.size - 1)
+                keep = dels[j] != doc_ids
+            else:
+                keep = np.ones(doc_ids.size, dtype=bool)
+            n_kept = np.add.reduceat(keep, row_starts, dtype=np.int64)
+            live = np.flatnonzero(n_kept)
+            if live.size == 0:
+                continue
+            if pos_gaps.size:
+                pos_gaps = pos_gaps[np.repeat(keep, tfs)]
+            yield _pack_groups(
+                scorer, salt_range, block,
+                rb.column("term").take(pa.array(live)),
+                rb.column("salt").to_numpy()[live],
+                doc_ids[keep], tfs[keep], norms[keep], pos_gaps,
+                (np.cumsum(n_kept) - n_kept)[live],
+            )
 
     postings = spark.read.parquet(paths.postings)
-    # fold same-(term, salt) fragments from appended segments: group-shuffle
-    # then rewrite each group as ONE row (merge_region semantics are covered
-    # by re-encoding from the decoded union)
-    from apache___solr_spark.index.builder import SEGMENT_SCHEMA, _merge_segments
-
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     bucket_expr = F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)).cast("int")
     merged = (
         postings.drop("bucket")
         .repartition(n_parts, bucket_expr, F.col("salt"))
         .sortWithinPartitions("term", "salt", "first_doc")
-        .mapInPandas(_merge_segments(cfg, avgdl), schema=SEGMENT_SCHEMA)
-        .mapInPandas(rewrite, schema=SEGMENT_SCHEMA)
+        .mapInArrow(_merge_segments(cfg, avgdl), schema=SEGMENT_SCHEMA)
+        .mapInArrow(rewrite, schema=SEGMENT_SCHEMA)
         .withColumn("bucket", bucket_expr)
     )
     tmp_postings = paths.postings + ".opt"

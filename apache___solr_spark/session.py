@@ -122,6 +122,10 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),
         )
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
+        # the postings table has IndexConfig.n_buckets (64) bucket= dirs;
+        # above this threshold (default 32) every read of it launches a
+        # Spark job just to list them, so list on the driver instead
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

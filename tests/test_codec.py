@@ -89,3 +89,101 @@ def test_smallfloat_matches_scalar():
 def test_smallfloat_rejects_negative():
     with pytest.raises(ValueError):
         int_to_byte4(-1)
+
+
+def test_norm_byte_expr_matches_scalar(spark):
+    from pyspark.sql import functions as F
+
+    from apache___solr_spark.index.builder import _norm_byte
+
+    vals = list(range(70_000))
+    for k in range(3, 31):
+        vals += [2**k - 1, 2**k, 2**k + 1]
+    vals.append(2**31 - 1)
+    df = spark.createDataFrame([(v,) for v in vals], "doclen int")
+    got = df.select("doclen", _norm_byte(F.col("doclen")).alias("nb")).toPandas()
+    want = [int_to_byte4(int(v)) for v in got["doclen"]]
+    assert len(got) == len(vals)
+    assert got["nb"].tolist() == want
+
+
+def _analyzed_batch(doc_ids, store_positions, seed=5):
+    """Analyzed rows (doc_id, doclen, terms, tfs, positions) over a
+    5-term vocabulary; "rare" occurs only in docs 12-14."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    rows = {"doc_id": [], "doclen": [], "terms": [], "tfs": [], "positions": []}
+    for d in doc_ids:
+        vocab = ["alpha", "beta", "gamma", "delta"] + (["rare"] if 12 <= d < 15 else [])
+        terms = sorted(t for t in vocab if t == "rare" or rng.random() < 0.7) or ["alpha"]
+        tfs = rng.integers(1, 4, size=len(terms))
+        doclen = int(tfs.sum()) + int(rng.integers(0, 3))
+        perm = rng.permutation(doclen)
+        pos, at = [], 0
+        for tf in tfs:
+            pos.extend(sorted(perm[at : at + tf]))
+            at += tf
+        rows["doc_id"].append(d)
+        rows["doclen"].append(doclen)
+        rows["terms"].append(terms)
+        rows["tfs"].append(encode_vbyte(tfs))
+        rows["positions"].append(encode_vbyte(np.array(pos)) if store_positions else b"")
+    return pa.RecordBatch.from_pydict(
+        rows,
+        schema=pa.schema(
+            [("doc_id", pa.int64()), ("doclen", pa.int32()),
+             ("terms", pa.list_(pa.string())), ("tfs", pa.binary()),
+             ("positions", pa.binary())]
+        ),
+    )
+
+
+@pytest.mark.parametrize("store_positions", [True, False])
+def test_merge_segments_equals_unsplit_encode(store_positions):
+    """Encoding a salt range in 3 doc-contiguous parts and merging the
+    fragments (fed in 1-3 row batches, so groups straddle the carry) gives
+    exactly the rows of the unsplit encode; single-fragment rows pass
+    through unchanged."""
+    import pyarrow as pa
+
+    from apache___solr_spark.config import IndexConfig
+    from apache___solr_spark.index.builder import _merge_segments, _segment_encode
+
+    cfg = IndexConfig(block_range=4, salt_range=32, n_buckets=8)
+    avgdl = 7.5
+    parts = [range(0, 10), range(10, 20), range(20, 60)]  # cuts inside salt 0
+    whole = pa.Table.from_batches(
+        _segment_encode(cfg, avgdl)(iter([_analyzed_batch(range(60), store_positions)]))
+    )
+    frags = pa.Table.from_batches(
+        [
+            out
+            for p in parts
+            for out in _segment_encode(cfg, avgdl)(
+                iter([_analyzed_batch(range(60), store_positions).slice(p.start, len(p))])
+            )
+        ]
+    ).sort_by([("term", "ascending"), ("salt", "ascending"), ("first_doc", "ascending")])
+    key = lambda r: (r["term"], r["salt"])  # noqa: E731
+    frag_rows = frags.to_pylist()
+    n_frags = {}
+    for r in frag_rows:
+        n_frags[key(r)] = n_frags.get(key(r), 0) + 1
+    assert max(n_frags.values()) == 3 and min(n_frags.values()) == 1
+
+    batches, at, sizes = [], 0, [1, 2, 3]
+    while at < frags.num_rows:
+        size = sizes[len(batches) % 3]
+        batches.append(frags.slice(at, size).combine_chunks().to_batches()[0])
+        at += size
+    merged = [
+        r for out in _merge_segments(cfg, avgdl)(iter(batches)) for r in out.to_pylist()
+    ]
+
+    want = {key(r): r for r in whole.to_pylist()}
+    assert sorted(key(r) for r in merged) == sorted(want)
+    for r in merged:
+        assert r == want[key(r)]
+    singles = [r for r in frag_rows if n_frags[key(r)] == 1]
+    assert singles and all(r in merged for r in singles)

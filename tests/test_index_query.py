@@ -160,6 +160,47 @@ def test_partitioning_invariance(spark, corpus, built, tmp_path_factory):
     assert [(r["term"], r["df"], r["cf"]) for r in da] == [
         (r["term"], r["df"], r["cf"]) for r in db
     ]
+    # postings rows, every column: the 1-partition build encodes each
+    # (term, salt) group whole, the default build merges fragments
+    pa_ = spark.read.parquet(os.path.join(built, "postings")).collect()
+    pb_ = spark.read.parquet(os.path.join(out2, "postings")).collect()
+    rows_a = {(r["term"], r["salt"]): r.asDict() for r in pa_}
+    rows_b = {(r["term"], r["salt"]): r.asDict() for r in pb_}
+    assert len(rows_a) == len(pa_) and len(rows_b) == len(pb_)
+    assert rows_a == rows_b
+
+
+def test_optimize_drops_fully_deleted_term(spark, built, oracle_idx, tmp_path):
+    """Deleting every doc of a rare term and optimizing leaves no postings
+    row and no dictionary row for it; every other term keeps exactly its
+    live df/cf."""
+    import shutil
+
+    from apache___solr_spark.index.updates import delete_docs, optimize
+
+    out = str(tmp_path / "idx")
+    shutil.copytree(built, out)
+    rare = min(
+        (t for t, pl in oracle_idx.postings.items() if len(pl) >= 2),
+        key=lambda t: (len(oracle_idx.postings[t]), t),
+    )
+    victims = set(oracle_idx.postings[rare])
+    delete_docs(spark, out, doc_ids=sorted(victims))
+    optimize(spark, out, cfg=CFG)
+
+    postings = spark.read.parquet(os.path.join(out, "postings"))
+    assert postings.filter(F.col("term") == rare).count() == 0
+    got = {
+        r["term"]: (r["df"], r["cf"])
+        for r in spark.read.parquet(os.path.join(out, "dictionary")).collect()
+    }
+    want = {}
+    for t, pl in oracle_idx.postings.items():
+        live = {d: tf for d, tf in pl.items() if d not in victims}
+        if live:
+            want[t] = (len(live), sum(live.values()))
+    assert rare not in got
+    assert got == want
 
 
 def test_resume_skips_completed_stages(spark, corpus, built):
