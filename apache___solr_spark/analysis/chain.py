@@ -5,9 +5,9 @@ Chain order follows the reference ``text_general`` index analyzer
 ignoreCase=true, then LowerCaseFilter.  The HTML strip stage corresponds to
 the char-filter slot / extraction path (TokenizerChain.java:37).
 
-These are plain deterministic Python functions; the Spark layer wraps them
-in Arrow-batched pandas UDFs (analysis/udfs.py) so the cluster runs the
-exact same bytes the single-process oracle runs.
+These are plain deterministic Python functions; the index build calls them
+inside its Arrow-batched analysis pass (index/builder.py:_analyze_raw) so
+the cluster runs the exact same bytes the single-process oracle runs.
 """
 
 from __future__ import annotations

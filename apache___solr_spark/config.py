@@ -66,19 +66,6 @@ class IndexConfig:
     # stopwords without leaving position gaps (documented divergence from
     # Lucene's posIncrement gaps; exact for analyzer="simple").
     store_positions: bool = True
-    # checkpoint_numbered: when True the numbered analyzed table is ALSO
-    # durably checkpointed to parquet (<index>/analyzed) between the
-    # numbering shuffle and the postings build.  Default False: the fused
-    # build keeps the range-shuffled analyzed rows in executor-local
-    # persist() storage (MEMORY_AND_DISK — Spark re-derives lost partitions
-    # from the analyzed_raw checkpoint via lineage) and feeds the docs and
-    # postings stages straight from it, removing a full-corpus parquet
-    # write + two re-reads and their stage barriers from every build.  A
-    # driver failure between stages recomputes only the narrow numbering
-    # shuffle from analyzed_raw; deployments that prefer durability over
-    # that recompute set True.  Not part of the digest: it changes where
-    # intermediate bytes live, never any output bit.
-    checkpoint_numbered: bool = False
 
     def __post_init__(self) -> None:
         if self.salt_range % self.block_range != 0:
@@ -99,14 +86,8 @@ class IndexConfig:
             raise ValueError(f"unknown score_dtype {self.score_dtype!r}")
 
     def digest(self) -> str:
-        """Stable digest used by checkpoint manifests to detect config drift.
-
-        Knobs that cannot change any output bit (only where intermediates
-        live) are excluded, so flipping them never invalidates a resumable
-        index."""
-        d = asdict(self)
-        d.pop("checkpoint_numbered", None)
-        payload = json.dumps(d, sort_keys=True).encode()
+        """Stable digest used by checkpoint manifests to detect config drift."""
+        payload = json.dumps(asdict(self), sort_keys=True).encode()
         return hashlib.sha256(payload).hexdigest()[:16]
 
     def to_dict(self) -> dict:
@@ -114,8 +95,9 @@ class IndexConfig:
 
     @classmethod
     def from_dict(cls, d: dict) -> "IndexConfig":
-        """Rehydrate from a stats-file ``config`` record; unknown keys from
-        a newer writer are ignored so older readers keep working."""
+        """Rehydrate from a stats-file ``config`` record; unknown keys (from
+        a newer writer, or a retired field in an older index's stats) are
+        ignored, so every index stays loadable across versions."""
         known = {f for f in cls.__dataclass_fields__}
         return cls(**{k: v for k, v in d.items() if k in known})
 

@@ -10,7 +10,7 @@ DocumentBuilder.toDocument:99-123, re-expressed Spark-first):
         ──mapInArrow──► numbered(url, doc_id, terms[], tfs[], positions,
           doclen) — consumed STRAIGHT from the persisted frame by BOTH the
           docs write and the segment encoder (no intermediate parquet hop;
-          cfg.checkpoint_numbered=True restores one)
+          a resume recomputes it from the analyzed_raw checkpoint)
         ──numpy segment encode──► packed (term, salt) rows
         ──repartition(bucket, salt) + sorted mapInArrow merge──► postings
         ──metadata agg──► dictionary(term, df, cf, max_impact)
@@ -100,14 +100,6 @@ class IndexPaths:
     @property
     def analyzed_raw(self) -> str:
         return os.path.join(self.root, "analyzed_raw")
-
-    @property
-    def analyzed(self) -> str:
-        # optional durable checkpoint of the numbered analyzed table
-        # (cfg.checkpoint_numbered=True, or any pre-fusion build); the
-        # default fused build keeps these rows in executor persist()
-        # storage only and this directory is never written
-        return os.path.join(self.root, "analyzed")
 
     @property
     def numbering(self) -> str:
@@ -714,64 +706,43 @@ def build_index(
 
     # ---- stage 1b: dense doc_id assignment (fused — no parquet hop) ------
     # The numbered rows feed the docs write and the segment encoder straight
-    # from executor persist() storage (MEMORY_AND_DISK).  Rounds 1-3 wrote
-    # them to parquet and re-read them twice; that full-corpus write + two
-    # reads and their stage barriers were pure fixed cost at the 4N level
-    # (BENCH/BASELINE.md session-C stage walls: the numbering stage scaled
-    # 1.66x against a 3.31x ceiling).  cfg.checkpoint_numbered=True restores
-    # the durable hop; a pre-fusion index with a valid analyzed checkpoint
-    # is still consumed (legacy resume).
+    # from executor persist() storage (MEMORY_AND_DISK).  Writing them to
+    # parquet and re-reading them twice was pure fixed cost at the 4N level
+    # (BENCH/BASELINE.md: the numbering stage scaled 1.66x against a 3.31x
+    # ceiling).  A resume that needs these rows recomputes them from the
+    # analyzed_raw checkpoint: rank-of-url is partition-invariant, so the
+    # doc_ids come out the same.
     analyzed = None
     ranged = None
     stats_fresh = False
     try:
         if need_docs or need_postings:
             t0 = time.time()
-            if resume and ckpt.stage_complete(paths.analyzed, cfg_digest, in_digest):
-                analyzed = spark.read.parquet(paths.analyzed)
-            else:
-                raw = spark.read.parquet(paths.analyzed_raw)
-                raw_rows = (ckpt.load_manifest(paths.analyzed_raw) or {}).get("rows")
-                n_range = (
-                    n_parts
-                    if n_parts_explicit
-                    else _range_parts(
-                        raw_rows, n_parts, spark.sparkContext.defaultParallelism
-                    )
+            raw = spark.read.parquet(paths.analyzed_raw)
+            raw_rows = (ckpt.load_manifest(paths.analyzed_raw) or {}).get("rows")
+            n_range = (
+                n_parts
+                if n_parts_explicit
+                else _range_parts(
+                    raw_rows, n_parts, spark.sparkContext.defaultParallelism
                 )
-                analyzed, n_docs_, total_len_, ranged, part_counts = _number_docs(
-                    spark, raw, n_range
-                )
-                if not _stats_reusable():
-                    _write_stats(n_docs_, total_len_)
-                    stats_fresh = True
-                os.makedirs(paths.numbering, exist_ok=True)
-                ckpt.publish_manifest(
-                    paths.numbering,
-                    stage="numbering",
-                    config_digest=cfg_digest,
-                    input_digest=in_digest,
-                    rows=n_docs_,
-                    partitions=part_counts,
-                    started_at=t0,
-                    extra={"materialized": bool(cfg.checkpoint_numbered)},
-                )
-                if cfg.checkpoint_numbered:
-                    t1 = time.time()
-                    analyzed.write.mode("overwrite").parquet(paths.analyzed)
-                    lineage = ckpt.parquet_lineage(paths.analyzed)
-                    ckpt.publish_manifest(
-                        paths.analyzed,
-                        stage="analyzed",
-                        config_digest=cfg_digest,
-                        input_digest=in_digest,
-                        rows=sum(p["rows"] for p in lineage),
-                        partitions=lineage,
-                        started_at=t1,
-                    )
-                    ranged.unpersist()
-                    ranged = None
-                    analyzed = spark.read.parquet(paths.analyzed)
+            )
+            analyzed, n_docs_, total_len_, ranged, part_counts = _number_docs(
+                spark, raw, n_range
+            )
+            if not _stats_reusable():
+                _write_stats(n_docs_, total_len_)
+                stats_fresh = True
+            os.makedirs(paths.numbering, exist_ok=True)
+            ckpt.publish_manifest(
+                paths.numbering,
+                stage="numbering",
+                config_digest=cfg_digest,
+                input_digest=in_digest,
+                rows=n_docs_,
+                partitions=part_counts,
+                started_at=t0,
+            )
 
         # ---- stage 1c: docs table (+ observed stats & permutation check) -----
         # The permutation guard and the global stats (exact — ExactStatsCache

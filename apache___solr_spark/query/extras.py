@@ -123,31 +123,11 @@ def _mlt_select_terms(
 def _term_vector_row(engine: "SearchEngine", doc_id: int) -> list:
     """The source doc's (terms, tfs) — Lucene term-vectors analog.
 
-    Pre-fusion indexes carry a numbered ``analyzed`` checkpoint and read it
-    directly (one pushed doc_id filter).  Fused builds (the default since
-    round 4) keep no such table, so the lookup becomes two pushed-predicate
-    point reads: doc_id -> url via the docs table, then url -> (terms, tfs)
-    via the analyzed_raw checkpoint — same rows, no extra index state.
-
-    The analyzed checkpoint is used only when its manifest digests match
-    the live index's (engine.stats carries both): after an in-place
-    rebuild with a changed config or input the fused build leaves the
-    stale analyzed/ dir in place, and reading it would silently return
-    stale terms and a stale doc_id->row mapping."""
-    from apache___solr_spark.index import checkpoint as ckpt
-
+    The build keeps no numbered analyzed table, so the lookup is two
+    pushed-predicate point reads: doc_id -> url via the docs table, then
+    url -> (terms, tfs) via the analyzed_raw checkpoint — same rows, no
+    extra index state."""
     spark, paths = engine.spark, engine.paths
-    if ckpt.stage_complete(
-        paths.analyzed,
-        engine.stats.get("config_digest"),
-        engine.stats.get("input_digest"),
-    ):
-        return (
-            spark.read.parquet(paths.analyzed)
-            .filter(F.col("doc_id") == doc_id)
-            .select("terms", "tfs")
-            .collect()
-        )
     urls = (
         spark.read.parquet(paths.docs)
         .filter(F.col("doc_id") == doc_id)

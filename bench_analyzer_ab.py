@@ -12,7 +12,8 @@ has a byte-identical pure-Catalyst formulation,
 so we run the SAME tokenization over the SAME corpus twice:
 
   A (udf):  mapInPandas over (text) running simple_analyze per doc —
-            the shape the production build uses (analysis/udfs.py seam).
+            the per-doc Python shape of the production build's analysis
+            pass (builder._analyze_raw).
   B (sql):  the regexp_extract_all expression — whole-stage codegen,
             zero Python workers.
 
@@ -25,7 +26,8 @@ more work per token than [a-z0-9]+ on both sides.
 
 Writes BENCH/analyzer_ab.json; one row lands in BENCH/BASELINE.md.
 
-Usage: python bench_analyzer_ab.py [n_docs]   (default 500k, local[32])
+Usage: python bench_analyzer_ab.py [n_docs]   (default 500k; local[N] with
+N = $SPARK_GRAFT_CPUS or the host's core count, as get_spark sizes it)
 """
 
 from __future__ import annotations
@@ -42,7 +44,6 @@ import pandas as pd
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from apache___solr_spark.analysis.chain import simple_analyze
     from apache___solr_spark.corpus import write_pages_parquet
@@ -53,7 +54,8 @@ def main() -> None:
     write_pages_parquet(
         pages_path, n_docs=n_docs, seed=42, n_jobs=os.cpu_count() or 8
     )
-    spark = get_spark("analyzer-ab", cores=cores)
+    spark = get_spark("analyzer-ab")
+    cores = spark.sparkContext.defaultParallelism
     from pyspark.sql import functions as F
 
     # text-only: both paths tokenize the SAME already-extracted column, so
@@ -71,15 +73,18 @@ def main() -> None:
             )
 
     def run(df, label: str) -> dict:
-        # warm once (python worker spin-up / codegen compile), then p50 of 3
+        # warm once untimed (python worker spin-up / codegen compile), then
+        # p50 of 3 warm runs
+        agg_df = df.agg(
+            F.count(F.lit(1)).alias("docs"),
+            F.sum("doclen").alias("tokens"),
+        )
+        agg_df.collect()
         walls = []
         agg = None
         for _ in range(3):
             t0 = time.time()
-            agg = df.agg(
-                F.count(F.lit(1)).alias("docs"),
-                F.sum("doclen").alias("tokens"),
-            ).collect()[0]
+            agg = agg_df.collect()[0]
             walls.append(time.time() - t0)
         walls.sort()
         return {

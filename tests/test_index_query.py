@@ -230,36 +230,86 @@ def test_resume_after_partial_failure(spark, corpus, tmp_path_factory):
     assert before == after
 
 
-def test_checkpoint_numbered_identity(spark, corpus, built, tmp_path_factory):
-    """cfg.checkpoint_numbered=True (durable numbering hop, the pre-fusion
-    layout) builds a bit-identical index to the fused default and writes
-    the analyzed checkpoint + manifest; the storage knob does not change
-    the config digest (it changes where intermediate bytes live, never an
-    output bit)."""
-    import dataclasses
+class _Crash(RuntimeError):
+    pass
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.mark.parametrize(
+    "stage", ["analyzed_raw", "numbering", "docs", "postings", "dictionary"]
+)
+def test_crash_in_stage_resumes_identical(
+    spark, corpus, built, tmp_path_factory, monkeypatch, stage
+):
+    """A build that dies inside a stage (its data written, its manifest
+    not yet published) leaks no cached frame, and a resume finishes to an
+    index row-identical to an uninterrupted build: docs, dictionary and
+    postings in every column, and the same N/avgdl."""
+    from apache___solr_spark.index import checkpoint as ckpt
 
     path, _ = corpus
-    out2 = str(tmp_path_factory.mktemp("ckptnum") / "idx")
-    cfg2 = dataclasses.replace(CFG, checkpoint_numbered=True)
-    assert cfg2.digest() == CFG.digest()
-    build_index(spark, path, out2, cfg=cfg2)
-    assert os.path.exists(os.path.join(out2, "analyzed", "_MANIFEST.json"))
-    assert not os.path.exists(os.path.join(built, "analyzed", "_MANIFEST.json"))
-    for stage, key in (("docs", "doc_id"), ("dictionary", "term")):
-        a = spark.read.parquet(os.path.join(built, stage)).orderBy(key).collect()
-        b = spark.read.parquet(os.path.join(out2, stage)).orderBy(key).collect()
-        assert a == b, stage
-    pa_ = (
-        spark.read.parquet(os.path.join(built, "postings"))
-        .orderBy("term", "salt")
-        .collect()
-    )
-    pb = (
-        spark.read.parquet(os.path.join(out2, "postings"))
-        .orderBy("term", "salt")
-        .collect()
-    )
-    assert pa_ == pb
+    out = str(tmp_path_factory.mktemp(f"crash_{stage}") / "idx")
+    publish = ckpt.publish_manifest
+
+    def crash_at_stage(stage_dir, **kw):
+        if kw["stage"] == stage:
+            raise _Crash(stage)
+        return publish(stage_dir, **kw)
+
+    monkeypatch.setattr(ckpt, "publish_manifest", crash_at_stage)
+    cached = _persistent_rdd_ids(spark)
+    with pytest.raises(_Crash):
+        build_index(spark, path, out, cfg=CFG)
+    assert _persistent_rdd_ids(spark) == cached
+    assert not os.path.exists(os.path.join(out, stage, "_MANIFEST.json"))
+    monkeypatch.undo()
+
+    build_index(spark, path, out, cfg=CFG, resume=True)
+    for table, keys in (
+        ("docs", ["doc_id"]),
+        ("dictionary", ["term"]),
+        ("postings", ["term", "salt"]),
+    ):
+        want = spark.read.parquet(os.path.join(built, table)).orderBy(*keys)
+        got = spark.read.parquet(os.path.join(out, table)).orderBy(*keys)
+        assert got.columns == want.columns, table
+        assert got.collect() == want.collect(), table
+    stats = []
+    for root in (built, out):
+        with open(os.path.join(root, "stats.json")) as f:
+            stats.append(json.load(f))
+    assert stats[1]["N"] == stats[0]["N"]
+    assert stats[1]["avgdl"] == stats[0]["avgdl"]
+
+
+def test_retired_config_key_keeps_digest(spark, built, tmp_path):
+    """A stats file written while IndexConfig still had the (never
+    digested) checkpoint_numbered field keeps its digest and still opens:
+    from_dict ignores the retired key."""
+    import shutil
+
+    from apache___solr_spark.config import DEFAULT_CONFIG
+
+    old = {**DEFAULT_CONFIG.to_dict(), "checkpoint_numbered": True}
+    assert IndexConfig.from_dict(old).digest() == "ae9ba006269b46a5"
+    assert DEFAULT_CONFIG.digest() == "ae9ba006269b46a5"
+
+    copy = str(tmp_path / "idx")
+    shutil.copytree(built, copy)
+    stats_path = os.path.join(copy, "stats.json")
+    with open(stats_path) as f:
+        stats = json.load(f)
+    stats["config"]["checkpoint_numbered"] = False
+    with open(stats_path, "w") as f:
+        json.dump(stats, f)
+    eng = SearchEngine(spark, copy)
+    assert eng.cfg == CFG
+    want = SearchEngine(spark, built).search("web data", k=10).collect()
+    assert want
+    assert eng.search("web data", k=10).collect() == want
 
 
 def test_fused_resume_recomputes_numbering(spark, corpus, tmp_path_factory):
@@ -288,8 +338,9 @@ def test_fused_resume_recomputes_numbering(spark, corpus, tmp_path_factory):
 def test_manifests_carry_lineage(built):
     # "numbering" is the fused stage's metrics-only manifest (no data dir);
     # its lineage rows are the per-range-partition counts from the offsets
-    # pass.  The pre-fusion "analyzed" parquet checkpoint only exists when
-    # cfg.checkpoint_numbered=True (covered by test_checkpoint_numbered).
+    # pass.  The numbered rows themselves are never written: the build has
+    # no "analyzed" dir, only the analyzed_raw checkpoint.
+    assert not os.path.exists(os.path.join(built, "analyzed"))
     for stage in ("numbering", "docs", "postings", "dictionary"):
         with open(os.path.join(built, stage, "_MANIFEST.json")) as f:
             m = json.load(f)
@@ -3202,7 +3253,7 @@ def test_classic_grammar_fuzz_vs_oracle(spark, built, oracle_idx):
 
 # ---------------------------------------------------------------------------
 # Round-5 hardening regressions (ADVICE r4): cache-leak on failed build,
-# duplicate-url numbering determinism, stale analyzed-checkpoint rejection.
+# duplicate-url numbering determinism, fresh term vectors after a rebuild.
 # ---------------------------------------------------------------------------
 
 
@@ -3264,23 +3315,24 @@ def test_duplicate_url_numbering_deterministic(spark, corpus, tmp_path_factory):
 
 
 def test_mlt_ignores_stale_analyzed_checkpoint(spark, corpus, tmp_path_factory):
-    """After an in-place rebuild with a changed config, the leftover
-    analyzed/ checkpoint (digest-stale) must NOT be read by the term-vector
-    lookup — it would return stale terms and a stale doc_id->row mapping."""
+    """After an in-place rebuild with an analysis-changing config, the
+    term-vector lookup behind more_like_this returns the fresh terms (the
+    rebuilt analyzed_raw row), never the first build's, and no numbered
+    analyzed/ table exists to go stale."""
     import dataclasses
 
     from apache___solr_spark.query.extras import _term_vector_row
 
     path, _ = corpus
     out = str(tmp_path_factory.mktemp("staleidx") / "idx")
-    cfg1 = dataclasses.replace(CFG, checkpoint_numbered=True)
-    build_index(spark, path, out, cfg=cfg1)
-    assert os.path.exists(os.path.join(out, "analyzed", "_MANIFEST.json"))
-    # in-place rebuild, fused, analysis-changing config: stale analyzed/ stays
+    build_index(spark, path, out, cfg=CFG)
+    first = _term_vector_row(SearchEngine(spark, out, cfg=CFG), 5)
+    assert any(len(t) > 4 for t in first[0]["terms"])
+    # in-place rebuild; the config digest change invalidates every stage
     cfg2 = dataclasses.replace(CFG, max_token_len=4)
-    assert cfg2.digest() != cfg1.digest()
-    build_index(spark, path, out, cfg=cfg2, resume=False)
-    assert os.path.exists(os.path.join(out, "analyzed", "_MANIFEST.json"))
+    assert cfg2.digest() != CFG.digest()
+    build_index(spark, path, out, cfg=cfg2)
+    assert not os.path.exists(os.path.join(out, "analyzed"))
     eng = SearchEngine(spark, out, cfg=cfg2)
     row = _term_vector_row(eng, 5)
     assert row
