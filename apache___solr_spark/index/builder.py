@@ -35,11 +35,13 @@ failed — see BENCH/BASELINE.md history):
   Lucene101PostingsFormat impact semantics).
 - every postings row is packed by ONE numpy group packer (_pack_groups),
   all (term, salt) groups of an Arrow batch at once: the map-side encode,
-  the reduce-side merge and optimize() all end in it, and the merge and
-  optimize decode a whole batch with one vbyte pass per column.  There is
-  no per-group Python anywhere (applyInPandas per (term,salt) group was
-  ~2ms overhead x #groups; the pandas per-group merge loop after it was
-  still most of the postings stage).
+  the reduce-side merge and optimize() all end in it.  Every postings row
+  is read by ONE batch decoder (_decode_rows, one vbyte pass per column):
+  the merge, optimize() and every query-side scan (query/engine.py's
+  scoring, doc-id and positions mapInArrow fns).  There is no per-group
+  Python anywhere (applyInPandas per (term,salt) group was ~2ms overhead
+  x #groups; the pandas per-group merge loop after it was still most of
+  the postings stage).
 - the postings table is written partitioned by pmod(xxhash64(term),
   n_buckets): a query prunes its scan to the buckets of its terms (the
   term-dictionary-seek analog).
@@ -214,18 +216,22 @@ def _range_parts(rows: int | None, shuffle_parts: int, parallelism: int) -> int:
     [shuffle_parts, 4*parallelism] so tiny builds don't pay per-task
     overhead and huge builds don't explode the task count.
 
-    The count is then rounded UP to a whole number of waves: a count like
-    60 on 32 cores runs as 1.875 waves — the second wave leaves half the
-    cores idle while the stage wall waits on it (r5 stage-wall sessions
-    P1/P2 measured the postings map side at 0.75 efficiency against a 0.94
-    same-session hardware ceiling; wave quantization was the largest
-    attributable slice)."""
+    A count of at least one wave is then rounded UP to a whole number of
+    waves: a count like 60 on 32 cores runs as 1.875 waves — the second
+    wave leaves half the cores idle while the stage wall waits on it (r5
+    stage-wall sessions P1/P2 measured the postings map side at 0.75
+    efficiency against a 0.94 same-session hardware ceiling; wave
+    quantization was the largest attributable slice).  A count below one
+    wave stays as clamped: rounding it up would pay the per-task overhead
+    the ``lo`` clamp exists to avoid."""
     lo = shuffle_parts
     hi = max(shuffle_parts, 4 * parallelism)
     if not rows:
         n = max(lo, 2 * parallelism)
     else:
         n = int(min(max(lo, -(-rows // 25_000)), hi))
+    if n < parallelism:
+        return n
     return -(-n // parallelism) * parallelism
 
 
@@ -478,16 +484,25 @@ def _decode_rows(rb: pa.RecordBatch, salt_range: int) -> tuple:
     (doc_ids, tfs, norms, pos_gaps, row_starts) as flat arrays in row order,
     one vbyte decode per column.  ``row_starts[i]`` is row i's first
     posting; doc ids come from a segmented cumsum of the gaps that
-    restarts at every row's salt base."""
+    restarts at every row's salt base.  Only ``salt``, ``n_docs`` and
+    ``doc_gaps`` are required: tfs / norms / pos_gaps are None when the
+    batch does not carry that column, so a scan decodes what it selects."""
     n_docs = rb.column("n_docs").to_numpy().astype(np.int64)
     row_starts = np.cumsum(n_docs) - n_docs
     gaps = decode_vbyte(_flat_binary(rb.column("doc_gaps"))).astype(np.int64)
     cs = np.cumsum(gaps)
     base = rb.column("salt").to_numpy() * salt_range
     doc_ids = cs + np.repeat(base - (cs[row_starts] - gaps[row_starts]), n_docs)
-    tfs = decode_vbyte(_flat_binary(rb.column("tfs"))).astype(np.int64)
-    norms = _flat_binary(rb.column("norms"))
-    pos_gaps = decode_vbyte(_flat_binary(rb.column("positions"))).astype(np.int64)
+    names = rb.schema.names
+    tfs = norms = pos_gaps = None
+    if "tfs" in names:
+        tfs = decode_vbyte(_flat_binary(rb.column("tfs"))).astype(np.int64)
+    if "norms" in names:
+        norms = _flat_binary(rb.column("norms"))
+    if "positions" in names:
+        pos_gaps = decode_vbyte(_flat_binary(rb.column("positions"))).astype(
+            np.int64
+        )
     return doc_ids, tfs, norms, pos_gaps, row_starts
 
 

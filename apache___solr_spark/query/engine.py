@@ -10,8 +10,8 @@ boolean tree (QueryParser.jj:135-172), evaluated by one walker
 
   postings blocks (bucket-pruned scan, term pushdown) of the node's
   distinct term children
-    -> vectorized decode + BM25 score (mapInPandas, numpy), rows tagged
-       MUST/SHOULD by term
+    -> batch decode (index/builder._decode_rows, one mapInArrow) + BM25
+       score, rows tagged MUST/SHOULD by term
     -> unioned with phrase frames (position intersection),
        dictionary-expansion frames (prefix/wildcard/fuzzy/range/synonym
        disjunction groups, each one clause) and sub-query frames
@@ -19,7 +19,13 @@ boolean tree (QueryParser.jj:135-172), evaluated by one walker
        minimum-should-match, MUST_NOT anti-join)
 then, at the root: liveDocs tombstone anti-join
     -> orderBy(score desc, doc_id asc).limit(k)    [TakeOrderedAndProject]
-    -> join docs for url (two-phase fetch).
+    -> top-k collected as Arrow; the page's urls are read on the driver
+       (pyarrow over the docs files) and returned as a local relation.
+
+Every query-side postings scan — scoring, doc-id-only (exclusion,
+significantTerms) and positions (phrases, spans, payloads, phrase
+identification) — decodes through _decode_rows, the same batch decoder the
+build's merge and optimize use.
 
 Scoring: BM25 with k1=1.2, b=0.75
 (search/similarities/BM25SimilarityFactory.java:41-51):
@@ -49,13 +55,17 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.fs as pafs
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apache___solr_spark.analysis.chain import analyzer_fn
 from apache___solr_spark.config import DEFAULT_CONFIG, IndexConfig
-from apache___solr_spark.index.builder import IndexPaths, _undelta_positions
-from apache___solr_spark.index.codec import decode_vbyte, delta_decode
+from apache___solr_spark.index.builder import (
+    IndexPaths,
+    _decode_rows,
+    _undelta_positions,
+)
+from apache___solr_spark.index.codec import decode_vbyte
 from apache___solr_spark.index.smallfloat import NORM_TABLE
 from apache___solr_spark.query.parser import (
     BoolQuery,
@@ -86,126 +96,93 @@ def bm25_idf(n_docs: int, df: int, dtype=np.float32):
 _EXCLUDE_LITERAL_CAP = 1024
 
 
-def _score_blocks(
+def _posting_terms(rb: pa.RecordBatch) -> pa.Array:
+    """The batch's term column repeated once per posting of its row."""
+    n_docs = rb.column("n_docs").to_numpy()
+    return rb.column("term").take(
+        pa.array(np.repeat(np.arange(rb.num_rows), n_docs))
+    )
+
+
+def _score_fn(
     weight_by_term: dict[str, float],
     kernel,
-    boost_by_term: dict[str, float] | None = None,
+    boost_by_term: dict[str, float] | None,
+    salt_range: int,
     dtype=np.float32,
 ):
-    """mapInPandas fn: decode posting blocks -> (term, doc_id, score) rows.
+    """mapInArrow fn: postings rows -> (term, doc_id, score).
 
-    ``kernel`` is the similarity scoring closure (query/similarities.py)
-    ``f(weight, boost, tfs, dl) -> scores``; ``weight_by_term`` carries the
-    per-term statistic weight (idf / collection probability / 1), boosts
-    travel separately because the LM similarities are not linear in the
-    weight.  ``dtype`` is float32 by default (Lucene computes similarity
-    scores in float); float64 backs the SQL-oracle-checked configuration."""
-    norm_table_f32 = NORM_TABLE.astype(dtype)
+    Each batch decodes once (index/builder._decode_rows); ``kernel`` (the
+    similarity closure, query/similarities.py, ``f(weight, boost, tfs, dl)
+    -> scores``) then runs once per (term, salt) row on slices of the flat
+    arrays.  ``weight_by_term`` carries the per-term statistic weight (idf /
+    collection probability / 1); boosts travel separately because the LM
+    similarities are not linear in the weight.  ``dtype`` is float32 by
+    default (Lucene computes similarity scores in float); float64 backs the
+    SQL-oracle-checked configuration."""
+    norm_table = NORM_TABLE.astype(dtype)
     boosts = boost_by_term or {}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms_out: list[np.ndarray] = []
-            docs_out: list[np.ndarray] = []
-            scores_out: list[np.ndarray] = []
-            # vectorized per (term, salt) row — numpy decode of the whole row
-            for term, salt, n, gaps_bin, tfs_bin, norms_bin, salt_range in zip(
-                pdf["term"],
-                pdf["salt"],
-                pdf["n_docs"],
-                pdf["doc_gaps"],
-                pdf["tfs"],
-                pdf["norms"],
-                pdf["salt_range"],
-            ):
-                base = int(salt) * int(salt_range)
-                doc_ids = delta_decode(
-                    decode_vbyte(gaps_bin, int(n)).astype(np.int64), base
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            doc_ids, tfs, norms, _, starts = _decode_rows(rb, salt_range)
+            tfs = tfs.astype(dtype)
+            dl = norm_table[norms]
+            ends = np.append(starts[1:], doc_ids.size)
+            scores = np.empty(doc_ids.size, dtype=dtype)
+            for term, s, e in zip(rb.column("term").to_pylist(), starts, ends):
+                scores[s:e] = kernel(
+                    weight_by_term[term], boosts.get(term, 1.0), tfs[s:e], dl[s:e]
                 )
-                tfs = decode_vbyte(tfs_bin, int(n)).astype(dtype)
-                norms = np.frombuffer(norms_bin, dtype=np.uint8)
-                dl = norm_table_f32[norms]
-                score = kernel(
-                    weight_by_term[term], boosts.get(term, 1.0), tfs, dl
-                )
-                terms_out.append(np.full(int(n), term, dtype=object))
-                docs_out.append(doc_ids)
-                scores_out.append(score)
-            if docs_out:
-                yield pd.DataFrame(
-                    {
-                        "term": np.concatenate(terms_out),
-                        "doc_id": np.concatenate(docs_out),
-                        "score": np.concatenate(scores_out),
-                    }
-                )
+            yield pa.RecordBatch.from_arrays(
+                [_posting_terms(rb), pa.array(doc_ids), pa.array(scores)],
+                names=["term", "doc_id", "score"],
+            )
 
     return run
 
 
-def _decode_docs_fn(salt_range: int):
-    """mapInPandas fn: postings rows -> (term, doc_id) only — the
-    lightest decode (doc_gaps vbyte, no tfs/norms/positions), for
-    membership-shaped scans like {!significantTerms}."""
+def _docs_fn(salt_range: int):
+    """mapInArrow fn: postings rows -> (term, doc_id), the lightest decode
+    (the batch carries doc_gaps only)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms_out: list[str] = []
-            docs_out: list[np.ndarray] = []
-            for term, salt, n, gaps_bin in zip(
-                pdf["term"], pdf["salt"], pdf["n_docs"], pdf["doc_gaps"]
-            ):
-                ids = delta_decode(
-                    decode_vbyte(gaps_bin, int(n)).astype(np.int64),
-                    int(salt) * salt_range,
-                )
-                terms_out.extend([term] * int(n))
-                docs_out.append(ids)
-            if docs_out:
-                yield pd.DataFrame(
-                    {"term": terms_out, "doc_id": np.concatenate(docs_out)}
-                )
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            doc_ids = _decode_rows(rb, salt_range)[0]
+            yield pa.RecordBatch.from_arrays(
+                [_posting_terms(rb), pa.array(doc_ids)], names=["term", "doc_id"]
+            )
 
     return run
 
 
-def _decode_positions_fn(salt_range: int):
-    """mapInPandas fn: postings rows -> (term, doc_id, norm, positions[])."""
+def _positions_fn(salt_range: int):
+    """mapInArrow fn: postings rows -> (term, doc_id, norm, positions[]),
+    positions absolute and ascending per posting."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms_out, docs_out, norms_out, pos_out = [], [], [], []
-            for term, salt, n, gaps_bin, tfs_bin, norms_bin, pos_bin, sum_tf in zip(
-                pdf["term"],
-                pdf["salt"],
-                pdf["n_docs"],
-                pdf["doc_gaps"],
-                pdf["tfs"],
-                pdf["norms"],
-                pdf["positions"],
-                pdf["sum_tf"],
-            ):
-                base = int(salt) * salt_range
-                ids = delta_decode(
-                    decode_vbyte(gaps_bin, int(n)).astype(np.int64), base
-                )
-                tfs = decode_vbyte(tfs_bin, int(n)).astype(np.int64)
-                pgaps = decode_vbyte(pos_bin, int(sum_tf)).astype(np.int64)
-                pos_abs = _undelta_positions(pgaps, tfs)
-                splits = np.split(pos_abs, np.cumsum(tfs)[:-1])
-                terms_out.extend([term] * int(n))
-                docs_out.append(ids)
-                norms_out.append(np.frombuffer(norms_bin, dtype=np.uint8))
-                pos_out.extend(splits)
-            if docs_out:
-                yield pd.DataFrame(
-                    {
-                        "term": terms_out,
-                        "doc_id": np.concatenate(docs_out),
-                        "norm": np.concatenate(norms_out).astype(np.int32),
-                        "positions": pos_out,
-                    }
-                )
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            doc_ids, tfs, norms, pos_gaps, _ = _decode_rows(rb, salt_range)
+            offsets = np.concatenate(([0], np.cumsum(tfs))).astype(np.int32)
+            positions = pa.ListArray.from_arrays(
+                pa.array(offsets), pa.array(_undelta_positions(pos_gaps, tfs))
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    _posting_terms(rb),
+                    pa.array(doc_ids),
+                    pa.array(norms.astype(np.int32)),
+                    positions,
+                ],
+                names=["term", "doc_id", "norm", "positions"],
+            )
 
     return run
 
@@ -664,16 +641,14 @@ class SearchEngine:
         cfg: IndexConfig | None = None,
         synonyms: dict[str, list[str]] | None = None,
         similarity: str | object = "bm25",
-        sloppy: str = "lucene",
     ) -> None:
-        """``sloppy``: scoring semantics for CLASSIC sloppy phrases
-        (``"a b"~N``): ``"lucene"`` (default) = SloppyPhraseMatcher —
-        out-of-order matches at transposition cost, each match weighted
-        1/(1+matchLength) into a fractional tf (query/sloppy.py), the
-        reference's rank semantics; ``"window"`` = legacy ordered-window
-        counting (integer tf).  Span/surround/complexphrase queries keep
-        span-interval semantics in both modes (they are SpanNearQuery,
-        not SloppyPhraseScorer, in the reference too).
+        """Classic sloppy phrases (``"a b"~N``) score with Lucene
+        SloppyPhraseMatcher semantics: out-of-order matches at
+        transposition cost, each match weighted 1/(1+matchLength) into a
+        fractional tf (query/sloppy.py).  Span/surround/complexphrase
+        queries and ``PhraseNode(window=True)`` (the XML ``<SpanNear>``
+        lowering) keep ordered-window span semantics, as SpanNearQuery
+        does in the reference.
 
         ``synonyms``: query-time synonym map (SynonymGraphFilter in the
         default schema's QUERY analyzer, managed-schema.xml:308-314) —
@@ -735,9 +710,6 @@ class SearchEngine:
 
         self._mt_normalize = multiterm_normalize_fn(cfg.analyzer)
         self.synonyms = synonyms or {}
-        if sloppy not in ("lucene", "window"):
-            raise ValueError(f"sloppy must be 'lucene' or 'window': {sloppy!r}")
-        self._sloppy_lucene = sloppy == "lucene"
         self.sim = get_similarity(similarity, cfg)
         self._kernel = self.sim.kernel(self.stats["avgdl"], dtype=self._dtype)
         from apache___solr_spark.index.updates import load_deletes
@@ -831,24 +803,16 @@ class SearchEngine:
         boost_by_term: dict[str, float] | None = None,
         kernel=None,
     ) -> DataFrame:
-        fn = _score_blocks(
+        fn = _score_fn(
             weight_by_term,
             kernel if kernel is not None else self._kernel,
             boost_by_term,
+            self.cfg.salt_range,
             dtype=self._dtype,
         )
-        cols = blocks.select(
-            "term",
-            "salt",
-            "n_docs",
-            "doc_gaps",
-            "tfs",
-            "norms",
-            F.lit(self.cfg.salt_range).alias("salt_range"),
-        )
-        return cols.mapInPandas(
-            fn, schema=f"term string, doc_id long, score {self._sql_t}"
-        )
+        return blocks.select(
+            "term", "salt", "n_docs", "doc_gaps", "tfs", "norms"
+        ).mapInArrow(fn, schema=f"term string, doc_id long, score {self._sql_t}")
 
     def _expand_cond(self, cl):
         """Dictionary-filter Column for a prefix/wildcard/fuzzy/range clause
@@ -955,18 +919,41 @@ class SearchEngine:
         nb = self.postings.join(tdf, "term")
         if salts is not None:
             nb = nb.filter(F.col("salt").isin(salts))
-        return self._docs_of(nb).distinct()
+        return self._docs_of(nb).select("doc_id").distinct()
 
     def _docs_of(self, blocks: DataFrame) -> DataFrame:
-        """doc_id of every posting in ``blocks`` — the lightest decode
-        (doc gaps only), for clauses that only exclude."""
+        """(term, doc_id) of every posting in ``blocks`` — the lightest
+        decode (doc gaps only), for clauses that only exclude or count."""
+        return blocks.select("term", "salt", "n_docs", "doc_gaps").mapInArrow(
+            _docs_fn(self.cfg.salt_range), schema="term string, doc_id long"
+        )
+
+    def _doc_plists(self, blocks: DataFrame, gate: Column | None) -> DataFrame:
+        """(doc_id, norm, plists) of the docs in ``blocks``, plists =
+        [(term, positions[])] of the doc's postings.  ``gate`` is an
+        aggregate Column over a group of postings rows (e.g. "every phrase
+        term present"): a salt whose rows fail it is dropped before any
+        decode, a doc whose postings fail it after; None keeps every doc."""
+        if gate is not None:
+            ok = blocks.groupBy("salt").agg(gate.alias("ok")).filter("ok")
+            blocks = blocks.join(ok.select("salt"), "salt", "left_semi")
+        decoded = blocks.select(
+            "term", "salt", "n_docs", "doc_gaps", "tfs", "norms", "positions"
+        ).mapInArrow(
+            _positions_fn(self.cfg.salt_range),
+            schema="term string, doc_id long, norm int, positions array<long>",
+        )
+        aggs = [
+            F.first("norm").alias("norm"),
+            F.collect_list(F.struct("term", "positions")).alias("plists"),
+        ]
+        if gate is None:
+            return decoded.groupBy("doc_id").agg(*aggs)
         return (
-            blocks.select("term", "salt", "n_docs", "doc_gaps")
-            .mapInPandas(
-                _decode_docs_fn(self.cfg.salt_range),
-                schema="term string, doc_id long",
-            )
-            .select("doc_id")
+            decoded.groupBy("doc_id")
+            .agg(*aggs, gate.alias("ok"))
+            .filter("ok")
+            .select("doc_id", "norm", "plists")
         )
 
     def _phrase_frame(
@@ -1007,14 +994,13 @@ class SearchEngine:
         if salts is not None:
             blocks = blocks.filter(F.col("salt").isin(salts))
         if slots is None:
-            slot_map = None
+            covered = F.count_distinct("term")
             n_gate = len(uniq)
         else:
             # term -> ARRAY of slot ids it can satisfy (a term may serve
-            # several slots); the gate explodes that array and counts
-            # covered SLOTS — a doc/salt passes iff every slot has >=1
-            # member present.  The map is query-sized: it compiles to a
-            # literal expression, no join.
+            # several slots); the gate counts covered SLOTS — a doc/salt
+            # passes iff every slot has >=1 member present.  The map is
+            # query-sized: it compiles to a literal expression, no join.
             slot_ids: dict[str, list[int]] = {}
             for i, s in enumerate(slots):
                 for t in s:
@@ -1026,51 +1012,13 @@ class SearchEngine:
                     for x in (F.lit(t), F.array(*[F.lit(i) for i in ids]))
                 ]
             )
-            n_gate = len(slots)
-
-        def _gate(df: DataFrame, key: str) -> DataFrame:
-            """keys of df covering every gate unit (term / slot)."""
-            if slot_map is None:
-                unit = F.col("term")
-                src = df.select(key, unit.alias("unit"))
-            else:
-                src = df.select(
-                    key, F.explode(slot_map[F.col("term")]).alias("unit")
-                )
-            return (
-                src.groupBy(key)
-                .agg(F.count_distinct("unit").alias("nt"))
-                .filter(F.col("nt") == n_gate)
-                .select(key)
-            )
-
-        blocks = blocks.join(_gate(blocks, "salt"), "salt", "left_semi")
-        decoded = blocks.select(
-            "term", "salt", "n_docs", "doc_gaps", "tfs", "norms",
-            "positions", "sum_tf",
-        ).mapInPandas(
-            _decode_positions_fn(self.cfg.salt_range),
-            schema="term string, doc_id long, norm int, positions array<long>",
-        )
-        nt_expr = (
-            F.count_distinct("term")
-            if slot_map is None
-            else F.size(
+            covered = F.size(
                 F.array_distinct(
                     F.flatten(F.collect_list(slot_map[F.col("term")]))
                 )
             )
-        )
-        grouped = (
-            decoded.groupBy("doc_id")
-            .agg(
-                F.first("norm").alias("norm"),
-                nt_expr.alias("nt"),
-                F.collect_list(F.struct("term", "positions")).alias("plists"),
-            )
-            .filter(F.col("nt") == n_gate)
-            .select("doc_id", "norm", "plists")
-        )
+            n_gate = len(slots)
+        grouped = self._doc_plists(blocks, covered == n_gate)
         sum_idf = float(sum(idf_by_term[t] for t in ptoks)) * float(boost)
         if tree is not None:
             fn = _span_tree_score_fn(
@@ -1245,9 +1193,9 @@ class SearchEngine:
         """(doc_id, norm, plists, n, payloads) for docs containing every
         query token (``require_all=False``, the SpanOr operator=or form:
         ANY token), with the per-doc payload stream joined in.  Same
-        salt-gate + vectorized-decode shape as _phrase_frame; the payload
-        side table is doc_id-range-partitioned so the join is a ranged
-        sort-merge against a candidate set the postings already pruned."""
+        _doc_plists pipeline as _phrase_frame; the payload side table is
+        doc_id-range-partitioned so the join is a ranged sort-merge
+        against a candidate set the postings already pruned."""
         import os
 
         pay_dir = self.paths.payloads
@@ -1268,39 +1216,9 @@ class SearchEngine:
                 return None
         elif not found:
             return None
-        blocks = self._blocks_for(sorted(found))
-        if require_all:
-            gate = (
-                blocks.select("salt", "term")
-                .groupBy("salt")
-                .agg(F.count_distinct("term").alias("nt"))
-                .filter(F.col("nt") == len(uniq))
-                .select("salt")
-            )
-            blocks = blocks.join(gate, "salt", "left_semi")
-        decoded = (
-            blocks
-            .select(
-                "term", "salt", "n_docs", "doc_gaps", "tfs", "norms",
-                "positions", "sum_tf",
-            )
-            .mapInPandas(
-                _decode_positions_fn(self.cfg.salt_range),
-                schema="term string, doc_id long, norm int, "
-                "positions array<long>",
-            )
-        )
-        grouped = (
-            decoded.groupBy("doc_id")
-            .agg(
-                F.first("norm").alias("norm"),
-                F.count_distinct("term").alias("nt"),
-                F.collect_list(F.struct("term", "positions")).alias("plists"),
-            )
-            .filter(
-                F.col("nt") == (len(uniq) if require_all else F.col("nt"))
-            )
-            .select("doc_id", "norm", "plists")
+        grouped = self._doc_plists(
+            self._blocks_for(sorted(found)),
+            F.count_distinct("term") == len(uniq) if require_all else None,
         )
         pay = self.spark.read.parquet(pay_dir)
         out = grouped.join(pay, "doc_id")
@@ -2004,8 +1922,7 @@ class SearchEngine:
                                 boost=float(node.boost),
                                 slop=int(node.slop),
                                 salts=salts,
-                                lucene_sloppy=self._sloppy_lucene
-                                and not node.window,
+                                lucene_sloppy=not node.window,
                             ),
                             path,
                         )
@@ -2512,7 +2429,7 @@ class SearchEngine:
                     boost=node.boost,
                     slop=node.slop,
                     salts=salts,
-                    lucene_sloppy=self._sloppy_lucene and not node.window,
+                    lucene_sloppy=not node.window,
                 )
             if isinstance(node, Clause):
                 if resolved[id(node)] is None:
@@ -2603,7 +2520,9 @@ class SearchEngine:
             if node.mm > n_should:
                 return None
             if not_terms:
-                not_frames.append(self._docs_of(blocks_of(not_terms)))
+                not_frames.append(
+                    self._docs_of(blocks_of(not_terms)).select("doc_id")
+                )
             u = pos_frames[0]
             for fr in pos_frames[1:]:
                 u = u.unionByName(fr)

@@ -429,16 +429,7 @@ def significant_terms_index(
         & (F.length("term") >= int(min_term_length))
     ).select("term", "df")
 
-    from apache___solr_spark.query.engine import _decode_docs_fn
-
-    pairs = (
-        engine.postings.join(cand.select("term"), "term")
-        .select("term", "salt", "n_docs", "doc_gaps")
-        .mapInPandas(
-            _decode_docs_fn(engine.cfg.salt_range),
-            schema="term string, doc_id long",
-        )
-    )
+    pairs = engine._docs_of(engine.postings.join(cand.select("term"), "term"))
     fg_tf = (
         pairs.join(fg, "doc_id", "left_semi")
         .groupBy("term")

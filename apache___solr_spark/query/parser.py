@@ -90,8 +90,8 @@ class PhraseNode:
     slop: int = 0
     boost: float = 1.0
     # True for SPAN-derived nodes (XML SpanNear lowering): keeps ordered-
-    # window counting — SpanNearQuery semantics — even when the engine's
-    # classic sloppy phrases use Lucene SloppyPhraseMatcher weighting
+    # window counting — SpanNearQuery semantics — where classic sloppy
+    # phrases use Lucene SloppyPhraseMatcher weighting
     window: bool = False
 
     @property

@@ -48,7 +48,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from apache___solr_spark.analysis.tokenizer import _HAS_MARK, _WORD, _WORD_NOMARK
-from apache___solr_spark.query.engine import _decode_positions_fn
 
 __all__ = ["identify_phrases", "PhraseInfo"]
 
@@ -122,7 +121,7 @@ def _extract_spans(
 
 
 def _stats_fn(term_bit: dict[str, int], spans: list[tuple[str, ...]]):
-    """mapInPandas fn over (doc_id, plists): per doc emit the term-presence
+    """mapInPandas fn over (doc_id, norm, plists): per doc emit the term-presence
     mask and the exact occurrence count of every multi-term indexed span
     (adjacent-position chain, the _phrase_score_fn technique)."""
 
@@ -221,20 +220,7 @@ def identify_phrases(
     conj_slot = {ks: i for i, ks in enumerate(conj_keys)}
 
     # ---- one distributed pass -------------------------------------------
-    decoded = (
-        eng._blocks_for(terms)
-        .select(
-            "term", "salt", "n_docs", "doc_gaps", "tfs", "norms",
-            "positions", "sum_tf",
-        )
-        .mapInPandas(
-            _decode_positions_fn(eng.cfg.salt_range),
-            schema="term string, doc_id long, norm int, positions array<long>",
-        )
-    )
-    grouped = decoded.groupBy("doc_id").agg(
-        F.collect_list(F.struct("term", "positions")).alias("plists")
-    )
+    grouped = eng._doc_plists(eng._blocks_for(terms), None)
     per_doc = grouped.mapInPandas(
         _stats_fn(term_bit, indexed_multi),
         schema="doc_id long, mask long, counts array<long>",

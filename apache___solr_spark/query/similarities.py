@@ -17,7 +17,7 @@ Here a :class:`Similarity` contributes two pure pieces the engine composes:
   freq).
 - ``kernel(avgdl, dtype)`` — a vectorized numpy scoring closure
   ``f(weight, boost, tfs, dl) -> scores`` applied inside the Arrow-batched
-  posting decode (query/engine.py:_score_blocks), so switching similarity
+  posting decode (query/engine.py:_score_fn), so switching similarity
   never changes the distributed plan: same pruned scan, same decode, same
   top-k.
 

@@ -139,6 +139,17 @@ def _analyzed_batch(doc_ids, store_positions, seed=5):
     )
 
 
+def _in_batches(table, cols):
+    """``table``'s ``cols`` as Arrow batches of 1, 2, 3, 1, ... rows."""
+    table = table.select(cols)
+    out, at = [], 0
+    while at < table.num_rows:
+        size = (1, 2, 3)[len(out) % 3]
+        out.append(table.slice(at, size).combine_chunks().to_batches()[0])
+        at += size
+    return out
+
+
 @pytest.mark.parametrize("store_positions", [True, False])
 def test_merge_segments_equals_unsplit_encode(store_positions):
     """Encoding a salt range in 3 doc-contiguous parts and merging the
@@ -172,11 +183,7 @@ def test_merge_segments_equals_unsplit_encode(store_positions):
         n_frags[key(r)] = n_frags.get(key(r), 0) + 1
     assert max(n_frags.values()) == 3 and min(n_frags.values()) == 1
 
-    batches, at, sizes = [], 0, [1, 2, 3]
-    while at < frags.num_rows:
-        size = sizes[len(batches) % 3]
-        batches.append(frags.slice(at, size).combine_chunks().to_batches()[0])
-        at += size
+    batches = _in_batches(frags, frags.column_names)
     merged = [
         r for out in _merge_segments(cfg, avgdl)(iter(batches)) for r in out.to_pylist()
     ]
@@ -187,3 +194,86 @@ def test_merge_segments_equals_unsplit_encode(store_positions):
         assert r == want[key(r)]
     singles = [r for r in frag_rows if n_frags[key(r)] == 1]
     assert singles and all(r in merged for r in singles)
+
+
+@pytest.mark.parametrize("store_positions", [True, False])
+def test_query_decoders_roundtrip(store_positions):
+    """The query-side postings scans (doc ids, scores, positions), fed the
+    segment encoder's rows of a multi-salt corpus in 1-3 row batches,
+    return the corpus's own postings, and every score is bit-equal to the
+    similarity kernel applied to that one posting."""
+    import pyarrow as pa
+
+    from apache___solr_spark.config import IndexConfig
+    from apache___solr_spark.index.builder import _segment_encode
+    from apache___solr_spark.query.engine import _docs_fn, _positions_fn, _score_fn
+    from apache___solr_spark.query.similarities import get_similarity
+
+    cfg = IndexConfig(block_range=4, salt_range=32, n_buckets=8)
+    avgdl = 7.5
+    corpus = _analyzed_batch(range(100), store_positions)
+    seg = pa.Table.from_batches(_segment_encode(cfg, avgdl)(iter([corpus])))
+    assert len(set(seg.column("salt").to_pylist())) == 4
+
+    want = {}
+    for r in corpus.to_pylist():
+        tfs = decode_vbyte(r["tfs"]).tolist()
+        pos = decode_vbyte(r["positions"]).tolist()
+        at = 0
+        for t, tf in zip(r["terms"], tfs):
+            want[(t, r["doc_id"])] = (
+                tf, int_to_byte4(r["doclen"]), pos[at : at + tf] if pos else None
+            )
+            at += tf
+
+    base = ["term", "salt", "n_docs", "doc_gaps"]
+    docs = [
+        (t, d)
+        for b in _docs_fn(cfg.salt_range)(iter(_in_batches(seg, base)))
+        for t, d in zip(b.column("term").to_pylist(), b.column("doc_id").to_pylist())
+    ]
+    assert sorted(docs) == sorted(want)
+
+    weights = {t: 0.5 + i for i, t in enumerate(["alpha", "beta", "delta", "gamma", "rare"])}
+    boosts = {"beta": 2.0}
+    dl_table = NORM_TABLE.astype(np.float32)
+    for sim in ("bm25", "classic"):
+        kernel = get_similarity(sim, cfg).kernel(avgdl)
+        fn = _score_fn(weights, kernel, boosts, cfg.salt_range)
+        n = 0
+        for b in fn(iter(_in_batches(seg, base + ["tfs", "norms"]))):
+            assert b.schema.field("score").type == pa.float32()
+            for t, d, s in zip(*(b.column(c).to_pylist() for c in ("term", "doc_id", "score"))):
+                tf, norm, _ = want[(t, d)]
+                one = kernel(
+                    weights[t], boosts.get(t, 1.0),
+                    np.array([tf], dtype=np.float32), dl_table[[norm]],
+                )
+                assert np.float32(s).view(np.uint32) == one.astype(np.float32).view(np.uint32)[0]
+                n += 1
+        assert n == len(want)
+
+    if store_positions:
+        got = {}
+        cols = base + ["tfs", "norms", "positions"]
+        for b in _positions_fn(cfg.salt_range)(iter(_in_batches(seg, cols))):
+            for r in b.to_pylist():
+                got[(r["term"], r["doc_id"])] = (len(r["positions"]), r["norm"], r["positions"])
+        assert got == want
+
+
+def test_range_parts_keeps_lo_clamp_below_one_wave():
+    """The numbering partition count: a count below one wave keeps the
+    [shuffle_parts, 4*parallelism] clamp as is; a count of one wave or
+    more rounds up to whole waves."""
+    from apache___solr_spark.index.builder import _range_parts
+
+    assert _range_parts(1000, 4, 32) == 4  # tiny build on 32 cores
+    assert _range_parts(300_000, 4, 32) == 12  # 12 tasks, still one wave
+    assert _range_parts(1_500_000, 4, 32) == 64  # 60 -> 2 whole waves
+    assert _range_parts(900_000, 32, 32) == 64  # 36 -> 2 whole waves
+    assert _range_parts(None, 4, 32) == 64  # unknown size: two waves
+    assert _range_parts(10**9, 4, 32) == 128  # hi clamp
+    # shuffle_parts == parallelism (the session default): never sub-wave
+    assert _range_parts(2000, 4, 4) == 4
+    assert _range_parts(200_000, 4, 4) == 8

@@ -812,16 +812,26 @@ def test_sloppy_phrase_queries_match_oracle(spark, corpus, built, oracle_idx):
 
 
 def test_sloppy_lucene_vs_window_flag(spark, built, oracle_idx):
-    """sloppy='lucene' (default) scores transposed occurrences; the
-    legacy sloppy='window' flag restores ordered-window counting.  A doc
-    containing only the REVERSED pair ranks under lucene semantics and
-    vanishes under window semantics."""
+    """Classic sloppy phrases score transposed occurrences (Lucene
+    SloppyPhraseMatcher); a ``PhraseNode(window=True)`` twin of the same
+    phrase keeps ordered-window counting.  A doc containing only the
+    REVERSED pair ranks under lucene semantics and vanishes under window
+    semantics."""
+    from apache___solr_spark.query.parser import BoolChild, BoolQuery, PhraseNode
+
+    def window(toks, slop=0):
+        return BoolQuery(
+            [BoolChild("SHOULD", PhraseNode(toks, slop=slop, window=True))]
+        )
+
     eng = SearchEngine(spark, built, cfg=CFG)
-    engw = SearchEngine(spark, built, cfg=CFG, sloppy="window")
     # a reversed-only pair: find terms where some doc has b-before-a only
     q = '"page web"~3'
     lucene_ids = {r["doc_id"] for r in eng.search(q, k=400, prune=False).collect()}
-    window_ids = {r["doc_id"] for r in engw.search(q, k=400, prune=False).collect()}
+    window_ids = {
+        r["doc_id"]
+        for r in eng.search(window(["page", "web"], 3), k=400, prune=False).collect()
+    }
     # window matches (ordered chains) are a subset of lucene matches
     assert window_ids <= lucene_ids
     # and the transposed occurrences ("web page" order with gap <= 2,
@@ -833,7 +843,10 @@ def test_sloppy_lucene_vs_window_flag(spark, built, oracle_idx):
         assert _sloppy_pf(oracle_idx, ["page", "web"], d, 3) > 0.0
     # exact phrases (slop=0) are identical in both modes
     e0 = [(r["doc_id"], r["score"]) for r in eng.search('"web page"', k=50).collect()]
-    w0 = [(r["doc_id"], r["score"]) for r in engw.search('"web page"', k=50).collect()]
+    w0 = [
+        (r["doc_id"], r["score"])
+        for r in eng.search(window(["web", "page"]), k=50).collect()
+    ]
     assert e0 == w0
 
 
@@ -2797,12 +2810,20 @@ def test_xml_span_nests_in_boolean(spark, corpus, built):
     """An ordered <SpanNear> lowers to a window-semantics PhraseNode, so
     it composes inside <BooleanQuery> clauses like any phrase — and keeps
     SpanNearQuery (ordered-window) counting even though classic sloppy
-    phrases score with SloppyPhraseMatcher weighting by default (the
-    window-mode engine's classic query is the exact twin)."""
+    phrases score with SloppyPhraseMatcher weighting (the BoolQuery with
+    a ``PhraseNode(window=True)`` is the exact twin)."""
+    import xml.etree.ElementTree as ET
+
     from apache___solr_spark.query.localparams import dispatch_query
+    from apache___solr_spark.query.parser import (
+        BoolChild,
+        BoolQuery,
+        PhraseNode,
+        TermNode,
+    )
+    from apache___solr_spark.query.xmlparser import _lower
 
     eng = SearchEngine(spark, built, cfg=CFG)
-    engw = SearchEngine(spark, built, cfg=CFG, sloppy="window")
     xml = (
         "<BooleanQuery>"
         '<Clause occurs="must"><SpanNear slop="1" inOrder="true">'
@@ -2814,15 +2835,28 @@ def test_xml_span_nests_in_boolean(spark, corpus, built):
         (r["doc_id"], round(float(r["score"]), 4))
         for r in dispatch_query(eng, "{!xml}" + xml, k=10).collect()
     ]
+    twin = BoolQuery(
+        [
+            BoolChild("MUST", PhraseNode(["web", "data"], slop=1, window=True)),
+            BoolChild("SHOULD", TermNode("engine")),
+        ]
+    )
     want = [
         (r["doc_id"], round(float(r["score"]), 4))
-        for r in engw.search('+"web data"~1 engine', k=10).collect()
+        for r in eng.search(twin, k=10).collect()
     ]
     assert got == want and len(got) > 0
-    # the span clause is UNCHANGED by the engine's sloppy mode
+    # the span clause is UNCHANGED by classic sloppy-phrase semantics: its
+    # lowering is a window node, and searching that lowered tree directly
+    # gives the same page
+    lowered = _lower(ET.fromstring(xml), eng._analyze)
+    spans = [
+        ch.node for ch in lowered.children if isinstance(ch.node, PhraseNode)
+    ]
+    assert spans and all(n.window for n in spans)
     got_w = [
         (r["doc_id"], round(float(r["score"]), 4))
-        for r in dispatch_query(engw, "{!xml}" + xml, k=10).collect()
+        for r in eng.search(lowered, k=10).collect()
     ]
     assert got == got_w
 

@@ -7,7 +7,9 @@ checks each import of a repo module: ``apache___solr_spark.*``, a
 top-level script (``__spark_entry__``, ``bench``, ...) or a sibling of
 the importing script (``perfbench/run.py`` imports ``report``).  A name
 that is stdlib or installed outside the repo is not a repo import.
-No Spark is started.
+``from <module> import name`` must also name something the module binds:
+a private helper deleted from one module fails here, not when the
+function that imports it first runs.  No Spark is started.
 """
 
 from __future__ import annotations
@@ -67,12 +69,14 @@ def _module_file(dotted: str, bases: list[str]) -> str | None:
     return None
 
 
-def _bound_names(init_path: str) -> set[str] | None:
-    """Names bound at the top level of a package ``__init__``; None when a
-    star import makes the set open-ended."""
-    tree = ast.parse(open(init_path).read())
+def _bound_names(path: str) -> set[str] | None:
+    """Names bound at the top level of a module or package ``__init__``
+    (also under top-level if/try/with blocks); None when a star import
+    makes the set open-ended."""
     names: set[str] = set()
-    for node in tree.body:
+    stack = list(ast.parse(open(path).read()).body)
+    while stack:
+        node = stack.pop()
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             names.add(node.name)
         elif isinstance(node, (ast.Import, ast.ImportFrom)):
@@ -84,6 +88,12 @@ def _bound_names(init_path: str) -> set[str] | None:
             targets = node.targets if isinstance(node, ast.Assign) else [node.target]
             for t in targets:
                 names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.If, ast.Try, ast.With)):
+            stack.extend(node.body)
+            stack.extend(getattr(node, "orelse", []))
+            stack.extend(getattr(node, "finalbody", []))
+            for h in getattr(node, "handlers", []):
+                stack.extend(h.body)
     return names
 
 
@@ -123,16 +133,14 @@ def _unresolved(rel_path: str) -> list[str]:
         if target is None or not os.path.isfile(target):
             missing.append(label)
             continue
-        if os.path.basename(target) != "__init__.py":
-            continue
-        # from <package> import name: a submodule file or a name the
-        # package's __init__ binds
+        # from <module> import name: a name the module binds; from
+        # <package> import name: that, or a submodule file
         bound = _bound_names(target)
-        pkg_dir = os.path.dirname(target)
+        is_pkg = os.path.basename(target) == "__init__.py"
         for a in node.names:
             if a.name == "*" or bound is None or a.name in bound:
                 continue
-            if not _module_file(a.name, [pkg_dir]):
+            if not (is_pkg and _module_file(a.name, [os.path.dirname(target)])):
                 missing.append(f"{label} import {a.name}")
     return missing
 
