@@ -18,7 +18,7 @@ Spark-first mapping:
   and never collide), encodes segment rows with the SAME map-side encoder
   as the full build, and APPENDS to the bucket-partitioned postings plus
   the docs table and per-term dictionary rows.  The term dictionary may
-  then hold several rows per term; SearchEngine._term_meta sums them.
+  then hold several rows per term.
 - stats: N and total_len are updated; avgdl stays FROZEN at its value from
   the initial build, because the stored per-block max_impact values were
   computed against it — refreshing avgdl would make scores exceed their

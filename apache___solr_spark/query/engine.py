@@ -25,7 +25,9 @@ then, at the root: liveDocs tombstone anti-join
 Every query-side postings scan — scoring, doc-id-only (exclusion,
 significantTerms) and positions (phrases, spans, payloads, phrase
 identification) — decodes through _decode_rows, the same batch decoder the
-build's merge and optimize use.
+build's merge and optimize use.  Planning runs no Spark job: every term
+lookup and expansion reads the dictionary files on the driver
+(SearchEngine._dict_rows).
 
 Scoring: BM25 with k1=1.2, b=0.75
 (search/similarities/BM25SimilarityFactory.java:41-51):
@@ -89,11 +91,54 @@ def bm25_idf(n_docs: int, df: int, dtype=np.float32):
     return dtype(math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
 
 
-# prohibited multi-term clauses enumerate matching dictionary terms into a
-# literal predicate only up to this many terms (fast, bucket-pruned); past
-# it the engine switches to the fully distributed postings⋈dictionary
-# exclusion so the driver never holds an unbounded term list
+# a postings scan takes its term list as a literal ``isin`` predicate only
+# up to this many terms; past it the list ships as an Arrow LocalRelation
+# that the bucket-pruned scan semi-joins (a prohibited ``-t*`` expands
+# uncapped, so its list can be long)
 _EXCLUDE_LITERAL_CAP = 1024
+
+
+def _snapshot(df: DataFrame) -> pads.Dataset:
+    """The parquet files ``df`` reads, as listed now, opened as a
+    driver-side pyarrow dataset: the engine's snapshot of that table."""
+    files = df.inputFiles()
+    fs = pafs.FileSystem.from_uri(files[0])[0]
+    return pads.dataset(
+        [pafs.FileSystem.from_uri(u)[1] for u in files],
+        format="parquet",
+        filesystem=fs,
+    )
+
+
+def _levenshtein(terms: list[str], q: str) -> np.ndarray:
+    """Code-point edit distance of every term in ``terms`` to ``q`` (Spark's
+    ``levenshtein``): one Wagner–Fischer row sweep over all terms at once,
+    each term's distance read off the row at its own length."""
+    n, m = len(terms), len(q)
+    lens = np.fromiter(map(len, terms), np.int64, n)
+    # code point i of every term as row i of a (longest, n) matrix, -1 past
+    # a term's end; rows of the DP below are (m + 1, n), so every numpy op
+    # runs over all terms contiguously
+    flat = np.frombuffer("".join(terms).encode("utf-32-le"), np.uint32)
+    inside = np.arange(int(lens.max(initial=0)))[:, None] < lens
+    cps = np.full(inside.shape, -1, np.int64)
+    cps.T[inside.T] = flat
+    qc = np.frombuffer(q.encode("utf-32-le"), np.uint32).astype(np.int64)
+    prev = np.repeat(np.arange(m + 1, dtype=np.int64)[:, None], n, axis=1)
+    out = np.full(n, m, np.int64)  # an empty term is m edits away
+    for i, ci in enumerate(cps):
+        # substitution / deletion from the previous row, then insertion
+        # runs down the new row
+        sub = prev[:-1] + (ci != qc[:, None])
+        best = np.minimum(sub, prev[1:] + 1)
+        cur = np.empty_like(prev)
+        cur[0] = i + 1
+        for j in range(m):
+            cur[j + 1] = np.minimum(best[j], cur[j] + 1)
+        prev = cur
+        done = lens == i + 1
+        out[done] = cur[m, done]
+    return out
 
 
 def _posting_terms(rb: pa.RecordBatch) -> pa.Array:
@@ -695,14 +740,10 @@ class SearchEngine:
         self.postings = spark.read.parquet(self.paths.postings)
         self.dictionary = spark.read.parquet(self.paths.dictionary)
         self.docs = spark.read.parquet(self.paths.docs)
-        # the same files, for driver-side stored-field reads (_stored)
-        files = self.docs.inputFiles()
-        fs = pafs.FileSystem.from_uri(files[0])[0]
-        self._stored_docs = pads.dataset(
-            [pafs.FileSystem.from_uri(u)[1] for u in files],
-            format="parquet",
-            filesystem=fs,
-        )
+        # the same files, for driver-side reads: stored fields (_stored) and
+        # every term-dictionary lookup (_dict_rows)
+        self._stored_docs = _snapshot(self.docs)
+        self._dict = _snapshot(self.dictionary)
         self._dtype = np.float64 if cfg.score_dtype == "float64" else np.float32
         self._sql_t = "double" if cfg.score_dtype == "float64" else "float"
         self._analyze = analyzer_fn(cfg.analyzer)
@@ -716,57 +757,51 @@ class SearchEngine:
 
         # tombstoned doc_ids (liveDocs mask) — None when never deleted
         self.deletes = load_deletes(spark, index_dir)
-        # term -> aggregated dictionary row (or None for a vocabulary miss),
-        # the in-memory term-dictionary analog of Lucene's mmapped FST: an
-        # engine instance pins an index snapshot anyway (spark.read lists
-        # files at read time; rebuild the engine after add/delete/optimize),
-        # so repeated queries on seen terms skip the dictionary job.
-        self._meta_cache: dict[str, dict | None] = {}
 
-    # -- term metadata -----------------------------------------------------
+    # -- term dictionary ---------------------------------------------------
     _META_COLS = ["term", "df", "cf", "max_impact", "bucket"]
-    _META_CACHE_MAX = 1_000_000  # ~200 MB driver ceiling at 5 fields/term
+
+    def _dict_rows(self, expr: pc.Expression) -> pa.Table:
+        """Aggregated dictionary rows (``_META_COLS``) of the terms matching
+        ``expr``, a predicate on ``term`` pushed down to the snapshot's
+        parquet files.  A term holds one row per segment after add_docs;
+        they are summed here (the ExactStatsCache merge).  The term-
+        dictionary seek (Lucene's FST analog) is a pyarrow read on the
+        driver: no Spark job."""
+        got = self._dict.to_table(columns=self._META_COLS, filter=expr)
+        agg = got.group_by("term", use_threads=False).aggregate(
+            [
+                ("df", "sum"),
+                ("cf", "sum"),
+                ("max_impact", "max"),
+                ("bucket", "max"),  # a term's rows share its bucket
+            ]
+        )
+        return agg.select(
+            ["term", "df_sum", "cf_sum", "max_impact_max", "bucket_max"]
+        ).rename_columns(self._META_COLS)
+
+    def _fuzzy_rows(self, q: str, max_edits: int) -> pa.Table:
+        """Aggregated dictionary rows within ``max_edits`` code-point edits
+        of ``q``, plus their ``distance``: the length band is pushed down,
+        the vectorized Levenshtein runs over the band only."""
+        n = pc.utf8_length(pc.field("term"))
+        rows = self._dict_rows((n >= len(q) - max_edits) & (n <= len(q) + max_edits))
+        dist = _levenshtein(rows["term"].to_pylist(), q)
+        return rows.append_column("distance", pa.array(dist)).filter(
+            pa.array(dist <= max_edits)
+        )
 
     def _term_meta(self, terms: list[str]) -> pd.DataFrame:
-        if not terms:
+        """Aggregated dictionary rows of ``terms`` in request order; a
+        vocabulary miss has no row."""
+        uniq = pa.array(list(dict.fromkeys(terms)), pa.string())
+        got = self._dict_rows(pc.field("term").isin(uniq))
+        if got.num_rows == 0:
             return pd.DataFrame(columns=self._META_COLS)
-        missing = sorted({t for t in terms if t not in self._meta_cache})
-        if missing:
-            buckets = self._buckets(missing)
-            # a term may hold several dictionary rows after incremental
-            # add_docs (one per appended segment) — aggregate them
-            # (ExactStatsCache merge)
-            fetched = (
-                self.dictionary.filter(
-                    F.col("bucket").isin(buckets) & F.col("term").isin(missing)
-                )
-                .groupBy("term")
-                .agg(
-                    F.sum("df").alias("df"),
-                    F.sum("cf").alias("cf"),
-                    F.max("max_impact").alias("max_impact"),
-                    F.first("bucket").alias("bucket"),
-                )
-                .toPandas()
-            )
-            if len(self._meta_cache) + len(missing) > self._META_CACHE_MAX:
-                # bound driver memory on long-lived engines: drop the oldest
-                # quarter (dict preserves insertion order — FIFO eviction)
-                drop = len(self._meta_cache) // 4 + len(missing)
-                for t in list(self._meta_cache)[:drop]:
-                    del self._meta_cache[t]
-            for rec in fetched.to_dict("records"):
-                self._meta_cache[rec["term"]] = rec
-            for t in missing:  # cache vocabulary misses too
-                self._meta_cache.setdefault(t, None)
-        rows = [
-            self._meta_cache[t]
-            for t in dict.fromkeys(terms)
-            if self._meta_cache[t] is not None
-        ]
-        if not rows:
-            return pd.DataFrame(columns=self._META_COLS)
-        return pd.DataFrame(rows, columns=self._META_COLS)
+        return got.take(
+            pc.sort_indices(pc.index_in(got["term"], value_set=uniq))
+        ).to_pandas()
 
     def _buckets(self, terms: list[str]) -> list[int]:
         # driver-side XXH64 (index/xxhash.py) == Spark's xxhash64, so the
@@ -777,12 +812,18 @@ class SearchEngine:
         return sorted({term_bucket(t, self.cfg.n_buckets) for t in terms})
 
     def _blocks_for(self, terms: list[str]) -> DataFrame:
-        buckets = self._buckets(terms)
-        # bucket predicate prunes the partitioned scan; term predicate pushes
-        # down to parquet row groups.
-        return self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+        """The postings rows of ``terms``: the one place a term list
+        becomes a postings scan.  The bucket predicate prunes the
+        partitioned scan.  Up to ``_EXCLUDE_LITERAL_CAP`` terms the term
+        predicate is a literal pushed down to parquet row groups; a longer
+        list ships as an Arrow LocalRelation that the scan semi-joins."""
+        blocks = self.postings.filter(F.col("bucket").isin(self._buckets(terms)))
+        if len(terms) <= _EXCLUDE_LITERAL_CAP:
+            return blocks.filter(F.col("term").isin(terms))
+        listed = self.spark.createDataFrame(
+            pa.table({"term": pa.array(terms, pa.string())}), "term string"
         )
+        return blocks.join(listed, "term", "left_semi")
 
     # -- scoring -----------------------------------------------------------
     def _weights(self, meta: pd.DataFrame) -> dict[str, float]:
@@ -814,112 +855,60 @@ class SearchEngine:
             "term", "salt", "n_docs", "doc_gaps", "tfs", "norms"
         ).mapInArrow(fn, schema=f"term string, doc_id long, score {self._sql_t}")
 
-    def _expand_cond(self, cl):
-        """Dictionary-filter Column for a prefix/wildcard/fuzzy/range clause
-        (the FST-seek predicate), or ``None`` for the enumerable kinds
-        (synonym/group/exact-fuzzy) whose members are already a small
-        literal list."""
-        import re as _re
-
-        if cl.kind in ("synonym", "group"):
-            return None
-        # MultiTermAware normalization (Analyzer#normalize): fold the
-        # CONSTANT parts of the pattern with the analyzer's multiterm
-        # filters, so e.g. icu_folding's RÉSu* reaches the dictionary as
-        # resu* (the parser already lowercased; this is idempotent there)
-        norm = self._mt_normalize
-        if cl.kind == "prefix":
-            return F.col("term").startswith(norm(cl.value[:-1]))
-        if cl.kind == "wildcard":
-            regex = "^" + "".join(
-                ".*" if c == "*" else "." if c == "?" else _re.escape(norm(c))
-                for c in cl.value
-            ) + "$"
-            return F.col("term").rlike(regex)
-        if cl.kind == "fuzzy":
-            fval = norm(cl.value)
-            if cl.fuzz <= 0:
-                return None
-            return (
-                F.abs(F.length("term") - F.lit(len(fval))) <= cl.fuzz
-            ) & (F.levenshtein(F.col("term"), F.lit(fval)) <= cl.fuzz)
-        if cl.kind == "range":
-            cond = F.lit(True)
-            if cl.lo is not None:
-                lo = norm(cl.lo)
-                cond = cond & (
-                    F.col("term") >= lo if cl.inclusive else F.col("term") > lo
-                )
-            if cl.hi is not None:
-                hi = norm(cl.hi)
-                cond = cond & (
-                    F.col("term") <= hi if cl.inclusive else F.col("term") < hi
-                )
-            return cond
-        raise ValueError(f"unknown expansion kind {cl.kind!r}")
-
-    def _expand_clause(
-        self, cl, max_expansions: int | None = 128
-    ) -> list[str] | None:
+    def _expand_clause(self, cl, max_expansions: int | None = 128) -> list[str]:
         """Resolve a prefix/wildcard/fuzzy/range clause against the term
-        dictionary (the FST-seek analog: one scan of the small aggregated
-        dictionary table, never the corpus), capped at ``max_expansions``
-        terms by df desc (Lucene MultiTermQuery rewrite cap semantics;
+        dictionary (the FST-seek analog: one driver read of the small
+        dictionary, never the corpus), capped at ``max_expansions`` terms
+        by df desc, term asc (Lucene MultiTermQuery rewrite cap semantics;
         scoring divergence: each expansion scores with its own idf instead
         of the constant-score rewrite — documented).
 
         ``max_expansions=None`` disables the cap — REQUIRED for MUST_NOT
         clauses: Lucene's prohibited multi-term clauses use constant-score
         rewrite with no term cap, so exclusion must cover every matching
-        term or prohibited docs would leak back into results.  To keep the
-        driver safe on web-scale dictionaries (``-t*`` can match millions
-        of terms), the uncapped path only materializes a literal list up to
-        ``_EXCLUDE_LITERAL_CAP`` terms; past that it returns ``None`` and
-        the caller must switch to the fully distributed exclusion
-        (:meth:`_excluded_docs_df` — a postings⋈dictionary join that never
-        ships terms through the driver)."""
+        term or prohibited docs would leak back into results."""
         if cl.kind in ("synonym", "group"):
             cands = (
                 list(cl.terms or [])
                 if cl.kind == "group"
                 else [cl.value] + list(self.synonyms.get(cl.value, []))
             )
-            meta = self._term_meta(list(dict.fromkeys(cands)))
+            meta = self._term_meta(cands)
             return [t for t in cands if t in set(meta["term"])]
+        # MultiTermAware normalization (Analyzer#normalize): fold the
+        # CONSTANT parts of the pattern with the analyzer's multiterm
+        # filters, so e.g. icu_folding's RÉSu* reaches the dictionary as
+        # resu* (the parser already lowercased; this is idempotent there)
+        norm = self._mt_normalize
+        term = pc.field("term")
         if cl.kind == "fuzzy" and cl.fuzz <= 0:
-            fval = self._mt_normalize(cl.value)
+            fval = norm(cl.value)
             return [fval] if not self._term_meta([fval]).empty else []
-        cond = self._expand_cond(cl)
-        matched = (
-            self.dictionary.filter(cond)
-            .groupBy("term")  # appended segments may duplicate a term's row
-            .agg(F.sum("df").alias("df"))
-            .orderBy(F.col("df").desc(), F.col("term").asc())
+        if cl.kind == "prefix":
+            rows = self._dict_rows(pc.starts_with(term, norm(cl.value[:-1])))
+        elif cl.kind == "wildcard":
+            regex = "^" + "".join(
+                ".*" if c == "*" else "." if c == "?" else re.escape(norm(c))
+                for c in cl.value
+            ) + "$"
+            rows = self._dict_rows(pc.match_substring_regex(term, regex))
+        elif cl.kind == "fuzzy":
+            rows = self._fuzzy_rows(norm(cl.value), cl.fuzz)
+        elif cl.kind == "range":
+            cond = pc.scalar(True)
+            if cl.lo is not None:
+                lo = norm(cl.lo)
+                cond = cond & (term >= lo if cl.inclusive else term > lo)
+            if cl.hi is not None:
+                hi = norm(cl.hi)
+                cond = cond & (term <= hi if cl.inclusive else term < hi)
+            rows = self._dict_rows(cond)
+        else:
+            raise ValueError(f"unknown expansion kind {cl.kind!r}")
+        order = pc.sort_indices(
+            rows, sort_keys=[("df", "descending"), ("term", "ascending")]
         )
-        if max_expansions is not None:
-            matched = matched.limit(max_expansions)
-            return [r["term"] for r in matched.collect()]
-        rows = matched.limit(_EXCLUDE_LITERAL_CAP + 1).collect()
-        if len(rows) > _EXCLUDE_LITERAL_CAP:
-            return None  # too many to enumerate — distributed path required
-        return [r["term"] for r in rows]
-
-    def _excluded_docs_df(
-        self, cl, salts: list[int] | None = None
-    ) -> DataFrame:
-        """Distinct doc_ids matching ANY dictionary term of an expansion
-        clause — the fully distributed prohibited-clause path (Lucene
-        constant-score rewrite semantics, no term cap, no driver term
-        list): dictionary predicate → postings join on term (AQE
-        broadcasts the matched-term side when it fits) → lightest
-        doc-gaps-only decode.  Used when :meth:`_expand_clause` overflows
-        ``_EXCLUDE_LITERAL_CAP``."""
-        cond = self._expand_cond(cl)
-        tdf = self.dictionary.filter(cond).select("term").distinct()
-        nb = self.postings.join(tdf, "term")
-        if salts is not None:
-            nb = nb.filter(F.col("salt").isin(salts))
-        return self._docs_of(nb).select("doc_id").distinct()
+        return rows["term"].take(order[:max_expansions]).to_pylist()
 
     def _docs_of(self, blocks: DataFrame) -> DataFrame:
         """(term, doc_id) of every posting in ``blocks`` — the lightest
@@ -1799,6 +1788,91 @@ class SearchEngine:
         rows = [r[:-1] for r in self._explain_rows(tree, k)]
         return self.spark.createDataFrame(rows, schema).orderBy("rank", "path")
 
+    def _plan(self, tree):
+        """The planning pass of :meth:`_search_tree` and
+        :meth:`_explain_rows`: query-time synonyms, every expansion clause
+        resolved against the dictionary, then ONE dictionary lookup for the
+        weights of every scored term.  A clause under a MUST_NOT ancestor is
+        effectively prohibited: it expands uncapped (the cap is perf-only,
+        and capping a prohibited clause silently under-excludes) and only
+        its doc ids count, so its terms need no weights.  No Spark job.
+
+        Returns (tree, {id(clause): (terms, negated)}, found terms,
+        weight by term)."""
+        if self.synonyms:
+            tree = self._apply_synonyms_tree(tree)
+        resolved: dict[int, tuple[list[str], bool]] = {}
+        leaf_terms: set[str] = set()
+
+        def walk(node, negated: bool) -> None:
+            if isinstance(node, TermNode):
+                leaf_terms.add(node.term)
+            elif isinstance(node, PhraseNode):
+                leaf_terms.update(node.toks)
+            elif isinstance(node, Clause):
+                terms = self._expand_clause(
+                    node, max_expansions=None if negated else 128
+                )
+                resolved[id(node)] = (terms, negated)
+                if not negated:
+                    leaf_terms.update(terms)
+            elif isinstance(node, BoolQuery):
+                for c in node.children:
+                    walk(c.node, negated or c.occur == "MUST_NOT")
+
+        walk(tree, False)
+        meta = self._term_meta(sorted(leaf_terms))
+        return tree, resolved, set(meta["term"]), self._weights(meta)
+
+    def _leaf_frame(
+        self, node, resolved, found, weights, blocks_of, salts
+    ) -> DataFrame | None:
+        """(doc_id, score) of the docs matching one planned leaf — a term,
+        phrase or expansion clause (:meth:`_plan`'s ``resolved``, ``found``
+        and ``weights``); None == matches nothing.  ``blocks_of`` turns a
+        term list into the leaf's (salt-pruned) postings scan."""
+        if isinstance(node, TermNode):
+            if node.term not in found:
+                return None
+            return self._scored(
+                blocks_of([node.term]), weights, {node.term: float(node.boost)}
+            ).select("doc_id", "score")
+        if isinstance(node, PhraseNode):
+            if not self.sim.supports_phrases:
+                raise NotImplementedError(
+                    f"similarity {self.sim.name!r} scores term queries "
+                    "only; phrase clauses need BM25"
+                )
+            if any(t not in found for t in node.toks):
+                return None
+            return self._phrase_frame(
+                node.toks,
+                weights,
+                boost=node.boost,
+                slop=node.slop,
+                salts=salts,
+                lucene_sloppy=not node.window,
+            )
+        terms, negated = resolved[id(node)]
+        if not terms:
+            return None
+        if negated:
+            # the anti-joining ancestor needs only the doc ids, one row per
+            # doc (an AND counts its children's rows)
+            return (
+                self._docs_of(blocks_of(terms))
+                .select("doc_id")
+                .distinct()
+                .withColumn("score", F.lit(0.0).cast(self._sql_t))
+            )
+        g = self._scored(
+            blocks_of(terms), weights, {t: float(node.boost) for t in terms}
+        )
+        # accumulate in double; the final cast to the configured score dtype
+        # happens once, just before top-k (mirrors the oracle's f64
+        # accumulation + single final rounding)
+        return g.groupBy("doc_id").agg(F.sum("score").alias("score"))
+
     def _explain_rows(self, tree, k: int) -> list[tuple]:
         """The explain walker: explain_scores_tree's rows for the top-k
         hits of ``tree``, each with the node's bare term (its label for a
@@ -1811,40 +1885,7 @@ class SearchEngine:
         doc_ids = [int(r["doc_id"]) for r in hits]
         rank_by_doc = {int(r["doc_id"]): int(r["rank"]) for r in hits}
         score_by_doc = {int(r["doc_id"]): float(r["score"]) for r in hits}
-        if self.synonyms:
-            tree = self._apply_synonyms_tree(tree)
-
-        # resolve expansions + one dictionary lookup for every leaf term
-        # (mirrors _search_tree's walk, including the MUST_NOT no-cap rule)
-        resolved: dict[int, list[str]] = {}
-        leaf_terms: set[str] = set()
-
-        def walk(node, occur: str) -> None:
-            if isinstance(node, TermNode):
-                leaf_terms.add(node.term)
-            elif isinstance(node, PhraseNode):
-                leaf_terms.update(node.toks)
-            elif isinstance(node, Clause):
-                # a clause under ANY negated ancestor is effectively
-                # prohibited: uncapped expansion (cap is perf-only, and
-                # capping a prohibited clause silently under-excludes)
-                cap = None if occur == "MUST_NOT" else 128
-                resolved[id(node)] = self._expand_clause(
-                    node, max_expansions=cap
-                )
-                if resolved[id(node)] is not None:
-                    leaf_terms.update(resolved[id(node)])
-            else:
-                for c in node.children:
-                    walk(
-                        c.node,
-                        "MUST_NOT" if occur == "MUST_NOT" else c.occur,
-                    )
-
-        walk(tree, "SHOULD")
-        meta = self._term_meta(sorted(leaf_terms))
-        found = set(meta["term"])
-        weights = self._weights(meta)
+        tree, resolved, found, weights = self._plan(tree)
         salts = sorted({d // self.cfg.salt_range for d in doc_ids})
 
         def _primary(w) -> float:
@@ -1883,97 +1924,33 @@ class SearchEngine:
             return s + (f"^{node.boost:g}" if node.boost != 1.0 else "")
 
         def prepare(node, path: str, occur: str) -> None:
-            if isinstance(node, TermNode):
-                ok = node.term in found
-                node_info[path] = (
-                    occur, "term", render(node),
-                    _primary(weights[node.term]) if ok else 0.0,
-                    float(node.boost), ok,
-                )
-                if ok:
-                    boosts = (
-                        {node.term: float(node.boost)}
-                        if node.boost != 1.0
-                        else None
-                    )
-                    leaf_frames.append(
-                        _tag(
-                            self._scored(
-                                blocks_of([node.term]), weights, boosts
-                            ),
-                            path,
-                        )
-                    )
-            elif isinstance(node, PhraseNode):
-                ok = all(t in found for t in node.toks)
-                node_info[path] = (
-                    occur, "phrase", node.label,
-                    sum(_primary(weights[t]) for t in set(node.toks))
-                    if ok
-                    else 0.0,
-                    float(node.boost), ok,
-                )
-                if ok:
-                    leaf_frames.append(
-                        _tag(
-                            self._phrase_frame(
-                                node.toks,
-                                weights,
-                                boost=float(node.boost),
-                                slop=int(node.slop),
-                                salts=salts,
-                                lucene_sloppy=not node.window,
-                            ),
-                            path,
-                        )
-                    )
-            elif isinstance(node, Clause):
-                if resolved[id(node)] is None:
-                    # literal-cap overflow (prohibited clause): constant-
-                    # score rewrite reports no per-term weight; the frame
-                    # is the distributed doc set restricted to the k docs
-                    node_info[path] = (
-                        occur, node.kind, node.label, 0.0,
-                        float(node.boost), True,
-                    )
-                    leaf_frames.append(
-                        _tag(
-                            self._excluded_docs_df(
-                                node, salts=salts
-                            ).withColumn(
-                                "score", F.lit(0.0).cast(self._sql_t)
-                            ),
-                            path,
-                        )
-                    )
-                    return
-                matched = [t for t in resolved[id(node)] if t in found]
-                node_info[path] = (
-                    occur, node.kind, node.label,
-                    sum(_primary(weights[t]) for t in matched),
-                    float(node.boost), bool(matched),
-                )
-                if matched:
-                    g = self._scored(
-                        blocks_of(matched),
-                        weights,
-                        {t: float(node.boost) for t in matched},
-                    )
-                    leaf_frames.append(
-                        _tag(
-                            g.groupBy("doc_id").agg(
-                                F.sum("score").alias("score")
-                            ),
-                            path,
-                        )
-                    )
-            else:
+            if isinstance(node, BoolQuery):
                 node_info[path] = (
                     occur, "bool", render(node), None, float(node.boost),
                     True,
                 )
                 for i, c in enumerate(node.children):
                     prepare(c.node, f"{path}.{i}" if path else str(i), c.occur)
+                return
+            fr = self._leaf_frame(
+                node, resolved, found, weights, blocks_of, salts
+            )
+            if isinstance(node, TermNode):
+                kind, terms = "term", [node.term]
+            elif isinstance(node, PhraseNode):
+                kind, terms = "phrase", set(node.toks)
+            else:
+                # a negated clause only gates its ancestor: no weight
+                terms, negated = resolved[id(node)]
+                kind, terms = node.kind, [] if negated else terms
+            ok = fr is not None
+            node_info[path] = (
+                occur, kind, render(node),
+                sum(_primary(weights[t]) for t in terms) if ok else 0.0,
+                float(node.boost), ok,
+            )
+            if ok:
+                leaf_frames.append(_tag(fr, path))
 
         prepare(tree, "", "SHOULD")
         leaf_scores: dict[str, dict[int, float]] = {}
@@ -2361,38 +2338,7 @@ class SearchEngine:
         collects and no persisted frames before top-k; doc_filter prunes
         every scan to its salt ranges.
         """
-        if self.synonyms:
-            tree = self._apply_synonyms_tree(tree)
-
-        # resolve expansion clauses + collect every concrete term, then one
-        # dictionary lookup for all idfs
-        resolved: dict[int, list[str] | None] = {}
-        leaf_terms: set[str] = set()
-
-        def walk(node, occur: str) -> None:
-            if isinstance(node, TermNode):
-                leaf_terms.add(node.term)
-            elif isinstance(node, PhraseNode):
-                leaf_terms.update(node.toks)
-            elif isinstance(node, Clause):
-                cap = None if occur == "MUST_NOT" else 128
-                resolved[id(node)] = self._expand_clause(node, max_expansions=cap)
-                if resolved[id(node)] is None:
-                    return  # literal-cap overflow: distributed path in ev()
-                leaf_terms.update(resolved[id(node)])
-            elif isinstance(node, BoolQuery):
-                for c in node.children:
-                    # negated scope propagates: clauses under a MUST_NOT
-                    # ancestor expand uncapped (see the explain walker)
-                    walk(
-                        c.node,
-                        "MUST_NOT" if occur == "MUST_NOT" else c.occur,
-                    )
-
-        walk(tree, "SHOULD")
-        meta = self._term_meta(sorted(leaf_terms))
-        found = set(meta["term"])
-        idf_by_term = self._weights(meta)
+        tree, resolved, found, idf_by_term = self._plan(tree)
         salts = (
             sorted({int(d) // self.cfg.salt_range for d in doc_filter})
             if doc_filter is not None
@@ -2407,52 +2353,11 @@ class SearchEngine:
 
         def ev(node) -> DataFrame | None:
             """(doc_id, score) of matching docs; None == matches nothing."""
-            if isinstance(node, TermNode):
-                if node.term not in found:
-                    return None
-                return self._scored(
-                    blocks_of([node.term]),
-                    idf_by_term,
-                    {node.term: float(node.boost)},
-                ).select("doc_id", "score")
-            if isinstance(node, PhraseNode):
-                if not self.sim.supports_phrases:
-                    raise NotImplementedError(
-                        f"similarity {self.sim.name!r} scores term queries "
-                        "only; phrase clauses need BM25"
-                    )
-                if any(t not in found for t in node.toks):
-                    return None
-                return self._phrase_frame(
-                    node.toks,
-                    idf_by_term,
-                    boost=node.boost,
-                    slop=node.slop,
-                    salts=salts,
-                    lucene_sloppy=not node.window,
-                )
-            if isinstance(node, Clause):
-                if resolved[id(node)] is None:
-                    # literal-cap overflow: only reachable under a MUST_NOT
-                    # ancestor (positive clauses cap at 128) — the parent
-                    # anti-joins this frame, so a constant score suffices
-                    return self._excluded_docs_df(node, salts=salts).select(
-                        "doc_id",
-                        F.lit(0.0).cast(self._sql_t).alias("score"),
-                    )
-                matched = [t for t in resolved[id(node)] if t in found]
-                if not matched:
-                    return None
-                g = self._scored(
-                    blocks_of(matched),
-                    idf_by_term,
-                    {t: float(node.boost) for t in matched},
-                )
-                # accumulate in double; the final cast to the configured
-                # score dtype happens once, just before top-k (mirrors the
-                # oracle's f64 accumulation + single final rounding)
-                return g.groupBy("doc_id").agg(F.sum("score").alias("score"))
-            return ev_bool(node)
+            if isinstance(node, BoolQuery):
+                return ev_bool(node)
+            return self._leaf_frame(
+                node, resolved, found, idf_by_term, blocks_of, salts
+            )
 
         def ev_bool(node: BoolQuery) -> DataFrame | None:
             # a positive term child that occurs once in this node joins the

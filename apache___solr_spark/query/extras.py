@@ -13,6 +13,7 @@ Reference surface:
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -401,12 +402,13 @@ def significant_terms_index(
     N when < 1) and minTermLength gate.  Returns (term, queryDocFreq,
     docFreq, score), top ``num_terms`` by score.
 
-    Scale shape: the docFreq window and term-length gate filter the
-    DICTIONARY first and restrict the postings scan by join (no driver
-    term list); only doc_gaps decode (no tfs/norms/positions); the
-    foreground intersection is one semi-join + groupBy(term).  The
-    reference walks every term's postings per shard — this is the same
-    scan expressed as one distributed job."""
+    Scale shape: the term-length gate and the docFreq window (on the df
+    summed over segments) filter the DICTIONARY first, on the driver; the
+    candidates restrict the postings scan (a bucket-pruned semi-join
+    against an Arrow LocalRelation past the literal cap); only doc_gaps
+    decode (no tfs/norms/positions); the foreground intersection is one
+    semi-join + groupBy(term).  The reference walks every term's postings
+    per shard — this is the same scan expressed as one distributed job."""
     n_docs = engine.stats["N"]
     fg = engine.docset(query)
     for f in fq or []:
@@ -423,13 +425,16 @@ def significant_terms_index(
         if float(max_doc_freq) >= 1.0
         else float(max_doc_freq) * n_docs
     )
-    cand = engine.dictionary.filter(
-        (F.col("df") >= F.lit(lo))
-        & (F.col("df") <= F.lit(hi))
-        & (F.length("term") >= int(min_term_length))
-    ).select("term", "df")
-
-    pairs = engine._docs_of(engine.postings.join(cand.select("term"), "term"))
+    rows = engine._dict_rows(
+        pc.utf8_length(pc.field("term")) >= int(min_term_length)
+    )
+    rows = rows.filter(
+        pc.and_(pc.greater_equal(rows["df"], lo), pc.less_equal(rows["df"], hi))
+    )
+    cand = engine.spark.createDataFrame(
+        rows.select(["term", "df"]), "term string, df long"
+    )
+    pairs = engine._docs_of(engine._blocks_for(rows["term"].to_pylist()))
     fg_tf = (
         pairs.join(fg, "doc_id", "left_semi")
         .groupBy("term")

@@ -1256,20 +1256,13 @@ def dispatch_query(
         # GraphTermsQParserPlugin: {!graphTerms f=text maxDocFreq=N}t1,t2
         # — a terms filter that SKIPS terms above the df cap (frontier
         # expansion without head-term blowup).  The df probe is one
-        # dictionary-table lookup, never a corpus scan.
-        from pyspark.sql import functions as F
-
+        # dictionary lookup (the summed df of every segment), never a
+        # corpus scan.
         _check_field(params)
         maxdf = int(params.get("maxDocFreq", 2**31 - 1))
         vals = [v for v in (x.strip() for x in rest.split(",")) if v]
-        kept = [
-            r["term"]
-            for r in engine.dictionary.filter(
-                F.col("term").isin(vals) & (F.col("df") <= maxdf)
-            )
-            .select("term")
-            .collect()
-        ]
+        meta = engine._term_meta(vals)
+        kept = [t for t, df in zip(meta["term"], meta["df"]) if df <= maxdf]
         return engine.terms_query(kept, k=k)
 
     if ptype == "vectorSimilarity" and "vectors_df" in kw:

@@ -16,6 +16,7 @@ intersection pruning capability.
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -103,6 +104,23 @@ def suggest_infix(
     )
 
 
+def _corrections(engine, q: str, max_edits: int, limit: int) -> list[str]:
+    """suggest_terms over the engine's dictionary snapshot, on the driver:
+    terms within ``max_edits`` of ``q`` (``q`` itself excluded), ranked by
+    (distance asc, df summed over segments desc, term asc)."""
+    rows = engine._fuzzy_rows(q, max_edits)
+    rows = rows.filter(pc.not_equal(rows["term"], q))
+    order = pc.sort_indices(
+        rows,
+        sort_keys=[
+            ("distance", "ascending"),
+            ("df", "descending"),
+            ("term", "ascending"),
+        ],
+    )
+    return rows["term"].take(order[:limit]).to_pylist()
+
+
 def spellcheck_collate(
     engine,
     query: str,
@@ -132,12 +150,9 @@ def spellcheck_collate(
     # best corrections per misspelled term (distance asc, df desc)
     cands: dict[str, list[str]] = {}
     for t in bad:
-        rows = suggest_terms(
-            engine.dictionary, t, max_edits=max_edits, limit=max_collations
-        ).collect()
-        if not rows:
+        cands[t] = _corrections(engine, t, max_edits, max_collations)
+        if not cands[t]:
             return []  # an uncorrectable term -> no collation possible
-        cands[t] = [r["term"] for r in rows]
     out = []
     for i in range(max_collations):
         repl = {t: cands[t][min(i, len(cands[t]) - 1)] for t in bad}

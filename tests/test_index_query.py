@@ -448,6 +448,35 @@ def test_must_not_overflow_uses_distributed_exclusion(
     }
 
 
+def test_negated_and_counts_each_expansion_doc_once(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A prohibited AND over an uncapped expansion: a doc holding two
+    expansion terms but not the other required term is not excluded, on
+    the literal and the semi-join scan alike."""
+    import apache___solr_spark.query.engine as eng_mod
+
+    rows = [
+        ("d0", "alpha prea preb"),
+        ("d1", "alpha beta prea"),
+        ("d2", "alpha beta"),
+    ]
+    pages = spark.createDataFrame(
+        [(u, None, None, t, "en") for u, t in rows],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    out = str(tmp_path_factory.mktemp("negand") / "idx")
+    build_index(spark, pages, out, cfg=CFG)
+    eng = SearchEngine(spark, out, cfg=CFG)
+    for cap in (1024, 1):
+        monkeypatch.setattr(eng_mod, "_EXCLUDE_LITERAL_CAP", cap)
+        got = {
+            r["url"]
+            for r in eng.search("alpha -(beta AND pre*)", k=10).collect()
+        }
+        assert got == {"d0", "d2"}, cap
+
+
 def test_must_prune_adversarial(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("adv") / "idx")
     build_index(spark, _adversarial_pages(spark), out, cfg=CFG)
@@ -3452,13 +3481,10 @@ def test_empty_result_schema_follows_with_url(spark, built):
         assert eng.search(q).columns == ["rank", "doc_id", "url", "score"], q
 
 
-def test_warm_query_job_counts(spark, built):
-    """On a warm engine a search() runs only the Spark jobs of its scan and
-    top-k (≤2), and its page is a local relation whose collect() runs
-    none; a vocabulary miss runs no job at all."""
+def _job_counter(spark):
+    """fn -> (fn(), number of Spark jobs fn ran), counted by job group."""
     import uuid
 
-    eng = SearchEngine(spark, built, cfg=CFG)
     sc = spark.sparkContext
     tag = uuid.uuid4().hex
 
@@ -3471,7 +3497,17 @@ def test_warm_query_job_counts(spark, built):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    for q in ("web data", "zzznotaterm"):  # warm the term-meta cache
+    return jobs
+
+
+def test_warm_query_job_counts(spark, built):
+    """On a warm engine a search() runs only the Spark jobs of its scan and
+    top-k (≤2), and its page is a local relation whose collect() runs
+    none; a vocabulary miss runs no job at all."""
+    eng = SearchEngine(spark, built, cfg=CFG)
+    jobs = _job_counter(spark)
+
+    for q in ("web data", "zzznotaterm"):  # warm the engine
         eng.search(q, k=10).collect()
     page, n_search = jobs("search", lambda: eng.search("web data", k=10))
     rows, n_collect = jobs("collect", page.collect)
@@ -3480,3 +3516,72 @@ def test_warm_query_job_counts(spark, built):
     assert n_collect == 0, n_collect
     rows, n_miss = jobs("miss", lambda: eng.search("zzznotaterm").collect())
     assert rows == [] and n_miss == 0, n_miss
+
+
+def test_cold_planning_job_counts(spark, built):
+    """Query planning runs no Spark job: on a freshly opened engine the
+    first term, prefix, wildcard, fuzzy and range queries each run only
+    their scan and top-k (≤2 jobs), and a vocabulary miss runs none — the
+    dictionary is read on the driver."""
+    jobs = _job_counter(spark)
+    for q in ("web data", "web*", "w?b*", "data~1", "[a TO c]"):
+        eng = SearchEngine(spark, built, cfg=CFG)
+        rows, n = jobs(f"cold {q}", lambda: eng.search(q, k=10).collect())
+        assert rows, q
+        assert n <= 2, (q, n)
+    for q in ("zzznotaterm", "zzznot*"):
+        eng = SearchEngine(spark, built, cfg=CFG)
+        rows, n = jobs(f"miss {q}", lambda: eng.search(q).collect())
+        assert rows == [] and n == 0, (q, n)
+
+
+def test_dictionary_stats_sum_segments(spark, tmp_path_factory):
+    """After add_docs a term holds one dictionary row per segment; every
+    reader sees the summed df: {!graphTerms}'s maxDocFreq cap,
+    {!significantTerms}'s docFreq (one row per term) and the spellcheck
+    ranking of corrections."""
+    from apache___solr_spark.index.updates import add_docs
+    from apache___solr_spark.query.extras import significant_terms_index
+    from apache___solr_spark.query.localparams import dispatch_query
+    from apache___solr_spark.query.suggest import spellcheck_collate
+
+    schema = (
+        "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+
+    def pages(rows):
+        return spark.createDataFrame(
+            [(u, None, None, t, "en") for u, t in rows], schema
+        )
+
+    base = [("z0", "zeta alpha"), ("z1", "zeta beta"), ("z2", "zeta gamma")]
+    base += [(f"c{i}", f"zetc {w}") for i, w in enumerate(["i", "ii", "x", "v"])]
+    base += [(f"f{i}", f"filler{i} word") for i in range(6)]
+    added = [("y0", "zeta delta"), ("y1", "zeta alpha"), ("y2", "zeta omega")]
+    out = str(tmp_path_factory.mktemp("segdict") / "idx")
+    build_index(spark, pages(base), out, cfg=CFG)
+    add_docs(spark, out, pages(added), cfg=CFG)
+    eng = SearchEngine(spark, out, cfg=CFG)
+    zeta_rows = eng.dictionary.filter(F.col("term") == "zeta").collect()
+    assert sorted(r["df"] for r in zeta_rows) == [3, 3]
+
+    def graph_hits(maxdf):
+        q = f"{{!graphTerms f=text maxDocFreq={maxdf}}}zeta"
+        return dispatch_query(eng, q, k=20).count()
+
+    assert graph_hits(4) == 0
+    assert graph_hits(6) == 6
+
+    sig = significant_terms_index(
+        eng, "zeta", min_doc_freq=1, max_doc_freq=0.9, min_term_length=3
+    ).collect()
+    zeta = [
+        (r["queryDocFreq"], r["docFreq"]) for r in sig if r["term"] == "zeta"
+    ]
+    assert zeta == [(6, 6)], sig
+
+    # zetb is one edit from zeta (df 3 + 3) and from zetc (df 4): the
+    # summed df ranks zeta first
+    assert spellcheck_collate(eng, "zetb", max_collations=1) == [
+        {"collation": "zeta", "hits": 6}
+    ]
