@@ -5,27 +5,30 @@ Reproduces the reference /select retrieval path
 filter -> score -> top-k priority queue; distributed merge in
 handler/component/QueryComponent.java:970) as a DataFrame plan.  Every
 query — classic string, flat ParsedQuery or BoolQuery — is one recursive
-boolean tree (QueryParser.jj:135-172), evaluated by one walker
-(SearchEngine._search_tree); per boolean node:
+boolean tree (QueryParser.jj:135-172), evaluated by one evaluator
+(SearchEngine._search_tree):
 
-  postings blocks (bucket-pruned scan, term pushdown) of the node's
-  distinct term children
-    -> batch decode (index/builder._decode_rows, one mapInArrow) + BM25
-       score, rows tagged MUST/SHOULD by term
-    -> unioned with phrase frames (position intersection),
-       dictionary-expansion frames (prefix/wildcard/fuzzy/range/synonym
-       disjunction groups, each one clause) and sub-query frames
-    -> groupBy(doc_id) sum + boolean semantics (MUST clause count,
-       minimum-should-match, MUST_NOT anti-join)
-then, at the root: liveDocs tombstone anti-join
+  planning on the driver (no Spark job): synonyms, dictionary expansions,
+  term weights, and every never-matches rule (_compile)
+    -> ONE bucket-pruned postings scan of every term the tree reads (term
+       pushdown; positions only when it holds a phrase)
+    -> groupBy(salt).applyInArrow(eval_tree): per salt, one batch decode
+       (index/builder._decode_rows), then term, phrase and expansion
+       leaves scored in numpy and combined over sorted doc-id arrays
+       (MUST count, minimum-should-match, MUST_NOT, boosts, the
+       {!maxscore} dismax root)
+then: doc_filter, liveDocs tombstone anti-join, fq semi-join, bf/boost
     -> orderBy(score desc, doc_id asc).limit(k)    [TakeOrderedAndProject]
     -> top-k collected as Arrow; the page's urls are read on the driver
        (pyarrow over the docs files) and returned as a local relation.
+The explain walker reads every node's per-doc score from the same kernel.
+``salt = doc_id // salt_range`` is aligned across terms, so a tree
+decomposes exactly by salt (Solr's per-shard collectors, salts as shards).
 
-Every query-side postings scan — scoring, doc-id-only (exclusion,
-significantTerms) and positions (phrases, spans, payloads, phrase
-identification) — decodes through _decode_rows, the same batch decoder the
-build's merge and optimize use.  Planning runs no Spark job: every term
+Every query-side postings scan — the boolean evaluator, scoring ({!terms},
+min-hash), doc-id-only (significantTerms) and positions (spans, payloads,
+phrase identification) — decodes through _decode_rows, the same batch
+decoder the build's merge and optimize use.  Planning runs no Spark job: every term
 lookup and expansion reads the dictionary files on the driver
 (SearchEngine._dict_rows).
 
@@ -48,7 +51,8 @@ import json
 import math
 import os
 import re
-from collections import Counter
+from dataclasses import dataclass
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -79,12 +83,16 @@ from apache___solr_spark.query.parser import (
     lower_tree,
     parse_query_tree,
 )
+from apache___solr_spark.query.similarities import BM25Similarity
 
 
 # the (doc_id, score) rows of an empty result, for SearchEngine._page
 _NO_HITS = pa.table(
     {"doc_id": pa.array([], pa.int64()), "score": pa.array([], pa.float64())}
 )
+# positions are matched as ``row << _SHIFT | pos`` int64 keys
+_SHIFT = np.int64(32)
+_EMPTY = np.empty(0, dtype=np.int64)
 
 
 def bm25_idf(n_docs: int, df: int, dtype=np.float32):
@@ -235,9 +243,7 @@ def _positions_fn(salt_range: int):
 def _payload_eval_fn(
     ptoks: list[str],
     sum_idf: float,
-    k1: float,
-    b: float,
-    avgdl: float,
+    bm25,
     dtype,
     func: str | None = None,
     include_span: bool = False,
@@ -275,11 +281,6 @@ def _payload_eval_fn(
 
     m = len(ptoks)
     norm_table = NORM_TABLE.astype(dtype)
-    k1f = dtype(k1)
-    one_minus_b = dtype(1.0 - b)
-    bf = dtype(b)
-    avgdlf = dtype(avgdl)
-    idff = dtype(sum_idf)
     or_mode = operator == "or"
     if or_mode:
         m = 1
@@ -287,7 +288,6 @@ def _payload_eval_fn(
         np.asarray(expected, dtype=np.float32) if expected is not None else None
     )
     offs = np.arange(m, dtype=np.int64)
-    shift = np.int64(32)
     mask = np.int64((1 << 32) - 1)
     # fmin/fmax skip NaN (missing payloads); sum folds nan_to_num
     reduce_ufunc = {
@@ -321,19 +321,7 @@ def _payload_eval_fn(
             )
             pay_off = np.concatenate(([0], np.cumsum(ns)[:-1]))
             # encoded positions per term, all docs at once
-            parts: dict[str, list[np.ndarray]] = {t: [] for t in set(ptoks)}
-            for row_idx, plists in enumerate(pdf["plists"]):
-                enc_row = np.int64(row_idx) << shift
-                for r in plists:
-                    if r["term"] in parts:
-                        parts[r["term"]].append(
-                            enc_row
-                            + np.asarray(r["positions"], dtype=np.int64)
-                        )
-            enc = {
-                t: (np.concatenate(v) if v else np.empty(0, dtype=np.int64))
-                for t, v in parts.items()
-            }
+            enc = _plist_positions(pdf["plists"], set(ptoks))
             if or_mode:
                 allpos = [enc[t] for t in set(ptoks) if enc[t].size]
                 starts = (
@@ -349,7 +337,7 @@ def _payload_eval_fn(
                     starts = starts[np.isin(starts + i, enc[t])]
             if starts.size == 0:
                 continue
-            rows = (starts >> shift).astype(np.int64)  # ascending
+            rows = starts >> _SHIFT  # ascending
             pos0 = starts & mask
             gathered = pay[
                 ((pay_off[rows] + pos0)[:, None] + offs).ravel()
@@ -365,9 +353,9 @@ def _payload_eval_fn(
                 continue
             tf = tf_all[hit].astype(dtype)
             dl = norm_table[pdf["norm"].to_numpy()[hit].astype(np.uint8)]
-            bm25 = idff * tf / (tf + k1f * (one_minus_b + bf * dl / avgdlf))
+            span = bm25(sum_idf, 1.0, tf, dl)
             if exp_arr is not None:
-                score = bm25
+                score = span
             else:
                 # segmented reduce over each doc's span payloads: spans
                 # are row-sorted, so each hit row owns one contiguous
@@ -399,7 +387,7 @@ def _payload_eval_fn(
                     )
                 score = vals.astype(dtype)
                 if include_span:
-                    score = score * bm25
+                    score = score * span
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].to_numpy()[hit],
@@ -410,195 +398,179 @@ def _payload_eval_fn(
     return run
 
 
-def _phrase_score_fn(
+def _plist_positions(plists, want: set[str]) -> dict[str, np.ndarray]:
+    """Each term of ``want`` -> its positions in a batch of per-doc
+    ``plists`` ([(term, positions[])] per row), encoded ``row << 32 | pos``
+    and ascending (rows in batch order, positions ascending per row)."""
+    parts: dict[str, list[np.ndarray]] = {t: [] for t in want}
+    for row_idx, plist in enumerate(plists):
+        enc_row = np.int64(row_idx) << _SHIFT
+        for r in plist:
+            if r["term"] in parts:
+                parts[r["term"]].append(
+                    enc_row + np.asarray(r["positions"], dtype=np.int64)
+                )
+    return {t: np.concatenate(v) if v else _EMPTY for t, v in parts.items()}
+
+
+def _sloppy_freqs(
+    enc: dict[str, np.ndarray], ptoks: list[str], slop: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`_phrase_freqs` for classic sloppy phrases: the FRACTIONAL
+    SloppyPhraseMatcher freq of every row holding all of ``ptoks``, one
+    :func:`query.sloppy.sloppy_freq` call per such row."""
+    from apache___solr_spark.query.sloppy import sloppy_freq
+
+    g: dict[str, int] = {}
+    groups = [g.setdefault(t, len(g)) for t in ptoks]
+    row_of = {t: enc.get(t, _EMPTY) >> _SHIFT for t in g}
+    rows = np.unique(reduce(np.intersect1d, row_of.values()))
+    cuts = {
+        t: (np.searchsorted(r, rows, "left"), np.searchsorted(r, rows, "right"))
+        for t, r in row_of.items()
+    }
+    mask = np.int64((1 << 32) - 1)
+    freqs = np.array(
+        [
+            sloppy_freq(
+                [
+                    (enc[t][cuts[t][0][i] : cuts[t][1][i]] & mask).tolist()
+                    for t in ptoks
+                ],
+                slop,
+                groups,
+            )
+            for i in range(rows.size)
+        ],
+        dtype=np.float64,
+    )
+    hit = freqs > 0.0
+    return rows[hit], freqs[hit]
+
+
+def _phrase_freqs(
+    enc: dict[str, np.ndarray],
     ptoks: list[str],
-    sum_idf: float,
-    k1: float,
-    b: float,
-    avgdl: float,
-    dtype,
     slop: int = 0,
     ordered: bool = True,
     slots: list[tuple[str, ...]] | None = None,
     lucene_sloppy: bool = False,
-):
-    """mapInPandas fn over (doc_id, norm, plists): phrase frequency, then
-    BM25 with tf=pf and idf=sum of constituent idfs (Lucene PhraseQuery
-    scoring: BM25Similarity sums idf over the phrase's term statistics).
+) -> tuple[np.ndarray, np.ndarray]:
+    """The phrase matcher: (rows, freqs) of the rows whose phrase frequency
+    is > 0, rows ascending.  ``enc`` maps each term to its positions
+    encoded ``row << 32 | pos``, ascending; a row is a doc of a batch (the
+    span pipeline) or a doc's offset in its salt (:func:`eval_tree`).
 
-    ``lucene_sloppy=True`` (classic sloppy phrases, slop>0): tf = the
+    ``lucene_sloppy=True`` (classic sloppy phrases, slop>0): freq = the
     FRACTIONAL SloppyPhraseMatcher freq — sum of 1/(1+matchLength) over
     minimized windows, out-of-order matches at transposition cost
     (query/sloppy.py; lucene/core SloppyPhraseMatcher.java) — the
-    reference's rank semantics for ``"a b"~N``.  Runs per doc on the
-    already-gated candidate set (every term present), the span matchers'
-    cost class.
+    reference's rank semantics for ``"a b"~N``; one matcher call per row
+    holding every term.
 
-    ``ordered=True`` otherwise (SpanNearQuery inOrder=true): pf =
+    ``ordered=True`` otherwise (SpanNearQuery inOrder=true): freq =
     number of first-term positions starting an INCREASING position chain
     of the phrase terms whose span is <= len(ptoks)-1+slop; slop=0 is
     exact adjacency in both modes (ExactPhraseMatcher).
 
     ``ordered=False`` (SpanNearQuery inOrder=false — the surround
     parser's N operator, queryparser/surround/query/DistanceQuery.java):
-    pf = number of MINIMAL windows containing at least one occurrence of
-    every distinct term with span <= m-1+slop (m = #distinct terms).
+    freq = number of MINIMAL windows containing at least one occurrence
+    of every distinct term with span <= m-1+slop (m = #distinct terms).
     Each merged position is a candidate window start; its minimal cover
     is the earliest occurrence of every term at-or-after it, and windows
     are deduplicated by their end position so each minimal window counts
     once (unweighted, vs Lucene's 1/(1+slop-matchLength) sloppyFreq —
     same documented divergence as the ordered path).
 
-    The check is batched across ALL docs of an Arrow batch: positions are
-    encoded as row_idx*2^32+pos, so one vectorized searchsorted per phrase
-    term advances every candidate chain in every doc at once — no per-doc
-    Python loop on the hot path (high-df phrase terms stay numpy-bound).
-    Greedy smallest-next is exact: it minimizes the chain end for each
-    start, so a start matches iff its greedy chain satisfies the span bound.
-    """
-    norm_table = NORM_TABLE.astype(dtype)
-    k1f = dtype(k1)
-    one_minus_b = dtype(1.0 - b)
-    bf = dtype(b)
-    avgdlf = dtype(avgdl)
-    idff = dtype(sum_idf)
-    shift = np.int64(32)
-    # ``slots`` generalizes each phrase position to a term SET
-    # (ComplexPhraseQParserPlugin: a wildcard inside a phrase rewrites to
-    # a SpanOr of its dictionary expansions — any member term satisfies
-    # the slot).  The default is singleton slots == plain phrase terms.
-    use_sloppy = (
-        lucene_sloppy and ordered and slop > 0 and slots is None
-        and len(ptoks) > 1
-    )
+    ``slots`` generalizes each phrase position to a term SET
+    (ComplexPhraseQParserPlugin: a wildcard inside a phrase rewrites to a
+    SpanOr of its dictionary expansions — any member term satisfies the
+    slot); the default is singleton slots == plain phrase terms.
+
+    The ordered and unordered checks run over all rows at once: one
+    vectorized searchsorted per phrase slot advances every candidate
+    chain in every row — no per-row Python loop (high-df phrase terms stay
+    numpy-bound).  Greedy smallest-next is exact: it minimizes the chain
+    end for each start, so a start matches iff its greedy chain satisfies
+    the span bound."""
+    if lucene_sloppy and ordered and slop > 0 and slots is None and len(ptoks) > 1:
+        return _sloppy_freqs(enc, ptoks, slop)
     if slots is None:
         slots = [(t,) for t in (ptoks if ordered else sorted(set(ptoks)))]
-    want = {t for s in slots for t in s}
     bound = np.int64(len(slots) - 1 + slop)
 
-    if use_sloppy:
-        from apache___solr_spark.query.sloppy import sloppy_freq
+    def slot_arr(s: tuple) -> np.ndarray:
+        if len(s) == 1:
+            return enc.get(s[0], _EMPTY)
+        a = np.concatenate([enc.get(t, _EMPTY) for t in s])
+        a.sort()  # distinct terms never share (row, pos): no dups
+        return a
 
-        g: dict[str, int] = {}
-        groups = [g.setdefault(t, len(g)) for t in ptoks]
+    if ordered:
+        start = slot_arr(slots[0])
+        cur = start
+        alive = np.ones(start.shape, dtype=bool)
+        for s in slots[1:]:
+            arr = slot_arr(s)
+            if arr.size == 0:
+                return _EMPTY, _EMPTY
+            idx = np.searchsorted(arr, cur, side="right")
+            ok = idx < arr.size
+            nxt = arr[np.minimum(idx, arr.size - 1)]
+            ok &= (nxt >> _SHIFT) == (cur >> _SHIFT)  # same row
+            alive &= ok
+            cur = np.where(ok, nxt, cur)
+        alive &= (cur - start) <= bound
+        return np.unique(start[alive] >> _SHIFT, return_counts=True)
+    arrs = [slot_arr(s) for s in slots]
+    if any(a.size == 0 for a in arrs):
+        return _EMPTY, _EMPTY
+    merged = np.sort(np.concatenate(arrs))
+    row_of = merged >> _SHIFT
+    valid = np.ones(merged.shape, dtype=bool)
+    end_vals = merged.copy()
+    for arr in arrs:
+        idx = np.searchsorted(arr, merged, side="left")
+        ok = idx < arr.size
+        nxt = arr[np.minimum(idx, arr.size - 1)]
+        ok &= (nxt >> _SHIFT) == row_of
+        valid &= ok
+        end_vals = np.maximum(end_vals, np.where(ok, nxt, end_vals))
+    match = valid & ((end_vals - merged) <= bound)
+    return np.unique(np.unique(end_vals[match]) >> _SHIFT, return_counts=True)
 
-        def run_sloppy(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                docs: list[int] = []
-                scores: list = []
-                for doc_id, norm, plists in zip(
-                    pdf["doc_id"], pdf["norm"], pdf["plists"]
-                ):
-                    pos_by_term = {
-                        r["term"]: r["positions"] for r in plists
-                    }
-                    pls = []
-                    ok = True
-                    for t in ptoks:
-                        p = pos_by_term.get(t)
-                        if p is None or len(p) == 0:
-                            ok = False
-                            break
-                        pls.append([int(x) for x in p])
-                    if not ok:
-                        continue
-                    fr = sloppy_freq(pls, slop, groups)
-                    if fr <= 0.0:
-                        continue
-                    dl = norm_table[int(norm)]
-                    frf = dtype(fr)
-                    cache = k1f * (one_minus_b + bf * dl / avgdlf)
-                    docs.append(int(doc_id))
-                    scores.append(dtype(idff * frf / (frf + cache)))
-                if docs:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.asarray(docs, dtype=np.int64),
-                            "score": np.asarray(scores, dtype=dtype),
-                        }
-                    )
 
-        return run_sloppy
+def _phrase_score_fn(
+    ptoks: list[str],
+    sum_idf: float,
+    bm25,
+    dtype,
+    slop: int = 0,
+    ordered: bool = True,
+    slots: list[tuple[str, ...]] | None = None,
+):
+    """mapInPandas fn over (doc_id, norm, plists): phrase frequency by
+    :func:`_phrase_freqs` (ordered window, or unordered minimal windows;
+    ``slots`` for complexphrase), then BM25 with tf=pf and idf=sum of
+    constituent idfs (Lucene PhraseQuery scoring: BM25Similarity sums idf
+    over the phrase's term statistics)."""
+    norm_table = NORM_TABLE.astype(dtype)
+    want = set(ptoks) if slots is None else {t for s in slots for t in s}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            nrows = len(pdf)
-            if nrows == 0:
+            rows, pf = _phrase_freqs(
+                _plist_positions(pdf["plists"], want), ptoks, slop, ordered, slots
+            )
+            if rows.size == 0:
                 continue
-            parts: dict[str, list[np.ndarray]] = {t: [] for t in want}
-            for row_idx, plists in enumerate(pdf["plists"]):
-                enc_row = np.int64(row_idx) << shift
-                for r in plists:
-                    t = r["term"]
-                    if t in parts:
-                        parts[t].append(
-                            enc_row + np.asarray(r["positions"], dtype=np.int64)
-                        )
-            enc = {
-                t: (np.concatenate(v) if v else np.empty(0, dtype=np.int64))
-                for t, v in parts.items()
-            }
-            def slot_arr(s: tuple) -> np.ndarray:
-                if len(s) == 1:
-                    return enc[s[0]]
-                a = np.concatenate([enc[t] for t in s])
-                a.sort()  # distinct terms never share (doc,pos): no dups
-                return a
-
-            if ordered:
-                start = slot_arr(slots[0])
-                cur = start
-                alive = np.ones(start.shape, dtype=bool)
-                for s in slots[1:]:
-                    arr = slot_arr(s)
-                    if arr.size == 0:
-                        alive = np.zeros(start.shape, dtype=bool)
-                        break
-                    idx = np.searchsorted(arr, cur, side="right")
-                    ok = idx < arr.size
-                    nxt = arr[np.minimum(idx, arr.size - 1)]
-                    ok &= (nxt >> shift) == (cur >> shift)  # same doc row
-                    alive &= ok
-                    cur = np.where(ok, nxt, cur)
-                alive &= (cur - start) <= bound
-                if not alive.any():
-                    continue
-                pf_all = np.bincount(
-                    (start[alive] >> shift).astype(np.int64), minlength=nrows
-                )
-            else:
-                arrs = [slot_arr(s) for s in slots]
-                if any(a.size == 0 for a in arrs):
-                    continue
-                merged = np.sort(np.concatenate(arrs))
-                row_of = merged >> shift
-                valid = np.ones(merged.shape, dtype=bool)
-                end_vals = merged.copy()
-                for arr in arrs:
-                    idx = np.searchsorted(arr, merged, side="left")
-                    ok = idx < arr.size
-                    nxt = arr[np.minimum(idx, arr.size - 1)]
-                    ok &= (nxt >> shift) == row_of
-                    valid &= ok
-                    end_vals = np.maximum(
-                        end_vals, np.where(ok, nxt, end_vals)
-                    )
-                match = valid & ((end_vals - merged) <= bound)
-                if not match.any():
-                    continue
-                ends = np.unique(end_vals[match])
-                pf_all = np.bincount(
-                    (ends >> shift).astype(np.int64), minlength=nrows
-                )
-            hit = np.nonzero(pf_all)[0]
-            pf = pf_all[hit].astype(dtype)
-            dl = norm_table[pdf["norm"].to_numpy()[hit].astype(np.uint8)]
-            cache = k1f * (one_minus_b + bf * dl / avgdlf)
-            score = idff * pf / (pf + cache)
+            dl = norm_table[pdf["norm"].to_numpy()[rows].astype(np.uint8)]
             yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy()[hit], "score": score}
+                {
+                    "doc_id": pdf["doc_id"].to_numpy()[rows],
+                    "score": bm25(sum_idf, 1.0, pf.astype(dtype), dl),
+                }
             )
 
     return run
@@ -608,9 +580,7 @@ def _span_tree_score_fn(
     tree,
     slots: list[tuple[str, ...]],
     sum_idf: float,
-    k1: float,
-    b: float,
-    avgdl: float,
+    bm25,
     dtype,
 ):
     """mapInPandas fn over (doc_id, norm, plists): nested-span frequency
@@ -622,11 +592,6 @@ def _span_tree_score_fn(
     bisect matchers), so a degenerate tree scores identically to
     span_near/complex_phrase."""
     norm_table = NORM_TABLE.astype(dtype)
-    k1f = dtype(k1)
-    one_minus_b = dtype(1.0 - b)
-    bf = dtype(b)
-    avgdlf = dtype(avgdl)
-    idff = dtype(sum_idf)
     member_slots: dict[str, list[int]] = {}
     for i, s in enumerate(slots):
         for t in s:
@@ -638,7 +603,8 @@ def _span_tree_score_fn(
 
         for pdf in batches:
             docs: list[int] = []
-            scores: list = []
+            sfs: list[int] = []
+            norms: list[int] = []
             for doc_id, norm, plists in zip(
                 pdf["doc_id"], pdf["norm"], pdf["plists"]
             ):
@@ -658,22 +624,287 @@ def _span_tree_score_fn(
                     sf = len(set(emin.values()))
                 else:
                     sf = len({s for (s, _) in m})
-                if not sf:
-                    continue
-                dl = norm_table[int(norm)]
-                sff = dtype(sf)
-                cache = k1f * (one_minus_b + bf * dl / avgdlf)
-                docs.append(int(doc_id))
-                scores.append(dtype(idff * sff / (sff + cache)))
+                if sf:
+                    docs.append(int(doc_id))
+                    sfs.append(sf)
+                    norms.append(int(norm))
             if docs:
                 yield pd.DataFrame(
                     {
                         "doc_id": np.asarray(docs, dtype=np.int64),
-                        "score": np.asarray(scores, dtype=dtype),
+                        "score": bm25(
+                            sum_idf,
+                            1.0,
+                            np.asarray(sfs, dtype=dtype),
+                            norm_table[np.asarray(norms, dtype=np.uint8)],
+                        ),
                     }
                 )
 
     return run
+
+
+# -- the boolean evaluator ---------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _PlanNode:
+    """One matchable node of a compiled query tree (:func:`_compile`).
+
+    ``kind``: ``terms`` (a term, or an expansion clause: the sum of its
+    terms' scores); ``phrase`` (``terms`` = the phrase tokens); ``docs``
+    (an expansion under a MUST_NOT ancestor: doc ids only, score 0);
+    ``bool`` (``children`` = (occur, node) pairs).  ``path`` is the
+    node's dotted child-index position in the query tree ("" = root).
+    ``tie`` is set on a ``{!maxscore}`` root only."""
+
+    path: str
+    kind: str
+    terms: tuple[str, ...] = ()
+    boost: float = 1.0
+    slop: int = 0
+    window: bool = False
+    mm: int = 0
+    children: tuple[tuple[str, "_PlanNode"], ...] = ()
+    tie: float | None = None
+
+    def walk(self) -> Iterator["_PlanNode"]:
+        yield self
+        for _occur, c in self.children:
+            yield from c.walk()
+
+
+@dataclass(frozen=True)
+class TreePlan:
+    """What :func:`eval_tree` needs besides the postings rows: the compiled
+    tree, the per-term similarity weights, the similarity kernel scoring
+    term leaves, the BM25 kernel scoring phrase leaves, the index's
+    ``salt_range`` and the score dtype."""
+
+    root: _PlanNode
+    weights: dict
+    kernel: object
+    phrase_kernel: object
+    salt_range: int
+    dtype: type = np.float32
+
+
+def _compile(
+    tree, resolved, found, sim, store_positions: bool, tie: float | None = None
+) -> _PlanNode | None:
+    """The static half of boolean evaluation, on the driver, from
+    :meth:`SearchEngine._plan`'s output: the tree with every node that can
+    never match removed, or None when the whole query can never match.
+
+    A leaf can never match when a term or phrase token is not in the
+    dictionary or an expansion is empty.  A boolean node can never match
+    when a MUST child can never match, when it has no matchable positive
+    child (Lucene: only prohibited clauses match nothing) or when ``mm``
+    exceeds its matchable SHOULD children.  Children are compiled in
+    order and the first dead MUST child stops the node.  ``tie`` makes a
+    boolean root the ``{!maxscore}`` dismax (MaxScoreQParser rewrites only
+    the top BooleanQuery); its ``mm`` > 1 can never be met, since the
+    rewrite leaves one optional clause."""
+
+    def leaf(node, path: str) -> _PlanNode | None:
+        if isinstance(node, TermNode):
+            if node.term not in found:
+                return None
+            return _PlanNode(path, "terms", (node.term,), float(node.boost))
+        if isinstance(node, PhraseNode):
+            if not sim.supports_phrases:
+                raise NotImplementedError(
+                    f"similarity {sim.name!r} scores term queries "
+                    "only; phrase clauses need BM25"
+                )
+            if any(t not in found for t in node.toks):
+                return None
+            if not store_positions:
+                raise NotImplementedError(
+                    "index built with store_positions=False; phrase queries "
+                    "unavailable (rebuild with store_positions=True)"
+                )
+            return _PlanNode(
+                path,
+                "phrase",
+                tuple(node.toks),
+                float(node.boost),
+                slop=int(node.slop),
+                window=bool(node.window),
+            )
+        terms, negated = resolved[id(node)]
+        if not terms:
+            return None
+        # a group repeating a term, (a a), scores it once
+        return _PlanNode(
+            path,
+            "docs" if negated else "terms",
+            tuple(dict.fromkeys(terms)),
+            float(node.boost),
+        )
+
+    def walk(node, path: str, tie: float | None = None) -> _PlanNode | None:
+        if not isinstance(node, BoolQuery):
+            return leaf(node, path)
+        kids = []
+        for i, c in enumerate(node.children):
+            occur = c.occur if c.occur in ("MUST", "MUST_NOT") else "SHOULD"
+            kid = walk(c.node, f"{path}.{i}" if path else str(i))
+            if kid is None:
+                if occur == "MUST":
+                    return None
+                continue
+            kids.append((occur, kid))
+        if all(o == "MUST_NOT" for o, _ in kids):
+            return None
+        mm = int(node.mm)
+        if mm > sum(o == "SHOULD" for o, _ in kids) or (tie is not None and mm > 1):
+            return None
+        return _PlanNode(
+            path,
+            "bool",
+            boost=float(node.boost),
+            mm=mm,
+            children=tuple(kids),
+            tie=None if tie is None else float(tie),
+        )
+
+    return walk(tree, "", tie)
+
+
+def eval_tree(
+    rows: pa.Table, plan: TreePlan
+) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+    """Evaluate ``plan`` over the postings rows of ONE salt: every node's
+    path -> (doc_ids ascending, float64 scores) of the docs it matches.
+
+    ``salt = doc_id // salt_range`` is aligned across terms, so every
+    posting of a doc is in its salt's rows and a query tree decomposes
+    exactly by salt (Solr's per-shard collectors, with salts as shards).
+    The rows (term, salt, n_docs, doc_gaps, tfs, norms[, positions]) decode
+    once (index/builder._decode_rows); after add_docs a (term, salt) pair
+    holds one row per segment, merged here by doc id.  Then:
+
+    - a term scores with the similarity kernel (dtype, like Lucene's float
+      scores); an expansion sums its terms' scores, a negated one yields
+      doc ids;
+    - a phrase leaf runs :func:`_phrase_freqs` over positions encoded
+      ``(doc_id - salt_base) << 32 | pos`` and scores BM25 with tf = the
+      phrase freq and idf = the summed token idfs;
+    - a boolean node combines its children over their sorted doc ids:
+      every MUST child present, at least ``mm`` SHOULD children, no
+      MUST_NOT child, score = float64 sum of the positive children times
+      the node boost.  A ``{!maxscore}`` root scores sum(MUST) + max(SHOULD)
+      + tie * (sum(SHOULD) - max(SHOULD)).
+
+    Child scores accumulate in float64; the caller rounds the root's once
+    to the score dtype (the oracle's f64 accumulation + single rounding)."""
+    rb = rows.combine_chunks().to_batches()[0]
+    salt_range, dtype = plan.salt_range, plan.dtype
+    doc_ids, tfs, norms, pos_gaps, starts = _decode_rows(rb, salt_range)
+    ends = starts + rb.column("n_docs").to_numpy()
+    base = int(rb.column("salt")[0].as_py()) * salt_range
+    tfd = tfs.astype(dtype)
+    dl = NORM_TABLE.astype(dtype)[norms]
+    if pos_gaps is not None:
+        positions = _undelta_positions(pos_gaps, tfs)
+        pos_at = np.cumsum(tfs) - tfs
+    rows_of: dict[str, list[int]] = {}
+    for i, t in enumerate(rb.column("term").to_pylist()):
+        rows_of.setdefault(t, []).append(i)
+
+    def postings(t: str) -> np.ndarray:
+        """Indices of ``t``'s postings in the flat arrays, by doc id."""
+        rs = rows_of.get(t, [])
+        idx = np.concatenate([_EMPTY] + [np.arange(starts[r], ends[r]) for r in rs])
+        return idx[np.argsort(doc_ids[idx], kind="stable")] if len(rs) > 1 else idx
+
+    def term_scores(t: str, boost: float) -> tuple[np.ndarray, np.ndarray]:
+        idx = postings(t)
+        sc = plan.kernel(plan.weights[t], boost, tfd[idx], dl[idx])
+        return doc_ids[idx], np.asarray(sc, dtype).astype(np.float64)
+
+    def encoded(idx: np.ndarray) -> np.ndarray:
+        """(doc_id - base) << 32 | pos over the postings ``idx``."""
+        n = tfs[idx]
+        at = np.repeat(pos_at[idx] - (np.cumsum(n) - n), n) + np.arange(n.sum())
+        return (np.repeat(doc_ids[idx] - base, n) << _SHIFT) + positions[at]
+
+    def phrase(node: _PlanNode) -> tuple[np.ndarray, np.ndarray]:
+        idx = {t: postings(t) for t in node.terms}
+        if any(i.size == 0 for i in idx.values()):
+            return _EMPTY, np.empty(0)
+        keys, freq = _phrase_freqs(
+            {t: encoded(i) for t, i in idx.items()},
+            list(node.terms),
+            node.slop,
+            lucene_sloppy=not node.window,
+        )
+        first = idx[node.terms[0]]
+        docs = keys + base
+        hit = first[np.searchsorted(doc_ids[first], docs)]
+        w = float(sum(plan.weights[t] for t in node.terms))
+        sc = plan.phrase_kernel(w, node.boost, freq.astype(dtype), dl[hit])
+        return docs, np.asarray(sc, dtype).astype(np.float64)
+
+    def sums(inv: np.ndarray, w: np.ndarray, n: int) -> np.ndarray:
+        """Float64 sums of ``w`` per group ``inv`` (also when empty)."""
+        return np.bincount(inv, weights=w, minlength=n).astype(np.float64)
+
+    def combine(node: _PlanNode, kids) -> tuple[np.ndarray, np.ndarray]:
+        pos = [(o, r) for o, r in kids if o != "MUST_NOT"]
+        u, inv = np.unique(
+            np.concatenate([r[0] for _, r in pos]), return_inverse=True
+        )
+        sc = np.concatenate([r[1] for _, r in pos])
+        must = np.concatenate([np.full(r[0].size, o == "MUST") for o, r in pos])
+        n = u.size
+        n_must = sum(o == "MUST" for o, _ in pos)
+        nm = np.bincount(inv, weights=must, minlength=n)
+        if node.tie is None:
+            score = sums(inv, sc, n)
+        else:
+            sh = ~must
+            mx = np.full(n, -np.inf)
+            np.maximum.at(mx, inv[sh], sc[sh])
+            has = np.isfinite(mx)  # the doc matched a SHOULD child
+            dis = np.zeros(n)
+            dis[has] = mx[has] + node.tie * (sums(inv[sh], sc[sh], n)[has] - mx[has])
+            score = sums(inv, np.where(must, sc, 0.0), n) + dis
+        keep = np.ones(n, dtype=bool)
+        if n_must:
+            keep &= nm == n_must
+        if node.mm:
+            keep &= np.bincount(inv, minlength=n) - nm >= node.mm
+        for o, r in kids:
+            if o == "MUST_NOT":
+                keep &= ~np.isin(u, r[0])
+        score = score[keep]
+        if node.boost != 1.0:
+            score = score * node.boost
+        return u[keep], score
+
+    out: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+
+    def ev(node: _PlanNode) -> tuple[np.ndarray, np.ndarray]:
+        if node.kind == "bool":
+            res = combine(node, [(o, ev(c)) for o, c in node.children])
+        elif node.kind == "phrase":
+            res = phrase(node)
+        elif node.kind == "terms":
+            parts = [term_scores(t, node.boost) for t in node.terms]
+            u, inv = np.unique(
+                np.concatenate([d for d, _ in parts]), return_inverse=True
+            )
+            res = u, sums(inv, np.concatenate([s for _, s in parts]), u.size)
+        else:  # docs
+            u = np.unique(np.concatenate([doc_ids[postings(t)] for t in node.terms]))
+            res = u, np.zeros(u.size)
+        out[node.path] = res
+        return res
+
+    ev(plan.root)
+    return out
 
 
 class SearchEngine:
@@ -753,6 +984,10 @@ class SearchEngine:
         self.synonyms = synonyms or {}
         self.sim = get_similarity(similarity, cfg)
         self._kernel = self.sim.kernel(self.stats["avgdl"], dtype=self._dtype)
+        # phrase, span and payload scores are BM25 under every similarity
+        self._bm25 = BM25Similarity(cfg.bm25_k1, cfg.bm25_b).kernel(
+            self.stats["avgdl"], dtype=self._dtype
+        )
         from apache___solr_spark.index.updates import load_deletes
 
         # tombstoned doc_ids (liveDocs mask) — None when never deleted
@@ -835,6 +1070,15 @@ class SearchEngine:
                 n_docs, int(r["df"]), int(r["cf"]), total_len, dtype=self._dtype
             )
             for _, r in meta.iterrows()
+        }
+
+    def _idfs(self, meta: pd.DataFrame) -> dict[str, float]:
+        """BM25 idf per term of the aggregated dictionary rows ``meta``:
+        the weights of the span and payload paths."""
+        n_docs = self.stats["N"]
+        return {
+            t: float(bm25_idf(n_docs, int(df), dtype=self._dtype))
+            for t, df in zip(meta["term"], meta["df"])
         }
 
     def _scored(
@@ -949,18 +1193,14 @@ class SearchEngine:
         self,
         ptoks: list[str],
         idf_by_term: dict[str, float],
-        boost: float = 1.0,
         slop: int = 0,
-        salts: list[int] | None = None,
         ordered: bool = True,
         slots: list[tuple[str, ...]] | None = None,
         tree=None,
-        lucene_sloppy: bool = False,
     ) -> DataFrame:
-        """(doc_id, score) of docs matching the phrase (``slop=0``: exact
-        adjacency; ``slop>0``: ordered window, or Lucene SloppyPhrase
-        fractional freq when ``lucene_sloppy``; ``ordered=False``:
-        unordered minimal-window — see _phrase_score_fn).  ``slots``
+        """(doc_id, score) of docs matching the span (``slop=0``: exact
+        adjacency; ``slop>0``: ordered window; ``ordered=False``:
+        unordered minimal-window — see _phrase_freqs).  ``slots``
         switches to per-position term SETS (complexphrase): the salt/doc
         gates then require >=1 member of EVERY slot instead of every term.
         ``tree`` (a slot-level span tree, see span_tree/query/spans.py)
@@ -980,8 +1220,6 @@ class SearchEngine:
             )
         uniq = sorted(set(ptoks))
         blocks = self._blocks_for(uniq)
-        if salts is not None:
-            blocks = blocks.filter(F.col("salt").isin(salts))
         if slots is None:
             covered = F.count_distinct("term")
             n_gate = len(uniq)
@@ -1008,29 +1246,12 @@ class SearchEngine:
             )
             n_gate = len(slots)
         grouped = self._doc_plists(blocks, covered == n_gate)
-        sum_idf = float(sum(idf_by_term[t] for t in ptoks)) * float(boost)
+        sum_idf = float(sum(idf_by_term[t] for t in ptoks))
         if tree is not None:
-            fn = _span_tree_score_fn(
-                tree,
-                slots,
-                sum_idf,
-                self.cfg.bm25_k1,
-                self.cfg.bm25_b,
-                self.stats["avgdl"],
-                self._dtype,
-            )
+            fn = _span_tree_score_fn(tree, slots, sum_idf, self._bm25, self._dtype)
         else:
             fn = _phrase_score_fn(
-                ptoks,
-                sum_idf,
-                self.cfg.bm25_k1,
-                self.cfg.bm25_b,
-                self.stats["avgdl"],
-                self._dtype,
-                slop=slop,
-                ordered=ordered,
-                slots=slots,
-                lucene_sloppy=lucene_sloppy,
+                ptoks, sum_idf, self._bm25, self._dtype, slop, ordered, slots
             )
         return grouped.mapInPandas(fn, schema=f"doc_id long, score {self._sql_t}")
 
@@ -1070,11 +1291,7 @@ class SearchEngine:
         found = set(meta["term"])
         if any(t not in found for t in toks):
             return self._page(_NO_HITS, with_url)
-        n_docs = self.stats["N"]
-        idf_by_term = {
-            r["term"]: float(bm25_idf(n_docs, int(r["df"]), dtype=self._dtype))
-            for _, r in meta.iterrows()
-        }
+        idf_by_term = self._idfs(meta)
         frame = self._phrase_frame(
             toks, idf_by_term, slop=dist - 1, ordered=ordered
         )
@@ -1226,24 +1443,10 @@ class SearchEngine:
         )
         if cands is None:
             return self._page(_NO_HITS, with_url)
-        meta = self._term_meta(sorted(set(toks)))
-        idf_by_term = {
-            r["term"]: float(
-                bm25_idf(self.stats["N"], int(r["df"]), dtype=self._dtype)
-            )
-            for _, r in meta.iterrows()
-        }
+        idf_by_term = self._idfs(self._term_meta(sorted(set(toks))))
         # duplicates counted, like _phrase_frame's sum over ptoks
         sum_idf = float(sum(idf_by_term.get(t, 0.0) for t in toks))
-        fn = _payload_eval_fn(
-            toks,
-            sum_idf,
-            self.cfg.bm25_k1,
-            self.cfg.bm25_b,
-            self.stats["avgdl"],
-            self._dtype,
-            **mode_kw,
-        )
+        fn = _payload_eval_fn(toks, sum_idf, self._bm25, self._dtype, **mode_kw)
         scored = cands.mapInPandas(
             fn, schema=f"doc_id long, score {self._sql_t}"
         )
@@ -1418,11 +1621,7 @@ class SearchEngine:
         if any(not s for s in slots):
             return self._page(_NO_HITS, with_url)
         ptoks = [t for s in slots for t in s]
-        n_docs = self.stats["N"]
-        idf_by_term = {
-            r["term"]: float(bm25_idf(n_docs, int(r["df"]), dtype=self._dtype))
-            for _, r in meta.iterrows()
-        }
+        idf_by_term = self._idfs(meta)
         frame = self._phrase_frame(
             ptoks, idf_by_term, slots=slots, tree=tree
         )
@@ -1478,11 +1677,7 @@ class SearchEngine:
         if any(not s for s in slots):
             return self._page(_NO_HITS, with_url)
         ptoks = [t for s in slots for t in s]
-        n_docs = self.stats["N"]
-        idf_by_term = {
-            r["term"]: float(bm25_idf(n_docs, int(r["df"]), dtype=self._dtype))
-            for _, r in meta.iterrows()
-        }
+        idf_by_term = self._idfs(meta)
         frame = self._phrase_frame(
             ptoks,
             idf_by_term,
@@ -1770,12 +1965,13 @@ class SearchEngine:
         exactly Lucene's "no match on required clause" pruning of the
         Explanation tree.
 
-        Scale shape: one _search_tree top-k, then every leaf frame is salt-
-        pruned to the k hit docs before decode and all leaves union into a
-        single collect of at most k rows per leaf; the recursive boolean
-        gating runs driver-side over those <= k·|leaves| rows (explain is a
-        k-docs debug tool in the reference too — DebugComponent explains
-        each returned doc individually)."""
+        Scale shape: one _search_tree top-k, then the same evaluator
+        (:func:`eval_tree`) runs once more over the postings of the hit
+        docs' salts and returns every node's score for those docs, at most
+        k rows per node, in one collect (explain is a k-docs debug tool in
+        the reference too — DebugComponent explains each returned doc
+        individually).  No second boolean evaluator: the rows are the
+        kernel's own per-node results."""
         if isinstance(query, str):
             tree = parse_query_tree(query, analyze_fn=self._analyze)
         else:
@@ -1824,59 +2020,64 @@ class SearchEngine:
         meta = self._term_meta(sorted(leaf_terms))
         return tree, resolved, set(meta["term"]), self._weights(meta)
 
-    def _leaf_frame(
-        self, node, resolved, found, weights, blocks_of, salts
-    ) -> DataFrame | None:
-        """(doc_id, score) of the docs matching one planned leaf — a term,
-        phrase or expansion clause (:meth:`_plan`'s ``resolved``, ``found``
-        and ``weights``); None == matches nothing.  ``blocks_of`` turns a
-        term list into the leaf's (salt-pruned) postings scan."""
-        if isinstance(node, TermNode):
-            if node.term not in found:
-                return None
-            return self._scored(
-                blocks_of([node.term]), weights, {node.term: float(node.boost)}
-            ).select("doc_id", "score")
-        if isinstance(node, PhraseNode):
-            if not self.sim.supports_phrases:
-                raise NotImplementedError(
-                    f"similarity {self.sim.name!r} scores term queries "
-                    "only; phrase clauses need BM25"
-                )
-            if any(t not in found for t in node.toks):
-                return None
-            return self._phrase_frame(
-                node.toks,
-                weights,
-                boost=node.boost,
-                slop=node.slop,
-                salts=salts,
-                lucene_sloppy=not node.window,
-            )
-        terms, negated = resolved[id(node)]
-        if not terms:
-            return None
-        if negated:
-            # the anti-joining ancestor needs only the doc ids, one row per
-            # doc (an AND counts its children's rows)
-            return (
-                self._docs_of(blocks_of(terms))
-                .select("doc_id")
-                .distinct()
-                .withColumn("score", F.lit(0.0).cast(self._sql_t))
-            )
-        g = self._scored(
-            blocks_of(terms), weights, {t: float(node.boost) for t in terms}
+    def _evaluate(
+        self,
+        root: _PlanNode,
+        weights: dict,
+        salts: list[int] | None = None,
+        keep: list[int] | None = None,
+    ) -> DataFrame:
+        """The Spark placement of :func:`eval_tree`: ONE bucket- and
+        term-pruned scan of every term ``root`` reads (positions selected
+        only when it holds a phrase), grouped by salt, one ``eval_tree``
+        call per salt.  Returns the root's (doc_id, score double) rows; with
+        ``keep`` (explain), every node's (path, doc_id, score) rows of the
+        docs in ``keep`` instead.  ``salts`` prunes the scan."""
+        nodes = list(root.walk())
+        cols = ["term", "salt", "n_docs", "doc_gaps", "tfs", "norms"]
+        if any(n.kind == "phrase" for n in nodes):
+            cols.append("positions")
+        blocks = self._blocks_for(sorted({t for n in nodes for t in n.terms}))
+        if salts is not None:
+            blocks = blocks.filter(F.col("salt").isin(salts))
+        plan = TreePlan(
+            root, weights, self._kernel, self._bm25, self.cfg.salt_range, self._dtype
         )
-        # accumulate in double; the final cast to the configured score dtype
-        # happens once, just before top-k (mirrors the oracle's f64
-        # accumulation + single final rounding)
-        return g.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        grouped = blocks.select(*cols).groupBy("salt")
+        if keep is None:
+
+            def run(rows: pa.Table) -> pa.Table:
+                ids, scores = eval_tree(rows, plan)[root.path]
+                return pa.table({"doc_id": ids, "score": scores})
+
+            return grouped.applyInArrow(run, "doc_id long, score double")
+        wanted = np.asarray(sorted(keep), dtype=np.int64)
+
+        def run_explain(rows: pa.Table) -> pa.Table:
+            paths, ids, scores = [], [], []
+            for path, (d, sc) in eval_tree(rows, plan).items():
+                m = np.isin(d, wanted)
+                paths += [path] * int(m.sum())
+                ids.append(d[m])
+                scores.append(sc[m])
+            return pa.table(
+                {
+                    "path": pa.array(paths, pa.string()),
+                    "doc_id": np.concatenate(ids),
+                    "score": np.concatenate(scores),
+                }
+            )
+
+        return grouped.applyInArrow(
+            run_explain, "path string, doc_id long, score double"
+        )
 
     def _explain_rows(self, tree, k: int) -> list[tuple]:
         """The explain walker: explain_scores_tree's rows for the top-k
         hits of ``tree``, each with the node's bare term (its label for a
-        non-term node) appended."""
+        non-term node) appended.  Every node's score per hit doc comes from
+        the query's own evaluator (:meth:`_evaluate` with ``keep`` = the
+        hits, its scan pruned to their salts)."""
         hits = self._search_tree(tree, k=k, with_url=False).select(
             "rank", "doc_id", "score"
         ).collect()
@@ -1886,26 +2087,14 @@ class SearchEngine:
         rank_by_doc = {int(r["doc_id"]): int(r["rank"]) for r in hits}
         score_by_doc = {int(r["doc_id"]): float(r["score"]) for r in hits}
         tree, resolved, found, weights = self._plan(tree)
+        root = _compile(tree, resolved, found, self.sim, self.cfg.store_positions)
         salts = sorted({d // self.cfg.salt_range for d in doc_ids})
+        node_scores: dict[str, dict[int, float]] = {}
+        for r in self._evaluate(root, weights, salts, keep=doc_ids).toArrow().to_pylist():
+            node_scores.setdefault(r["path"], {})[r["doc_id"]] = r["score"]
 
         def _primary(w) -> float:
             return float(w[0] if isinstance(w, tuple) else w)
-
-        # build one (path, doc_id, score) frame per matchable leaf, union,
-        # single collect — every frame is salt- and hit-doc-pruned
-        leaf_frames: list[DataFrame] = []
-        # path -> (occur, kind, clause_label, weight, boost, matchable)
-        node_info: dict[str, tuple] = {}
-
-        def blocks_of(terms: list[str]) -> DataFrame:
-            return self._blocks_for(terms).filter(F.col("salt").isin(salts))
-
-        def _tag(fr: DataFrame, path: str) -> DataFrame:
-            return fr.filter(F.col("doc_id").isin(doc_ids)).select(
-                F.lit(path).alias("path"),
-                "doc_id",
-                F.col("score").cast("double").alias("score"),
-            )
 
         def render(node) -> str:
             if isinstance(node, TermNode):
@@ -1923,119 +2112,35 @@ class SearchEngine:
             s = "(" + " ".join(inner) + ")"
             return s + (f"^{node.boost:g}" if node.boost != 1.0 else "")
 
-        def prepare(node, path: str, occur: str) -> None:
+        def describe(node) -> tuple[str, float | None]:
+            """(kind, weight): a leaf's weight sums its scored terms'."""
             if isinstance(node, BoolQuery):
-                node_info[path] = (
-                    occur, "bool", render(node), None, float(node.boost),
-                    True,
-                )
-                for i, c in enumerate(node.children):
-                    prepare(c.node, f"{path}.{i}" if path else str(i), c.occur)
-                return
-            fr = self._leaf_frame(
-                node, resolved, found, weights, blocks_of, salts
-            )
+                return "bool", None
             if isinstance(node, TermNode):
-                kind, terms = "term", [node.term]
-            elif isinstance(node, PhraseNode):
-                kind, terms = "phrase", set(node.toks)
+                return "term", _primary(weights[node.term])
+            if isinstance(node, PhraseNode):
+                terms = set(node.toks)
+                kind = "phrase"
             else:
-                # a negated clause only gates its ancestor: no weight
-                terms, negated = resolved[id(node)]
-                kind, terms = node.kind, [] if negated else terms
-            ok = fr is not None
-            node_info[path] = (
-                occur, kind, render(node),
-                sum(_primary(weights[t]) for t in terms) if ok else 0.0,
-                float(node.boost), ok,
-            )
-            if ok:
-                leaf_frames.append(_tag(fr, path))
+                terms, kind = resolved[id(node)][0], node.kind
+            return kind, sum(_primary(weights[t]) for t in terms)
 
-        prepare(tree, "", "SHOULD")
-        leaf_scores: dict[str, dict[int, float]] = {}
-        if leaf_frames:
-            u = leaf_frames[0]
-            for fr in leaf_frames[1:]:
-                u = u.unionByName(fr)
-            for row in u.collect():
-                leaf_scores.setdefault(row["path"], {})[
-                    int(row["doc_id"])
-                ] = float(row["score"])
-
-        # driver-side boolean gating over the k hit docs — same semantics
-        # as _search_tree.ev (MUST all present, >=1 positive, mm, MUST_NOT)
-        ev_cache: dict[str, dict[int, float] | None] = {}
-
-        def ev(node, path: str) -> dict[int, float] | None:
-            if path in ev_cache:
-                return ev_cache[path]
-            if not isinstance(node, BoolQuery):
-                ok = node_info[path][5]
-                res = leaf_scores.get(path, {}) if ok else None
-            else:
-                pos: list[tuple[dict[int, float], bool]] = []
-                nots: list[dict[int, float]] = []
-                n_must = 0
-                res = {}
-                dead = False
-                for i, c in enumerate(node.children):
-                    cpath = f"{path}.{i}" if path else str(i)
-                    fr = ev(c.node, cpath)
-                    if c.occur == "MUST_NOT":
-                        if fr is not None:
-                            nots.append(fr)
-                        continue
-                    if c.occur == "MUST":
-                        if fr is None:
-                            dead = True
-                            break
-                        n_must += 1
-                        pos.append((fr, True))
-                    elif fr is not None:
-                        pos.append((fr, False))
-                if dead or not pos:
-                    res = None
-                else:
-                    mm = getattr(node, "mm", 0)
-                    cand: set[int] = set()
-                    for fr, _ in pos:
-                        cand |= set(fr)
-                    res = {}
-                    for d in cand:
-                        nm = sum(1 for fr, is_m in pos if is_m and d in fr)
-                        np_ = sum(1 for fr, _ in pos if d in fr)
-                        if nm < n_must:
-                            continue
-                        if mm and (np_ - nm) < mm:
-                            continue
-                        if any(d in nf for nf in nots):
-                            continue
-                        res[d] = (
-                            sum(fr[d] for fr, _ in pos if d in fr)
-                            * node.boost
-                        )
-                    if not res:
-                        res = {} if cand else None
-            ev_cache[path] = res
-            return res
-
-        ev(tree, "")
         rows_out: list[tuple] = []
 
-        def emit(node, path: str, gate: set[int], cum_boost: float) -> None:
-            sc = ev_cache.get(path)
+        def emit(node, path: str, occur: str, gate: set[int], cum_boost: float) -> None:
+            sc = node_scores.get(path)
             if not sc:
                 return
-            occur, kind, label, weight, boost, _ok = node_info[path]
+            kind, weight = describe(node)
+            label = render(node)
             term = node.term if isinstance(node, TermNode) else label
             matched = [d for d in gate if d in sc]
             for d in matched:
                 rows_out.append(
                     (
                         rank_by_doc[d], d, path, occur, kind, label,
-                        weight, boost, sc[d] * cum_boost, score_by_doc[d],
-                        term,
+                        weight, float(node.boost), sc[d] * cum_boost,
+                        score_by_doc[d], term,
                     )
                 )
             if isinstance(node, BoolQuery) and matched:
@@ -2046,11 +2151,12 @@ class SearchEngine:
                     emit(
                         c.node,
                         f"{path}.{i}" if path else str(i),
+                        c.occur,
                         mset,
                         cum_boost * node.boost,
                     )
 
-        emit(tree, "", set(doc_ids), 1.0)
+        emit(tree, "", "SHOULD", set(doc_ids), 1.0)
         return rows_out
 
     def _apply_funcs(
@@ -2229,81 +2335,6 @@ class SearchEngine:
         rw(tree)
         return tree
 
-    def _ev_root_dismax(self, tree, ev, tie: float):
-        """Top-level DisjunctionMax combine for ``_search_tree`` (the
-        MaxScoreQParser rewrite): score = sum(MUST) + max(SHOULD) + tie *
-        (sum(SHOULD) - max(SHOULD)); MUST children all required, MUST_NOT
-        anti-joined, SHOULD subtrees evaluated with their own internal sum
-        semantics.  Returns None when nothing can match."""
-        must_frames: list[DataFrame] = []
-        should_frames: list[DataFrame] = []
-        not_frames: list[DataFrame] = []
-        for c in tree.children:
-            fr = ev(c.node)
-            if c.occur == "MUST_NOT":
-                if fr is not None:
-                    not_frames.append(fr)
-            elif c.occur == "MUST":
-                if fr is None:
-                    return None
-                must_frames.append(fr)
-            elif fr is not None:
-                should_frames.append(fr)
-        # the rewrite leaves ONE optional (the dismax) on the new bool;
-        # mm > 1 can never be satisfied, mm == 1 makes the dismax required
-        mm = getattr(tree, "mm", 0)
-        if mm and (mm > 1 or not should_frames):
-            return None
-        parts = [
-            fr.select(
-                "doc_id",
-                F.col("score").cast("double").alias("score"),
-                F.lit(1).alias("is_must"),
-            )
-            for fr in must_frames
-        ] + [
-            fr.select(
-                "doc_id",
-                F.col("score").cast("double").alias("score"),
-                F.lit(0).alias("is_must"),
-            )
-            for fr in should_frames
-        ]
-        if not parts:
-            return None
-        u = parts[0]
-        for fr in parts[1:]:
-            u = u.unionByName(fr)
-        s_should = F.when(F.col("is_must") == 0, F.col("score"))
-        dismax = F.coalesce(
-            F.max(s_should)
-            + F.lit(float(tie)) * (F.sum(s_should) - F.max(s_should)),
-            F.lit(0.0),
-        )
-        agg = u.groupBy("doc_id").agg(
-            (
-                F.coalesce(
-                    F.sum(F.when(F.col("is_must") == 1, F.col("score"))),
-                    F.lit(0.0),
-                )
-                + dismax
-            ).alias("score"),
-            F.sum("is_must").alias("_nm"),
-            F.count(F.lit(1)).alias("_np"),
-        )
-        if must_frames:
-            agg = agg.filter(F.col("_nm") == len(must_frames))
-        if mm:
-            agg = agg.filter((F.col("_np") - F.col("_nm")) >= 1)
-        agg = agg.select("doc_id", "score")
-        for nf in not_frames:
-            agg = agg.join(nf.select("doc_id").distinct(), "doc_id", "left_anti")
-        if getattr(tree, "boost", 1.0) != 1.0:
-            agg = agg.select(
-                "doc_id", (F.col("score") * tree.boost).alias("score")
-            )
-        return agg
-
     def _search_tree(
         self,
         tree: BoolQuery,
@@ -2320,150 +2351,46 @@ class SearchEngine:
     ) -> DataFrame:
         """The query evaluator behind search(), docset() and
         scored_docset() — recursive BooleanQuery evaluation (BooleanQuery
-        nesting semantics, QueryParser.jj:135-172): each node yields a
-        (doc_id, score) frame of MATCHING docs; a boolean node sums its
-        matching positive children's scores, requires every MUST child,
-        requires >=1 positive match, and anti-joins each MUST_NOT child.  A
-        node whose MUST child can never match short-circuits to empty; a
-        pure-negative node matches nothing (Lucene: a BooleanQuery with
-        only prohibited clauses matches no docs).
+        nesting semantics, QueryParser.jj:135-172): a boolean node matches
+        the docs with every MUST child, >=1 positive child (>= ``mm`` SHOULD
+        children when set) and no MUST_NOT child, and sums its matching
+        positive children's scores.  A node whose MUST child can never
+        match matches nothing; so does a pure-negative node (Lucene: a
+        BooleanQuery with only prohibited clauses matches no docs).
+        ``should_combine="max"`` is ``{!maxscore tie=}``: MaxScoreQParser
+        rewrites only the TOP BooleanQuery — its SHOULD clauses (arbitrary
+        subtrees, each keeping sum semantics internally) regroup into one
+        DisjunctionMaxQuery(tie); MUST/MUST_NOT pass through.
 
-        Scale shape: a boolean node scores its distinct MUST/SHOULD term
-        children in ONE bucket- and term-pruned postings scan + vectorized
-        decode (rows tagged MUST/SHOULD by term) and reads its MUST_NOT
-        terms in one doc-gaps-only scan; phrases, expansion clauses,
-        sub-queries and a term repeated within the node get their own
-        frames.  Combination is unions + groupBy(doc_id) (one shuffle per
-        boolean level) + left_anti joins — no driver-side evaluation, no
-        collects and no persisted frames before top-k; doc_filter prunes
-        every scan to its salt ranges.
+        Scale shape: planning (:meth:`_plan`, :func:`_compile`) runs on the
+        driver with no Spark job and settles every never-matches rule
+        before any scan.  Evaluation is ONE bucket- and term-pruned
+        postings scan of every term the query reads, one shuffle by salt
+        and one Python stage (:meth:`_evaluate`: :func:`eval_tree` per
+        salt, numpy over sorted doc-id arrays).  The fq semi-join, the
+        deletes anti-join, ``doc_filter`` (which also prunes the scan to
+        its salts), ``bf``/``boost`` and the top-k stay Spark operations
+        after it; no collects and no persisted frames before the top-k.
         """
-        tree, resolved, found, idf_by_term = self._plan(tree)
+        if should_combine not in ("sum", "max"):
+            raise ValueError(f"unknown should_combine {should_combine!r}")
+        tree, resolved, found, weights = self._plan(tree)
+        root = _compile(
+            tree,
+            resolved,
+            found,
+            self.sim,
+            self.cfg.store_positions,
+            tie=float(tie) if should_combine == "max" else None,
+        )
+        if root is None:
+            return self._page(_NO_HITS, with_url)
         salts = (
             sorted({int(d) // self.cfg.salt_range for d in doc_filter})
             if doc_filter is not None
             else None
         )
-
-        def blocks_of(terms: list[str]) -> DataFrame:
-            b = self._blocks_for(terms)
-            if salts is not None:
-                b = b.filter(F.col("salt").isin(salts))
-            return b
-
-        def ev(node) -> DataFrame | None:
-            """(doc_id, score) of matching docs; None == matches nothing."""
-            if isinstance(node, BoolQuery):
-                return ev_bool(node)
-            return self._leaf_frame(
-                node, resolved, found, idf_by_term, blocks_of, salts
-            )
-
-        def ev_bool(node: BoolQuery) -> DataFrame | None:
-            # a positive term child that occurs once in this node joins the
-            # node's single scan; a repeated one keeps its own frame, so
-            # (a a) scores a twice
-            n_pos = Counter(
-                c.node.term
-                for c in node.children
-                if isinstance(c.node, TermNode) and c.occur != "MUST_NOT"
-            )
-            scan: dict[str, tuple[bool, float]] = {}  # term -> (MUST, boost)
-            not_terms: list[str] = []
-            pos_frames: list[DataFrame] = []
-            not_frames: list[DataFrame] = []
-            n_must = n_should = 0
-            for c in node.children:
-                n, is_must = c.node, c.occur == "MUST"
-                if isinstance(n, TermNode) and c.occur == "MUST_NOT":
-                    if n.term in found:
-                        not_terms.append(n.term)
-                    continue
-                if isinstance(n, TermNode) and n_pos[n.term] == 1:
-                    matchable = n.term in found
-                    if matchable:
-                        scan[n.term] = (is_must, float(n.boost))
-                else:
-                    fr = ev(n)
-                    if c.occur == "MUST_NOT":
-                        if fr is not None:
-                            not_frames.append(fr)
-                        continue
-                    matchable = fr is not None
-                    if matchable:
-                        pos_frames.append(
-                            fr.select(
-                                "doc_id",
-                                F.col("score").cast("double").alias("score"),
-                                F.lit(int(is_must)).alias("is_must"),
-                            )
-                        )
-                if not matchable:
-                    if is_must:
-                        return None  # a required child can never match
-                    continue
-                n_must += is_must
-                n_should += not is_must
-            if scan:
-                must_terms = [t for t, (m, _b) in scan.items() if m]
-                tag = F.col("term").isin(must_terms) if must_terms else F.lit(False)
-                pos_frames.append(
-                    self._scored(
-                        blocks_of(sorted(scan)),
-                        idf_by_term,
-                        {t: b for t, (_m, b) in scan.items()},
-                    ).select(
-                        "doc_id",
-                        F.col("score").cast("double").alias("score"),
-                        tag.cast("int").alias("is_must"),
-                    )
-                )
-            if not pos_frames:
-                return None  # pure-negative / all-absent
-            # minimumNumberShouldMatch: no doc can reach mm when fewer
-            # matchable SHOULD children exist (Lucene matches nothing)
-            if node.mm > n_should:
-                return None
-            if not_terms:
-                not_frames.append(
-                    self._docs_of(blocks_of(not_terms)).select("doc_id")
-                )
-            u = pos_frames[0]
-            for fr in pos_frames[1:]:
-                u = u.unionByName(fr)
-            agg = u.groupBy("doc_id").agg(
-                F.sum("score").alias("score"),
-                F.sum("is_must").alias("_nm"),
-                F.count(F.lit(1)).alias("_np"),
-            )
-            if n_must:
-                agg = agg.filter(F.col("_nm") == n_must)
-            if node.mm:
-                # matched SHOULD children = positive rows minus MUST rows
-                agg = agg.filter((F.col("_np") - F.col("_nm")) >= node.mm)
-            agg = agg.select("doc_id", "score")
-            for nf in not_frames:
-                agg = agg.join(nf.select("doc_id").distinct(), "doc_id", "left_anti")
-            if node.boost != 1.0:
-                agg = agg.select(
-                    "doc_id", (F.col("score") * node.boost).alias("score")
-                )
-            return agg
-
-        if should_combine == "max" and isinstance(tree, BoolQuery):
-            # {!maxscore tie=}: MaxScoreQParser.java rewrites only the TOP
-            # BooleanQuery — its SHOULD clauses (arbitrary subtrees, each
-            # keeping normal sum semantics internally) regroup into one
-            # DisjunctionMaxQuery(tie); MUST/MUST_NOT pass through.
-            res = self._ev_root_dismax(tree, ev, tie)
-        elif should_combine == "max":
-            res = ev(tree)  # single non-bool node: dismax of one == itself
-        elif should_combine != "sum":
-            raise ValueError(f"unknown should_combine {should_combine!r}")
-        else:
-            res = ev(tree)
-        if res is None:
-            return self._page(_NO_HITS, with_url)
+        res = self._evaluate(root, weights, salts)
         if doc_filter is not None:
             res = res.filter(F.col("doc_id").isin([int(d) for d in doc_filter]))
         if self.deletes is not None:

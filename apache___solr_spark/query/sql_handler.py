@@ -20,6 +20,7 @@ phases the reference executes, visible instead of implicit.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def register_collection(
@@ -31,10 +32,17 @@ def register_collection(
 
 def register_index(spark: SparkSession, engine, prefix: str = "") -> None:
     """Register a built index's queryable tables: ``<p>docs`` (the
-    collection), ``<p>dictionary`` (TermsComponent surface: term/df/cf),
-    plus ``<p>postings`` for power users."""
+    collection), ``<p>dictionary`` (TermsComponent surface: term/df/cf,
+    one row per term — a term's per-segment rows summed the way the
+    engine's own dictionary reader sums them), plus ``<p>postings`` for
+    power users."""
     engine.docs.createOrReplaceTempView(prefix + "docs")
-    engine.dictionary.createOrReplaceTempView(prefix + "dictionary")
+    engine.dictionary.groupBy("term").agg(
+        F.sum("df").alias("df"),
+        F.sum("cf").alias("cf"),
+        F.max("max_impact").alias("max_impact"),
+        F.max("bucket").alias("bucket"),  # a term's rows share its bucket
+    ).createOrReplaceTempView(prefix + "dictionary")
     engine.postings.createOrReplaceTempView(prefix + "postings")
 
 

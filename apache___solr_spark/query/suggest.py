@@ -7,18 +7,37 @@ Reference surface:
 - SuggestComponent (handler/component/SuggestComponent.java): prefix
   completion from high-frequency dictionary entries.
 
-Scale shape: both run on the (small, already-aggregated) dictionary table,
-never the corpus.  The edit-distance scan is pre-pruned by the length band
-|len(term) - len(q)| <= max_edits — a pushdownable column predicate — before
-the quadratic levenshtein compare, mirroring DirectSpellChecker's FST
-intersection pruning capability.
+Scale shape: both run on the (small) dictionary table, never the corpus.
+A term holds one dictionary row per segment after add_docs; the suggesters
+sum its frequency over them (:func:`_summed`) before ranking, so each term
+appears once with its whole-index frequency.  The edit-distance scan is
+pre-pruned by the length band |len(term) - len(q)| <= max_edits — a
+pushdownable column predicate — before the quadratic levenshtein compare,
+mirroring DirectSpellChecker's FST intersection pruning capability.
 """
 
 from __future__ import annotations
 
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _summed(
+    dictionary: DataFrame, cond: Column, term_col: str, freq_col: str
+) -> DataFrame:
+    """(term, freq) of the dictionary rows matching ``cond``, one row per
+    term with ``freq_col`` summed over its rows (one per segment), typed as
+    ``freq_col``."""
+    return (
+        dictionary.filter(cond)
+        .groupBy(F.col(term_col).alias("term"))
+        .agg(
+            F.sum(freq_col)
+            .cast(dictionary.schema[freq_col].dataType)
+            .alias("freq")
+        )
+    )
 
 
 def suggest_terms(
@@ -33,14 +52,13 @@ def suggest_terms(
     levenshtein distance of ``query_term`` (the term itself excluded),
     ranked by (distance asc, frequency desc, term asc)."""
     q = str(query_term)
+    band = F.abs(F.length(term_col) - F.lit(len(q))) <= max_edits
     return (
-        dictionary.filter(
-            F.abs(F.length(term_col) - F.lit(len(q))) <= max_edits
-        )
+        _summed(dictionary, band, term_col, freq_col)
         .select(
-            F.col(term_col).alias("term"),
-            F.col(freq_col).alias("freq"),
-            F.levenshtein(F.col(term_col), F.lit(q)).alias("distance"),
+            "term",
+            "freq",
+            F.levenshtein(F.col("term"), F.lit(q)).alias("distance"),
         )
         .filter((F.col("distance") <= max_edits) & (F.col("term") != q))
         .orderBy(
@@ -61,8 +79,7 @@ def suggest_prefix(
     given prefix (SuggestComponent capability).  startswith pushes down to
     the dictionary scan."""
     return (
-        dictionary.filter(F.col(term_col).startswith(prefix))
-        .select(F.col(term_col).alias("term"), F.col(freq_col).alias("freq"))
+        _summed(dictionary, F.col(term_col).startswith(prefix), term_col, freq_col)
         .orderBy(F.col("freq").desc(), F.col("term").asc())
         .limit(limit)
     )
@@ -84,14 +101,14 @@ def suggest_infix(
     ``highlighted`` column marking the matched fragment with <b>..</b>
     (the suggester's highlight=true response shape)."""
     frag = str(fragment)
-    contains = dictionary.filter(F.col(term_col).contains(frag))
+    contains = _summed(dictionary, F.col(term_col).contains(frag), term_col, freq_col)
     return (
         contains.select(
-            F.col(term_col).alias("term"),
-            F.col(freq_col).alias("freq"),
-            F.col(term_col).startswith(frag).alias("_pfx"),
+            "term",
+            "freq",
+            F.col("term").startswith(frag).alias("_pfx"),
             F.regexp_replace(
-                F.col(term_col),
+                F.col("term"),
                 F.lit(frag),
                 F.lit(f"<b>{frag}</b>"),
             ).alias("highlighted"),

@@ -262,6 +262,210 @@ def test_query_decoders_roundtrip(store_positions):
         assert got == want
 
 
+def _kernel_fixture():
+    """A 140-doc corpus encoded as two segments (docs 0-69, 70-139) over 5
+    salts of 32 docs, so the (term, salt) pairs of salt 2 hold one row per
+    segment; with the oracle index of the same postings."""
+    import pyarrow as pa
+
+    from apache___solr_spark.config import IndexConfig
+    from apache___solr_spark.index.builder import _segment_encode
+    from apache___solr_spark.oracle import OracleIndex
+
+    cfg = IndexConfig(block_range=4, salt_range=32, n_buckets=8)
+    corpus = _analyzed_batch(range(140), True, seed=11)
+    postings, positions, doclen = {}, {}, []
+    for r in corpus.to_pylist():
+        tfs = decode_vbyte(r["tfs"]).tolist()
+        pos = decode_vbyte(r["positions"]).tolist()
+        at = 0
+        for t, tf in zip(r["terms"], tfs):
+            postings.setdefault(t, {})[r["doc_id"]] = tf
+            positions.setdefault(t, {})[r["doc_id"]] = pos[at : at + tf]
+            at += tf
+        doclen.append(r["doclen"])
+    oracle = OracleIndex(
+        url_by_doc=[str(d) for d in range(140)],
+        doclen=doclen,
+        norm_byte=[int_to_byte4(n) for n in doclen],
+        postings=postings,
+        n_docs=140,
+        avgdl=sum(doclen) / 140,
+        positions=positions,
+    )
+    segs = [
+        pa.Table.from_batches(
+            _segment_encode(cfg, oracle.avgdl)(iter([corpus.slice(lo, 70)]))
+        )
+        for lo in (0, 70)
+    ]
+    return cfg, oracle, segs
+
+
+def _kernel_pages(cfg, oracle, segs, tree, tie=None):
+    """Every hit of ``tree`` as (doc_id, float32 score), ranked: the tree
+    compiled like SearchEngine._search_tree does, then eval_tree over each
+    salt's rows (the later segment's rows first, fed in 1-3 row batches)
+    and the per-salt roots merged."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from apache___solr_spark.oracle import _expand_oracle
+    from apache___solr_spark.query.engine import TreePlan, _compile, eval_tree
+    from apache___solr_spark.query.parser import BoolQuery, Clause
+    from apache___solr_spark.query.similarities import BM25Similarity
+
+    sim = BM25Similarity()
+    resolved = {}
+
+    def walk(node, negated):
+        if isinstance(node, Clause):
+            terms = _expand_oracle(oracle, node, None if negated else 128)
+            resolved[id(node)] = (terms, negated)
+        elif isinstance(node, BoolQuery):
+            for c in node.children:
+                walk(c.node, negated or c.occur == "MUST_NOT")
+
+    walk(tree, False)
+    root = _compile(tree, resolved, set(oracle.postings), sim, True, tie=tie)
+    if root is None:
+        return []
+    total = sum(oracle.doclen)
+    weights = {
+        t: sim.weight(oracle.n_docs, len(p), sum(p.values()), total)
+        for t, p in oracle.postings.items()
+    }
+    kernel = sim.kernel(oracle.avgdl)
+    plan = TreePlan(root, weights, kernel, kernel, cfg.salt_range)
+    cols = ["term", "salt", "n_docs", "doc_gaps", "tfs", "norms", "positions"]
+    hits = []
+    for salt in range(5):
+        rows = pa.Table.from_batches(
+            [
+                b
+                for seg in reversed(segs)
+                for b in _in_batches(seg.filter(pc.equal(seg["salt"], salt)), cols)
+            ]
+        )
+        ids, scores = eval_tree(rows, plan)[""]
+        assert (np.diff(ids) > 0).all()
+        hits += zip(ids.tolist(), scores.astype(np.float32).tolist())
+    return sorted(hits, key=lambda h: (-h[1], h[0]))
+
+
+def test_eval_tree_matches_tree_oracle():
+    """The per-salt boolean kernel reproduces oracle_search_tree exactly
+    (doc ids, rank order and float32 score bits) on nested MUST/SHOULD/
+    MUST_NOT trees with mm and boosts, exact/sloppy/window phrases, a
+    repeated term, expansions (one under a MUST_NOT ancestor) and trees
+    that can never match."""
+    from apache___solr_spark.oracle import oracle_search_tree
+    from apache___solr_spark.query.parser import (
+        BoolChild,
+        BoolQuery,
+        Clause,
+        PhraseNode,
+        TermNode,
+    )
+
+    cfg, oracle, segs = _kernel_fixture()
+    assert sum(seg.num_rows for seg in segs) > len(
+        {(r["term"], r["salt"]) for seg in segs for r in seg.select(["term", "salt"]).to_pylist()}
+    )  # some (term, salt) pairs hold two rows
+
+    def T(t, boost=1.0):
+        return TermNode(t, boost)
+
+    def B(*children, boost=1.0, mm=0):
+        return BoolQuery([BoolChild(o, n) for o, n in children], boost=boost, mm=mm)
+
+    S, M, N = "SHOULD", "MUST", "MUST_NOT"
+    trees = {
+        "must": B((M, T("alpha")), (M, T("beta"))),
+        "must should not": B((M, T("alpha")), (S, T("beta")), (N, T("gamma"))),
+        "nested boosts": B(
+            (S, B((M, T("alpha")), (M, T("delta", 1.5)))),
+            (S, B((S, T("gamma")), (S, T("beta")), boost=2.0)),
+            (N, B((M, T("rare")), (M, T("beta")))),
+            boost=0.5,
+        ),
+        "mm": B((S, T("alpha")), (S, T("beta")), (S, T("gamma")), (S, T("delta")), mm=2),
+        "mm must": B((M, T("delta")), (S, T("alpha")), (S, T("beta")), (S, T("gamma")), mm=2),
+        "nested mm": B((S, B((S, T("alpha")), (S, T("beta")), (S, T("gamma")), mm=3)), (S, T("rare"))),
+        "exact phrase": B((S, PhraseNode(["alpha", "beta"])), (S, T("delta"))),
+        "sloppy phrase": B((S, PhraseNode(["beta", "alpha", "gamma"], slop=3, boost=2.0))),
+        "sloppy repeat": B((M, PhraseNode(["alpha", "beta", "alpha"], slop=2)), (S, T("gamma"))),
+        "sloppy one term": B((S, PhraseNode(["beta", "beta"], slop=2)), (S, T("rare"))),
+        "window phrase": B((S, PhraseNode(["alpha", "beta"], slop=1, window=True)), (N, T("delta"))),
+        "phrase not": B((S, T("alpha")), (N, PhraseNode(["beta", "gamma"], slop=2))),
+        "repeated term": B((S, T("alpha")), (S, T("alpha")), (S, T("beta"))),
+        "expansion": B((S, Clause(S, "range", lo="a", hi="c", boost=2.0)), (S, T("gamma"))),
+        "negated expansion": B((S, T("beta")), (N, Clause(N, "prefix", value="de*"))),
+        "nested negated expansion": B(
+            (M, T("gamma")),
+            (N, B((M, T("alpha")), (M, Clause(S, "wildcard", value="?e*"))))),
+        "dead must": B((M, T("zzz")), (S, T("alpha"))),
+        "mm too high": B((S, T("alpha")), (S, T("zzz")), mm=2),
+        "pure negative": B((N, T("alpha"))),
+    }
+    for name, tree in trees.items():
+        want = [(r["doc_id"], r["score"]) for r in oracle_search_tree(oracle, tree, k=1000)]
+        got = _kernel_pages(cfg, oracle, segs, tree)
+        assert got == want, name
+        if name not in ("dead must", "mm too high", "pure negative"):
+            assert want, name
+
+
+def test_eval_tree_maxscore_root():
+    """A {!maxscore} root: sum(MUST) + max(SHOULD) + tie * (sum(SHOULD) -
+    max(SHOULD)) over the per-subtree scores, replayed in Python as
+    test_maxscore_should_combine does."""
+    from apache___solr_spark.oracle import oracle_search_tree
+    from apache___solr_spark.query.parser import BoolChild, BoolQuery, TermNode
+
+    cfg, oracle, segs = _kernel_fixture()
+
+    def scores(*children):
+        tree = BoolQuery([BoolChild(o, TermNode(t)) for o, t in children])
+        return {r["doc_id"]: r["score"] for r in oracle_search_tree(oracle, tree, k=1000)}
+
+    must = scores(("MUST", "alpha"), ("MUST", "delta"))
+    g1 = scores(("MUST", "beta"), ("MUST", "gamma"))
+    g2 = scores(("SHOULD", "rare"))
+    beta = scores(("SHOULD", "beta"))
+    for tie in (0.0, 0.5):
+        tree = BoolQuery(
+            [
+                BoolChild("MUST", BoolQuery([BoolChild("MUST", TermNode("alpha")),
+                                             BoolChild("MUST", TermNode("delta"))])),
+                BoolChild("SHOULD", BoolQuery([BoolChild("MUST", TermNode("beta")),
+                                               BoolChild("MUST", TermNode("gamma"))])),
+                BoolChild("SHOULD", TermNode("rare")),
+                BoolChild("MUST_NOT", TermNode("zzz")),
+            ]
+        )
+        want = {}
+        for d, s in must.items():
+            opt = [x[d] for x in (g1, g2) if d in x]
+            want[d] = s + (max(opt) + tie * (sum(opt) - max(opt)) if opt else 0.0)
+        got = dict(_kernel_pages(cfg, oracle, segs, tree, tie=tie))
+        assert got.keys() == want.keys()
+        for d, s in want.items():
+            assert abs(got[d] - s) < 1e-5 * max(1.0, abs(s)), (tie, d)
+        # mm=1 makes the dismax required; mm > 1 can never be met
+        tree.mm = 1
+        got = dict(_kernel_pages(cfg, oracle, segs, tree, tie=tie))
+        assert got.keys() == {d for d in must if d in g1 or d in g2}
+        tree.mm = 2
+        assert _kernel_pages(cfg, oracle, segs, tree, tie=tie) == []
+    pure = dict(_kernel_pages(cfg, oracle, segs, BoolQuery(
+        [BoolChild("SHOULD", TermNode("beta")), BoolChild("SHOULD", TermNode("rare"))]
+    ), tie=0.0))
+    assert pure.keys() == set(beta) | set(g2)
+    for d, s in pure.items():
+        assert abs(s - max(beta.get(d, 0.0), g2.get(d, 0.0))) < 1e-5 * max(1.0, s)
+
+
 def test_range_parts_keeps_lo_clamp_below_one_wave():
     """The numbering partition count: a count below one wave keeps the
     [shuffle_parts, 4*parallelism] clamp as is; a count of one wave or

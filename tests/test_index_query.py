@@ -3516,6 +3516,15 @@ def test_warm_query_job_counts(spark, built):
     assert n_collect == 0, n_collect
     rows, n_miss = jobs("miss", lambda: eng.search("zzznotaterm").collect())
     assert rows == [] and n_miss == 0, n_miss
+    # a nested tree with a phrase, a prefix and a MUST_NOT group, and a
+    # {!maxscore} root: still one scan and one top-k
+    for q, kw in (
+        ('(+"web page" dat*) -(search links)', {}),
+        ("+web data search", {"should_combine": "max", "tie": 0.1}),
+    ):
+        eng.search(q, k=10, **kw).collect()
+        rows, n = jobs(f"warm {q}", lambda: eng.search(q, k=10, **kw).collect())
+        assert rows and n <= 2, (q, n)
 
 
 def test_cold_planning_job_counts(spark, built):
@@ -3585,3 +3594,29 @@ def test_dictionary_stats_sum_segments(spark, tmp_path_factory):
     assert spellcheck_collate(eng, "zetb", max_collations=1) == [
         {"collation": "zeta", "hits": 6}
     ]
+
+
+def test_sql_dictionary_view_sums_segments(spark, tmp_path_factory):
+    """The SQL ``dictionary`` view holds one row per term after add_docs,
+    with df summed over the segments (as the engine's reader sums it)."""
+    from apache___solr_spark.index.updates import add_docs
+    from apache___solr_spark.query.sql_handler import register_index, sql
+
+    schema = (
+        "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+
+    def pages(rows):
+        return spark.createDataFrame(
+            [(u, None, None, t, "en") for u, t in rows], schema
+        )
+
+    base = [("z0", "zeta alpha"), ("z1", "zeta beta"), ("z2", "zeta gamma")]
+    base += [(f"f{i}", f"filler{i} word") for i in range(4)]
+    added = [("y0", "zeta delta"), ("y1", "zeta alpha"), ("y2", "zeta omega")]
+    idx = str(tmp_path_factory.mktemp("sqldict") / "index")
+    build_index(spark, pages(base), idx)
+    add_docs(spark, idx, pages(added))
+    register_index(spark, SearchEngine(spark, idx))
+    rows = sql(spark, "SELECT df, cf FROM dictionary WHERE term = 'zeta'").collect()
+    assert [(r["df"], r["cf"]) for r in rows] == [(6, 6)]

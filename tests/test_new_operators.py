@@ -92,6 +92,24 @@ def test_suggest(spark):
     assert pre == ["table", "tables"]
 
 
+def test_suggesters_sum_segment_rows(spark):
+    """After add_docs a term holds one dictionary row per segment: every
+    suggester lists it once, ranked by its summed frequency."""
+    from apache___solr_spark.query.suggest import suggest_infix
+
+    dictionary = spark.createDataFrame(
+        [("zeta", 3), ("zetc", 4), ("zeta", 3)], "term string, df long"
+    )
+    got = [tuple(r) for r in suggest_terms(dictionary, "zetb").collect()]
+    assert got == [("zeta", 6, 1), ("zetc", 4, 1)]
+    pre = [tuple(r) for r in suggest_prefix(dictionary, "zet").collect()]
+    assert pre == [("zeta", 6), ("zetc", 4)]
+    infix = [
+        (r["term"], r["freq"]) for r in suggest_infix(dictionary, "et").collect()
+    ]
+    assert infix == [("zeta", 6), ("zetc", 4)]
+
+
 def test_relatedness_matches_reference_formula(spark):
     # reference computeRelatedness(10, 100, 50, 1000) recomputed in python
     import math
