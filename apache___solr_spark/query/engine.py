@@ -9,18 +9,26 @@ boolean tree (QueryParser.jj:135-172), evaluated by one evaluator
 (SearchEngine._search_tree):
 
   planning on the driver (no Spark job): synonyms, dictionary expansions,
-  term weights, and every never-matches rule (_compile)
-    -> ONE bucket-pruned postings scan of every term the tree reads (term
-       pushdown; positions only when it holds a phrase)
-    -> groupBy(salt).applyInArrow(eval_tree): per salt, one batch decode
-       (index/builder._decode_rows), then term, phrase and expansion
-       leaves scored in numpy and combined over sorted doc-id arrays
-       (MUST count, minimum-should-match, MUST_NOT, boosts, the
-       {!maxscore} dismax root)
-then: doc_filter, liveDocs tombstone anti-join, fq semi-join, bf/boost
-    -> orderBy(score desc, doc_id asc).limit(k)    [TakeOrderedAndProject]
-    -> top-k collected as Arrow; the page's urls are read on the driver
-       (pyarrow over the docs files) and returned as a local relation.
+  term weights, every never-matches rule (_compile), and the placement:
+  the query's postings estimate (summed df, plus cf when positions are
+  read) against a budget derived from host memory (_driver_budget)
+  eval_tree per salt: one batch decode (index/builder._decode_rows), then
+  term, phrase and expansion leaves scored in numpy and combined over
+  sorted doc-id arrays (MUST count, minimum-should-match, MUST_NOT,
+  boosts, the {!maxscore} dismax root), in one of two placements:
+    driver (postings within the budget): a pyarrow read of the terms'
+       bucket files captured at engine open (term, and doc_filter's salts,
+       pushed down; positions only when the tree holds a phrase), split
+       by salt -> doc_filter and tombstone masks, top-k by (score desc,
+       doc_id asc) in numpy: 0 Spark jobs
+    Spark (above it): ONE bucket-pruned postings scan
+       -> groupBy(salt).applyInArrow(eval_tree) -> doc_filter, liveDocs
+       tombstone anti-join -> orderBy(score desc, doc_id asc).limit(k)
+       [TakeOrderedAndProject], collected as Arrow
+  fq semi-join and bf/boost stay Spark operations on either placement
+  (the driver's kernel output enters them as an Arrow LocalRelation);
+  then the page's urls are read on the driver (pyarrow over the docs
+  files) and the page is returned as a local relation.
 The explain walker reads every node's per-doc score from the same kernel.
 ``salt = doc_id // salt_range`` is aligned across terms, so a tree
 decomposes exactly by salt (Solr's per-shard collectors, salts as shards).
@@ -63,6 +71,7 @@ import pyarrow.dataset as pads
 import pyarrow.fs as pafs
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from apache___solr_spark.analysis.chain import analyzer_fn
 from apache___solr_spark.config import DEFAULT_CONFIG, IndexConfig
@@ -84,6 +93,7 @@ from apache___solr_spark.query.parser import (
     parse_query_tree,
 )
 from apache___solr_spark.query.similarities import BM25Similarity
+from apache___solr_spark.session import host_memory_mb
 
 
 # the (doc_id, score) rows of an empty result, for SearchEngine._page
@@ -104,6 +114,40 @@ def bm25_idf(n_docs: int, df: int, dtype=np.float32):
 # that the bucket-pruned scan semi-joins (a prohibited ``-t*`` expands
 # uncapped, so its list can be long)
 _EXCLUDE_LITERAL_CAP = 1024
+
+# bytes of driver working set per posting a query reads (see _driver_budget)
+_POSTING_BYTES = 128
+
+
+def _driver_budget() -> int:
+    """The most postings a query may read to run in the driver placement:
+    ``MemTotal / 16 / _POSTING_BYTES`` (8.2M postings at 15.7 GiB).
+
+    That placement holds a query's postings in the driver's Python
+    process: the Arrow read of the encoded rows, one salt's decoded arrays
+    at a time and the per-salt results.  Its peak (tracemalloc plus the
+    Arrow pool, over :meth:`SearchEngine._evaluate`) measured 41-44 bytes
+    per posting on a 100k-doc index (13 salts; 17-18 bytes per estimated
+    posting for phrases, whose positions count in the estimate) and
+    100-110 bytes per posting on a 2k-doc index, where one salt holds
+    every posting and fixed costs weigh most; ``_POSTING_BYTES`` rounds
+    the worst up.  A sixteenth of the RAM leaves the rest to the driver
+    JVM (half of it, ``session._driver_memory``), the Python workers and
+    the OS.  A larger query runs in the Spark placement."""
+    mb = host_memory_mb() or 8 * 1024
+    return (mb << 20) // 16 // _POSTING_BYTES
+
+
+def _top_order(ids: np.ndarray, scores: np.ndarray, depth: int) -> np.ndarray:
+    """Indices of the top ``depth`` rows ordered by (score desc, doc_id
+    asc): the driver's TakeOrderedAndProject.  Every row tied with the
+    depth-th score enters the final sort, so the doc_id tiebreak decides
+    between them as the ordered Spark limit does."""
+    n = scores.size
+    sel = np.arange(n)
+    if 0 < depth < n:
+        sel = np.flatnonzero(scores >= np.partition(scores, n - depth)[n - depth])
+    return sel[np.lexsort((ids[sel], -scores[sel]))][:depth]
 
 
 def _snapshot(df: DataFrame) -> pads.Dataset:
@@ -971,10 +1015,18 @@ class SearchEngine:
         self.postings = spark.read.parquet(self.paths.postings)
         self.dictionary = spark.read.parquet(self.paths.dictionary)
         self.docs = spark.read.parquet(self.paths.docs)
-        # the same files, for driver-side reads: stored fields (_stored) and
-        # every term-dictionary lookup (_dict_rows)
+        # the same files, for driver-side reads: stored fields (_stored),
+        # every term-dictionary lookup (_dict_rows) and the driver
+        # placement's postings reads (_read_postings), whose files are
+        # keyed by their bucket= partition
         self._stored_docs = _snapshot(self.docs)
         self._dict = _snapshot(self.dictionary)
+        self._postings = _snapshot(self.postings)
+        self._bucket_files: dict[int, list] = {}
+        for frag in self._postings.get_fragments():
+            b = int(re.search(r"bucket=(\d+)", frag.path).group(1))
+            self._bucket_files.setdefault(b, []).append(frag)
+        self._driver_budget = _driver_budget()
         self._dtype = np.float64 if cfg.score_dtype == "float64" else np.float32
         self._sql_t = "double" if cfg.score_dtype == "float64" else "float"
         self._analyze = analyzer_fn(cfg.analyzer)
@@ -990,8 +1042,18 @@ class SearchEngine:
         )
         from apache___solr_spark.index.updates import load_deletes
 
-        # tombstoned doc_ids (liveDocs mask) — None when never deleted
+        # tombstoned doc_ids (liveDocs mask) — None when never deleted; the
+        # driver placement masks with the same ids as a sorted array
         self.deletes = load_deletes(spark, index_dir)
+        self._deleted = (
+            _EMPTY
+            if self.deletes is None
+            else np.unique(
+                _snapshot(self.deletes)
+                .to_table(columns=["doc_id"])["doc_id"]
+                .to_numpy()
+            )
+        )
 
     # -- term dictionary ---------------------------------------------------
     _META_COLS = ["term", "df", "cf", "max_impact", "bucket"]
@@ -1027,32 +1089,32 @@ class SearchEngine:
             pa.array(dist <= max_edits)
         )
 
+    def _term_rows(self, terms: list[str]) -> pa.Table:
+        """Aggregated dictionary rows of ``terms``, one per requested term
+        in request order (a repeated term repeats its row); a vocabulary
+        miss has no row."""
+        want = pa.array(terms, pa.string())
+        got = self._dict_rows(pc.field("term").isin(want))
+        return got.take(pc.drop_null(pc.index_in(want, value_set=got["term"])))
+
     def _term_meta(self, terms: list[str]) -> pd.DataFrame:
-        """Aggregated dictionary rows of ``terms`` in request order; a
-        vocabulary miss has no row."""
-        uniq = pa.array(list(dict.fromkeys(terms)), pa.string())
-        got = self._dict_rows(pc.field("term").isin(uniq))
+        """:meth:`_term_rows` of the distinct ``terms``, as pandas."""
+        got = self._term_rows(list(dict.fromkeys(terms)))
         if got.num_rows == 0:
             return pd.DataFrame(columns=self._META_COLS)
-        return got.take(
-            pc.sort_indices(pc.index_in(got["term"], value_set=uniq))
-        ).to_pandas()
+        return got.to_pandas()
 
-    def _buckets(self, terms: list[str]) -> list[int]:
-        # driver-side XXH64 (index/xxhash.py) == Spark's xxhash64, so the
-        # term->bucket map costs no Spark job (the term-dictionary-seek
-        # analog; equality is asserted in tests/test_codec.py).
-        from apache___solr_spark.index.xxhash import term_bucket
-
-        return sorted({term_bucket(t, self.cfg.n_buckets) for t in terms})
-
-    def _blocks_for(self, terms: list[str]) -> DataFrame:
-        """The postings rows of ``terms``: the one place a term list
-        becomes a postings scan.  The bucket predicate prunes the
-        partitioned scan.  Up to ``_EXCLUDE_LITERAL_CAP`` terms the term
-        predicate is a literal pushed down to parquet row groups; a longer
-        list ships as an Arrow LocalRelation that the scan semi-joins."""
-        blocks = self.postings.filter(F.col("bucket").isin(self._buckets(terms)))
+    def _blocks_for(self, rows) -> DataFrame:
+        """The postings rows of the terms of ``rows``, dictionary rows (a
+        pandas frame or an Arrow table with ``term`` and ``bucket``): the
+        one place a term list becomes a postings scan.  The dictionary's
+        bucket prunes the partitioned scan.  Up to
+        ``_EXCLUDE_LITERAL_CAP`` terms the term predicate is a literal
+        pushed down to parquet row groups; a longer list ships as an Arrow
+        LocalRelation that the scan semi-joins."""
+        terms = pa.array(rows["term"]).to_pylist()
+        buckets = pc.unique(pa.array(rows["bucket"])).to_pylist()
+        blocks = self.postings.filter(F.col("bucket").isin(buckets))
         if len(terms) <= _EXCLUDE_LITERAL_CAP:
             return blocks.filter(F.col("term").isin(terms))
         listed = self.spark.createDataFrame(
@@ -1061,15 +1123,17 @@ class SearchEngine:
         return blocks.join(listed, "term", "left_semi")
 
     # -- scoring -----------------------------------------------------------
-    def _weights(self, meta: pd.DataFrame) -> dict[str, float]:
+    def _weights(self, rows: pa.Table) -> dict[str, float]:
         """Per-term similarity weights from the aggregated dictionary rows
         (TermStates/CollectionStatistics analog: df + cf + corpus totals)."""
         n_docs, total_len = self.stats["N"], self.stats["total_len"]
         return {
-            r["term"]: self.sim.weight(
-                n_docs, int(r["df"]), int(r["cf"]), total_len, dtype=self._dtype
+            t: self.sim.weight(n_docs, df, cf, total_len, dtype=self._dtype)
+            for t, df, cf in zip(
+                rows["term"].to_pylist(),
+                rows["df"].to_pylist(),
+                rows["cf"].to_pylist(),
             )
-            for _, r in meta.iterrows()
         }
 
     def _idfs(self, meta: pd.DataFrame) -> dict[str, float]:
@@ -1100,6 +1164,10 @@ class SearchEngine:
         ).mapInArrow(fn, schema=f"term string, doc_id long, score {self._sql_t}")
 
     def _expand_clause(self, cl, max_expansions: int | None = 128) -> list[str]:
+        """The terms of :meth:`_expand_rows`."""
+        return self._expand_rows(cl, max_expansions)["term"].to_pylist()
+
+    def _expand_rows(self, cl, max_expansions: int | None = 128) -> pa.Table:
         """Resolve a prefix/wildcard/fuzzy/range clause against the term
         dictionary (the FST-seek analog: one driver read of the small
         dictionary, never the corpus), capped at ``max_expansions`` terms
@@ -1110,15 +1178,16 @@ class SearchEngine:
         ``max_expansions=None`` disables the cap — REQUIRED for MUST_NOT
         clauses: Lucene's prohibited multi-term clauses use constant-score
         rewrite with no term cap, so exclusion must cover every matching
-        term or prohibited docs would leak back into results."""
+        term or prohibited docs would leak back into results.
+
+        Returns the matched terms' aggregated dictionary rows, in
+        expansion order (a group or synonym clause: candidate order)."""
         if cl.kind in ("synonym", "group"):
-            cands = (
+            return self._term_rows(
                 list(cl.terms or [])
                 if cl.kind == "group"
                 else [cl.value] + list(self.synonyms.get(cl.value, []))
             )
-            meta = self._term_meta(cands)
-            return [t for t in cands if t in set(meta["term"])]
         # MultiTermAware normalization (Analyzer#normalize): fold the
         # CONSTANT parts of the pattern with the analyzer's multiterm
         # filters, so e.g. icu_folding's RÉSu* reaches the dictionary as
@@ -1126,8 +1195,7 @@ class SearchEngine:
         norm = self._mt_normalize
         term = pc.field("term")
         if cl.kind == "fuzzy" and cl.fuzz <= 0:
-            fval = norm(cl.value)
-            return [fval] if not self._term_meta([fval]).empty else []
+            return self._term_rows([norm(cl.value)])
         if cl.kind == "prefix":
             rows = self._dict_rows(pc.starts_with(term, norm(cl.value[:-1])))
         elif cl.kind == "wildcard":
@@ -1152,7 +1220,7 @@ class SearchEngine:
         order = pc.sort_indices(
             rows, sort_keys=[("df", "descending"), ("term", "ascending")]
         )
-        return rows["term"].take(order[:max_expansions]).to_pylist()
+        return rows.take(order[:max_expansions])
 
     def _docs_of(self, blocks: DataFrame) -> DataFrame:
         """(term, doc_id) of every posting in ``blocks`` — the lightest
@@ -1192,13 +1260,14 @@ class SearchEngine:
     def _phrase_frame(
         self,
         ptoks: list[str],
-        idf_by_term: dict[str, float],
+        meta: pd.DataFrame,
         slop: int = 0,
         ordered: bool = True,
         slots: list[tuple[str, ...]] | None = None,
         tree=None,
     ) -> DataFrame:
-        """(doc_id, score) of docs matching the span (``slop=0``: exact
+        """(doc_id, score) of docs matching the span over ``ptoks``, whose
+        terms' aggregated dictionary rows are ``meta`` (``slop=0``: exact
         adjacency; ``slop>0``: ordered window; ``ordered=False``:
         unordered minimal-window — see _phrase_freqs).  ``slots``
         switches to per-position term SETS (complexphrase): the salt/doc
@@ -1219,7 +1288,7 @@ class SearchEngine:
                 "unavailable (rebuild with store_positions=True)"
             )
         uniq = sorted(set(ptoks))
-        blocks = self._blocks_for(uniq)
+        blocks = self._blocks_for(meta)
         if slots is None:
             covered = F.count_distinct("term")
             n_gate = len(uniq)
@@ -1246,6 +1315,7 @@ class SearchEngine:
             )
             n_gate = len(slots)
         grouped = self._doc_plists(blocks, covered == n_gate)
+        idf_by_term = self._idfs(meta)
         sum_idf = float(sum(idf_by_term[t] for t in ptoks))
         if tree is not None:
             fn = _span_tree_score_fn(tree, slots, sum_idf, self._bm25, self._dtype)
@@ -1291,10 +1361,7 @@ class SearchEngine:
         found = set(meta["term"])
         if any(t not in found for t in toks):
             return self._page(_NO_HITS, with_url)
-        idf_by_term = self._idfs(meta)
-        frame = self._phrase_frame(
-            toks, idf_by_term, slop=dist - 1, ordered=ordered
-        )
+        frame = self._phrase_frame(toks, meta, slop=dist - 1, ordered=ordered)
         if self.deletes is not None:
             frame = frame.join(self.deletes, "doc_id", "left_anti")
         return self._finalize(frame, k, with_url)
@@ -1354,7 +1421,7 @@ class SearchEngine:
             len(tfs), b, dtype=dtype
         )
         frame = self._scored(
-            self._blocks_for(sorted(set(qtoks))),
+            self._blocks_for(meta),
             {t: 1.0 for t in set(qtoks)},
             kernel=ones,
         )
@@ -1423,7 +1490,7 @@ class SearchEngine:
         elif not found:
             return None
         grouped = self._doc_plists(
-            self._blocks_for(sorted(found)),
+            self._blocks_for(meta),
             F.count_distinct("term") == len(uniq) if require_all else None,
         )
         pay = self.spark.read.parquet(pay_dir)
@@ -1621,10 +1688,7 @@ class SearchEngine:
         if any(not s for s in slots):
             return self._page(_NO_HITS, with_url)
         ptoks = [t for s in slots for t in s]
-        idf_by_term = self._idfs(meta)
-        frame = self._phrase_frame(
-            ptoks, idf_by_term, slots=slots, tree=tree
-        )
+        frame = self._phrase_frame(ptoks, meta, slots=slots, tree=tree)
         if self.deletes is not None:
             frame = frame.join(self.deletes, "doc_id", "left_anti")
         return self._finalize(frame, k, with_url)
@@ -1677,10 +1741,9 @@ class SearchEngine:
         if any(not s for s in slots):
             return self._page(_NO_HITS, with_url)
         ptoks = [t for s in slots for t in s]
-        idf_by_term = self._idfs(meta)
         frame = self._phrase_frame(
             ptoks,
-            idf_by_term,
+            meta,
             slop=slop,
             ordered=ordered,
             slots=[tuple(s) for s in slots],
@@ -1994,11 +2057,15 @@ class SearchEngine:
         its doc ids count, so its terms need no weights.  No Spark job.
 
         Returns (tree, {id(clause): (terms, negated)}, found terms,
-        weight by term)."""
+        weight by term, dictionary rows): the rows are the aggregated
+        dictionary rows read on the way, of every term the tree can read
+        (a term may hold more than one row); :meth:`_evaluate` takes the
+        buckets and the placement estimate from them."""
         if self.synonyms:
             tree = self._apply_synonyms_tree(tree)
         resolved: dict[int, tuple[list[str], bool]] = {}
         leaf_terms: set[str] = set()
+        excluded: list[pa.Table] = []
 
         def walk(node, negated: bool) -> None:
             if isinstance(node, TermNode):
@@ -2006,71 +2073,135 @@ class SearchEngine:
             elif isinstance(node, PhraseNode):
                 leaf_terms.update(node.toks)
             elif isinstance(node, Clause):
-                terms = self._expand_clause(
+                rows = self._expand_rows(
                     node, max_expansions=None if negated else 128
                 )
+                terms = rows["term"].to_pylist()
                 resolved[id(node)] = (terms, negated)
-                if not negated:
+                if negated:
+                    excluded.append(rows)
+                else:
                     leaf_terms.update(terms)
             elif isinstance(node, BoolQuery):
                 for c in node.children:
                     walk(c.node, negated or c.occur == "MUST_NOT")
 
         walk(tree, False)
-        meta = self._term_meta(sorted(leaf_terms))
-        return tree, resolved, set(meta["term"]), self._weights(meta)
+        rows = self._term_rows(sorted(leaf_terms))
+        found = set(rows["term"].to_pylist())
+        return (
+            tree,
+            resolved,
+            found,
+            self._weights(rows),
+            pa.concat_tables([rows, *excluded]),
+        )
 
     def _evaluate(
         self,
         root: _PlanNode,
         weights: dict,
+        dict_rows: pa.Table,
         salts: list[int] | None = None,
         keep: list[int] | None = None,
-    ) -> DataFrame:
-        """The Spark placement of :func:`eval_tree`: ONE bucket- and
-        term-pruned scan of every term ``root`` reads (positions selected
-        only when it holds a phrase), grouped by salt, one ``eval_tree``
-        call per salt.  Returns the root's (doc_id, score double) rows; with
+    ) -> pa.Table | DataFrame:
+        """Run :func:`eval_tree` once per salt over the postings of every
+        term ``root`` reads (positions selected only when it holds a
+        phrase), in one of two placements of the same kernel:
+
+        - *driver*: a pyarrow read of the bucket- and term-pruned postings
+          files captured at engine open (:meth:`_read_postings`), split by
+          salt on the driver; returns an Arrow table and runs no Spark job;
+        - *Spark*: ONE bucket- and term-pruned scan, grouped by salt, one
+          ``applyInArrow`` Python stage; returns a DataFrame.
+
+        The driver placement runs when the query's postings estimate fits
+        ``self._driver_budget`` (:func:`_driver_budget`).  The estimate is
+        the summed df of the terms ``root`` reads, plus their summed cf
+        when positions are read, from ``dict_rows``, the dictionary rows
+        :meth:`_plan` read (which also give the terms' buckets).  Both
+        placements return the root's (doc_id, score double) rows; with
         ``keep`` (explain), every node's (path, doc_id, score) rows of the
-        docs in ``keep`` instead.  ``salts`` prunes the scan."""
+        docs in ``keep`` instead.  ``salts`` prunes the read."""
         nodes = list(root.walk())
         cols = ["term", "salt", "n_docs", "doc_gaps", "tfs", "norms"]
-        if any(n.kind == "phrase" for n in nodes):
+        phrase = any(n.kind == "phrase" for n in nodes)
+        if phrase:
             cols.append("positions")
-        blocks = self._blocks_for(sorted({t for n in nodes for t in n.terms}))
-        if salts is not None:
-            blocks = blocks.filter(F.col("salt").isin(salts))
+        terms = pa.array(sorted({t for n in nodes for t in n.terms}), pa.string())
+        read = dict_rows.take(pc.index_in(terms, value_set=dict_rows["term"]))
         plan = TreePlan(
             root, weights, self._kernel, self._bm25, self.cfg.salt_range, self._dtype
         )
-        grouped = blocks.select(*cols).groupBy("salt")
         if keep is None:
+            schema = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
 
             def run(rows: pa.Table) -> pa.Table:
                 ids, scores = eval_tree(rows, plan)[root.path]
-                return pa.table({"doc_id": ids, "score": scores})
+                return pa.table([ids, scores], schema=schema)
 
-            return grouped.applyInArrow(run, "doc_id long, score double")
-        wanted = np.asarray(sorted(keep), dtype=np.int64)
-
-        def run_explain(rows: pa.Table) -> pa.Table:
-            paths, ids, scores = [], [], []
-            for path, (d, sc) in eval_tree(rows, plan).items():
-                m = np.isin(d, wanted)
-                paths += [path] * int(m.sum())
-                ids.append(d[m])
-                scores.append(sc[m])
-            return pa.table(
-                {
-                    "path": pa.array(paths, pa.string()),
-                    "doc_id": np.concatenate(ids),
-                    "score": np.concatenate(scores),
-                }
+        else:
+            schema = pa.schema(
+                [("path", pa.string()), ("doc_id", pa.int64()), ("score", pa.float64())]
             )
+            wanted = np.asarray(sorted(keep), dtype=np.int64)
 
-        return grouped.applyInArrow(
-            run_explain, "path string, doc_id long, score double"
+            def run(rows: pa.Table) -> pa.Table:
+                paths, ids, scores = [], [], []
+                for path, (d, sc) in eval_tree(rows, plan).items():
+                    m = np.isin(d, wanted)
+                    paths += [path] * int(m.sum())
+                    ids.append(d[m])
+                    scores.append(sc[m])
+                return pa.table(
+                    [paths, np.concatenate(ids), np.concatenate(scores)],
+                    schema=schema,
+                )
+
+        estimate = pc.sum(read["df"]).as_py()
+        if phrase:
+            estimate += pc.sum(read["cf"]).as_py()
+        if estimate > self._driver_budget:
+            blocks = self._blocks_for(read)
+            if salts is not None:
+                blocks = blocks.filter(F.col("salt").isin(salts))
+            return (
+                blocks.select(*cols)
+                .groupBy("salt")
+                .applyInArrow(run, from_arrow_schema(schema))
+            )
+        postings = self._read_postings(read, cols, salts)
+        if postings.num_rows == 0:
+            return schema.empty_table()
+        salt = postings["salt"].to_numpy()
+        order = np.argsort(salt, kind="stable")
+        postings = postings.take(order)
+        cuts = (np.flatnonzero(np.diff(salt[order])) + 1).tolist()
+        return pa.concat_tables(
+            run(postings.slice(lo, hi - lo))
+            for lo, hi in zip([0, *cuts], [*cuts, len(salt)])
         )
+
+    def _read_postings(
+        self, rows: pa.Table, cols: list[str], salts: list[int] | None
+    ) -> pa.Table:
+        """The driver placement's postings scan: columns ``cols`` of the
+        postings rows of the terms of ``rows`` (dictionary rows), read
+        with pyarrow from the files of their buckets as captured at engine
+        open.  The term predicate, and the ``salts`` predicate when given,
+        are pushed down to the parquet row groups.  No Spark job."""
+        frags = [
+            f
+            for b in pc.unique(rows["bucket"]).to_pylist()
+            for f in self._bucket_files.get(b, [])
+        ]
+        expr = pc.field("term").isin(rows["term"].combine_chunks())
+        if salts is not None:
+            expr = expr & pc.field("salt").isin(salts)
+        ds = self._postings
+        return pads.FileSystemDataset(
+            frags, ds.schema, ds.format, ds.filesystem
+        ).to_table(columns=cols, filter=expr)
 
     def _explain_rows(self, tree, k: int) -> list[tuple]:
         """The explain walker: explain_scores_tree's rows for the top-k
@@ -2086,11 +2217,14 @@ class SearchEngine:
         doc_ids = [int(r["doc_id"]) for r in hits]
         rank_by_doc = {int(r["doc_id"]): int(r["rank"]) for r in hits}
         score_by_doc = {int(r["doc_id"]): float(r["score"]) for r in hits}
-        tree, resolved, found, weights = self._plan(tree)
+        tree, resolved, found, weights, dict_rows = self._plan(tree)
         root = _compile(tree, resolved, found, self.sim, self.cfg.store_positions)
         salts = sorted({d // self.cfg.salt_range for d in doc_ids})
+        res = self._evaluate(root, weights, dict_rows, salts, keep=doc_ids)
+        if isinstance(res, DataFrame):
+            res = res.toArrow()
         node_scores: dict[str, dict[int, float]] = {}
-        for r in self._evaluate(root, weights, salts, keep=doc_ids).toArrow().to_pylist():
+        for r in res.to_pylist():
             node_scores.setdefault(r["path"], {})[r["doc_id"]] = r["score"]
 
         def _primary(w) -> float:
@@ -2200,14 +2334,14 @@ class SearchEngine:
         (ConstantScoreQuery).  The scan prunes to the values' buckets with
         the term predicate pushed down; intended for large IN lists where
         the classic grammar would be unwieldy."""
-        vals = sorted({str(v) for v in values if v})
-        if not vals:
+        rows = self._term_rows(sorted({str(v) for v in values if v}))
+        if rows.num_rows == 0:
             return self._page(_NO_HITS, with_url)
         from apache___solr_spark.query.similarities import BooleanSimilarity
 
         scored = self._scored(
-            self._blocks_for(vals),
-            {v: 1.0 for v in vals},
+            self._blocks_for(rows),
+            {v: 1.0 for v in rows["term"].to_pylist()},
             kernel=BooleanSimilarity().kernel(
                 self.stats["avgdl"], dtype=self._dtype
             ),
@@ -2220,11 +2354,14 @@ class SearchEngine:
         return self._finalize(frame, k, with_url)
 
     def _finalize(
-        self, scored: DataFrame, k: int, with_url: bool, start: int = 0
+        self, scored: DataFrame | pa.Table, k: int, with_url: bool, start: int = 0
     ) -> DataFrame:
         """Top-k + two-phase fields fetch (QueryComponent.java:1000).
-        Phase 1 ranks the narrow (doc_id, score) via TakeOrderedAndProject,
-        the query's one Spark action, taken as Arrow.  Phase 2 reads the
+        Phase 1 ranks the narrow (doc_id, score) by (score desc, doc_id
+        asc): a DataFrame through TakeOrderedAndProject, the query's one
+        Spark action, taken as Arrow; an Arrow table (the driver
+        placement's rows) in numpy (:func:`_top_order`), with no Spark
+        job.  Phase 2 reads the
         display fields of JUST the page's docs on the driver (:meth:`_stored`,
         the per-hit stored-fields read of the reference), from the docs
         files this engine opened on.  The page is a local Arrow relation,
@@ -2238,12 +2375,19 @@ class SearchEngine:
         SolrIndexSearcher caps it at maxDoc: a k=10**9 "every match"
         request must not size a 10**9-slot top-k heap."""
         depth = min(int(start) + int(k), int(self.stats["N"]))
-        top = (
-            scored.select("doc_id", "score")
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(depth)
-            .toArrow()
-        )
+        if isinstance(scored, pa.Table):
+            top = scored.take(
+                _top_order(
+                    scored["doc_id"].to_numpy(), scored["score"].to_numpy(), depth
+                )
+            )
+        else:
+            top = (
+                scored.select("doc_id", "score")
+                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+                .limit(depth)
+                .toArrow()
+            )
         return self._page(top.slice(int(start)), with_url, int(start))
 
     def _page(self, top: pa.Table, with_url: bool, start: int = 0) -> DataFrame:
@@ -2364,17 +2508,24 @@ class SearchEngine:
 
         Scale shape: planning (:meth:`_plan`, :func:`_compile`) runs on the
         driver with no Spark job and settles every never-matches rule
-        before any scan.  Evaluation is ONE bucket- and term-pruned
-        postings scan of every term the query reads, one shuffle by salt
-        and one Python stage (:meth:`_evaluate`: :func:`eval_tree` per
-        salt, numpy over sorted doc-id arrays).  The fq semi-join, the
-        deletes anti-join, ``doc_filter`` (which also prunes the scan to
-        its salts), ``bf``/``boost`` and the top-k stay Spark operations
-        after it; no collects and no persisted frames before the top-k.
+        before any read.  Evaluation is :func:`eval_tree` per salt over
+        the postings of every term the query reads, placed by
+        :meth:`_evaluate` from the query's postings estimate.  Within the
+        driver budget, the postings are a pyarrow read and ``doc_filter``
+        (which also prunes the read to its salts), the tombstones and the
+        top-k are numpy on the driver: a plain query runs no Spark job.
+        Above it, evaluation is ONE bucket- and term-pruned scan, one
+        shuffle by salt and one Python stage, and ``doc_filter``, the
+        deletes anti-join and the top-k are Spark operations.  On either
+        placement the fq semi-join and ``bf``/``boost`` are Spark
+        operations before the top-k (the driver's result enters them as
+        an Arrow LocalRelation); no collects and no persisted frames
+        before the top-k.  docset()/scored_docset() return the driver's
+        result as that LocalRelation.
         """
         if should_combine not in ("sum", "max"):
             raise ValueError(f"unknown should_combine {should_combine!r}")
-        tree, resolved, found, weights = self._plan(tree)
+        tree, resolved, found, weights, dict_rows = self._plan(tree)
         root = _compile(
             tree,
             resolved,
@@ -2390,11 +2541,26 @@ class SearchEngine:
             if doc_filter is not None
             else None
         )
-        res = self._evaluate(root, weights, salts)
-        if doc_filter is not None:
-            res = res.filter(F.col("doc_id").isin([int(d) for d in doc_filter]))
-        if self.deletes is not None:
-            res = res.join(self.deletes, "doc_id", "left_anti")
+        res = self._evaluate(root, weights, dict_rows, salts)
+        if isinstance(res, pa.Table):  # the driver placement
+            ids = res["doc_id"].to_numpy()
+            live = ~np.isin(ids, self._deleted)
+            if doc_filter is not None:
+                live &= np.isin(ids, np.asarray(doc_filter, dtype=np.int64))
+            res = pa.table(
+                {
+                    "doc_id": ids[live],
+                    "score": res["score"].to_numpy()[live].astype(self._dtype),
+                }
+            )
+            if not (_docset or bf or boost or _filter_docset is not None):
+                return self._finalize(res, k, with_url, start=start)
+            res = self.spark.createDataFrame(res, f"doc_id long, score {self._sql_t}")
+        else:
+            if doc_filter is not None:
+                res = res.filter(F.col("doc_id").isin([int(d) for d in doc_filter]))
+            if self.deletes is not None:
+                res = res.join(self.deletes, "doc_id", "left_anti")
         if _filter_docset is not None:
             # fq DocSet intersection: constant-score, applied before top-k
             res = res.join(_filter_docset, "doc_id", "left_semi")

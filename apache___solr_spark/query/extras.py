@@ -434,7 +434,7 @@ def significant_terms_index(
     cand = engine.spark.createDataFrame(
         rows.select(["term", "df"]), "term string, df long"
     )
-    pairs = engine._docs_of(engine._blocks_for(rows["term"].to_pylist()))
+    pairs = engine._docs_of(engine._blocks_for(rows))
     fg_tf = (
         pairs.join(fg, "doc_id", "left_semi")
         .groupBy("term")

@@ -220,7 +220,8 @@ def identify_phrases(
     conj_slot = {ks: i for i, ks in enumerate(conj_keys)}
 
     # ---- one distributed pass -------------------------------------------
-    grouped = eng._doc_plists(eng._blocks_for(terms), None)
+    meta = eng._term_meta(terms)
+    grouped = eng._doc_plists(eng._blocks_for(meta), None)
     per_doc = grouped.mapInPandas(
         _stats_fn(term_bit, indexed_multi),
         schema="doc_id long, mask long, counts array<long>",
@@ -249,7 +250,6 @@ def identify_phrases(
         return int(row[f"ttf_{i}"] or 0), int(row[f"df_{i}"] or 0)
 
     # unigram ttf (= cf) from the dictionary
-    meta = eng._term_meta(terms)
     term_ttf = {r["term"]: int(r["cf"]) for _, r in meta.iterrows()}
 
     # ---- driver-side scoring (reference computeFieldScore) --------------

@@ -49,21 +49,27 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(build_pyfiles_zip())
 
 
+def host_memory_mb() -> int | None:
+    """The host's RAM (MemTotal) in MiB, or None where /proc/meminfo is
+    unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return None
+
+
 def _driver_memory() -> str:
     """``SPARK_DRIVER_MEM``, else half of the host's RAM capped at 48g: the
     driver JVM shares the host with the Python workers, and a heap sized
     past RAM gets the JVM OOM-killed instead of collected."""
     if os.environ.get("SPARK_DRIVER_MEM"):
         return os.environ["SPARK_DRIVER_MEM"]
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemTotal:"):
-                    mb = int(line.split()[1]) // 1024
-                    return f"{min(48 * 1024, mb // 2)}m"
-    except OSError:
-        pass
-    return "48g"
+    mb = host_memory_mb()
+    return "48g" if mb is None else f"{min(48 * 1024, mb // 2)}m"
 
 
 def get_spark(

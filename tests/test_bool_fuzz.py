@@ -243,3 +243,23 @@ def test_random_collapse_matches_groupwise_argmax(fuzz_engine, tree, fq_tree, nm
         ).collect()
     ]
     assert got == want, f"q={q!r} fq={f!r} nmod={nmod}"
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(tree=ast)
+def test_random_boolean_tree_same_in_both_placements(fuzz_engine, tree):
+    """The kernel's driver placement (budget forced huge) and its Spark
+    placement (budget forced to 0) return the same full page: rank,
+    doc_id, url and score."""
+    eng, _ = fuzz_engine
+    q = render(tree)
+    pages, host_budget = [], eng._driver_budget
+    for budget in (10**15, 0):
+        eng._driver_budget = budget
+        pages.append(eng.search(q, k=N_DOCS + 1).collect())
+    eng._driver_budget = host_budget
+    assert pages[0] == pages[1], q

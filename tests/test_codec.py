@@ -466,6 +466,19 @@ def test_eval_tree_maxscore_root():
         assert abs(s - max(beta.get(d, 0.0), g2.get(d, 0.0))) < 1e-5 * max(1.0, s)
 
 
+def test_top_order_matches_sorted():
+    """The driver's top-k is (score desc, doc_id asc), ties at the cut
+    included, against Python's sort over every row."""
+    from apache___solr_spark.query.engine import _top_order
+
+    rng = np.random.default_rng(3)
+    ids = rng.permutation(500).astype(np.int64)
+    scores = rng.integers(0, 20, 500).astype(np.float32)  # many ties
+    want = sorted(range(500), key=lambda i: (-scores[i], ids[i]))
+    for depth in (0, 1, 7, 100, 499, 500, 600):
+        assert _top_order(ids, scores, depth).tolist() == want[:depth], depth
+
+
 def test_range_parts_keeps_lo_clamp_below_one_wave():
     """The numbering partition count: a count below one wave keeps the
     [shuffle_parts, 4*parallelism] clamp as is; a count of one wave or

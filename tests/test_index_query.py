@@ -3501,9 +3501,10 @@ def _job_counter(spark):
 
 
 def test_warm_query_job_counts(spark, built):
-    """On a warm engine a search() runs only the Spark jobs of its scan and
-    top-k (≤2), and its page is a local relation whose collect() runs
-    none; a vocabulary miss runs no job at all."""
+    """On a warm engine a search() whose postings fit the driver runs no
+    Spark job: the kernel runs over a pyarrow read, the top-k is taken in
+    numpy and the page is a local relation whose collect() runs none.
+    Forced to the Spark placement, it runs only its scan and top-k (≤2)."""
     eng = SearchEngine(spark, built, cfg=CFG)
     jobs = _job_counter(spark)
 
@@ -3512,36 +3513,182 @@ def test_warm_query_job_counts(spark, built):
     page, n_search = jobs("search", lambda: eng.search("web data", k=10))
     rows, n_collect = jobs("collect", page.collect)
     assert len(rows) == 10
-    assert n_search <= 2, n_search
+    assert n_search == 0, n_search
     assert n_collect == 0, n_collect
     rows, n_miss = jobs("miss", lambda: eng.search("zzznotaterm").collect())
     assert rows == [] and n_miss == 0, n_miss
     # a nested tree with a phrase, a prefix and a MUST_NOT group, and a
-    # {!maxscore} root: still one scan and one top-k
+    # {!maxscore} root: still no job
     for q, kw in (
         ('(+"web page" dat*) -(search links)', {}),
         ("+web data search", {"should_combine": "max", "tie": 0.1}),
     ):
         eng.search(q, k=10, **kw).collect()
         rows, n = jobs(f"warm {q}", lambda: eng.search(q, k=10, **kw).collect())
-        assert rows and n <= 2, (q, n)
+        assert rows and n == 0, (q, n)
+    eng._driver_budget = _SPARK
+    eng.search("web data", k=10).collect()
+    rows, n = jobs("spark", lambda: eng.search("web data", k=10).collect())
+    assert len(rows) == 10 and 1 <= n <= 2, n
 
 
 def test_cold_planning_job_counts(spark, built):
     """Query planning runs no Spark job: on a freshly opened engine the
-    first term, prefix, wildcard, fuzzy and range queries each run only
-    their scan and top-k (≤2 jobs), and a vocabulary miss runs none — the
-    dictionary is read on the driver."""
+    first term, prefix, wildcard, fuzzy and range queries run no job at
+    all (the dictionary and the postings are read on the driver), and
+    neither does a vocabulary miss."""
     jobs = _job_counter(spark)
     for q in ("web data", "web*", "w?b*", "data~1", "[a TO c]"):
         eng = SearchEngine(spark, built, cfg=CFG)
         rows, n = jobs(f"cold {q}", lambda: eng.search(q, k=10).collect())
         assert rows, q
-        assert n <= 2, (q, n)
+        assert n == 0, (q, n)
     for q in ("zzznotaterm", "zzznot*"):
         eng = SearchEngine(spark, built, cfg=CFG)
         rows, n = jobs(f"miss {q}", lambda: eng.search(q).collect())
         assert rows == [] and n == 0, (q, n)
+
+
+# the engine's placement budget, forced: every query on the driver, or
+# every query in Spark
+_DRIVER, _SPARK = 10**15, 0
+
+
+def _both(eng, fn):
+    """fn() under the forced driver and the forced Spark placement."""
+    out = []
+    for budget in (_DRIVER, _SPARK):
+        eng._driver_budget = budget
+        out.append(fn())
+    return out
+
+
+def _window_tree():
+    from apache___solr_spark.query.parser import (
+        BoolChild,
+        BoolQuery,
+        PhraseNode,
+        TermNode,
+    )
+
+    return BoolQuery(
+        children=[
+            BoolChild("MUST", PhraseNode(["web", "data"], slop=1, window=True)),
+            BoolChild("SHOULD", TermNode("page")),
+        ]
+    )
+
+
+def _mm_tree():
+    from apache___solr_spark.query.parser import BoolChild, BoolQuery, TermNode
+
+    return BoolQuery(
+        children=[
+            BoolChild("SHOULD", TermNode(t)) for t in ("web", "page", "data", "search")
+        ],
+        mm=2,
+    )
+
+
+def test_placements_agree(spark, built):
+    """The driver and the Spark placement of the kernel give identical
+    pages (rank, doc_id, url, float32 score), docsets and explain rows."""
+    eng = SearchEngine(spark, built, cfg=CFG)
+    hits = [r["doc_id"] for r in eng.search("web data", k=60).collect()]
+    cases = [
+        ("(web AND (data OR page)) OR (search -links)", {}),
+        ('"web page"', {}),
+        ('"web data"~3 page', {}),
+        (_window_tree(), {}),
+        ("web* pag? data~1 [a TO c]", {}),
+        ("page -w*", {}),
+        (_mm_tree(), {}),
+        ("+web data search", {"should_combine": "max", "tie": 0.1}),
+        ("web data", {"doc_filter": hits[::3]}),
+        ("web page", {"fq": ["data"]}),
+        ("web data", {"bf": [F.col("doclen") / 100]}),
+        ("web data", {"boost": [F.lit(1.0) + F.col("doclen") / 1000]}),
+        ("web page data", {"start": 10}),
+    ]
+    for q, kw in cases:
+        driver, spark_placed = _both(
+            eng, lambda: eng.search(q, k=25, **kw).collect()
+        )
+        assert driver, (q, kw)
+        assert driver == spark_placed, (q, kw)
+    for q in ("(page AND (data OR search)) -l*", '"web page" page'):
+        driver, spark_placed = _both(
+            eng,
+            lambda: (
+                sorted(map(tuple, eng.docset(q).collect())),
+                sorted(map(tuple, eng.scored_docset(q).collect())),
+                sorted(map(tuple, eng.scored_docset(q, fq=["page"]).collect())),
+            ),
+        )
+        assert driver[0] and driver == spark_placed, q
+    for q in ('(web AND (data OR "web page")) OR (search -links)', "web* data"):
+        driver, spark_placed = _both(
+            eng, lambda: eng.explain_scores_tree(q, k=10).collect()
+        )
+        assert driver and driver == spark_placed, q
+
+
+def test_tombstones_masked_in_both_placements(spark, built, tmp_path):
+    """Tombstoned docs leave search, docset and scored_docset alike in
+    both placements."""
+    import shutil
+
+    from apache___solr_spark.index.updates import delete_docs
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(built, idx)
+    victims = [
+        r["doc_id"]
+        for r in SearchEngine(spark, idx, cfg=CFG).search("web data", k=3).collect()
+    ][1:]
+    assert delete_docs(spark, idx, doc_ids=victims) == 2
+    eng = SearchEngine(spark, idx, cfg=CFG)
+    driver, spark_placed = _both(
+        eng,
+        lambda: (
+            eng.search("web data", k=N_DOCS).collect(),
+            sorted(map(tuple, eng.docset("web data").collect())),
+            sorted(map(tuple, eng.scored_docset("web data").collect())),
+        ),
+    )
+    assert driver == spark_placed
+    page, docset, scored = driver
+    assert page and not {r["doc_id"] for r in page} & set(victims)
+    assert not {d for (d,) in docset} & set(victims)
+    assert not {d for d, _ in scored} & set(victims)
+
+
+def test_buckets_come_from_dictionary(spark, built, monkeypatch):
+    """Every postings read takes its terms' buckets from the dictionary
+    rows planning already read: the driver-side term hash is never
+    called, on either placement, through the literal term list or the
+    semi-joined one."""
+    from apache___solr_spark.index import xxhash
+    from apache___solr_spark.query import engine as engine_mod
+
+    eng = SearchEngine(spark, built, cfg=CFG)
+    # w* expands to more than 4 terms (web* to one in this corpus)
+    queries = ["web", "web*", "page -web*", "page -w*"]
+
+    def pages():
+        out = []
+        for cap in (1024, 4):
+            monkeypatch.setattr(engine_mod, "_EXCLUDE_LITERAL_CAP", cap)
+            out += _both(eng, lambda: [eng.search(q, k=20).collect() for q in queries])
+        return out
+
+    want = pages()
+
+    def no_hash(*args):
+        raise AssertionError("term_bucket called")
+
+    monkeypatch.setattr(xxhash, "term_bucket", no_hash)
+    assert pages() == want
 
 
 def test_dictionary_stats_sum_segments(spark, tmp_path_factory):
