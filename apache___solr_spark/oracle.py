@@ -759,7 +759,7 @@ def _levenshtein(a: str, b: str) -> int:
 def _expand_oracle(
     idx: OracleIndex, cl, max_expansions: int | None = 128
 ) -> list[str]:
-    """Mirror of SearchEngine._expand_clause over the oracle's dict."""
+    """Mirror of SearchEngine._expand_rows' terms over the oracle's dict."""
     import re as _re
 
     terms = idx.postings.keys()

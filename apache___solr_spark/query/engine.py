@@ -10,23 +10,24 @@ boolean tree (QueryParser.jj:135-172), evaluated by one evaluator
 
   planning on the driver (no Spark job): synonyms, dictionary expansions,
   term weights, every never-matches rule (_compile), and the placement:
-  the query's postings estimate (summed df, plus cf when positions are
-  read) against a budget derived from host memory (_driver_budget)
+  the query's work (summed df, plus cf when positions are read, plus a
+  measured per-term-and-salt cost) against a budget derived from host
+  memory and the measured crossover of the two placements (_driver_budget)
   eval_tree per salt: one batch decode (index/builder._decode_rows), then
   term, phrase and expansion leaves scored in numpy and combined over
   sorted doc-id arrays (MUST count, minimum-should-match, MUST_NOT,
   boosts, the {!maxscore} dismax root), in one of two placements:
-    driver (postings within the budget): a pyarrow read of the terms'
-       bucket files captured at engine open (term, and doc_filter's salts,
-       pushed down; positions only when the tree holds a phrase), split
-       by salt -> doc_filter and tombstone masks, top-k by (score desc,
-       doc_id asc) in numpy: 0 Spark jobs
-    Spark (above it): ONE bucket-pruned postings scan
+    driver (work within the budget, no fq/bf/boost, not a docset):
+       a pyarrow read of the terms' bucket files captured at engine open
+       (bucket, term, and doc_filter's salts, pushed down; positions only
+       when the tree holds a phrase), split by salt -> doc_filter and
+       tombstone masks, top-k by (score desc, doc_id asc) in numpy:
+       0 Spark jobs
+    Spark (the rest): ONE bucket-pruned postings scan
        -> groupBy(salt).applyInArrow(eval_tree) -> doc_filter, liveDocs
-       tombstone anti-join -> orderBy(score desc, doc_id asc).limit(k)
-       [TakeOrderedAndProject], collected as Arrow
-  fq semi-join and bf/boost stay Spark operations on either placement
-  (the driver's kernel output enters them as an Arrow LocalRelation);
+       tombstone anti-join, fq semi-join, bf/boost
+       -> orderBy(score desc, doc_id asc).limit(k) [TakeOrderedAndProject],
+       collected as Arrow
   then the page's urls are read on the driver (pyarrow over the docs
   files) and the page is returned as a local relation.
 The explain walker reads every node's per-doc score from the same kernel.
@@ -58,6 +59,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import posixpath
 import re
 from dataclasses import dataclass
 from functools import reduce
@@ -117,25 +119,54 @@ _EXCLUDE_LITERAL_CAP = 1024
 
 # bytes of driver working set per posting a query reads (see _driver_budget)
 _POSTING_BYTES = 128
+# the driver's cost of one term of the query tree in one salt (eval_tree's
+# per-leaf numpy calls), in postings decoded in the same time
+_TERM_SALT_POSTINGS = 180
+# work (postings, plus _TERM_SALT_POSTINGS per term and salt) up to which
+# the driver placement measured faster than the Spark one (see _driver_budget)
+_CROSSOVER = 10_000_000
 
 
 def _driver_budget() -> int:
-    """The most postings a query may read to run in the driver placement:
-    ``MemTotal / 16 / _POSTING_BYTES`` (8.2M postings at 15.7 GiB).
+    """The most work a query may hold to run in the driver placement:
+    ``min(MemTotal / 16 / _POSTING_BYTES, _CROSSOVER)`` (8.2M at 15.7 GiB).
+    The work is the query's postings, plus ``_TERM_SALT_POSTINGS`` for
+    each term of the tree in each salt of the index
+    (:meth:`SearchEngine._evaluate`).
 
-    That placement holds a query's postings in the driver's Python
-    process: the Arrow read of the encoded rows, one salt's decoded arrays
-    at a time and the per-salt results.  Its peak (tracemalloc plus the
-    Arrow pool, over :meth:`SearchEngine._evaluate`) measured 41-44 bytes
-    per posting on a 100k-doc index (13 salts; 17-18 bytes per estimated
-    posting for phrases, whose positions count in the estimate) and
-    100-110 bytes per posting on a 2k-doc index, where one salt holds
-    every posting and fixed costs weigh most; ``_POSTING_BYTES`` rounds
-    the worst up.  A sixteenth of the RAM leaves the rest to the driver
-    JVM (half of it, ``session._driver_memory``), the Python workers and
-    the OS.  A larger query runs in the Spark placement."""
+    Memory: the placement holds a query's postings in the driver's Python
+    process (the Arrow read of the encoded rows, one salt's decoded
+    arrays at a time, the per-salt results).  Its peak (tracemalloc plus
+    the Arrow pool) measured 41-44 bytes per posting on a 100k-doc index
+    and 100-110 bytes on a 2k-doc one, where one salt holds every posting;
+    ``_POSTING_BYTES`` rounds the worst up.  A sixteenth of the RAM leaves
+    the rest to the driver JVM (half of it, ``session._driver_memory``),
+    the Python workers and the OS.
+
+    Time: warm ``search()`` + ``collect()`` medians of 5 alternating runs
+    per placement, 4 cores, PySpark 4.1.2, the 100k-doc Zipf index (13
+    salts), OR queries over the n most frequent terms.  The driver time
+    fits postings / 4.0M/s + 44 us per term and salt (so one term in one
+    salt weighs as 180 postings):
+
+    =========  ==========  ============  ===========  ========
+    terms      postings    work          driver (s)   Spark (s)
+    =========  ==========  ============  ===========  ========
+    2          0.19M       0.19M         0.10         0.63
+    40         1.97M       2.07M         0.48         1.17
+    400        4.31M       5.25M         1.34         1.81
+    1,000      5.14M       7.48M         1.87         3.75
+    2,500      5.89M       11.7M         2.90         2.91
+    10,012     6.89M       30.3M         7.47         5.37
+    =========  ==========  ============  ===========  ========
+
+    Phrase ORs (positions read, cf counted) kept the driver ahead up to
+    the largest measured, 80 phrases and 10.5M work: 1.31 s against
+    2.21 s.  The placements tie near 11.7M work, so ``_CROSSOVER`` is set
+    just under it.  More cores speed the Spark placement only, so on a
+    larger host the crossover is lower than measured here."""
     mb = host_memory_mb() or 8 * 1024
-    return (mb << 20) // 16 // _POSTING_BYTES
+    return min((mb << 20) // 16 // _POSTING_BYTES, _CROSSOVER)
 
 
 def _top_order(ids: np.ndarray, scores: np.ndarray, depth: int) -> np.ndarray:
@@ -150,16 +181,24 @@ def _top_order(ids: np.ndarray, scores: np.ndarray, depth: int) -> np.ndarray:
     return sel[np.lexsort((ids[sel], -scores[sel]))][:depth]
 
 
-def _snapshot(df: DataFrame) -> pads.Dataset:
+def _snapshot(df: DataFrame, partition: pa.Field | None = None) -> pads.Dataset:
     """The parquet files ``df`` reads, as listed now, opened as a
-    driver-side pyarrow dataset: the engine's snapshot of that table."""
+    driver-side pyarrow dataset: the engine's snapshot of that table.
+
+    ``partition``: the hive partition column of a table written as
+    ``<root>/<name>=<value>/part-*.parquet``.  It is parsed from the one
+    directory level under the table's root, never from the root's own
+    path, so an index kept under a ``bucket=0/`` folder reads right."""
     files = df.inputFiles()
     fs = pafs.FileSystem.from_uri(files[0])[0]
-    return pads.dataset(
-        [pafs.FileSystem.from_uri(u)[1] for u in files],
-        format="parquet",
-        filesystem=fs,
-    )
+    paths = [pafs.FileSystem.from_uri(u)[1] for u in files]
+    kw = {}
+    if partition is not None:
+        kw = {
+            "partitioning": pads.partitioning(pa.schema([partition]), flavor="hive"),
+            "partition_base_dir": posixpath.dirname(posixpath.dirname(paths[0])),
+        }
+    return pads.dataset(paths, format="parquet", filesystem=fs, **kw)
 
 
 def _levenshtein(terms: list[str], q: str) -> np.ndarray:
@@ -1017,15 +1056,11 @@ class SearchEngine:
         self.docs = spark.read.parquet(self.paths.docs)
         # the same files, for driver-side reads: stored fields (_stored),
         # every term-dictionary lookup (_dict_rows) and the driver
-        # placement's postings reads (_read_postings), whose files are
-        # keyed by their bucket= partition
+        # placement's postings reads (_read_postings), whose files carry
+        # their bucket= partition
         self._stored_docs = _snapshot(self.docs)
         self._dict = _snapshot(self.dictionary)
-        self._postings = _snapshot(self.postings)
-        self._bucket_files: dict[int, list] = {}
-        for frag in self._postings.get_fragments():
-            b = int(re.search(r"bucket=(\d+)", frag.path).group(1))
-            self._bucket_files.setdefault(b, []).append(frag)
+        self._postings = _snapshot(self.postings, pa.field("bucket", pa.int32()))
         self._driver_budget = _driver_budget()
         self._dtype = np.float64 if cfg.score_dtype == "float64" else np.float32
         self._sql_t = "double" if cfg.score_dtype == "float64" else "float"
@@ -1097,23 +1132,16 @@ class SearchEngine:
         got = self._dict_rows(pc.field("term").isin(want))
         return got.take(pc.drop_null(pc.index_in(want, value_set=got["term"])))
 
-    def _term_meta(self, terms: list[str]) -> pd.DataFrame:
-        """:meth:`_term_rows` of the distinct ``terms``, as pandas."""
-        got = self._term_rows(list(dict.fromkeys(terms)))
-        if got.num_rows == 0:
-            return pd.DataFrame(columns=self._META_COLS)
-        return got.to_pandas()
-
-    def _blocks_for(self, rows) -> DataFrame:
-        """The postings rows of the terms of ``rows``, dictionary rows (a
-        pandas frame or an Arrow table with ``term`` and ``bucket``): the
-        one place a term list becomes a postings scan.  The dictionary's
+    def _blocks_for(self, rows: pa.Table) -> DataFrame:
+        """The postings rows of the terms of ``rows``, aggregated
+        dictionary rows (:meth:`_term_rows`): the one place a term list
+        becomes a postings scan.  The dictionary's
         bucket prunes the partitioned scan.  Up to
         ``_EXCLUDE_LITERAL_CAP`` terms the term predicate is a literal
         pushed down to parquet row groups; a longer list ships as an Arrow
         LocalRelation that the scan semi-joins."""
-        terms = pa.array(rows["term"]).to_pylist()
-        buckets = pc.unique(pa.array(rows["bucket"])).to_pylist()
+        terms = rows["term"].to_pylist()
+        buckets = pc.unique(rows["bucket"]).to_pylist()
         blocks = self.postings.filter(F.col("bucket").isin(buckets))
         if len(terms) <= _EXCLUDE_LITERAL_CAP:
             return blocks.filter(F.col("term").isin(terms))
@@ -1136,13 +1164,13 @@ class SearchEngine:
             )
         }
 
-    def _idfs(self, meta: pd.DataFrame) -> dict[str, float]:
-        """BM25 idf per term of the aggregated dictionary rows ``meta``:
+    def _idfs(self, rows: pa.Table) -> dict[str, float]:
+        """BM25 idf per term of the aggregated dictionary rows ``rows``:
         the weights of the span and payload paths."""
         n_docs = self.stats["N"]
         return {
-            t: float(bm25_idf(n_docs, int(df), dtype=self._dtype))
-            for t, df in zip(meta["term"], meta["df"])
+            t: float(bm25_idf(n_docs, df, dtype=self._dtype))
+            for t, df in zip(rows["term"].to_pylist(), rows["df"].to_pylist())
         }
 
     def _scored(
@@ -1162,10 +1190,6 @@ class SearchEngine:
         return blocks.select(
             "term", "salt", "n_docs", "doc_gaps", "tfs", "norms"
         ).mapInArrow(fn, schema=f"term string, doc_id long, score {self._sql_t}")
-
-    def _expand_clause(self, cl, max_expansions: int | None = 128) -> list[str]:
-        """The terms of :meth:`_expand_rows`."""
-        return self._expand_rows(cl, max_expansions)["term"].to_pylist()
 
     def _expand_rows(self, cl, max_expansions: int | None = 128) -> pa.Table:
         """Resolve a prefix/wildcard/fuzzy/range clause against the term
@@ -1260,7 +1284,7 @@ class SearchEngine:
     def _phrase_frame(
         self,
         ptoks: list[str],
-        meta: pd.DataFrame,
+        meta: pa.Table,
         slop: int = 0,
         ordered: bool = True,
         slots: list[tuple[str, ...]] | None = None,
@@ -1357,8 +1381,8 @@ class SearchEngine:
             toks = sorted(set(toks))
         if not toks:
             return self._page(_NO_HITS, with_url)
-        meta = self._term_meta(sorted(set(toks)))
-        found = set(meta["term"])
+        meta = self._term_rows(sorted(set(toks)))
+        found = set(meta["term"].to_pylist())
         if any(t not in found for t in toks):
             return self._page(_NO_HITS, with_url)
         frame = self._phrase_frame(toks, meta, slop=dist - 1, ordered=ordered)
@@ -1411,8 +1435,8 @@ class SearchEngine:
         n = len(toks)
         if not toks:
             return self._page(_NO_HITS, with_url)
-        meta = self._term_meta(sorted(set(toks)))
-        found = set(meta["term"])
+        meta = self._term_rows(sorted(set(toks)))
+        found = set(meta["term"].to_pylist())
         qtoks = [t for t in toks if t in found]
         if not qtoks:
             return self._page(_NO_HITS, with_url)
@@ -1482,8 +1506,8 @@ class SearchEngine:
                 "payload queries need positions (store_positions=True)"
             )
         uniq = sorted(set(ptoks))
-        meta = self._term_meta(uniq)
-        found = set(meta["term"])
+        meta = self._term_rows(uniq)
+        found = set(meta["term"].to_pylist())
         if require_all:
             if len(found) < len(uniq):
                 return None
@@ -1510,7 +1534,7 @@ class SearchEngine:
         )
         if cands is None:
             return self._page(_NO_HITS, with_url)
-        idf_by_term = self._idfs(self._term_meta(sorted(set(toks))))
+        idf_by_term = self._idfs(self._term_rows(sorted(set(toks))))
         # duplicates counted, like _phrase_frame's sum over ptoks
         sum_idf = float(sum(idf_by_term.get(t, 0.0) for t in toks))
         fn = _payload_eval_fn(toks, sum_idf, self._bm25, self._dtype, **mode_kw)
@@ -1603,7 +1627,7 @@ class SearchEngine:
                 else "wildcard"
             )
             cl = Clause(occur="SHOULD", kind=kind, value=raw.lower())
-            members = self._expand_clause(cl, max_expansions=max_expansions)
+            members = self._expand_rows(cl, max_expansions)["term"].to_pylist()
             return [tuple(sorted(members))] if members else None
         if fm:
             cl = Clause(
@@ -1612,7 +1636,7 @@ class SearchEngine:
                 value=fm.group(1).lower(),
                 fuzz=int(fm.group(2) or 2),
             )
-            members = self._expand_clause(cl, max_expansions=max_expansions)
+            members = self._expand_rows(cl, max_expansions)["term"].to_pylist()
             return [tuple(sorted(members))] if members else None
         toks = self._analyze(raw)
         return [(t,) for t in toks]
@@ -1682,8 +1706,8 @@ class SearchEngine:
         if unmatchable or not slots:
             return self._page(_NO_HITS, with_url)
         ptoks = [t for s in slots for t in s]
-        meta = self._term_meta(sorted(set(ptoks)))
-        found = set(meta["term"])
+        meta = self._term_rows(sorted(set(ptoks)))
+        found = set(meta["term"].to_pylist())
         slots = [tuple(t for t in s if t in found) for s in slots]
         if any(not s for s in slots):
             return self._page(_NO_HITS, with_url)
@@ -1731,8 +1755,8 @@ class SearchEngine:
         if not slots:
             return self._page(_NO_HITS, with_url)
         ptoks = [t for s in slots for t in s]
-        meta = self._term_meta(sorted(set(ptoks)))
-        found = set(meta["term"])
+        meta = self._term_rows(sorted(set(ptoks)))
+        found = set(meta["term"].to_pylist())
         # a slot member missing from the dictionary can never match; a
         # slot with NO present member makes the whole span unmatchable
         slots = tuple(
@@ -2060,7 +2084,7 @@ class SearchEngine:
         weight by term, dictionary rows): the rows are the aggregated
         dictionary rows read on the way, of every term the tree can read
         (a term may hold more than one row); :meth:`_evaluate` takes the
-        buckets and the placement estimate from them."""
+        buckets and the placement's work from them."""
         if self.synonyms:
             tree = self._apply_synonyms_tree(tree)
         resolved: dict[int, tuple[list[str], bool]] = {}
@@ -2102,6 +2126,7 @@ class SearchEngine:
         root: _PlanNode,
         weights: dict,
         dict_rows: pa.Table,
+        budget: int,
         salts: list[int] | None = None,
         keep: list[int] | None = None,
     ) -> pa.Table | DataFrame:
@@ -2115,14 +2140,17 @@ class SearchEngine:
         - *Spark*: ONE bucket- and term-pruned scan, grouped by salt, one
           ``applyInArrow`` Python stage; returns a DataFrame.
 
-        The driver placement runs when the query's postings estimate fits
-        ``self._driver_budget`` (:func:`_driver_budget`).  The estimate is
-        the summed df of the terms ``root`` reads, plus their summed cf
-        when positions are read, from ``dict_rows``, the dictionary rows
-        :meth:`_plan` read (which also give the terms' buckets).  Both
-        placements return the root's (doc_id, score double) rows; with
-        ``keep`` (explain), every node's (path, doc_id, score) rows of the
-        docs in ``keep`` instead.  ``salts`` prunes the read."""
+        The driver placement runs when the query's work fits ``budget``
+        (``self._driver_budget``, :func:`_driver_budget`, or 0 to keep a
+        query in Spark).  The work is the summed df of the terms ``root``
+        reads, plus their summed cf when positions are read, from
+        ``dict_rows``, the dictionary rows :meth:`_plan` read (which also
+        give the terms' buckets), plus ``_TERM_SALT_POSTINGS`` for each
+        term of the tree in each salt of the index.  Both placements return the
+        root's (doc_id, score double) rows; with ``keep`` (explain), every
+        node's (path, doc_id, score) rows of the docs in ``keep`` instead,
+        as an Arrow table on either placement.  ``salts`` prunes the
+        read."""
         nodes = list(root.walk())
         cols = ["term", "salt", "n_docs", "doc_gaps", "tfs", "norms"]
         phrase = any(n.kind == "phrase" for n in nodes)
@@ -2158,18 +2186,22 @@ class SearchEngine:
                     schema=schema,
                 )
 
-        estimate = pc.sum(read["df"]).as_py()
+        n_salts = -(-int(self.stats["N"]) // self.cfg.salt_range)
+        work = pc.sum(read["df"]).as_py() + _TERM_SALT_POSTINGS * n_salts * sum(
+            len(n.terms) for n in nodes
+        )
         if phrase:
-            estimate += pc.sum(read["cf"]).as_py()
-        if estimate > self._driver_budget:
+            work += pc.sum(read["cf"]).as_py()
+        if work > budget:
             blocks = self._blocks_for(read)
             if salts is not None:
                 blocks = blocks.filter(F.col("salt").isin(salts))
-            return (
+            out = (
                 blocks.select(*cols)
                 .groupBy("salt")
                 .applyInArrow(run, from_arrow_schema(schema))
             )
+            return out if keep is None else out.toArrow()
         postings = self._read_postings(read, cols, salts)
         if postings.num_rows == 0:
             return schema.empty_table()
@@ -2188,20 +2220,15 @@ class SearchEngine:
         """The driver placement's postings scan: columns ``cols`` of the
         postings rows of the terms of ``rows`` (dictionary rows), read
         with pyarrow from the files of their buckets as captured at engine
-        open.  The term predicate, and the ``salts`` predicate when given,
-        are pushed down to the parquet row groups.  No Spark job."""
-        frags = [
-            f
-            for b in pc.unique(rows["bucket"]).to_pylist()
-            for f in self._bucket_files.get(b, [])
-        ]
-        expr = pc.field("term").isin(rows["term"].combine_chunks())
+        open: the bucket predicate prunes files by their partition, the
+        term predicate, and the ``salts`` predicate when given, are pushed
+        down to the parquet row groups.  No Spark job."""
+        expr = pc.field("bucket").isin(pc.unique(rows["bucket"])) & pc.field(
+            "term"
+        ).isin(rows["term"].combine_chunks())
         if salts is not None:
             expr = expr & pc.field("salt").isin(salts)
-        ds = self._postings
-        return pads.FileSystemDataset(
-            frags, ds.schema, ds.format, ds.filesystem
-        ).to_table(columns=cols, filter=expr)
+        return self._postings.to_table(columns=cols, filter=expr)
 
     def _explain_rows(self, tree, k: int) -> list[tuple]:
         """The explain walker: explain_scores_tree's rows for the top-k
@@ -2220,9 +2247,9 @@ class SearchEngine:
         tree, resolved, found, weights, dict_rows = self._plan(tree)
         root = _compile(tree, resolved, found, self.sim, self.cfg.store_positions)
         salts = sorted({d // self.cfg.salt_range for d in doc_ids})
-        res = self._evaluate(root, weights, dict_rows, salts, keep=doc_ids)
-        if isinstance(res, DataFrame):
-            res = res.toArrow()
+        res = self._evaluate(
+            root, weights, dict_rows, self._driver_budget, salts, keep=doc_ids
+        )
         node_scores: dict[str, dict[int, float]] = {}
         for r in res.to_pylist():
             node_scores.setdefault(r["path"], {})[r["doc_id"]] = r["score"]
@@ -2353,41 +2380,36 @@ class SearchEngine:
             frame = frame.join(self.deletes, "doc_id", "left_anti")
         return self._finalize(frame, k, with_url)
 
+    def _depth(self, k: int, start: int) -> int:
+        """The collector depth of a page: start+k (SolrIndexSearcher
+        buildTopDocs ``len = start + rows``), capped at the index's doc
+        count as SolrIndexSearcher caps it at maxDoc: a k=10**9 "every
+        match" request must not size a 10**9-slot top-k heap."""
+        return min(int(start) + int(k), int(self.stats["N"]))
+
     def _finalize(
-        self, scored: DataFrame | pa.Table, k: int, with_url: bool, start: int = 0
+        self, scored: DataFrame, k: int, with_url: bool, start: int = 0
     ) -> DataFrame:
         """Top-k + two-phase fields fetch (QueryComponent.java:1000).
         Phase 1 ranks the narrow (doc_id, score) by (score desc, doc_id
-        asc): a DataFrame through TakeOrderedAndProject, the query's one
-        Spark action, taken as Arrow; an Arrow table (the driver
-        placement's rows) in numpy (:func:`_top_order`), with no Spark
-        job.  Phase 2 reads the
+        asc) through TakeOrderedAndProject, the query's one Spark action,
+        taken as Arrow (the driver placement takes its top-k in numpy
+        instead, :func:`_top_order`).  Phase 2 reads the
         display fields of JUST the page's docs on the driver (:meth:`_stored`,
         the per-hit stored-fields read of the reference), from the docs
         files this engine opened on.  The page is a local Arrow relation,
         so the caller's collect() runs no Spark job.
 
         ``start``: offset paging (the reference's start/rows params) — the
-        collector depth is start+rows (SolrIndexSearcher buildTopDocs
-        ``len = start + rows``), sliced driver-side like QueryComponent's
-        response window.  Ranks stay GLOBAL (page 2 starts at rank
-        start+1).  The depth is capped at the index's doc count, as
-        SolrIndexSearcher caps it at maxDoc: a k=10**9 "every match"
-        request must not size a 10**9-slot top-k heap."""
-        depth = min(int(start) + int(k), int(self.stats["N"]))
-        if isinstance(scored, pa.Table):
-            top = scored.take(
-                _top_order(
-                    scored["doc_id"].to_numpy(), scored["score"].to_numpy(), depth
-                )
-            )
-        else:
-            top = (
-                scored.select("doc_id", "score")
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(depth)
-                .toArrow()
-            )
+        collector depth is :meth:`_depth`, sliced driver-side like
+        QueryComponent's response window.  Ranks stay GLOBAL (page 2
+        starts at rank start+1)."""
+        top = (
+            scored.select("doc_id", "score")
+            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+            .limit(self._depth(k, start))
+            .toArrow()
+        )
         return self._page(top.slice(int(start)), with_url, int(start))
 
     def _page(self, top: pa.Table, with_url: bool, start: int = 0) -> DataFrame:
@@ -2510,18 +2532,16 @@ class SearchEngine:
         driver with no Spark job and settles every never-matches rule
         before any read.  Evaluation is :func:`eval_tree` per salt over
         the postings of every term the query reads, placed by
-        :meth:`_evaluate` from the query's postings estimate.  Within the
+        :meth:`_evaluate` from the query's work.  Within the
         driver budget, the postings are a pyarrow read and ``doc_filter``
         (which also prunes the read to its salts), the tombstones and the
-        top-k are numpy on the driver: a plain query runs no Spark job.
-        Above it, evaluation is ONE bucket- and term-pruned scan, one
-        shuffle by salt and one Python stage, and ``doc_filter``, the
-        deletes anti-join and the top-k are Spark operations.  On either
-        placement the fq semi-join and ``bf``/``boost`` are Spark
-        operations before the top-k (the driver's result enters them as
-        an Arrow LocalRelation); no collects and no persisted frames
-        before the top-k.  docset()/scored_docset() return the driver's
-        result as that LocalRelation.
+        top-k are numpy on the driver: the query runs no Spark job.
+        Above it, and for every query with a Spark tail (fq, ``bf``,
+        ``boost``, docset()/scored_docset()), evaluation is ONE bucket-
+        and term-pruned scan, one shuffle by salt and one Python stage;
+        ``doc_filter``, the deletes anti-join, the fq semi-join,
+        ``bf``/``boost`` and the top-k are Spark operations in the same
+        plan, with no collects and no persisted frames before the top-k.
         """
         if should_combine not in ("sum", "max"):
             raise ValueError(f"unknown should_combine {should_combine!r}")
@@ -2541,26 +2561,33 @@ class SearchEngine:
             if doc_filter is not None
             else None
         )
-        res = self._evaluate(root, weights, dict_rows, salts)
+        # a query with a Spark tail (fq, bf, boost, or a docset for the
+        # caller's own plan) runs jobs whatever the placement.  Fed from
+        # the driver, the tail ships every match back as a LocalRelation;
+        # on the 100k-doc Zipf index (0.19M-4.3M postings, 4 cores) fq, bf
+        # and docset counts took -17% to +10% of the Spark placement's
+        # time, so the whole query keeps the one Spark plan
+        tail = _docset or bf or boost or _filter_docset is not None
+        res = self._evaluate(
+            root, weights, dict_rows, 0 if tail else self._driver_budget, salts
+        )
         if isinstance(res, pa.Table):  # the driver placement
             ids = res["doc_id"].to_numpy()
             live = ~np.isin(ids, self._deleted)
             if doc_filter is not None:
                 live &= np.isin(ids, np.asarray(doc_filter, dtype=np.int64))
-            res = pa.table(
-                {
-                    "doc_id": ids[live],
-                    "score": res["score"].to_numpy()[live].astype(self._dtype),
-                }
+            ids = ids[live]
+            scores = res["score"].to_numpy()[live].astype(self._dtype)
+            top = _top_order(ids, scores, self._depth(k, start))[int(start) :]
+            return self._page(
+                pa.table({"doc_id": ids[top], "score": scores[top]}),
+                with_url,
+                int(start),
             )
-            if not (_docset or bf or boost or _filter_docset is not None):
-                return self._finalize(res, k, with_url, start=start)
-            res = self.spark.createDataFrame(res, f"doc_id long, score {self._sql_t}")
-        else:
-            if doc_filter is not None:
-                res = res.filter(F.col("doc_id").isin([int(d) for d in doc_filter]))
-            if self.deletes is not None:
-                res = res.join(self.deletes, "doc_id", "left_anti")
+        if doc_filter is not None:
+            res = res.filter(F.col("doc_id").isin([int(d) for d in doc_filter]))
+        if self.deletes is not None:
+            res = res.join(self.deletes, "doc_id", "left_anti")
         if _filter_docset is not None:
             # fq DocSet intersection: constant-score, applied before top-k
             res = res.join(_filter_docset, "doc_id", "left_semi")

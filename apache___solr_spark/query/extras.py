@@ -99,8 +99,8 @@ def _mlt_select_terms(
     source terms by tf*idf against the index statistics, window by mindf/
     mintf, keep the top maxqt.  Terms absent from the index can never
     match and are dropped regardless of mindf."""
-    meta = engine._term_meta(sorted(tf_by_term))
-    df_by_term = dict(zip(meta["term"], meta["df"]))
+    meta = engine._term_rows(sorted(tf_by_term))
+    df_by_term = dict(zip(meta["term"].to_pylist(), meta["df"].to_pylist()))
     n = engine.stats["N"]
     weighted = sorted(
         (

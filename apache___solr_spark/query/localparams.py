@@ -1261,8 +1261,12 @@ def dispatch_query(
         _check_field(params)
         maxdf = int(params.get("maxDocFreq", 2**31 - 1))
         vals = [v for v in (x.strip() for x in rest.split(",")) if v]
-        meta = engine._term_meta(vals)
-        kept = [t for t, df in zip(meta["term"], meta["df"]) if df <= maxdf]
+        meta = engine._term_rows(sorted(set(vals)))
+        kept = [
+            t
+            for t, df in zip(meta["term"].to_pylist(), meta["df"].to_pylist())
+            if df <= maxdf
+        ]
         return engine.terms_query(kept, k=k)
 
     if ptype == "vectorSimilarity" and "vectors_df" in kw:

@@ -220,7 +220,7 @@ def identify_phrases(
     conj_slot = {ks: i for i, ks in enumerate(conj_keys)}
 
     # ---- one distributed pass -------------------------------------------
-    meta = eng._term_meta(terms)
+    meta = eng._term_rows(terms)
     grouped = eng._doc_plists(eng._blocks_for(meta), None)
     per_doc = grouped.mapInPandas(
         _stats_fn(term_bit, indexed_multi),
@@ -250,7 +250,7 @@ def identify_phrases(
         return int(row[f"ttf_{i}"] or 0), int(row[f"df_{i}"] or 0)
 
     # unigram ttf (= cf) from the dictionary
-    term_ttf = {r["term"]: int(r["cf"]) for _, r in meta.iterrows()}
+    term_ttf = dict(zip(meta["term"].to_pylist(), meta["cf"].to_pylist()))
 
     # ---- driver-side scoring (reference computeFieldScore) --------------
     span_at: dict[tuple[int, int], PhraseInfo] = {}

@@ -180,7 +180,7 @@ def _node_of(spec, analyze_fn, default_op):
     _, text, fuzz, prefix = spec
     if prefix:
         # engine Clause convention: prefix values KEEP the trailing star
-        # (engine._expand_clause strips it with value[:-1])
+        # (engine._expand_rows strips it with value[:-1])
         return Clause(occur="", kind="prefix", value=text.lower() + "*")
     if fuzz is not None:
         return Clause(occur="", kind="fuzzy", value=text.lower(), fuzz=fuzz)

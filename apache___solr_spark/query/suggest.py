@@ -159,8 +159,7 @@ def spellcheck_collate(
     toks = engine._analyze(query)
     if not toks:
         return []
-    meta = engine._term_meta(sorted(set(toks)))
-    known = set(meta["term"])
+    known = set(engine._term_rows(sorted(set(toks)))["term"].to_pylist())
     bad = [t for t in toks if t not in known]
     if not bad:
         return []

@@ -95,7 +95,7 @@ CLAUSES = [
 @pytest.mark.parametrize("cl", CLAUSES, ids=lambda c: f"{c.kind}:{c.label}")
 def test_expansion_matches_oracle(dict_engine, cl, cap):
     eng, oracle = dict_engine
-    got = eng._expand_clause(cl, max_expansions=cap)
+    got = eng._expand_rows(cl, max_expansions=cap)["term"].to_pylist()
     assert got == _expand_oracle(oracle, cl, max_expansions=cap)
 
 
@@ -104,20 +104,22 @@ def test_cap_cuts_through_tied_dfs(dict_engine):
     the df-3 terms, in term order."""
     eng, _ = dict_engine
     cl = Clause("SHOULD", "wildcard", "b?t")
-    assert eng._expand_clause(cl, max_expansions=2) == ["bot", "but"]
-    assert eng._expand_clause(cl, max_expansions=4) == [
+    assert eng._expand_rows(cl, max_expansions=2)["term"].to_pylist() == [
+        "bot", "but",
+    ]
+    assert eng._expand_rows(cl, max_expansions=4)["term"].to_pylist() == [
         "bot", "but", "bat", "bet",
     ]
 
 
 def test_term_meta_sums_segments(dict_engine):
     eng, _ = dict_engine
-    meta = eng._term_meta(["wax", "nothere", "zeta", "web"])
-    assert list(meta["term"]) == ["wax", "zeta", "web"]  # request order
-    assert list(meta["df"]) == [9, 6, 9]
-    assert list(meta["cf"]) == [18, 12, 18]
-    assert eng._term_meta([]).empty
-    assert eng._term_meta(["nothere"]).empty
+    meta = eng._term_rows(["wax", "nothere", "zeta", "web"])
+    assert meta["term"].to_pylist() == ["wax", "zeta", "web"]  # request order
+    assert meta["df"].to_pylist() == [9, 6, 9]
+    assert meta["cf"].to_pylist() == [18, 12, 18]
+    assert eng._term_rows([]).num_rows == 0
+    assert eng._term_rows(["nothere"]).num_rows == 0
 
 
 def test_levenshtein_matches_oracle():

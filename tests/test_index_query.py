@@ -3592,7 +3592,9 @@ def _mm_tree():
 
 def test_placements_agree(spark, built):
     """The driver and the Spark placement of the kernel give identical
-    pages (rank, doc_id, url, float32 score), docsets and explain rows."""
+    pages (rank, doc_id, url, float32 score), docsets and explain rows.
+    Queries with fq, bf or boost, and docsets, take the Spark placement
+    under either budget; their cases check that routing."""
     eng = SearchEngine(spark, built, cfg=CFG)
     hits = [r["doc_id"] for r in eng.search("web data", k=60).collect()]
     cases = [
@@ -3689,6 +3691,26 @@ def test_buckets_come_from_dictionary(spark, built, monkeypatch):
 
     monkeypatch.setattr(xxhash, "term_bucket", no_hash)
     assert pages() == want
+
+
+def test_index_under_a_bucket_folder(spark, built, tmp_path):
+    """The driver placement takes each postings file's bucket from the
+    directory under the postings root, never from the index's own path:
+    an index kept under a hive-style ``bucket=0/`` folder gives, in both
+    placements, the pages it gives at its usual place."""
+    import shutil
+
+    idx = str(tmp_path / "bucket=0" / "idx")
+    shutil.copytree(built, idx)
+    queries = ["web", "web data", '"web page"', "page -w*"]
+
+    def pages(eng):
+        return [eng.search(q, k=20).collect() for q in queries]
+
+    want = pages(SearchEngine(spark, built, cfg=CFG))
+    eng = SearchEngine(spark, idx, cfg=CFG)
+    assert all(want)
+    assert _both(eng, lambda: pages(eng)) == [want, want]
 
 
 def test_dictionary_stats_sum_segments(spark, tmp_path_factory):
