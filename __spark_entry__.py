@@ -2071,7 +2071,7 @@ def oracle_sql() -> dict[str, str]:
             pa AS (SELECT doc_id, pos FROM ptoks WHERE term = 'table'),
             pb AS (SELECT doc_id, pos FROM ptoks WHERE term = 'filter'),
             -- SpanNearQuery(inOrder=false) minimal-window counting, the
-            -- engine's _phrase_score_fn unordered path verbatim: every
+            -- engine's _phrase_freqs unordered path verbatim: every
             -- occurrence of either term is a candidate window START; its
             -- minimal cover ends at the MAX over terms of the earliest
             -- occurrence at-or-after the start; a window is a match when

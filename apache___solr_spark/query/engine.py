@@ -6,7 +6,10 @@ filter -> score -> top-k priority queue; distributed merge in
 handler/component/QueryComponent.java:970) as a DataFrame plan.  Every
 query — classic string, flat ParsedQuery or BoolQuery — is one recursive
 boolean tree (QueryParser.jj:135-172), evaluated by one evaluator
-(SearchEngine._search_tree):
+(SearchEngine._search_tree), and the span, payload and constant-score
+operators ({!surround}, {!complexphrase}, {!payload_score},
+{!payload_check}, {!terms}, {!min_hash}) are single leaves of the same
+compiled tree, so every query takes one path (SearchEngine._search_plan):
 
   planning on the driver (no Spark job): synonyms, dictionary expansions,
   term weights, every never-matches rule (_compile), and the placement:
@@ -14,9 +17,10 @@ boolean tree (QueryParser.jj:135-172), evaluated by one evaluator
   measured per-term-and-salt cost) against a budget derived from host
   memory and the measured crossover of the two placements (_driver_budget)
   eval_tree per salt: one batch decode (index/builder._decode_rows), then
-  term, phrase and expansion leaves scored in numpy and combined over
-  sorted doc-id arrays (MUST count, minimum-should-match, MUST_NOT,
-  boosts, the {!maxscore} dismax root), in one of two placements:
+  term, expansion, phrase/span, payload and const leaves scored in numpy
+  and combined over sorted doc-id arrays (MUST count,
+  minimum-should-match, MUST_NOT, boosts, the {!maxscore} dismax root), in
+  one of two placements:
     driver (work within the budget, no fq/bf/boost, not a docset):
        a pyarrow read of the terms' bucket files captured at engine open
        (bucket, term, and doc_filter's salts, pushed down; positions only
@@ -30,15 +34,14 @@ boolean tree (QueryParser.jj:135-172), evaluated by one evaluator
        collected as Arrow
   then the page's urls are read on the driver (pyarrow over the docs
   files) and the page is returned as a local relation.
-The explain walker reads every node's per-doc score from the same kernel.
-``salt = doc_id // salt_range`` is aligned across terms, so a tree
-decomposes exactly by salt (Solr's per-shard collectors, salts as shards).
-
-Every query-side postings scan — the boolean evaluator, scoring ({!terms},
-min-hash), doc-id-only (significantTerms) and positions (spans, payloads,
-phrase identification) — decodes through _decode_rows, the same batch
-decoder the build's merge and optimize use.  Planning runs no Spark job: every term
-lookup and expansion reads the dictionary files on the driver
+The explain walker, {!significantTerms} and phrase identification read
+every node's per-doc rows or totals from the same kernel
+(SearchEngine._evaluate).  ``salt = doc_id // salt_range`` is aligned
+across terms, so a tree decomposes exactly by salt (Solr's per-shard
+collectors, salts as shards).  Every query-side postings read decodes
+through _decode_rows, the same batch decoder the build's merge and
+optimize use.  Planning runs no Spark job: every term lookup and
+expansion reads the dictionary files on the driver
 (SearchEngine._dict_rows).
 
 Scoring: BM25 with k1=1.2, b=0.75
@@ -66,16 +69,16 @@ from functools import reduce
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.fs as pafs
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from apache___solr_spark.analysis.chain import analyzer_fn
+from apache___solr_spark.analysis.payloads import decode_payloads
 from apache___solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from apache___solr_spark.index.builder import (
     IndexPaths,
@@ -105,6 +108,7 @@ _NO_HITS = pa.table(
 # positions are matched as ``row << _SHIFT | pos`` int64 keys
 _SHIFT = np.int64(32)
 _EMPTY = np.empty(0, dtype=np.int64)
+_MAX_DOC = np.iinfo(np.int64).max
 
 
 def bm25_idf(n_docs: int, df: int, dtype=np.float32):
@@ -120,7 +124,9 @@ _EXCLUDE_LITERAL_CAP = 1024
 # bytes of driver working set per posting a query reads (see _driver_budget)
 _POSTING_BYTES = 128
 # the driver's cost of one term of the query tree in one salt (eval_tree's
-# per-leaf numpy calls), in postings decoded in the same time
+# per-leaf numpy calls), in postings decoded in the same time; measured
+# before a one-term leaf skipped the union (now ~1/3 of that cost), so it
+# errs toward the Spark placement until measured again
 _TERM_SALT_POSTINGS = 180
 # work (postings, plus _TERM_SALT_POSTINGS per term and salt) up to which
 # the driver placement measured faster than the Spark one (see _driver_budget)
@@ -232,270 +238,6 @@ def _levenshtein(terms: list[str], q: str) -> np.ndarray:
     return out
 
 
-def _posting_terms(rb: pa.RecordBatch) -> pa.Array:
-    """The batch's term column repeated once per posting of its row."""
-    n_docs = rb.column("n_docs").to_numpy()
-    return rb.column("term").take(
-        pa.array(np.repeat(np.arange(rb.num_rows), n_docs))
-    )
-
-
-def _score_fn(
-    weight_by_term: dict[str, float],
-    kernel,
-    boost_by_term: dict[str, float] | None,
-    salt_range: int,
-    dtype=np.float32,
-):
-    """mapInArrow fn: postings rows -> (term, doc_id, score).
-
-    Each batch decodes once (index/builder._decode_rows); ``kernel`` (the
-    similarity closure, query/similarities.py, ``f(weight, boost, tfs, dl)
-    -> scores``) then runs once per (term, salt) row on slices of the flat
-    arrays.  ``weight_by_term`` carries the per-term statistic weight (idf /
-    collection probability / 1); boosts travel separately because the LM
-    similarities are not linear in the weight.  ``dtype`` is float32 by
-    default (Lucene computes similarity scores in float); float64 backs the
-    SQL-oracle-checked configuration."""
-    norm_table = NORM_TABLE.astype(dtype)
-    boosts = boost_by_term or {}
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            doc_ids, tfs, norms, _, starts = _decode_rows(rb, salt_range)
-            tfs = tfs.astype(dtype)
-            dl = norm_table[norms]
-            ends = np.append(starts[1:], doc_ids.size)
-            scores = np.empty(doc_ids.size, dtype=dtype)
-            for term, s, e in zip(rb.column("term").to_pylist(), starts, ends):
-                scores[s:e] = kernel(
-                    weight_by_term[term], boosts.get(term, 1.0), tfs[s:e], dl[s:e]
-                )
-            yield pa.RecordBatch.from_arrays(
-                [_posting_terms(rb), pa.array(doc_ids), pa.array(scores)],
-                names=["term", "doc_id", "score"],
-            )
-
-    return run
-
-
-def _docs_fn(salt_range: int):
-    """mapInArrow fn: postings rows -> (term, doc_id), the lightest decode
-    (the batch carries doc_gaps only)."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            doc_ids = _decode_rows(rb, salt_range)[0]
-            yield pa.RecordBatch.from_arrays(
-                [_posting_terms(rb), pa.array(doc_ids)], names=["term", "doc_id"]
-            )
-
-    return run
-
-
-def _positions_fn(salt_range: int):
-    """mapInArrow fn: postings rows -> (term, doc_id, norm, positions[]),
-    positions absolute and ascending per posting."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            doc_ids, tfs, norms, pos_gaps, _ = _decode_rows(rb, salt_range)
-            offsets = np.concatenate(([0], np.cumsum(tfs))).astype(np.int32)
-            positions = pa.ListArray.from_arrays(
-                pa.array(offsets), pa.array(_undelta_positions(pos_gaps, tfs))
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    _posting_terms(rb),
-                    pa.array(doc_ids),
-                    pa.array(norms.astype(np.int32)),
-                    positions,
-                ],
-                names=["term", "doc_id", "norm", "positions"],
-            )
-
-    return run
-
-
-def _payload_eval_fn(
-    ptoks: list[str],
-    sum_idf: float,
-    bm25,
-    dtype,
-    func: str | None = None,
-    include_span: bool = False,
-    expected: list[float] | None = None,
-    operator: str = "phrase",
-    check_op: str = "eq",
-):
-    """mapInPandas fn over (doc_id, norm, plists, n, payloads):
-    exact-adjacency spans of ``ptoks`` with their per-position payloads.
-
-    ``func`` mode (PayloadScoreQuery): score = func over the payloads of
-    every matched span position (min/max/average/sum), optionally times
-    the span's BM25 (tf = span frequency).  Positions WITHOUT a payload
-    (NaN in the stream) are skipped exactly like collectLeaf skips null
-    payloads — they never feed min/average; a doc whose spans carry no
-    payload at all scores 0.  ``expected`` mode (SpanPayloadCheckQuery):
-    keep docs with >=1 span whose payloads satisfy ``check_op``
-    (eq/gt/gte/lt/lte, PayloadCheckQParser's MatchOperation) against
-    ``expected`` position by position; score = BM25 with tf = matching
-    spans; a missing payload never satisfies any operation.
-
-    ``operator="or"`` (PayloadScoreQParser operator=or -> SpanOrQuery):
-    every occurrence of every query term is its own length-1 span
-    instead of the exact-adjacency phrase.
-
-    The whole batch evaluates vectorized — no per-doc Python loop on
-    the hot path (the r2 phrase-scoring lesson applied from day one):
-    payload vbyte streams decode in ONE call over the concatenated
-    buffers (vbyte is self-delimiting), positions are encoded as
-    row_idx*2^32+pos so adjacency runs as one np.isin per phrase term
-    across every doc at once (adding i never crosses a row boundary),
-    the payload gather is a single flat take, and per-doc func/tf
-    reduction is a segmented ufunc.reduceat over the row-sorted spans."""
-    from apache___solr_spark.analysis.payloads import decode_payloads
-
-    m = len(ptoks)
-    norm_table = NORM_TABLE.astype(dtype)
-    or_mode = operator == "or"
-    if or_mode:
-        m = 1
-    exp_arr = (
-        np.asarray(expected, dtype=np.float32) if expected is not None else None
-    )
-    offs = np.arange(m, dtype=np.int64)
-    mask = np.int64((1 << 32) - 1)
-    # fmin/fmax skip NaN (missing payloads); sum folds nan_to_num
-    reduce_ufunc = {
-        "min": np.fmin,
-        "max": np.fmax,
-        "average": np.add,
-        "avg": np.add,
-        "sum": np.add,
-        None: None,
-    }[func]
-    is_mean = func in ("average", "avg")
-    cmp = {
-        "eq": np.equal,
-        "gt": np.greater,
-        "gte": np.greater_equal,
-        "lt": np.less,
-        "lte": np.less_equal,
-    }[check_op]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            nrows = len(pdf)
-            if nrows == 0:
-                continue
-            # one decode over the concatenated payload streams
-            ns = pdf["n"].to_numpy().astype(np.int64)
-            pay = decode_payloads(
-                decode_vbyte(
-                    b"".join(pdf["payloads"]), int(ns.sum())
-                ).astype(np.uint32)
-            )
-            pay_off = np.concatenate(([0], np.cumsum(ns)[:-1]))
-            # encoded positions per term, all docs at once
-            enc = _plist_positions(pdf["plists"], set(ptoks))
-            if or_mode:
-                allpos = [enc[t] for t in set(ptoks) if enc[t].size]
-                starts = (
-                    np.unique(np.concatenate(allpos))
-                    if allpos
-                    else np.empty(0, dtype=np.int64)
-                )
-            else:
-                starts = enc[ptoks[0]]
-                for i, t in enumerate(ptoks[1:], 1):
-                    if starts.size == 0:
-                        break
-                    starts = starts[np.isin(starts + i, enc[t])]
-            if starts.size == 0:
-                continue
-            rows = starts >> _SHIFT  # ascending
-            pos0 = starts & mask
-            gathered = pay[
-                ((pay_off[rows] + pos0)[:, None] + offs).ravel()
-            ].reshape(-1, m)
-            if exp_arr is not None:
-                # NaN (missing payload) fails every comparison op
-                ok = cmp(gathered, exp_arr).all(axis=1)
-                tf_all = np.bincount(rows[ok], minlength=nrows)
-            else:
-                tf_all = np.bincount(rows, minlength=nrows)
-            hit = np.nonzero(tf_all)[0]
-            if hit.size == 0:
-                continue
-            tf = tf_all[hit].astype(dtype)
-            dl = norm_table[pdf["norm"].to_numpy()[hit].astype(np.uint8)]
-            span = bm25(sum_idf, 1.0, tf, dl)
-            if exp_arr is not None:
-                score = span
-            else:
-                # segmented reduce over each doc's span payloads: spans
-                # are row-sorted, so each hit row owns one contiguous
-                # slab of tf[row]*m flat payload values.  NaN payloads
-                # are skipped (fmin/fmax ignore them; sums fold 0 and
-                # the mean divides by the SEEN count, like Lucene's
-                # payloadsSeen); an all-missing slab scores 0.
-                flat = gathered.ravel().astype(np.float64)
-                seg = np.concatenate(
-                    ([0], np.cumsum(tf_all[hit] * m)[:-1])
-                )
-                nseen = np.add.reduceat(
-                    np.isfinite(flat).astype(np.float64), seg
-                )
-                if is_mean or reduce_ufunc is np.add:
-                    vals = np.add.reduceat(np.nan_to_num(flat), seg)
-                    if is_mean:
-                        vals = np.divide(
-                            vals,
-                            nseen,
-                            out=np.zeros_like(vals),
-                            where=nseen > 0,
-                        )
-                else:
-                    vals = np.where(
-                        nseen > 0,
-                        np.nan_to_num(reduce_ufunc.reduceat(flat, seg)),
-                        0.0,
-                    )
-                score = vals.astype(dtype)
-                if include_span:
-                    score = score * span
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy()[hit],
-                    "score": score.astype(dtype),
-                }
-            )
-
-    return run
-
-
-def _plist_positions(plists, want: set[str]) -> dict[str, np.ndarray]:
-    """Each term of ``want`` -> its positions in a batch of per-doc
-    ``plists`` ([(term, positions[])] per row), encoded ``row << 32 | pos``
-    and ascending (rows in batch order, positions ascending per row)."""
-    parts: dict[str, list[np.ndarray]] = {t: [] for t in want}
-    for row_idx, plist in enumerate(plists):
-        enc_row = np.int64(row_idx) << _SHIFT
-        for r in plist:
-            if r["term"] in parts:
-                parts[r["term"]].append(
-                    enc_row + np.asarray(r["positions"], dtype=np.int64)
-                )
-    return {t: np.concatenate(v) if v else _EMPTY for t, v in parts.items()}
-
-
 def _sloppy_freqs(
     enc: dict[str, np.ndarray], ptoks: list[str], slop: int
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -541,8 +283,8 @@ def _phrase_freqs(
 ) -> tuple[np.ndarray, np.ndarray]:
     """The phrase matcher: (rows, freqs) of the rows whose phrase frequency
     is > 0, rows ascending.  ``enc`` maps each term to its positions
-    encoded ``row << 32 | pos``, ascending; a row is a doc of a batch (the
-    span pipeline) or a doc's offset in its salt (:func:`eval_tree`).
+    encoded ``row << 32 | pos``, ascending; a row is a doc's offset in its
+    salt (:func:`eval_tree`).
 
     ``lucene_sloppy=True`` (classic sloppy phrases, slop>0): freq = the
     FRACTIONAL SloppyPhraseMatcher freq — sum of 1/(1+matchLength) over
@@ -582,20 +324,12 @@ def _phrase_freqs(
     if slots is None:
         slots = [(t,) for t in (ptoks if ordered else sorted(set(ptoks)))]
     bound = np.int64(len(slots) - 1 + slop)
-
-    def slot_arr(s: tuple) -> np.ndarray:
-        if len(s) == 1:
-            return enc.get(s[0], _EMPTY)
-        a = np.concatenate([enc.get(t, _EMPTY) for t in s])
-        a.sort()  # distinct terms never share (row, pos): no dups
-        return a
-
     if ordered:
-        start = slot_arr(slots[0])
+        start = _slot_positions(enc, slots[0])
         cur = start
         alive = np.ones(start.shape, dtype=bool)
         for s in slots[1:]:
-            arr = slot_arr(s)
+            arr = _slot_positions(enc, s)
             if arr.size == 0:
                 return _EMPTY, _EMPTY
             idx = np.searchsorted(arr, cur, side="right")
@@ -606,7 +340,7 @@ def _phrase_freqs(
             cur = np.where(ok, nxt, cur)
         alive &= (cur - start) <= bound
         return np.unique(start[alive] >> _SHIFT, return_counts=True)
-    arrs = [slot_arr(s) for s in slots]
+    arrs = [_slot_positions(enc, s) for s in slots]
     if any(a.size == 0 for a in arrs):
         return _EMPTY, _EMPTY
     merged = np.sort(np.concatenate(arrs))
@@ -624,107 +358,46 @@ def _phrase_freqs(
     return np.unique(np.unique(end_vals[match]) >> _SHIFT, return_counts=True)
 
 
-def _phrase_score_fn(
-    ptoks: list[str],
-    sum_idf: float,
-    bm25,
-    dtype,
-    slop: int = 0,
-    ordered: bool = True,
-    slots: list[tuple[str, ...]] | None = None,
-):
-    """mapInPandas fn over (doc_id, norm, plists): phrase frequency by
-    :func:`_phrase_freqs` (ordered window, or unordered minimal windows;
-    ``slots`` for complexphrase), then BM25 with tf=pf and idf=sum of
-    constituent idfs (Lucene PhraseQuery scoring: BM25Similarity sums idf
-    over the phrase's term statistics)."""
-    norm_table = NORM_TABLE.astype(dtype)
-    want = set(ptoks) if slots is None else {t for s in slots for t in s}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows, pf = _phrase_freqs(
-                _plist_positions(pdf["plists"], want), ptoks, slop, ordered, slots
-            )
-            if rows.size == 0:
-                continue
-            dl = norm_table[pdf["norm"].to_numpy()[rows].astype(np.uint8)]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy()[rows],
-                    "score": bm25(sum_idf, 1.0, pf.astype(dtype), dl),
-                }
-            )
-
-    return run
+def _slot_positions(enc: dict[str, np.ndarray], slot: tuple[str, ...]) -> np.ndarray:
+    """The encoded positions of any member of ``slot``, ascending."""
+    if len(slot) == 1:
+        return enc.get(slot[0], _EMPTY)
+    a = np.concatenate([enc.get(t, _EMPTY) for t in slot])
+    a.sort()  # distinct terms never share (row, pos): no dups
+    return a
 
 
-def _span_tree_score_fn(
-    tree,
-    slots: list[tuple[str, ...]],
-    sum_idf: float,
-    bm25,
-    dtype,
-):
-    """mapInPandas fn over (doc_id, norm, plists): nested-span frequency
-    via query/spans.py interval algebra, then BM25 with tf = sf and
-    idf = the summed slot-member idfs.  Root sf = distinct match STARTS
-    when the root is ordered (or a seq/slot); when unordered, distinct
-    MINIMAL ENDS (min end per match start, then distinct) — exactly the
-    flat paths' counting on flat trees (fuzz-verified vs the per-doc
-    bisect matchers), so a degenerate tree scores identically to
-    span_near/complex_phrase."""
-    norm_table = NORM_TABLE.astype(dtype)
-    member_slots: dict[str, list[int]] = {}
-    for i, s in enumerate(slots):
-        for t in s:
-            member_slots.setdefault(t, []).append(i)
-    root_unordered = tree[0] == "near" and not tree[2]
+def _span_freqs(tree, slots: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`_phrase_freqs` for a span tree (query/spans.py, shared
+    verbatim with the oracle): ``slots`` holds each slot's encoded
+    positions, and :func:`query.spans.match_intervals` runs once per row
+    holding every slot.  The freq is the root's distinct match STARTS when
+    the root is ordered (or a seq/slot); when unordered, its distinct
+    MINIMAL ENDS (min end per start, then distinct), the flat matchers'
+    counting, so a degenerate tree scores like span_near/complex_phrase."""
+    from apache___solr_spark.query.spans import match_intervals
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from apache___solr_spark.query.spans import match_intervals
-
-        for pdf in batches:
-            docs: list[int] = []
-            sfs: list[int] = []
-            norms: list[int] = []
-            for doc_id, norm, plists in zip(
-                pdf["doc_id"], pdf["norm"], pdf["plists"]
-            ):
-                acc: dict[int, list[int]] = {}
-                for r in plists:
-                    for si in member_slots.get(r["term"], ()):
-                        acc.setdefault(si, []).extend(
-                            int(p) for p in r["positions"]
-                        )
-                pos_by_slot = {i: sorted(v) for i, v in acc.items()}
-                m = match_intervals(tree, pos_by_slot)
-                if root_unordered:
-                    emin: dict[int, int] = {}
-                    for s, e in m:
-                        if s not in emin or e < emin[s]:
-                            emin[s] = e
-                    sf = len(set(emin.values()))
-                else:
-                    sf = len({s for (s, _) in m})
-                if sf:
-                    docs.append(int(doc_id))
-                    sfs.append(sf)
-                    norms.append(int(norm))
-            if docs:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.asarray(docs, dtype=np.int64),
-                        "score": bm25(
-                            sum_idf,
-                            1.0,
-                            np.asarray(sfs, dtype=dtype),
-                            norm_table[np.asarray(norms, dtype=np.uint8)],
-                        ),
-                    }
-                )
-
-    return run
+    row_of = [a >> _SHIFT for a in slots]
+    rows = reduce(np.intersect1d, row_of)
+    cuts = [(np.searchsorted(r, rows, "left"), np.searchsorted(r, rows, "right")) for r in row_of]
+    mask = np.int64((1 << 32) - 1)
+    unordered = tree[0] == "near" and not tree[2]
+    freqs = np.zeros(rows.size, dtype=np.int64)
+    for i in range(rows.size):
+        m = match_intervals(
+            tree,
+            {j: (a[lo[i] : hi[i]] & mask).tolist() for j, (a, (lo, hi)) in enumerate(zip(slots, cuts))},
+        )
+        if unordered:
+            emin: dict[int, int] = {}
+            for s, e in m:
+                if s not in emin or e < emin[s]:
+                    emin[s] = e
+            freqs[i] = len(set(emin.values()))
+        else:
+            freqs[i] = len({s for s, _ in m})
+    hit = freqs > 0
+    return rows[hit], freqs[hit]
 
 
 # -- the boolean evaluator ---------------------------------------------------
@@ -732,11 +405,20 @@ def _span_tree_score_fn(
 
 @dataclass(frozen=True)
 class _PlanNode:
-    """One matchable node of a compiled query tree (:func:`_compile`).
+    """One matchable node of a compiled query tree (:func:`_compile`, or
+    one operator's single leaf).
 
     ``kind``: ``terms`` (a term, or an expansion clause: the sum of its
-    terms' scores); ``phrase`` (``terms`` = the phrase tokens); ``docs``
-    (an expansion under a MUST_NOT ancestor: doc ids only, score 0);
+    terms' scores); ``docs`` (an expansion under a MUST_NOT ancestor: doc
+    ids only, score 0); ``phrase`` (a phrase or span: ``terms`` = its
+    tokens, or its slot members in slot order, whose weights sum to its
+    idf; ``slots`` = the term set of each position, None for one token
+    each; ``ordered`` and ``spans``, a span tree over the slots, pick the
+    matcher); ``payload`` (the exact-adjacency spans of ``slots``, scored
+    from the payloads at their positions: ``payload`` = (func,
+    include_span, expected, check_op)); ``const`` (a doc holding any of
+    ``terms`` scores 1, or with ``n`` set, how many of them it holds / n;
+    ``bands``, when set, keeps only docs holding every term of one band);
     ``bool`` (``children`` = (occur, node) pairs).  ``path`` is the
     node's dotted child-index position in the query tree ("" = root).
     ``tie`` is set on a ``{!maxscore}`` root only."""
@@ -750,6 +432,12 @@ class _PlanNode:
     mm: int = 0
     children: tuple[tuple[str, "_PlanNode"], ...] = ()
     tie: float | None = None
+    slots: tuple[tuple[str, ...], ...] | None = None
+    ordered: bool = True
+    spans: tuple | None = None
+    payload: tuple | None = None
+    n: int = 0
+    bands: tuple[tuple[str, ...], ...] | None = None
 
     def walk(self) -> Iterator["_PlanNode"]:
         yield self
@@ -760,8 +448,8 @@ class _PlanNode:
 @dataclass(frozen=True)
 class TreePlan:
     """What :func:`eval_tree` needs besides the postings rows: the compiled
-    tree, the per-term similarity weights, the similarity kernel scoring
-    term leaves, the BM25 kernel scoring phrase leaves, the index's
+    tree, the per-term weights, the similarity kernel scoring term leaves,
+    the BM25 kernel scoring phrase and payload leaves, the index's
     ``salt_range`` and the score dtype."""
 
     root: _PlanNode
@@ -855,8 +543,18 @@ def _compile(
     return walk(tree, "", tie)
 
 
+# payload_check's comparison of each span position's payload
+_CHECK_OPS = {
+    "eq": np.equal,
+    "gt": np.greater,
+    "gte": np.greater_equal,
+    "lt": np.less,
+    "lte": np.less_equal,
+}
+
+
 def eval_tree(
-    rows: pa.Table, plan: TreePlan
+    rows: pa.Table, plan: TreePlan, payloads=None
 ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
     """Evaluate ``plan`` over the postings rows of ONE salt: every node's
     path -> (doc_ids ascending, float64 scores) of the docs it matches.
@@ -871,9 +569,15 @@ def eval_tree(
     - a term scores with the similarity kernel (dtype, like Lucene's float
       scores); an expansion sums its terms' scores, a negated one yields
       doc ids;
-    - a phrase leaf runs :func:`_phrase_freqs` over positions encoded
+    - a phrase leaf runs :func:`_phrase_freqs` (or :func:`_span_freqs`
+      for a span tree) over positions encoded
       ``(doc_id - salt_base) << 32 | pos`` and scores BM25 with tf = the
       phrase freq and idf = the summed token idfs;
+    - a payload leaf finds the exact-adjacency spans of its slots, reads
+      the payloads at their positions from ``payloads(doc_ids)``, rows
+      (doc_id, n, payloads) of at least those docs, and scores them
+      (PayloadScoreQuery / SpanPayloadCheckQuery);
+    - a const leaf scores 1, or its matched-term count / n (min-hash);
     - a boolean node combines its children over their sorted doc ids:
       every MUST child present, at least ``mm`` SHOULD children, no
       MUST_NOT child, score = float64 sum of the positive children times
@@ -887,48 +591,163 @@ def eval_tree(
     doc_ids, tfs, norms, pos_gaps, starts = _decode_rows(rb, salt_range)
     ends = starts + rb.column("n_docs").to_numpy()
     base = int(rb.column("salt")[0].as_py()) * salt_range
-    tfd = tfs.astype(dtype)
-    dl = NORM_TABLE.astype(dtype)[norms]
+    if tfs is not None:  # a tree of doc-id and const leaves reads doc_gaps only
+        tfd = tfs.astype(dtype)
+        dl = NORM_TABLE.astype(dtype)[norms]
     if pos_gaps is not None:
         positions = _undelta_positions(pos_gaps, tfs)
         pos_at = np.cumsum(tfs) - tfs
     rows_of: dict[str, list[int]] = {}
     for i, t in enumerate(rb.column("term").to_pylist()):
         rows_of.setdefault(t, []).append(i)
+    empty = _EMPTY, np.empty(0)
 
-    def postings(t: str) -> np.ndarray:
-        """Indices of ``t``'s postings in the flat arrays, by doc id."""
+    def postings(t: str) -> slice | np.ndarray:
+        """``t``'s postings in the flat arrays, by doc id: a slice when
+        the term has one row in the salt."""
         rs = rows_of.get(t, [])
+        if len(rs) == 1:
+            return slice(starts[rs[0]], ends[rs[0]])
         idx = np.concatenate([_EMPTY] + [np.arange(starts[r], ends[r]) for r in rs])
-        return idx[np.argsort(doc_ids[idx], kind="stable")] if len(rs) > 1 else idx
+        return idx[np.argsort(doc_ids[idx], kind="stable")]
 
     def term_scores(t: str, boost: float) -> tuple[np.ndarray, np.ndarray]:
         idx = postings(t)
         sc = plan.kernel(plan.weights[t], boost, tfd[idx], dl[idx])
         return doc_ids[idx], np.asarray(sc, dtype).astype(np.float64)
 
-    def encoded(idx: np.ndarray) -> np.ndarray:
+    def encoded(idx) -> np.ndarray:
         """(doc_id - base) << 32 | pos over the postings ``idx``."""
         n = tfs[idx]
         at = np.repeat(pos_at[idx] - (np.cumsum(n) - n), n) + np.arange(n.sum())
         return (np.repeat(doc_ids[idx] - base, n) << _SHIFT) + positions[at]
 
+    def positional(node: _PlanNode) -> dict[str, np.ndarray] | None:
+        """Each term of ``node`` -> its encoded positions, or None when a
+        slot has no posting in this salt."""
+        slots = node.slots or [(t,) for t in node.terms]
+        if not all(any(t in rows_of for t in s) for s in slots):
+            return None
+        return {t: encoded(postings(t)) for t in dict.fromkeys(node.terms)}
+
+    def dl_of(docs: np.ndarray, terms) -> np.ndarray:
+        """dl of ``docs``, each holding a posting of one of ``terms``."""
+        got = [postings(t) for t in dict.fromkeys(terms)]
+        d = np.concatenate([doc_ids[i] for i in got])
+        lens = np.concatenate([dl[i] for i in got])
+        if len(got) > 1:
+            order = np.argsort(d, kind="stable")
+            d, lens = d[order], lens[order]
+        return lens[np.searchsorted(d, docs)]
+
+    def weight(node: _PlanNode) -> float:
+        return float(sum(plan.weights[t] for t in node.terms))
+
     def phrase(node: _PlanNode) -> tuple[np.ndarray, np.ndarray]:
-        idx = {t: postings(t) for t in node.terms}
-        if any(i.size == 0 for i in idx.values()):
-            return _EMPTY, np.empty(0)
-        keys, freq = _phrase_freqs(
-            {t: encoded(i) for t, i in idx.items()},
-            list(node.terms),
-            node.slop,
-            lucene_sloppy=not node.window,
-        )
-        first = idx[node.terms[0]]
+        enc = positional(node)
+        if enc is None:
+            return empty
+        if node.spans is None:
+            keys, freq = _phrase_freqs(
+                enc,
+                list(node.terms),
+                node.slop,
+                node.ordered,
+                node.slots,
+                lucene_sloppy=not node.window,
+            )
+        else:
+            keys, freq = _span_freqs(
+                node.spans, [_slot_positions(enc, s) for s in node.slots]
+            )
         docs = keys + base
-        hit = first[np.searchsorted(doc_ids[first], docs)]
-        w = float(sum(plan.weights[t] for t in node.terms))
-        sc = plan.phrase_kernel(w, node.boost, freq.astype(dtype), dl[hit])
+        first = node.slots[0] if node.slots else node.terms[:1]
+        sc = plan.phrase_kernel(
+            weight(node), node.boost, freq.astype(dtype), dl_of(docs, first)
+        )
         return docs, np.asarray(sc, dtype).astype(np.float64)
+
+    def payload(node: _PlanNode) -> tuple[np.ndarray, np.ndarray]:
+        """Spans of every position of slot 0 followed by a position of
+        each next slot at +1, +2, ... (``operator=or``: one slot of every
+        token, each occurrence its own span), scored from their payloads.
+        ``func`` mode (PayloadScoreQuery): func over the payloads of every
+        matched span position, optionally times the span's BM25 (tf =
+        span frequency); a position without a payload (NaN) is skipped
+        like collectLeaf skips null payloads, and a doc whose spans carry
+        none scores 0.  ``expected`` mode (SpanPayloadCheckQuery): docs
+        with >= 1 span whose payloads satisfy ``check_op`` against
+        ``expected`` position by position (NaN satisfies none), scored
+        BM25 with tf = the matching spans."""
+        enc = positional(node)
+        if enc is None:
+            return empty
+        span = _slot_positions(enc, node.slots[0])
+        for i, s in enumerate(node.slots[1:], 1):
+            span = span[np.isin(span + i, _slot_positions(enc, s))]
+        if span.size == 0:
+            return empty
+        docs = np.unique(span >> _SHIFT) + base
+        pay = payloads(docs)  # every doc of a payload index has its row
+        at = pc.index_in(pa.array(docs), value_set=pay["doc_id"]).to_numpy()
+        func, include_span, expected, check_op = node.payload
+        m = len(node.slots)
+        ns = pay["n"].to_numpy()[at]
+        stream = decode_payloads(
+            decode_vbyte(
+                b"".join(pay["payloads"].take(pa.array(at)).to_pylist()), int(ns.sum())
+            ).astype(np.uint32)
+        )
+        row = np.searchsorted(docs - base, span >> _SHIFT)
+        first = (np.cumsum(ns) - ns)[row] + (span & np.int64((1 << 32) - 1))
+        gathered = stream[(first[:, None] + np.arange(m)).ravel()].reshape(-1, m)
+        ok = slice(None)
+        if expected is not None:
+            # NaN (missing payload) fails every comparison op
+            ok = _CHECK_OPS[check_op](
+                gathered, np.asarray(expected, dtype=np.float32)
+            ).all(axis=1)
+        hit, tf = np.unique(row[ok], return_counts=True)
+        if hit.size == 0:
+            return empty
+        docs = docs[hit]
+        score = plan.phrase_kernel(
+            weight(node), node.boost, tf.astype(dtype), dl_of(docs, node.terms)
+        )
+        if expected is None:
+            # segmented reduce over each doc's span payloads (spans are
+            # doc-sorted, so a doc owns tf * m contiguous values); NaN
+            # payloads are skipped (fmin/fmax ignore them, sums fold 0,
+            # the mean divides by the SEEN count, like Lucene's
+            # payloadsSeen), and an all-missing doc scores 0
+            flat = gathered.ravel().astype(np.float64)
+            seg = np.cumsum(tf * m) - tf * m
+            nseen = np.add.reduceat(np.isfinite(flat).astype(np.float64), seg)
+            if func in ("average", "avg", "sum"):
+                vals = np.add.reduceat(np.nan_to_num(flat), seg)
+                if func != "sum":
+                    vals = np.divide(
+                        vals, nseen, out=np.zeros_like(vals), where=nseen > 0
+                    )
+            else:
+                red = np.fmin if func == "min" else np.fmax
+                vals = np.where(nseen > 0, np.nan_to_num(red.reduceat(flat, seg)), 0.0)
+            span_score = score
+            score = vals.astype(dtype)
+            if include_span:
+                score = score * span_score
+        return docs, np.asarray(score, dtype).astype(np.float64)
+
+    def const(node: _PlanNode) -> tuple[np.ndarray, np.ndarray]:
+        of = {t: doc_ids[postings(t)] for t in node.terms}
+        u, count = np.unique(np.concatenate([_EMPTY, *of.values()]), return_counts=True)
+        if node.bands is not None:
+            ok = np.zeros(u.size, dtype=bool)
+            for band in node.bands:
+                ok |= np.isin(u, reduce(np.intersect1d, [of[t] for t in band]))
+            u, count = u[ok], count[ok]
+        score = count / node.n if node.n else np.ones(u.size)
+        return u, np.asarray(score, dtype).astype(np.float64)
 
     def sums(inv: np.ndarray, w: np.ndarray, n: int) -> np.ndarray:
         """Float64 sums of ``w`` per group ``inv`` (also when empty)."""
@@ -968,12 +787,16 @@ def eval_tree(
         return u[keep], score
 
     out: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+    leaf = {"phrase": phrase, "payload": payload, "const": const}
 
     def ev(node: _PlanNode) -> tuple[np.ndarray, np.ndarray]:
         if node.kind == "bool":
             res = combine(node, [(o, ev(c)) for o, c in node.children])
-        elif node.kind == "phrase":
-            res = phrase(node)
+        elif node.kind in leaf:
+            res = leaf[node.kind](node)
+        elif node.kind == "terms" and len(node.terms) == 1:
+            # one term's postings are already unique and ascending
+            res = term_scores(node.terms[0], node.boost)
         elif node.kind == "terms":
             parts = [term_scores(t, node.boost) for t in node.terms]
             u, inv = np.unique(
@@ -990,8 +813,37 @@ def eval_tree(
     return out
 
 
+def _node_rows(keep: list[int]) -> tuple:
+    """A :meth:`SearchEngine._evaluate` output: every node's (path,
+    doc_id, score) rows of the docs ``keep`` (explain, significantTerms)."""
+    schema = pa.schema(
+        [("path", pa.string()), ("doc_id", pa.int64()), ("score", pa.float64())]
+    )
+    # ascending, with a sentinel past every doc id
+    wanted = np.append(np.unique(np.asarray(keep, dtype=np.int64)), _MAX_DOC)
+
+    def run(res: dict) -> pa.Table:
+        paths, ids, scores = [], [_EMPTY], [np.empty(0)]
+        for path, (d, sc) in res.items():
+            m = wanted[np.searchsorted(wanted, d)] == d
+            paths += [path] * int(m.sum())
+            ids.append(d[m])
+            scores.append(sc[m])
+        return pa.table(
+            [paths, np.concatenate(ids), np.concatenate(scores)], schema=schema
+        )
+
+    return schema, run
+
+
 class SearchEngine:
-    """Query-side handle on a built index directory."""
+    """Query-side handle on a built index directory: a point-in-time
+    reader, like a Lucene ``IndexReader`` before reopen.  The engine reads
+    the index as it was at open: the stats, the dictionary, postings and
+    docs files it lists then, and the tombstones (``deletes/``), read
+    then too.  Docs added or deleted after open stay invisible to it, and
+    after ``optimize`` (which rewrites those files) it must be reopened;
+    open a new engine to see any update."""
 
     def __init__(
         self,
@@ -1061,6 +913,7 @@ class SearchEngine:
         self._stored_docs = _snapshot(self.docs)
         self._dict = _snapshot(self.dictionary)
         self._postings = _snapshot(self.postings, pa.field("bucket", pa.int32()))
+        self._payloads = None  # listed by the first payload query
         self._driver_budget = _driver_budget()
         self._dtype = np.float64 if cfg.score_dtype == "float64" else np.float32
         self._sql_t = "double" if cfg.score_dtype == "float64" else "float"
@@ -1164,33 +1017,6 @@ class SearchEngine:
             )
         }
 
-    def _idfs(self, rows: pa.Table) -> dict[str, float]:
-        """BM25 idf per term of the aggregated dictionary rows ``rows``:
-        the weights of the span and payload paths."""
-        n_docs = self.stats["N"]
-        return {
-            t: float(bm25_idf(n_docs, df, dtype=self._dtype))
-            for t, df in zip(rows["term"].to_pylist(), rows["df"].to_pylist())
-        }
-
-    def _scored(
-        self,
-        blocks: DataFrame,
-        weight_by_term: dict[str, float],
-        boost_by_term: dict[str, float] | None = None,
-        kernel=None,
-    ) -> DataFrame:
-        fn = _score_fn(
-            weight_by_term,
-            kernel if kernel is not None else self._kernel,
-            boost_by_term,
-            self.cfg.salt_range,
-            dtype=self._dtype,
-        )
-        return blocks.select(
-            "term", "salt", "n_docs", "doc_gaps", "tfs", "norms"
-        ).mapInArrow(fn, schema=f"term string, doc_id long, score {self._sql_t}")
-
     def _expand_rows(self, cl, max_expansions: int | None = 128) -> pa.Table:
         """Resolve a prefix/wildcard/fuzzy/range clause against the term
         dictionary (the FST-seek analog: one driver read of the small
@@ -1246,108 +1072,47 @@ class SearchEngine:
         )
         return rows.take(order[:max_expansions])
 
-    def _docs_of(self, blocks: DataFrame) -> DataFrame:
-        """(term, doc_id) of every posting in ``blocks`` — the lightest
-        decode (doc gaps only), for clauses that only exclude or count."""
-        return blocks.select("term", "salt", "n_docs", "doc_gaps").mapInArrow(
-            _docs_fn(self.cfg.salt_range), schema="term string, doc_id long"
-        )
-
-    def _doc_plists(self, blocks: DataFrame, gate: Column | None) -> DataFrame:
-        """(doc_id, norm, plists) of the docs in ``blocks``, plists =
-        [(term, positions[])] of the doc's postings.  ``gate`` is an
-        aggregate Column over a group of postings rows (e.g. "every phrase
-        term present"): a salt whose rows fail it is dropped before any
-        decode, a doc whose postings fail it after; None keeps every doc."""
-        if gate is not None:
-            ok = blocks.groupBy("salt").agg(gate.alias("ok")).filter("ok")
-            blocks = blocks.join(ok.select("salt"), "salt", "left_semi")
-        decoded = blocks.select(
-            "term", "salt", "n_docs", "doc_gaps", "tfs", "norms", "positions"
-        ).mapInArrow(
-            _positions_fn(self.cfg.salt_range),
-            schema="term string, doc_id long, norm int, positions array<long>",
-        )
-        aggs = [
-            F.first("norm").alias("norm"),
-            F.collect_list(F.struct("term", "positions")).alias("plists"),
-        ]
-        if gate is None:
-            return decoded.groupBy("doc_id").agg(*aggs)
-        return (
-            decoded.groupBy("doc_id")
-            .agg(*aggs, gate.alias("ok"))
-            .filter("ok")
-            .select("doc_id", "norm", "plists")
-        )
-
-    def _phrase_frame(
+    def _span_search(
         self,
-        ptoks: list[str],
-        meta: pa.Table,
+        slots: list[tuple[str, ...]],
+        k: int,
+        with_url: bool,
         slop: int = 0,
         ordered: bool = True,
-        slots: list[tuple[str, ...]] | None = None,
-        tree=None,
+        spans=None,
     ) -> DataFrame:
-        """(doc_id, score) of docs matching the span over ``ptoks``, whose
-        terms' aggregated dictionary rows are ``meta`` (``slop=0``: exact
-        adjacency; ``slop>0``: ordered window; ``ordered=False``:
-        unordered minimal-window — see _phrase_freqs).  ``slots``
-        switches to per-position term SETS (complexphrase): the salt/doc
-        gates then require >=1 member of EVERY slot instead of every term.
-        ``tree`` (a slot-level span tree, see span_tree/query/spans.py)
-        swaps the final matcher for the nested-interval evaluator; the
-        scan/gate/decode pipeline is shared.
-
-        Scale shape: the scan prunes to the phrase terms' buckets AND to the
-        salt ranges containing ALL constituent terms (one member per slot in
-        slot mode) before any decode; the position intersection then runs
-        only on docs passing that gate, which for a selective phrase is a
-        tiny set.
-        """
+        """The top-k of one span leaf over ``slots``, the term set of each
+        position (span_near, complex_phrase, span_tree): a slot member
+        missing from the dictionary can never match, and a slot with no
+        member present makes the span unmatchable.  ``slop=0`` is exact
+        adjacency, ``slop>0`` an ordered window, ``ordered=False`` the
+        unordered minimal window (:func:`_phrase_freqs`); ``spans`` (a
+        slot-level span tree, query/spans.py) swaps in the nested-interval
+        matcher (:func:`_span_freqs`).  Docs score BM25 with tf = the span
+        frequency and idf = the summed idfs of every slot member
+        (SpanWeight aggregates the statistics of ALL terms under the
+        query; the expansion cap bounds the sum)."""
+        rows = self._term_rows(sorted({t for s in slots for t in s}))
+        found = set(rows["term"].to_pylist())
+        slots = tuple(tuple(t for t in s if t in found) for s in slots)
+        if any(not s for s in slots):
+            return self._page(_NO_HITS, with_url)
         if not self.cfg.store_positions:
             raise NotImplementedError(
                 "index built with store_positions=False; phrase queries "
                 "unavailable (rebuild with store_positions=True)"
             )
-        uniq = sorted(set(ptoks))
-        blocks = self._blocks_for(meta)
-        if slots is None:
-            covered = F.count_distinct("term")
-            n_gate = len(uniq)
-        else:
-            # term -> ARRAY of slot ids it can satisfy (a term may serve
-            # several slots); the gate counts covered SLOTS — a doc/salt
-            # passes iff every slot has >=1 member present.  The map is
-            # query-sized: it compiles to a literal expression, no join.
-            slot_ids: dict[str, list[int]] = {}
-            for i, s in enumerate(slots):
-                for t in s:
-                    slot_ids.setdefault(t, []).append(i)
-            slot_map = F.create_map(
-                *[
-                    x
-                    for t, ids in sorted(slot_ids.items())
-                    for x in (F.lit(t), F.array(*[F.lit(i) for i in ids]))
-                ]
-            )
-            covered = F.size(
-                F.array_distinct(
-                    F.flatten(F.collect_list(slot_map[F.col("term")]))
-                )
-            )
-            n_gate = len(slots)
-        grouped = self._doc_plists(blocks, covered == n_gate)
-        idf_by_term = self._idfs(meta)
-        sum_idf = float(sum(idf_by_term[t] for t in ptoks))
-        if tree is not None:
-            fn = _span_tree_score_fn(tree, slots, sum_idf, self._bm25, self._dtype)
-        else:
-            fn = _phrase_score_fn(
-                ptoks, sum_idf, self._bm25, self._dtype, slop, ordered, slots
-            )
-        return grouped.mapInPandas(fn, schema=f"doc_id long, score {self._sql_t}")
+        node = _PlanNode(
+            "",
+            "phrase",
+            tuple(t for s in slots for t in s),
+            slop=slop,
+            window=True,
+            slots=slots,
+            ordered=ordered,
+            spans=spans,
+        )
+        return self._search_plan(node, self._weights(rows), rows, k, with_url=with_url)
 
     def span_near(
         self,
@@ -1381,14 +1146,9 @@ class SearchEngine:
             toks = sorted(set(toks))
         if not toks:
             return self._page(_NO_HITS, with_url)
-        meta = self._term_rows(sorted(set(toks)))
-        found = set(meta["term"].to_pylist())
-        if any(t not in found for t in toks):
-            return self._page(_NO_HITS, with_url)
-        frame = self._phrase_frame(toks, meta, slop=dist - 1, ordered=ordered)
-        if self.deletes is not None:
-            frame = frame.join(self.deletes, "doc_id", "left_anti")
-        return self._finalize(frame, k, with_url)
+        return self._span_search(
+            [(t,) for t in toks], k, with_url, slop=dist - 1, ordered=ordered
+        )
 
     def minhash_search(
         self,
@@ -1414,10 +1174,9 @@ class SearchEngine:
         scores all matched tokens, so banding changes the candidate set
         (by design), never a surviving doc's score.
 
-        Scale shape: one bucket- and term-pruned postings scan through
-        the shared vectorized decode (constant kernel), one
-        groupBy(doc_id) count, top-k via _finalize; the band map is a
-        <=512-row broadcast join.
+        Scale shape: one ``const`` leaf of :func:`eval_tree` over the
+        signature's terms; the overlap count and the band gate are numpy
+        per salt.
         """
         if self.cfg.analyzer != "min_hash":
             raise NotImplementedError(
@@ -1433,70 +1192,41 @@ class SearchEngine:
             else self._analyze(text)
         )
         n = len(toks)
-        if not toks:
+        rows = self._term_rows(sorted(set(toks)))
+        found = rows["term"].to_pylist()
+        have = set(found)
+        if not found:
             return self._page(_NO_HITS, with_url)
-        meta = self._term_rows(sorted(set(toks)))
-        found = set(meta["term"].to_pylist())
-        qtoks = [t for t in toks if t in found]
-        if not qtoks:
-            return self._page(_NO_HITS, with_url)
-        dtype = self._dtype  # local capture: the kernel ships to executors
-        ones = lambda w, b, tfs, dl: np.full(  # noqa: E731
-            len(tfs), b, dtype=dtype
-        )
-        frame = self._scored(
-            self._blocks_for(meta),
-            {t: 1.0 for t in set(qtoks)},
-            kernel=ones,
-        )
+        bands = None
         if sim is not None and tp < 1.0:
             from apache___solr_spark.analysis.minhash import compute_band_size
 
-            rows = compute_band_size(n, float(sim), float(tp))
-            if rows > 1:
-                # band = `rows` consecutive signature positions; a doc
-                # qualifies when some band matches completely
-                bands = [(t, i // rows) for i, t in enumerate(toks)]
-                sizes: dict[int, int] = {}
-                for _t, b in bands:
-                    sizes[b] = sizes.get(b, 0) + 1
-                bmap = F.broadcast(
-                    self.spark.createDataFrame(
-                        [(t, b, sizes[b]) for t, b in bands],
-                        "term string, band int, band_n int",
-                    )
+            size = compute_band_size(n, float(sim), float(tp))
+            if size > 1:
+                # band = `size` consecutive signature positions; a doc
+                # qualifies when it holds every token of some band (a band
+                # repeating a token, or holding a missing one, never does)
+                bands = tuple(
+                    band
+                    for band in (tuple(toks[i : i + size]) for i in range(0, n, size))
+                    if len(set(band)) == len(band) and set(band) <= have
                 )
-                ok = (
-                    frame.join(bmap, "term")
-                    .groupBy("doc_id", "band", "band_n")
-                    .agg(F.count_distinct("term").alias("nt"))
-                    .filter(F.col("nt") == F.col("band_n"))
-                    .select("doc_id")
-                    .distinct()
-                )
-                frame = frame.join(ok, "doc_id", "left_semi")
-        scored = frame.groupBy("doc_id").agg(
-            (F.count_distinct("term") / F.lit(float(n)))
-            .cast(self._sql_t)
-            .alias("score")
-        )
-        if self.deletes is not None:
-            scored = scored.join(self.deletes, "doc_id", "left_anti")
-        return self._finalize(scored, k, with_url)
+                if not bands:
+                    return self._page(_NO_HITS, with_url)
+        node = _PlanNode("", "const", tuple(found), n=n, bands=bands)
+        return self._search_plan(node, {}, rows, k, with_url=with_url)
 
-    def _payload_candidates(
-        self, ptoks: list[str], require_all: bool = True
-    ) -> DataFrame | None:
-        """(doc_id, norm, plists, n, payloads) for docs containing every
-        query token (``require_all=False``, the SpanOr operator=or form:
-        ANY token), with the per-doc payload stream joined in.  Same
-        _doc_plists pipeline as _phrase_frame; the payload side table is
-        doc_id-range-partitioned so the join is a ranged sort-merge
-        against a candidate set the postings already pruned."""
-        import os
-
-        pay_dir = self.paths.payloads
-        if not os.path.isdir(pay_dir):
+    def _payload_search(
+        self, toks: list[str], k: int, with_url: bool, operator: str, payload: tuple
+    ) -> DataFrame:
+        """The top-k of one payload leaf over the query tokens ``toks``:
+        their exact-adjacency phrase, or with ``operator="or"`` every
+        occurrence of any of them (SpanOrQuery).  The span score is BM25
+        under every similarity, idf summed over the tokens with
+        duplicates counted (the engine's phrase scoring)."""
+        if not toks:
+            return self._page(_NO_HITS, with_url)
+        if not os.path.isdir(self.paths.payloads):
             raise NotImplementedError(
                 "index has no payload side table — build with "
                 "analyzer='whitespace_payload'"
@@ -1505,43 +1235,24 @@ class SearchEngine:
             raise NotImplementedError(
                 "payload queries need positions (store_positions=True)"
             )
-        uniq = sorted(set(ptoks))
-        meta = self._term_rows(uniq)
-        found = set(meta["term"].to_pylist())
-        if require_all:
-            if len(found) < len(uniq):
-                return None
-        elif not found:
-            return None
-        grouped = self._doc_plists(
-            self._blocks_for(meta),
-            F.count_distinct("term") == len(uniq) if require_all else None,
-        )
-        pay = self.spark.read.parquet(pay_dir)
-        out = grouped.join(pay, "doc_id")
-        if self.deletes is not None:
-            out = out.join(self.deletes, "doc_id", "left_anti")
-        return out
-
-    def _payload_run(
-        self, query_text: str, k: int, with_url: bool, mode_kw: dict
-    ) -> DataFrame:
-        toks = self._analyze(query_text)
-        if not toks:
+        rows = self._term_rows(sorted(set(toks)))
+        found = rows["term"].to_pylist()
+        if not found or (operator != "or" and len(found) < len(set(toks))):
             return self._page(_NO_HITS, with_url)
-        cands = self._payload_candidates(
-            toks, require_all=mode_kw.get("operator", "phrase") != "or"
+        slots = (tuple(found),) if operator == "or" else tuple((t,) for t in toks)
+        n_docs = self.stats["N"]
+        weights = {
+            t: float(bm25_idf(n_docs, df, dtype=self._dtype))
+            for t, df in zip(found, rows["df"].to_pylist())
+        }
+        node = _PlanNode(
+            "",
+            "payload",
+            tuple(t for t in toks if t in weights),
+            slots=slots,
+            payload=payload,
         )
-        if cands is None:
-            return self._page(_NO_HITS, with_url)
-        idf_by_term = self._idfs(self._term_rows(sorted(set(toks))))
-        # duplicates counted, like _phrase_frame's sum over ptoks
-        sum_idf = float(sum(idf_by_term.get(t, 0.0) for t in toks))
-        fn = _payload_eval_fn(toks, sum_idf, self._bm25, self._dtype, **mode_kw)
-        scored = cands.mapInPandas(
-            fn, schema=f"doc_id long, score {self._sql_t}"
-        )
-        return self._finalize(scored, k, with_url)
+        return self._search_plan(node, weights, rows, k, with_url=with_url)
 
     def payload_score(
         self,
@@ -1561,20 +1272,22 @@ class SearchEngine:
         without a payload are skipped, like collectLeaf skips null
         payloads — times the span's BM25 score when ``includeSpanScore``
         (tf = span frequency, idf summed over constituents with
-        duplicates counted — the engine's phrase scoring)."""
+        duplicates counted — the engine's phrase scoring).
+
+        Scale shape: one ``payload`` leaf of :func:`eval_tree`; each
+        salt's payload rows are a pyarrow read of the matched docs on the
+        driver, or shuffled into the salt's group with its postings in
+        Spark."""
         if func not in ("min", "max", "average", "avg", "sum"):
             raise ValueError(f"unknown payload func {func!r}")
         if operator not in ("phrase", "or"):
             raise ValueError(f"unknown payload operator {operator!r}")
-        return self._payload_run(
-            query_text,
+        return self._payload_search(
+            self._analyze(query_text),
             k,
             with_url,
-            {
-                "func": func,
-                "include_span": include_span_score,
-                "operator": operator,
-            },
+            operator,
+            (func, include_span_score, None, "eq"),
         )
 
     def payload_check(
@@ -1592,18 +1305,15 @@ class SearchEngine:
         the given values, position by position; a missing payload never
         satisfies any operation.  Matches score like the underlying
         span (BM25 with tf = matching-span frequency)."""
-        if op not in ("eq", "gt", "gte", "lt", "lte"):
+        if op not in _CHECK_OPS:
             raise ValueError(f"unknown payload_check op {op!r}")
         toks = self._analyze(query_text)
         if toks and len(payloads) != len(toks):
             raise ValueError(
                 f"payloads count {len(payloads)} != query tokens {len(toks)}"
             )
-        return self._payload_run(
-            query_text,
-            k,
-            with_url,
-            {"expected": list(payloads), "check_op": op},
+        return self._payload_search(
+            toks, k, with_url, "phrase", (None, False, tuple(payloads), op)
         )
 
     def _resolve_span_operand(
@@ -1663,11 +1373,9 @@ class SearchEngine:
         scores identically to span_near/complex_phrase — and idf = the
         summed idfs of every slot member (SpanWeight aggregation).
 
-        Scale shape: identical to the phrase path — bucket- and salt-gated
-        scan, one positions decode, per-doc interval algebra inside the
-        Arrow batch (candidates already passed the every-slot gate, so
-        the per-doc Python matcher runs on the tiny qualifying set, like
-        the complexphrase matcher before vectorization).
+        Scale shape: one span leaf of :func:`eval_tree`, so the same read
+        and placement as a phrase query; the per-doc interval algebra
+        runs only on the docs of a salt holding every slot.
         """
         if not self.sim.supports_phrases:
             raise NotImplementedError(
@@ -1705,17 +1413,7 @@ class SearchEngine:
         tree = build(spec)
         if unmatchable or not slots:
             return self._page(_NO_HITS, with_url)
-        ptoks = [t for s in slots for t in s]
-        meta = self._term_rows(sorted(set(ptoks)))
-        found = set(meta["term"].to_pylist())
-        slots = [tuple(t for t in s if t in found) for s in slots]
-        if any(not s for s in slots):
-            return self._page(_NO_HITS, with_url)
-        ptoks = [t for s in slots for t in s]
-        frame = self._phrase_frame(ptoks, meta, slots=slots, tree=tree)
-        if self.deletes is not None:
-            frame = frame.join(self.deletes, "doc_id", "left_anti")
-        return self._finalize(frame, k, with_url)
+        return self._span_search(slots, k, with_url, spans=tree)
 
     def complex_phrase(
         self,
@@ -1754,27 +1452,7 @@ class SearchEngine:
             slots.extend(groups)
         if not slots:
             return self._page(_NO_HITS, with_url)
-        ptoks = [t for s in slots for t in s]
-        meta = self._term_rows(sorted(set(ptoks)))
-        found = set(meta["term"].to_pylist())
-        # a slot member missing from the dictionary can never match; a
-        # slot with NO present member makes the whole span unmatchable
-        slots = tuple(
-            tuple(t for t in s if t in found) for s in slots
-        )
-        if any(not s for s in slots):
-            return self._page(_NO_HITS, with_url)
-        ptoks = [t for s in slots for t in s]
-        frame = self._phrase_frame(
-            ptoks,
-            meta,
-            slop=slop,
-            ordered=ordered,
-            slots=[tuple(s) for s in slots],
-        )
-        if self.deletes is not None:
-            frame = frame.join(self.deletes, "doc_id", "left_anti")
-        return self._finalize(frame, k, with_url)
+        return self._span_search(slots, k, with_url, slop=slop, ordered=ordered)
 
     def search(
         self,
@@ -2121,18 +1799,23 @@ class SearchEngine:
             pa.concat_tables([rows, *excluded]),
         )
 
+    def _tree_plan(self, root: _PlanNode, weights: dict) -> TreePlan:
+        return TreePlan(
+            root, weights, self._kernel, self._bm25, self.cfg.salt_range, self._dtype
+        )
+
     def _evaluate(
         self,
-        root: _PlanNode,
-        weights: dict,
+        plan: TreePlan,
         dict_rows: pa.Table,
         budget: int,
         salts: list[int] | None = None,
-        keep: list[int] | None = None,
+        out: tuple | None = None,
     ) -> pa.Table | DataFrame:
         """Run :func:`eval_tree` once per salt over the postings of every
-        term ``root`` reads (positions selected only when it holds a
-        phrase), in one of two placements of the same kernel:
+        term ``plan`` reads (tfs and norms only when it scores postings,
+        positions only when it holds a phrase, span or payload leaf), in
+        one of two placements of the same kernel:
 
         - *driver*: a pyarrow read of the bucket- and term-pruned postings
           files captured at engine open (:meth:`_read_postings`), split by
@@ -2142,66 +1825,74 @@ class SearchEngine:
 
         The driver placement runs when the query's work fits ``budget``
         (``self._driver_budget``, :func:`_driver_budget`, or 0 to keep a
-        query in Spark).  The work is the summed df of the terms ``root``
+        query in Spark).  The work is the summed df of the terms ``plan``
         reads, plus their summed cf when positions are read, from
-        ``dict_rows``, the dictionary rows :meth:`_plan` read (which also
-        give the terms' buckets), plus ``_TERM_SALT_POSTINGS`` for each
-        term of the tree in each salt of the index.  Both placements return the
-        root's (doc_id, score double) rows; with ``keep`` (explain), every
-        node's (path, doc_id, score) rows of the docs in ``keep`` instead,
-        as an Arrow table on either placement.  ``salts`` prunes the
-        read."""
-        nodes = list(root.walk())
-        cols = ["term", "salt", "n_docs", "doc_gaps", "tfs", "norms"]
-        phrase = any(n.kind == "phrase" for n in nodes)
-        if phrase:
+        ``dict_rows``, the dictionary rows planning read (which also give
+        the terms' buckets), plus ``_TERM_SALT_POSTINGS`` for each term of
+        the tree in each salt of the index.  A payload leaf reads its
+        salt's payload rows: on the driver a pyarrow read of its matched
+        docs (:meth:`_payload_rows`), in Spark the payload side table's
+        rows of the salt, shuffled into its group with the postings.
+
+        Both placements return the root's (doc_id, score double) rows.
+        ``out`` = (schema, fn) maps each salt's :func:`eval_tree` output to
+        other rows (e.g. :func:`_node_rows`), returned as
+        an Arrow table on either placement.  ``salts`` prunes the read."""
+        nodes = list(plan.root.walk())
+        kinds = {n.kind for n in nodes}
+        cols = ["term", "salt", "n_docs", "doc_gaps"]
+        if kinds - {"bool", "docs", "const"}:
+            cols += ["tfs", "norms"]
+        if kinds & {"phrase", "payload"}:
             cols.append("positions")
         terms = pa.array(sorted({t for n in nodes for t in n.terms}), pa.string())
         read = dict_rows.take(pc.index_in(terms, value_set=dict_rows["term"]))
-        plan = TreePlan(
-            root, weights, self._kernel, self._bm25, self.cfg.salt_range, self._dtype
-        )
-        if keep is None:
-            schema = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
+        schema, per_salt = out or (_NO_HITS.schema, None)
+        path = plan.root.path
 
-            def run(rows: pa.Table) -> pa.Table:
-                ids, scores = eval_tree(rows, plan)[root.path]
-                return pa.table([ids, scores], schema=schema)
-
-        else:
-            schema = pa.schema(
-                [("path", pa.string()), ("doc_id", pa.int64()), ("score", pa.float64())]
-            )
-            wanted = np.asarray(sorted(keep), dtype=np.int64)
-
-            def run(rows: pa.Table) -> pa.Table:
-                paths, ids, scores = [], [], []
-                for path, (d, sc) in eval_tree(rows, plan).items():
-                    m = np.isin(d, wanted)
-                    paths += [path] * int(m.sum())
-                    ids.append(d[m])
-                    scores.append(sc[m])
-                return pa.table(
-                    [paths, np.concatenate(ids), np.concatenate(scores)],
-                    schema=schema,
-                )
+        def run(rows, payloads=None):
+            if rows.num_rows == 0:
+                return schema.empty_table()
+            res = eval_tree(rows, plan, payloads)
+            return per_salt(res) if per_salt else pa.table(list(res[path]), schema=schema)
 
         n_salts = -(-int(self.stats["N"]) // self.cfg.salt_range)
         work = pc.sum(read["df"]).as_py() + _TERM_SALT_POSTINGS * n_salts * sum(
             len(n.terms) for n in nodes
         )
-        if phrase:
+        if "positions" in cols:
             work += pc.sum(read["cf"]).as_py()
         if work > budget:
             blocks = self._blocks_for(read)
             if salts is not None:
                 blocks = blocks.filter(F.col("salt").isin(salts))
-            out = (
-                blocks.select(*cols)
-                .groupBy("salt")
-                .applyInArrow(run, from_arrow_schema(schema))
+            blocks = blocks.select(*cols)
+            salt_run = run
+            if "payload" in kinds:
+                # the payload rows join their salt's group as rows with no
+                # term: one scan of each table, one shuffle
+                pay = (
+                    self.spark.read.schema("doc_id long, n long, payloads binary")
+                    .parquet(self.paths.payloads)
+                    .withColumn(
+                        "salt", (F.col("doc_id") / self.cfg.salt_range).cast("long")
+                    )
+                )
+                if salts is not None:
+                    pay = pay.filter(F.col("salt").isin(salts))
+                blocks = blocks.unionByName(pay, allowMissingColumns=True)
+
+                def salt_run(rows):
+                    side = pc.is_null(rows["term"])
+                    pay_rows = rows.filter(side)
+                    postings = rows.filter(pc.invert(side)).select(cols)
+                    return run(postings, lambda _docs: pay_rows)
+
+            # a one-argument fn: applyInArrow reads two as (key, rows)
+            res = blocks.groupBy("salt").applyInArrow(
+                lambda rows: salt_run(rows), from_arrow_schema(schema)
             )
-            return out if keep is None else out.toArrow()
+            return res if out is None else res.toArrow()
         postings = self._read_postings(read, cols, salts)
         if postings.num_rows == 0:
             return schema.empty_table()
@@ -2209,9 +1900,23 @@ class SearchEngine:
         order = np.argsort(salt, kind="stable")
         postings = postings.take(order)
         cuts = (np.flatnonzero(np.diff(salt[order])) + 1).tolist()
+        payloads = self._payload_rows if "payload" in kinds else None
         return pa.concat_tables(
-            run(postings.slice(lo, hi - lo))
+            run(postings.slice(lo, hi - lo), payloads)
             for lo, hi in zip([0, *cuts], [*cuts, len(salt)])
+        )
+
+    def _payload_rows(self, docs: np.ndarray) -> pa.Table:
+        """The payload side table's (doc_id, n, payloads) rows of ``docs``:
+        a pyarrow read on the driver with the doc_id predicate pushed down
+        to the row groups of the doc_id-range-partitioned files.  The side
+        table is listed at the engine's first payload query, so no other
+        query opens it."""
+        if self._payloads is None:
+            self._payloads = pads.dataset(self.paths.payloads, format="parquet")
+        return self._payloads.to_table(
+            columns=["doc_id", "n", "payloads"],
+            filter=pc.field("doc_id").isin(pa.array(docs)),
         )
 
     def _read_postings(
@@ -2234,8 +1939,8 @@ class SearchEngine:
         """The explain walker: explain_scores_tree's rows for the top-k
         hits of ``tree``, each with the node's bare term (its label for a
         non-term node) appended.  Every node's score per hit doc comes from
-        the query's own evaluator (:meth:`_evaluate` with ``keep`` = the
-        hits, its scan pruned to their salts)."""
+        the query's own evaluator (:meth:`_evaluate` with
+        :func:`_node_rows` of the hits, its read pruned to their salts)."""
         hits = self._search_tree(tree, k=k, with_url=False).select(
             "rank", "doc_id", "score"
         ).collect()
@@ -2248,7 +1953,11 @@ class SearchEngine:
         root = _compile(tree, resolved, found, self.sim, self.cfg.store_positions)
         salts = sorted({d // self.cfg.salt_range for d in doc_ids})
         res = self._evaluate(
-            root, weights, dict_rows, self._driver_budget, salts, keep=doc_ids
+            self._tree_plan(root, weights),
+            dict_rows,
+            self._driver_budget,
+            salts,
+            _node_rows(doc_ids),
         )
         node_scores: dict[str, dict[int, float]] = {}
         for r in res.to_pylist():
@@ -2358,27 +2067,14 @@ class SearchEngine:
         """{!terms} (TermsQParserPlugin.java): set-membership filter over
         the indexed field — docs containing ANY of the RAW values (no
         analysis, matching the reference), constant score 1
-        (ConstantScoreQuery).  The scan prunes to the values' buckets with
-        the term predicate pushed down; intended for large IN lists where
-        the classic grammar would be unwieldy."""
+        (ConstantScoreQuery): one ``const`` leaf of :func:`eval_tree`,
+        intended for large IN lists where the classic grammar would be
+        unwieldy."""
         rows = self._term_rows(sorted({str(v) for v in values if v}))
         if rows.num_rows == 0:
             return self._page(_NO_HITS, with_url)
-        from apache___solr_spark.query.similarities import BooleanSimilarity
-
-        scored = self._scored(
-            self._blocks_for(rows),
-            {v: 1.0 for v in rows["term"].to_pylist()},
-            kernel=BooleanSimilarity().kernel(
-                self.stats["avgdl"], dtype=self._dtype
-            ),
-        )
-        frame = scored.groupBy("doc_id").agg(
-            F.lit(1.0).cast(self._sql_t).alias("score")
-        )
-        if self.deletes is not None:
-            frame = frame.join(self.deletes, "doc_id", "left_anti")
-        return self._finalize(frame, k, with_url)
+        node = _PlanNode("", "const", tuple(rows["term"].to_pylist()))
+        return self._search_plan(node, {}, rows, k, with_url=with_url)
 
     def _depth(self, k: int, start: int) -> int:
         """The collector depth of a page: start+k (SolrIndexSearcher
@@ -2530,18 +2226,7 @@ class SearchEngine:
 
         Scale shape: planning (:meth:`_plan`, :func:`_compile`) runs on the
         driver with no Spark job and settles every never-matches rule
-        before any read.  Evaluation is :func:`eval_tree` per salt over
-        the postings of every term the query reads, placed by
-        :meth:`_evaluate` from the query's work.  Within the
-        driver budget, the postings are a pyarrow read and ``doc_filter``
-        (which also prunes the read to its salts), the tombstones and the
-        top-k are numpy on the driver: the query runs no Spark job.
-        Above it, and for every query with a Spark tail (fq, ``bf``,
-        ``boost``, docset()/scored_docset()), evaluation is ONE bucket-
-        and term-pruned scan, one shuffle by salt and one Python stage;
-        ``doc_filter``, the deletes anti-join, the fq semi-join,
-        ``bf``/``boost`` and the top-k are Spark operations in the same
-        plan, with no collects and no persisted frames before the top-k.
+        before any read; evaluation is :meth:`_search_plan`.
         """
         if should_combine not in ("sum", "max"):
             raise ValueError(f"unknown should_combine {should_combine!r}")
@@ -2554,6 +2239,51 @@ class SearchEngine:
             self.cfg.store_positions,
             tie=float(tie) if should_combine == "max" else None,
         )
+        return self._search_plan(
+            root,
+            weights,
+            dict_rows,
+            k,
+            start,
+            with_url,
+            doc_filter,
+            bf,
+            boost,
+            _docset,
+            _filter_docset,
+        )
+
+    def _search_plan(
+        self,
+        root: _PlanNode | None,
+        weights: dict,
+        dict_rows: pa.Table,
+        k: int = 10,
+        start: int = 0,
+        with_url: bool = True,
+        doc_filter: list[int] | None = None,
+        bf: list | None = None,
+        boost: list | None = None,
+        _docset: bool | str = False,
+        _filter_docset: DataFrame | None = None,
+    ) -> DataFrame:
+        """The page (or docset) of a compiled tree ``root`` (None: it can
+        never match), whose terms' weights and dictionary rows planning
+        read: the one evaluation path of every query, boolean trees and
+        the span, payload and constant-score operators alike.
+
+        Scale shape: :func:`eval_tree` per salt over the postings of
+        every term the tree reads, placed by :meth:`_evaluate` from the
+        query's work.  Within the driver budget, the postings are a
+        pyarrow read and ``doc_filter`` (which also prunes the read to its
+        salts), the tombstones and the top-k are numpy on the driver: the
+        query runs no Spark job.  Above it, and for every query with a
+        Spark tail (fq, ``bf``, ``boost``, docset()/scored_docset()),
+        evaluation is ONE bucket- and term-pruned scan, one shuffle by
+        salt and one Python stage; ``doc_filter``, the deletes anti-join,
+        the fq semi-join, ``bf``/``boost`` and the top-k are Spark
+        operations in the same plan, with no collects and no persisted
+        frames before the top-k."""
         if root is None:
             return self._page(_NO_HITS, with_url)
         salts = (
@@ -2569,7 +2299,10 @@ class SearchEngine:
         # time, so the whole query keeps the one Spark plan
         tail = _docset or bf or boost or _filter_docset is not None
         res = self._evaluate(
-            root, weights, dict_rows, 0 if tail else self._driver_budget, salts
+            self._tree_plan(root, weights),
+            dict_rows,
+            0 if tail else self._driver_budget,
+            salts,
         )
         if isinstance(res, pa.Table):  # the driver placement
             ids = res["doc_id"].to_numpy()

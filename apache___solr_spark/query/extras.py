@@ -13,11 +13,17 @@ Reference surface:
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from apache___solr_spark.query.engine import SearchEngine, bm25_idf
+from apache___solr_spark.query.engine import (
+    SearchEngine,
+    _node_rows,
+    _PlanNode,
+    bm25_idf,
+)
 from apache___solr_spark.query.parser import ParsedQuery
 
 
@@ -404,11 +410,12 @@ def significant_terms_index(
 
     Scale shape: the term-length gate and the docFreq window (on the df
     summed over segments) filter the DICTIONARY first, on the driver; the
-    candidates restrict the postings scan (a bucket-pruned semi-join
-    against an Arrow LocalRelation past the literal cap); only doc_gaps
-    decode (no tfs/norms/positions); the foreground intersection is one
-    semi-join + groupBy(term).  The reference walks every term's postings
-    per shard — this is the same scan expressed as one distributed job."""
+    foreground's doc ids are collected, and one query tree (a doc-id leaf
+    per candidate term) runs through the engine's one evaluator, whose
+    per-node rows of the foreground docs give each term's queryDocFreq
+    (only doc_gaps decode; no tfs/norms/positions).  The reference walks
+    every term's postings per shard — this is the same read, placed on the
+    driver or in Spark by the query's work."""
     n_docs = engine.stats["N"]
     fg = engine.docset(query)
     for f in fq or []:
@@ -431,18 +438,41 @@ def significant_terms_index(
     rows = rows.filter(
         pc.and_(pc.greater_equal(rows["df"], lo), pc.less_equal(rows["df"], hi))
     )
-    cand = engine.spark.createDataFrame(
-        rows.select(["term", "df"]), "term string, df long"
-    )
-    pairs = engine._docs_of(engine._blocks_for(rows))
-    fg_tf = (
-        pairs.join(fg, "doc_id", "left_semi")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("queryDocFreq"))
+    terms = rows["term"].to_pylist()
+    keep = fg.toArrow()["doc_id"].to_numpy()
+    qdf: dict[str, int] = {}
+    if terms and keep.size:
+        root = _PlanNode(
+            "",
+            "bool",
+            children=tuple(
+                ("SHOULD", _PlanNode(str(i), "docs", (t,)))
+                for i, t in enumerate(terms)
+            ),
+        )
+        got = engine._evaluate(
+            engine._tree_plan(root, {}),
+            rows,
+            engine._driver_budget,
+            out=_node_rows(keep),
+        )
+        got = got.group_by("path").aggregate([("doc_id", "count")])
+        for path, n in zip(got["path"].to_pylist(), got["doc_id_count"].to_pylist()):
+            if path:
+                qdf[terms[int(path)]] = n
+    df_of = dict(zip(terms, rows["df"].to_pylist()))
+    fg_tf = engine.spark.createDataFrame(
+        pa.table(
+            {
+                "term": pa.array(list(qdf), pa.string()),
+                "queryDocFreq": pa.array(list(qdf.values()), pa.int64()),
+                "df": pa.array([df_of[t] for t in qdf], pa.int64()),
+            }
+        ),
+        "term string, queryDocFreq long, df long",
     )
     scored = (
-        fg_tf.join(cand, "term")
-        .withColumn(
+        fg_tf.withColumn(
             "score",
             (
                 F.log(F.col("queryDocFreq").cast("double"))

@@ -11,12 +11,13 @@ the shingle terms) because that is what a Lucene index can answer cheaply;
 its own TODO (PhrasesIdentificationComponent.java:529-535) notes the
 alternative of building phrases from unigrams at query time.  This engine
 stores positions (format v4), so we take that path and compute the EXACT
-phrase statistics the shingle fields approximate: one postings decode over
-the query's distinct terms, one JVM groupBy to co-locate each doc's
-position lists, one Arrow-batched pass emitting per-doc (term-mask,
-phrase-occurrence counts), and one Spark aggregation row — every candidate
-span's ttf/df/conjunction-count in a single distributed job regardless of
-how many spans the input generates.
+phrase statistics the shingle fields approximate: one query tree over the
+query's distinct terms, one node per conjunction (an AND of doc-id leaves)
+and per indexed multi-term span (an exact phrase leaf whose score is its
+phrase frequency), evaluated by the engine's one kernel
+(``engine.eval_tree``, placed by ``SearchEngine._evaluate``) — every
+candidate span's ttf/df/conjunction-count in one postings read, whatever
+the number of spans the input generates.
 
 Scoring is the reference's Bayesian model verbatim
 (PhrasesIdentificationComponent.java:1038-1186): per largest-indexed
@@ -40,18 +41,17 @@ cannot trigger; a stopword simply never appears as a token.
 
 from __future__ import annotations
 
+import dataclasses
 from dataclasses import dataclass, field
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
+import pyarrow as pa
 
 from apache___solr_spark.analysis.tokenizer import _HAS_MARK, _WORD, _WORD_NOMARK
+from apache___solr_spark.query.engine import _PlanNode
 
 __all__ = ["identify_phrases", "PhraseInfo"]
 
-MAX_DISTINCT_TERMS = 62  # term-presence masks live in one int64
 
 
 @dataclass
@@ -120,53 +120,30 @@ def _extract_spans(
     return spans
 
 
-def _stats_fn(term_bit: dict[str, int], spans: list[tuple[str, ...]]):
-    """mapInPandas fn over (doc_id, norm, plists): per doc emit the term-presence
-    mask and the exact occurrence count of every multi-term indexed span
-    (adjacent-position chain, the _phrase_score_fn technique)."""
+def _freq(weight, boost, tfs, dl):
+    """A phrase leaf's score as its phrase frequency (the tf the BM25
+    kernel would take)."""
+    return tfs
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            masks = np.zeros(n, dtype=np.int64)
-            counts = np.zeros((n, len(spans)), dtype=np.int64)
-            for row_idx, plists in enumerate(pdf["plists"]):
-                pos: dict[str, np.ndarray] = {}
-                mask = 0
-                for r in plists:
-                    t = r["term"]
-                    mask |= 1 << term_bit[t]
-                    pos[t] = np.asarray(r["positions"], dtype=np.int64)
-                masks[row_idx] = mask
-                for si, toks in enumerate(spans):
-                    p0 = pos.get(toks[0])
-                    if p0 is None:
-                        continue
-                    cur = p0
-                    ok = True
-                    for t in toks[1:]:
-                        nxt = pos.get(t)
-                        if nxt is None or cur.size == 0:
-                            ok = False
-                            break
-                        hit = np.searchsorted(nxt, cur + 1)
-                        keep = (hit < nxt.size) & (
-                            nxt[np.minimum(hit, nxt.size - 1)] == cur + 1
-                        )
-                        cur = cur[keep] + 1
-                    if ok and cur.size:
-                        counts[row_idx, si] = cur.size
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mask": masks,
-                    "counts": list(counts),
-                }
-            )
 
-    return run
+def _node_totals() -> tuple:
+    """A ``SearchEngine._evaluate`` output: every node's (path, docs,
+    total) in one salt, its matched-doc count and score sum."""
+    schema = pa.schema(
+        [("path", pa.string()), ("docs", pa.int64()), ("total", pa.float64())]
+    )
+
+    def run(res: dict) -> pa.Table:
+        return pa.table(
+            [
+                list(res),
+                [d.size for d, _ in res.values()],
+                [float(sc.sum()) for _, sc in res.values()],
+            ],
+            schema=schema,
+        )
+
+    return schema, run
 
 
 def identify_phrases(
@@ -194,15 +171,10 @@ def identify_phrases(
         )
     toks = _tokens_with_offsets(eng, text)
     terms = sorted({t for t, _, _ in toks})
-    if len(terms) > MAX_DISTINCT_TERMS:
-        raise NotImplementedError(
-            f"phrases.q with >{MAX_DISTINCT_TERMS} distinct terms"
-        )
     spans = _extract_spans(toks, text, max_indexed_len, max_query_len)
     if not spans or not terms:
         return {"input": text, "summary": text, "details": []}
 
-    term_bit = {t: i for i, t in enumerate(terms)}
     # multi-term indexed spans need exact phrase stats; dedupe by token
     # tuple (repeated runs share one stats slot)
     indexed_multi: list[tuple[str, ...]] = sorted(
@@ -212,42 +184,53 @@ def identify_phrases(
             if 1 < s.length <= max_indexed_len
         }
     )
-    span_slot = {tk: i for i, tk in enumerate(indexed_multi)}
     conj_keys: list[frozenset] = sorted(
         {frozenset(s.toks) for s in spans},
         key=lambda ks: sorted(ks),
     )
-    conj_slot = {ks: i for i, ks in enumerate(conj_keys)}
 
-    # ---- one distributed pass -------------------------------------------
+    # ---- one evaluation: a node per conjunction and per indexed span --
     meta = eng._term_rows(terms)
-    grouped = eng._doc_plists(eng._blocks_for(meta), None)
-    per_doc = grouped.mapInPandas(
-        _stats_fn(term_bit, indexed_multi),
-        schema="doc_id long, mask long, counts array<long>",
-    )
-    aggs = []
+    found = set(meta["term"].to_pylist())
+    key_of: dict[str, tuple] = {}
+    kids = []
     for ks in conj_keys:
-        m = 0
-        for t in ks:
-            m |= 1 << term_bit[t]
-        aggs.append(
-            F.count(
-                F.when(F.col("mask").bitwiseAND(F.lit(m)) == F.lit(m), 1)
-            ).alias(f"conj_{conj_slot[ks]}")
+        if ks <= found:
+            path = str(len(kids))
+            key_of[path] = ("conj", ks)
+            if len(ks) == 1:
+                kids.append(_PlanNode(path, "docs", tuple(ks)))
+                continue
+            must = tuple(
+                ("MUST", _PlanNode(f"{path}.{j}", "docs", (t,)))
+                for j, t in enumerate(sorted(ks))
+            )
+            kids.append(_PlanNode(path, "bool", children=must))
+    for tk in indexed_multi:
+        if set(tk) <= found:
+            path = str(len(kids))
+            key_of[path] = ("span", tk)
+            kids.append(_PlanNode(path, "phrase", tk, window=True))
+    stats: dict[tuple, tuple[int, int]] = {}
+    if kids:
+        root = _PlanNode("", "bool", children=tuple(("SHOULD", n) for n in kids))
+        plan = dataclasses.replace(
+            eng._tree_plan(root, dict.fromkeys(found, 0.0)), phrase_kernel=_freq
         )
-    for tk, i in span_slot.items():
-        c = F.element_at("counts", i + 1)
-        aggs.append(F.sum(c).alias(f"ttf_{i}"))
-        aggs.append(F.count(F.when(c > 0, 1)).alias(f"df_{i}"))
-    row = per_doc.agg(*aggs).collect()[0]
+        got = eng._evaluate(plan, meta, eng._driver_budget, out=_node_totals())
+        got = got.group_by("path").aggregate([("docs", "sum"), ("total", "sum")])
+        for path, docs, total in zip(
+            *(got[c].to_pylist() for c in ("path", "docs_sum", "total_sum"))
+        ):
+            if path in key_of:
+                stats[key_of[path]] = (int(docs), int(total))
 
     def conj_of(tkseq: tuple[str, ...]) -> int:
-        return int(row[f"conj_{conj_slot[frozenset(tkseq)]}"] or 0)
+        return stats.get(("conj", frozenset(tkseq)), (0, 0))[0]
 
     def ttf_df_of(tkseq: tuple[str, ...]) -> tuple[int, int]:
-        i = span_slot[tkseq]
-        return int(row[f"ttf_{i}"] or 0), int(row[f"df_{i}"] or 0)
+        df, ttf = stats.get(("span", tkseq), (0, 0))
+        return ttf, df
 
     # unigram ttf (= cf) from the dictionary
     term_ttf = dict(zip(meta["term"].to_pylist(), meta["cf"].to_pylist()))

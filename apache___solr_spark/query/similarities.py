@@ -16,10 +16,10 @@ Here a :class:`Similarity` contributes two pure pieces the engine composes:
   from the aggregated dictionary row (df = doc freq, cf = collection
   freq).
 - ``kernel(avgdl, dtype)`` — a vectorized numpy scoring closure
-  ``f(weight, boost, tfs, dl) -> scores`` applied inside the Arrow-batched
-  posting decode (query/engine.py:_score_fn), so switching similarity
-  never changes the distributed plan: same pruned scan, same decode, same
-  top-k.
+  ``f(weight, boost, tfs, dl) -> scores`` applied to each term leaf's
+  decoded postings in the query kernel (query/engine.py:eval_tree), so
+  switching similarity never changes the plan: same pruned read, same
+  decode, same top-k.
 
 Scoring formulas follow the Lucene javadocs exactly (float32 by default,
 matching Lucene's float arithmetic; float64 when cfg.score_dtype says so):

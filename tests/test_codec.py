@@ -197,23 +197,27 @@ def test_merge_segments_equals_unsplit_encode(store_positions):
 
 
 @pytest.mark.parametrize("store_positions", [True, False])
-def test_query_decoders_roundtrip(store_positions):
-    """The query-side postings scans (doc ids, scores, positions), fed the
-    segment encoder's rows of a multi-salt corpus in 1-3 row batches,
-    return the corpus's own postings, and every score is bit-equal to the
-    similarity kernel applied to that one posting."""
+def test_query_decoders_roundtrip(store_positions, monkeypatch):
+    """The query kernel, fed each salt's segment-encoder rows of a
+    multi-salt corpus in 1-3 row batches, returns the corpus's own postings
+    (a doc-id leaf per term), every term leaf's score is bit-equal to the
+    similarity kernel applied to that one posting, and a span leaf's
+    matcher sees each posting's own positions and norm."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from apache___solr_spark.config import IndexConfig
     from apache___solr_spark.index.builder import _segment_encode
-    from apache___solr_spark.query.engine import _docs_fn, _positions_fn, _score_fn
+    from apache___solr_spark.query import spans
+    from apache___solr_spark.query.engine import TreePlan, _PlanNode, eval_tree
     from apache___solr_spark.query.similarities import get_similarity
 
     cfg = IndexConfig(block_range=4, salt_range=32, n_buckets=8)
     avgdl = 7.5
     corpus = _analyzed_batch(range(100), store_positions)
     seg = pa.Table.from_batches(_segment_encode(cfg, avgdl)(iter([corpus])))
-    assert len(set(seg.column("salt").to_pylist())) == 4
+    salts = sorted(set(seg.column("salt").to_pylist()))
+    assert len(salts) == 4
 
     want = {}
     for r in corpus.to_pylist():
@@ -225,13 +229,32 @@ def test_query_decoders_roundtrip(store_positions):
                 tf, int_to_byte4(r["doclen"]), pos[at : at + tf] if pos else None
             )
             at += tf
+    terms = sorted({t for t, _ in want})
+
+    def run(plan, cols):
+        """Every salt's eval_tree output, merged: path -> [(doc_id, score)]."""
+        out = {}
+        for salt in salts:
+            rows = pa.Table.from_batches(
+                _in_batches(seg.filter(pc.equal(seg["salt"], salt)), cols)
+            )
+            for path, (ids, sc) in eval_tree(rows, plan).items():
+                out.setdefault(path, []).extend(zip(ids.tolist(), sc.tolist()))
+        return out
+
+    def each_term(kind, **kw):
+        return _PlanNode(
+            "",
+            "bool",
+            children=tuple(
+                ("SHOULD", _PlanNode(str(i), kind, (t,), **kw.get(t, {})))
+                for i, t in enumerate(terms)
+            ),
+        )
 
     base = ["term", "salt", "n_docs", "doc_gaps"]
-    docs = [
-        (t, d)
-        for b in _docs_fn(cfg.salt_range)(iter(_in_batches(seg, base)))
-        for t, d in zip(b.column("term").to_pylist(), b.column("doc_id").to_pylist())
-    ]
+    got = run(TreePlan(each_term("docs"), {}, None, None, cfg.salt_range), base)
+    docs = [(t, d) for i, t in enumerate(terms) for d, _ in got[str(i)]]
     assert sorted(docs) == sorted(want)
 
     weights = {t: 0.5 + i for i, t in enumerate(["alpha", "beta", "delta", "gamma", "rare"])}
@@ -239,27 +262,44 @@ def test_query_decoders_roundtrip(store_positions):
     dl_table = NORM_TABLE.astype(np.float32)
     for sim in ("bm25", "classic"):
         kernel = get_similarity(sim, cfg).kernel(avgdl)
-        fn = _score_fn(weights, kernel, boosts, cfg.salt_range)
+        root = each_term("terms", beta={"boost": boosts["beta"]})
+        got = run(TreePlan(root, weights, kernel, None, cfg.salt_range), base + ["tfs", "norms"])
         n = 0
-        for b in fn(iter(_in_batches(seg, base + ["tfs", "norms"]))):
-            assert b.schema.field("score").type == pa.float32()
-            for t, d, s in zip(*(b.column(c).to_pylist() for c in ("term", "doc_id", "score"))):
+        for i, t in enumerate(terms):
+            for d, s in got[str(i)]:
                 tf, norm, _ = want[(t, d)]
                 one = kernel(
                     weights[t], boosts.get(t, 1.0),
                     np.array([tf], dtype=np.float32), dl_table[[norm]],
                 )
+                assert float(np.float32(s)) == s  # a float32 score, carried exactly
                 assert np.float32(s).view(np.uint32) == one.astype(np.float32).view(np.uint32)[0]
                 n += 1
         assert n == len(want)
 
     if store_positions:
-        got = {}
+        # a one-slot span leaf per term: the span matcher receives the
+        # posting's positions, the phrase kernel its doc's dl
+        seen = []
+
+        def record(tree, pos_by_slot):
+            seen.append(pos_by_slot[0])
+            return [(p, p + 1) for p in pos_by_slot[0]]
+
+        monkeypatch.setattr(spans, "match_intervals", record)
         cols = base + ["tfs", "norms", "positions"]
-        for b in _positions_fn(cfg.salt_range)(iter(_in_batches(seg, cols))):
-            for r in b.to_pylist():
-                got[(r["term"], r["doc_id"])] = (len(r["positions"]), r["norm"], r["positions"])
-        assert got == want
+        got = {}
+        for t in terms:
+            leaf = _PlanNode("", "phrase", (t,), slots=((t,),), spans=("slot", 0))
+            plan = TreePlan(leaf, {t: 1.0}, None, lambda w, b, tf, dl: dl, cfg.salt_range)
+            seen.clear()
+            hits = run(plan, cols)[""]
+            assert len(hits) == len(seen)
+            for (d, dl), pos in zip(hits, seen):
+                got[(t, d)] = (len(pos), dl, pos)
+        assert got == {
+            key: (tf, float(dl_table[norm]), pos) for key, (tf, norm, pos) in want.items()
+        }
 
 
 def _kernel_fixture():

@@ -3500,12 +3500,19 @@ def _job_counter(spark):
     return jobs
 
 
-def test_warm_query_job_counts(spark, built):
+def test_warm_query_job_counts(spark, built, payload_built, mh_built):
     """On a warm engine a search() whose postings fit the driver runs no
     Spark job: the kernel runs over a pyarrow read, the top-k is taken in
     numpy and the page is a local relation whose collect() runs none.
-    Forced to the Spark placement, it runs only its scan and top-k (≤2)."""
+    Forced to the Spark placement, it runs only its scan and top-k (≤2).
+    So do the span, payload and constant-score operators, leaves of the
+    same kernel."""
+    from apache___solr_spark.query.localparams import dispatch_query
+
     eng = SearchEngine(spark, built, cfg=CFG)
+    peng = SearchEngine(spark, payload_built[1], cfg=payload_built[2])
+    meng = SearchEngine(spark, mh_built[1], cfg=mh_built[2])
+    mh_text = mh_built[0].iloc[0]["text"]
     jobs = _job_counter(spark)
 
     for q in ("web data", "zzznotaterm"):  # warm the engine
@@ -3526,10 +3533,28 @@ def test_warm_query_job_counts(spark, built):
         eng.search(q, k=10, **kw).collect()
         rows, n = jobs(f"warm {q}", lambda: eng.search(q, k=10, **kw).collect())
         assert rows and n == 0, (q, n)
-    eng._driver_budget = _SPARK
+    moved = {
+        "span_near": lambda: eng.span_near(["web", "data"], dist=3, k=10),
+        "complex_phrase": lambda: eng.complex_phrase("web pag*", k=10),
+        "surround": lambda: dispatch_query(eng, "{!surround}6W(web, 4N(pag*, data))", k=10),
+        "payload_score": lambda: peng.payload_score("apple", func="max", k=10),
+        "payload_check": lambda: peng.payload_check("red apple", [1.5, 2.5], k=10),
+        "terms_query": lambda: eng.terms_query(["web", "data"], k=10),
+        "minhash_search": lambda: meng.minhash_search(mh_text, k=10),
+    }
+    for name, op in moved.items():
+        op().collect()
+        rows, n = jobs(f"warm {name}", lambda: op().collect())
+        assert rows and n == 0, (name, n)
+    for e in (eng, peng, meng):
+        e._driver_budget = _SPARK
     eng.search("web data", k=10).collect()
     rows, n = jobs("spark", lambda: eng.search("web data", k=10).collect())
     assert len(rows) == 10 and 1 <= n <= 2, n
+    for name, op in moved.items():
+        op().collect()
+        rows, n = jobs(f"spark {name}", lambda: op().collect())
+        assert rows and 1 <= n <= 2, (name, n)
 
 
 def test_cold_planning_job_counts(spark, built):
@@ -3663,6 +3688,147 @@ def test_tombstones_masked_in_both_placements(spark, built, tmp_path):
     assert page and not {r["doc_id"] for r in page} & set(victims)
     assert not {d for (d,) in docset} & set(victims)
     assert not {d for d, _ in scored} & set(victims)
+
+
+@pytest.fixture(scope="module")
+def shared(spark, tmp_path_factory):
+    """A 1,560-doc Zipf index (salt_range 128, so 13 salts): a 1,500-doc
+    build, one add_docs segment of 60 docs, then tombstones.  With the
+    oracle index over every doc (the deleted docs still count in the
+    stats, and avgdl stays at the build's value after add_docs) and the
+    deleted doc ids."""
+    import dataclasses
+
+    import pyarrow as pa
+
+    from apache___solr_spark.index.updates import add_docs, delete_docs
+
+    d = tmp_path_factory.mktemp("shared")
+    base = generate_pages(1500, seed=5)
+    extra = generate_pages(60, seed=6)
+    # urls after every base url, so the added docs number 1500.. in both
+    extra = extra.set_column(
+        0, "url", pa.array([f"https://zzadd.example/{i:03d}" for i in range(60)])
+    )
+    pq.write_table(base, str(d / "pages.parquet"))
+    idx = str(d / "idx")
+    build_index(spark, str(d / "pages.parquet"), idx, cfg=CFG)
+    assert add_docs(spark, idx, spark.createDataFrame(extra.to_pandas()), cfg=CFG) == 60
+    eng = SearchEngine(spark, idx, cfg=CFG)
+    victims = {r["doc_id"] for r in eng.span_near(["web", "page"], dist=3, k=2).collect()}
+    victims |= {r["doc_id"] for r in eng.complex_phrase("web pag*", slop=2, k=2).collect()}
+    victims |= set(range(7, 1560, 53))
+    assert delete_docs(spark, idx, doc_ids=sorted(victims)) == len(victims)
+    oracle = build_oracle_index(base.to_pylist() + extra.to_pylist())
+    return idx, dataclasses.replace(oracle, avgdl=eng.stats["avgdl"]), victims
+
+
+def test_moved_operators_agree_across_placements(
+    spark, shared, payload_built, mh_built, tmp_path
+):
+    """The span, payload and constant-score operators, leaves of the one
+    kernel, give identical pages (rank, doc_id, url, score) under the
+    forced driver and the forced Spark placement on an index with an
+    add_docs segment and tombstones; no page holds a deleted doc, and the
+    span operators rank and score like their oracles over the live docs.
+    significantTerms and phrase identification read through the same
+    kernel and agree across placements too."""
+    import shutil
+
+    from apache___solr_spark.index.updates import add_docs, delete_docs
+    from apache___solr_spark.oracle import (
+        oracle_complex_phrase,
+        oracle_span_near,
+        oracle_span_tree,
+    )
+    from apache___solr_spark.query.localparams import dispatch_query
+    from apache___solr_spark.query.phrases import identify_phrases
+
+    idx, oracle, victims = shared
+    eng = SearchEngine(spark, idx, cfg=CFG)
+    pag = tuple(sorted(t for t in oracle.postings if t.startswith("pag")))
+    nested = ("near", 6, True, [("slot", 0), ("near", 4, False, [("slot", 1), ("slot", 2)])])
+    every = len(oracle.url_by_doc)
+
+    def live(hits):
+        kept = [h for h in hits if h["doc_id"] not in victims][:25]
+        return [(i + 1, h["doc_id"], round(h["score"], 5)) for i, h in enumerate(kept)]
+
+    cases = [
+        (
+            lambda: eng.span_near(["web", "page"], dist=3, k=25),
+            oracle_span_near(oracle, ["web", "page"], 3, True, k=every),
+        ),
+        (
+            lambda: eng.span_near(["web", "data", "page"], dist=6, ordered=False, k=25),
+            oracle_span_near(oracle, ["web", "data", "page"], 6, False, k=every),
+        ),
+        (
+            lambda: eng.complex_phrase("web pag*", slop=2, k=25, max_expansions=10**5),
+            oracle_complex_phrase(oracle, [("web",), pag], slop=2, k=every),
+        ),
+        (
+            lambda: eng.complex_phrase(
+                "pag* web", slop=4, ordered=False, k=25, max_expansions=10**5
+            ),
+            oracle_complex_phrase(oracle, [pag, ("web",)], slop=4, ordered=False, k=every),
+        ),
+        (
+            lambda: dispatch_query(eng, "{!surround}6W(web, 4N(pag*, data))", k=25),
+            oracle_span_tree(oracle, nested, [("web",), pag, ("data",)], k=every),
+        ),
+    ]
+    for op, want in cases:
+        driver, spark_placed = _both(eng, lambda: op().collect())
+        assert driver and driver == spark_placed
+        assert [(r["rank"], r["doc_id"], round(r["score"], 5)) for r in driver] == live(want)
+        assert all(r["url"] == oracle.url_by_doc[r["doc_id"]] for r in driver)
+
+    terms = sorted(
+        (set(oracle.postings["web"]) | set(oracle.postings["data"])) - victims
+    )
+    driver, spark_placed = _both(eng, lambda: eng.terms_query(["web", "data"], k=every).collect())
+    assert driver == spark_placed
+    assert [r["doc_id"] for r in driver] == terms and {r["score"] for r in driver} == {1.0}
+    for op in (
+        lambda: dispatch_query(
+            eng, "{!significantTerms numTerms=10 minDocFreq=3 maxDocFreq=0.5}web"
+        ).collect(),
+        lambda: identify_phrases(eng, "the web page data search engine web data"),
+    ):
+        driver, spark_placed = _both(eng, op)
+        assert driver and driver == spark_placed
+
+    # payload and min-hash indexes, each with an added segment and tombstones
+    _, pidx, pcfg = payload_built
+    pidx2 = str(tmp_path / "pidx")
+    shutil.copytree(pidx, pidx2)
+    added = spark.createDataFrame(
+        [(f"uadd{i}", "2026", None, f"red|{i}.5 apple|2.5 fig|0.5 apple", "en") for i in range(4)],
+        "url string, warc_ts string, html binary, text string, lang string",
+    )
+    assert add_docs(spark, pidx2, added, cfg=pcfg) == 4
+    assert delete_docs(spark, pidx2, doc_ids=[0, 5, 122]) == 3
+    peng = SearchEngine(spark, pidx2, cfg=pcfg)
+    pages, midx, mcfg = mh_built
+    midx2 = str(tmp_path / "midx")
+    shutil.copytree(midx, midx2)
+    assert delete_docs(spark, midx2, doc_ids=[1]) == 1
+    meng = SearchEngine(spark, midx2, cfg=mcfg)
+    for e, q in [
+        (peng, "{!payload_score f=text func=max}apple"),
+        (peng, "{!payload_score f=text func=average includeSpanScore=true}red apple"),
+        (peng, "{!payload_score f=text func=sum operator=or}apple fig"),
+        (peng, '{!payload_check f=text payloads="1.5 2.5"}red apple'),
+        (meng, "{!min_hash}" + pages.iloc[0]["text"]),
+        (meng, "{!min_hash sim=0.5 tp=0.5}" + pages.iloc[0]["text"]),
+    ]:
+        driver, spark_placed = _both(e, lambda: dispatch_query(e, q, k=200).collect())
+        assert driver and driver == spark_placed, q
+        deleted = {0, 5, 122} if e is peng else {1}
+        assert not {r["doc_id"] for r in driver} & deleted, q
+    added_hits = peng.payload_check("red apple", [2.5, 2.5], k=10).collect()
+    assert [r["url"] for r in added_hits] == ["uadd2"]
 
 
 def test_buckets_come_from_dictionary(spark, built, monkeypatch):
