@@ -13,9 +13,10 @@ compiled tree, so every query takes one path (SearchEngine._search_plan):
 
   planning on the driver (no Spark job): synonyms, dictionary expansions,
   term weights, every never-matches rule (_compile), and the placement:
-  the query's work (summed df, plus cf when positions are read, plus a
-  measured per-term-and-salt cost) against a budget derived from host
-  memory and the measured crossover of the two placements (_driver_budget)
+  the query's work (summed df, plus cf when positions are read, plus
+  measured per-term-and-salt and span-matcher costs) against a budget
+  from host memory and the measured crossover of the placements
+  (_driver_budget)
   eval_tree per salt: one batch decode (index/builder._decode_rows), then
   term, expansion, phrase/span, payload and const leaves scored in numpy
   and combined over sorted doc-id arrays (MUST count,
@@ -131,6 +132,10 @@ _TERM_SALT_POSTINGS = 180
 # work (postings, plus _TERM_SALT_POSTINGS per term and salt) up to which
 # the driver placement measured faster than the Spark one (see _driver_budget)
 _CROSSOVER = 10_000_000
+# the driver's cost of a span tree's matcher (_span_freqs, pure Python) in
+# postings: per doc holding every slot, and per position beyond its read
+_SPAN_ROW_POSTINGS = 60
+_SPAN_POS_POSTINGS = 3
 
 
 def _driver_budget() -> int:
@@ -170,7 +175,16 @@ def _driver_budget() -> int:
     the largest measured, 80 phrases and 10.5M work: 1.31 s against
     2.21 s.  The placements tie near 11.7M work, so ``_CROSSOVER`` is set
     just under it.  More cores speed the Spark placement only, so on a
-    larger host the crossover is lower than measured here."""
+    larger host the crossover is lower than measured here.
+
+    Span trees: the interval matcher (:func:`_span_freqs`) measured 15 us
+    per doc holding every slot (at most the smallest slot df) and 0.87 us
+    per position (at most the slots' cf): ``_SPAN_ROW_POSTINGS``,
+    ``_SPAN_POS_POSTINGS``.  Same index and method, 3 alternating runs,
+    ``{!surround}6W(a, 4N(b, c))`` over terms of df / N = 0.1, 0.3, 0.5,
+    0.7, 1.0: candidate docs 169, 4.1k, 15.9k, 44.2k, 89.1k; work 0.75M,
+    2.26M, 3.75M, 6.13M, 18.4M (0.07M-3.45M without the matcher); driver
+    0.05, 0.14, 0.36, 1.17, 5.09 s; Spark 0.42, 0.47, 0.94, 1.80, 4.09 s."""
     mb = host_memory_mb() or 8 * 1024
     return min((mb << 20) // 16 // _POSTING_BYTES, _CROSSOVER)
 
@@ -388,12 +402,8 @@ def _span_freqs(tree, slots: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
             tree,
             {j: (a[lo[i] : hi[i]] & mask).tolist() for j, (a, (lo, hi)) in enumerate(zip(slots, cuts))},
         )
-        if unordered:
-            emin: dict[int, int] = {}
-            for s, e in m:
-                if s not in emin or e < emin[s]:
-                    emin[s] = e
-            freqs[i] = len(set(emin.values()))
+        if unordered:  # m is sorted: the last write per start is its min end
+            freqs[i] = len(set(dict(reversed(m)).values()))
         else:
             freqs[i] = len({s for s, _ in m})
     hit = freqs > 0
@@ -759,7 +769,7 @@ def eval_tree(
             np.concatenate([r[0] for _, r in pos]), return_inverse=True
         )
         sc = np.concatenate([r[1] for _, r in pos])
-        must = np.concatenate([np.full(r[0].size, o == "MUST") for o, r in pos])
+        must = np.repeat([o == "MUST" for o, _ in pos], [r[0].size for _, r in pos])
         n = u.size
         n_must = sum(o == "MUST" for o, _ in pos)
         nm = np.bincount(inv, weights=must, minlength=n)
@@ -804,7 +814,9 @@ def eval_tree(
             )
             res = u, sums(inv, np.concatenate([s for _, s in parts]), u.size)
         else:  # docs
-            u = np.unique(np.concatenate([doc_ids[postings(t)] for t in node.terms]))
+            u = doc_ids[postings(node.terms[0])]
+            if len(node.terms) > 1:
+                u = np.unique(np.concatenate([doc_ids[postings(t)] for t in node.terms]))
             res = u, np.zeros(u.size)
         out[node.path] = res
         return res
@@ -815,7 +827,7 @@ def eval_tree(
 
 def _node_rows(keep: list[int]) -> tuple:
     """A :meth:`SearchEngine._evaluate` output: every node's (path,
-    doc_id, score) rows of the docs ``keep`` (explain, significantTerms)."""
+    doc_id, score) rows of the docs ``keep`` (explain)."""
     schema = pa.schema(
         [("path", pa.string()), ("doc_id", pa.int64()), ("score", pa.float64())]
     )
@@ -1829,7 +1841,8 @@ class SearchEngine:
         reads, plus their summed cf when positions are read, from
         ``dict_rows``, the dictionary rows planning read (which also give
         the terms' buckets), plus ``_TERM_SALT_POSTINGS`` for each term of
-        the tree in each salt of the index.  A payload leaf reads its
+        the tree in each salt of the index, plus a span tree's matcher
+        cost (:func:`_driver_budget`).  A payload leaf reads its
         salt's payload rows: on the driver a pyarrow read of its matched
         docs (:meth:`_payload_rows`), in Spark the payload side table's
         rows of the salt, shuffled into its group with the postings.
@@ -1861,7 +1874,13 @@ class SearchEngine:
             len(n.terms) for n in nodes
         )
         if "positions" in cols:
-            work += pc.sum(read["cf"]).as_py()
+            cf = pc.sum(read["cf"]).as_py()
+            work += cf
+        for n in nodes:
+            if n.spans is not None:  # a span tree's interval matcher
+                df = dict(zip(read["term"].to_pylist(), read["df"].to_pylist()))
+                cands = min(sum(df[t] for t in s) for s in n.slots)
+                work += _SPAN_ROW_POSTINGS * cands + _SPAN_POS_POSTINGS * cf
         if work > budget:
             blocks = self._blocks_for(read)
             if salts is not None:
@@ -2324,13 +2343,9 @@ class SearchEngine:
         if _filter_docset is not None:
             # fq DocSet intersection: constant-score, applied before top-k
             res = res.join(_filter_docset, "doc_id", "left_semi")
-        if _docset == "scored":
-            return res.select(
-                "doc_id", F.col("score").cast(self._sql_t).alias("score")
-            )
-        if _docset:
-            return res.select("doc_id")
         res = res.select("doc_id", F.col("score").cast(self._sql_t).alias("score"))
+        if _docset:
+            return res if _docset == "scored" else res.select("doc_id")
         return self._finalize(
             self._apply_funcs(res, bf, boost), k, with_url, start=start
         )

@@ -20,11 +20,11 @@ from pyspark.sql import functions as F
 
 from apache___solr_spark.query.engine import (
     SearchEngine,
-    _node_rows,
     _PlanNode,
     bm25_idf,
 )
 from apache___solr_spark.query.parser import ParsedQuery
+from apache___solr_spark.query.phrases import _node_totals
 
 
 def rerank(
@@ -410,10 +410,11 @@ def significant_terms_index(
 
     Scale shape: the term-length gate and the docFreq window (on the df
     summed over segments) filter the DICTIONARY first, on the driver; the
-    foreground's doc ids are collected, and one query tree (a doc-id leaf
-    per candidate term) runs through the engine's one evaluator, whose
-    per-node rows of the foreground docs give each term's queryDocFreq
-    (only doc_gaps decode; no tfs/norms/positions).  The reference walks
+    foreground's doc ids are collected (8 bytes a doc), and one query tree
+    (a doc-id leaf per candidate term) runs through the engine's one
+    evaluator over the salts holding them, each salt returning one row per
+    term, its count of foreground docs, which sum to the term's
+    queryDocFreq (only doc_gaps decode; no tfs/norms/positions).  The reference walks
     every term's postings per shard — this is the same read, placed on the
     driver or in Spark by the query's work."""
     n_docs = engine.stats["N"]
@@ -454,10 +455,11 @@ def significant_terms_index(
             engine._tree_plan(root, {}),
             rows,
             engine._driver_budget,
-            out=_node_rows(keep),
+            sorted(set((keep // engine.cfg.salt_range).tolist())),
+            _node_totals(keep),
         )
-        got = got.group_by("path").aggregate([("doc_id", "count")])
-        for path, n in zip(got["path"].to_pylist(), got["doc_id_count"].to_pylist()):
+        got = got.group_by("path").aggregate([("docs", "sum")])
+        for path, n in zip(got["path"].to_pylist(), got["docs_sum"].to_pylist()):
             if path:
                 qdf[terms[int(path)]] = n
     df_of = dict(zip(terms, rows["df"].to_pylist()))

@@ -48,7 +48,7 @@ import numpy as np
 import pyarrow as pa
 
 from apache___solr_spark.analysis.tokenizer import _HAS_MARK, _WORD, _WORD_NOMARK
-from apache___solr_spark.query.engine import _PlanNode
+from apache___solr_spark.query.engine import _EMPTY, _PlanNode
 
 __all__ = ["identify_phrases", "PhraseInfo"]
 
@@ -126,21 +126,33 @@ def _freq(weight, boost, tfs, dl):
     return tfs
 
 
-def _node_totals() -> tuple:
-    """A ``SearchEngine._evaluate`` output: every node's (path, docs,
-    total) in one salt, its matched-doc count and score sum."""
+def _node_totals(keep: np.ndarray | None = None) -> tuple:
+    """A ``SearchEngine._evaluate`` output: every matching node's
+    (path, docs, total) in one salt, its matched-doc count and score sum,
+    over the docs ``keep`` only when given: at most one row per node and
+    salt (significantTerms, phrase identification)."""
     schema = pa.schema(
         [("path", pa.string()), ("docs", pa.int64()), ("total", pa.float64())]
     )
+    wanted = None if keep is None else np.unique(np.asarray(keep, dtype=np.int64))
 
     def run(res: dict) -> pa.Table:
+        paths = list(res)
+        node = np.repeat(np.arange(len(paths)), [d.size for d, _ in res.values()])
+        sc = np.concatenate([np.empty(0), *(s for _, s in res.values())])
+        if wanted is not None:
+            d = np.concatenate([_EMPTY, *(d for d, _ in res.values())])
+            # a kept mask over the salt's doc id range
+            lo, hi = (int(d.min()), int(d.max()) + 1) if d.size else (0, 0)
+            mask = np.zeros(hi - lo, dtype=bool)
+            kept = wanted[np.searchsorted(wanted, lo) : np.searchsorted(wanted, hi)]
+            mask[kept - lo] = True
+            node, sc = node[mask[d - lo]], sc[mask[d - lo]]
+        docs = np.bincount(node, minlength=len(paths))
+        totals = np.bincount(node, weights=sc, minlength=len(paths))
+        hit = np.flatnonzero(docs)
         return pa.table(
-            [
-                list(res),
-                [d.size for d, _ in res.values()],
-                [float(sc.sum()) for _, sc in res.values()],
-            ],
-            schema=schema,
+            [[paths[i] for i in hit], docs[hit], totals[hit]], schema=schema
         )
 
     return schema, run

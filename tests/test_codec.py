@@ -519,6 +519,31 @@ def test_top_order_matches_sorted():
         assert _top_order(ids, scores, depth).tolist() == want[:depth], depth
 
 
+def test_node_totals_counts_kept_docs():
+    """The per-salt totals output: one (path, docs, total) row per node
+    that matched, counting only the ``keep`` docs when given (ids past the
+    largest kept one included), against plain Python counting."""
+    from apache___solr_spark.query.phrases import _node_totals
+
+    rng = np.random.default_rng(5)
+    res = {}
+    for path in ("", "0", "1", "2", "3"):
+        d = np.unique(rng.integers(8192, 12288, int(rng.integers(0, 300))))
+        res[path] = d, rng.random(d.size)
+    res["3"] = np.empty(0, dtype=np.int64), np.empty(0)
+    keep = rng.choice(np.arange(8192, 11000), 900, replace=False)
+    for kept in (None, keep):
+        got = _node_totals(kept)[1](res).to_pylist()
+        want = []
+        for path, (d, sc) in res.items():
+            m = [kept is None or x in set(kept.tolist()) for x in d.tolist()]
+            if any(m):
+                want.append((path, sum(m), float(np.sum(sc[np.array(m)]))))
+        assert [(r["path"], r["docs"]) for r in got] == [w[:2] for w in want]
+        for r, w in zip(got, want):
+            assert abs(r["total"] - w[2]) < 1e-9
+
+
 def test_range_parts_keeps_lo_clamp_below_one_wave():
     """The numbering partition count: a count below one wave keeps the
     [shuffle_parts, 4*parallelism] clamp as is; a count of one wave or

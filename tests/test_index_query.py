@@ -3557,6 +3557,27 @@ def test_warm_query_job_counts(spark, built, payload_built, mh_built):
         assert rows and 1 <= n <= 2, (name, n)
 
 
+def test_span_tree_work_counts_its_matcher(spark, built, monkeypatch):
+    """A span tree's interval matcher runs per candidate doc in Python, so
+    its cost enters the placement's work estimate: priced high enough, a
+    nested surround leaves the driver (1-2 jobs, same page) while a flat
+    span_near, which has no such matcher, stays on it."""
+    from apache___solr_spark.query import engine as engine_mod
+    from apache___solr_spark.query.localparams import dispatch_query
+
+    eng = SearchEngine(spark, built, cfg=CFG)
+    jobs = _job_counter(spark)
+    q = "{!surround}6W(web, 4N(pag*, data))"
+    driver = dispatch_query(eng, q, k=10).collect()
+    near = eng.span_near(["web", "data"], dist=3, k=10).collect()
+    monkeypatch.setattr(engine_mod, "_SPAN_ROW_POSTINGS", eng._driver_budget)
+    dispatch_query(eng, q, k=10).collect()
+    rows, n = jobs("span tree", lambda: dispatch_query(eng, q, k=10).collect())
+    assert driver and rows == driver and 1 <= n <= 2, n
+    rows, n = jobs("span_near", lambda: eng.span_near(["web", "data"], dist=3, k=10).collect())
+    assert near and rows == near and n == 0, n
+
+
 def test_cold_planning_job_counts(spark, built):
     """Query planning runs no Spark job: on a freshly opened engine the
     first term, prefix, wildcard, fuzzy and range queries run no job at
