@@ -21,20 +21,21 @@ compiled tree, so every query takes one path (SearchEngine._search_plan):
   term, expansion, phrase/span, payload and const leaves scored in numpy
   and combined over sorted doc-id arrays (MUST count,
   minimum-should-match, MUST_NOT, boosts, the {!maxscore} dismax root), in
-  one of two placements:
+  one of two placements, each salt's root rows masked by the
+  tombstones (liveDocs) of its doc-id range inside the kernel's stage:
     driver (work within the budget, no fq/bf/boost, not a docset):
        a pyarrow read of the terms' bucket files captured at engine open
        (bucket, term, and doc_filter's salts, pushed down; positions only
-       when the tree holds a phrase), split by salt -> doc_filter and
-       tombstone masks, top-k by (score desc, doc_id asc) in numpy:
-       0 Spark jobs
+       when the tree holds a phrase), split by salt -> doc_filter mask,
+       top-k by (score desc, doc_id asc) in numpy: 0 Spark jobs
     Spark (the rest): ONE bucket-pruned postings scan
-       -> groupBy(salt).applyInArrow(eval_tree) -> doc_filter, liveDocs
-       tombstone anti-join, fq semi-join, bf/boost
+       -> groupBy(salt).applyInArrow(eval_tree) -> doc_filter, fq
+       semi-join, bf/boost
        -> orderBy(score desc, doc_id asc).limit(k) [TakeOrderedAndProject],
        collected as Arrow
   then the page's urls are read on the driver (pyarrow over the docs
-  files) and the page is returned as a local relation.
+  files) and the page is returned held on the driver (_Page): its
+  collect() makes no JVM call.
 The explain walker, {!significantTerms} and phrase identification read
 every node's per-doc rows or totals from the same kernel
 (SearchEngine._evaluate).  ``salt = doc_id // salt_range`` is aligned
@@ -66,7 +67,7 @@ import os
 import posixpath
 import re
 from dataclasses import dataclass
-from functools import reduce
+from functools import cached_property, reduce
 from typing import Iterator
 
 import numpy as np
@@ -74,9 +75,19 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.fs as pafs
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import (
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from apache___solr_spark.analysis.chain import analyzer_fn
 from apache___solr_spark.analysis.payloads import decode_payloads
@@ -848,6 +859,49 @@ def _node_rows(keep: list[int]) -> tuple:
     return schema, run
 
 
+class _Page(ClassicDataFrame):
+    """A result page held on the driver: its Arrow table and a schema
+    built in Python.  ``collect()``, ``count()``, ``toArrow()`` and
+    ``schema`` (so ``columns``) are answered from the table, with the
+    rows, values and Python types Spark's collect gives, and make no JVM
+    call (``toArrow()`` reads one conf, the Arrow string width).  The JVM
+    relation, ``createDataFrame(table, schema)``, is built once, by the
+    first call that needs it: select, filter, join, orderBy, union,
+    createOrReplaceTempView, toPandas, show or write."""
+
+    def __new__(cls, *args, **kwargs):
+        # the classic DataFrame.__new__(jdf, session) calls __init__ itself
+        return object.__new__(cls)
+
+    def __init__(self, table: pa.Table, schema: StructType, session: SparkSession):
+        # the fields the classic DataFrame.__init__ sets, bar _jdf
+        self._session = session
+        self._sc = session._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._schema = schema
+        self._table = table.cast(to_arrow_schema(schema))
+
+    @property
+    def schema(self) -> StructType:
+        return self._schema
+
+    @cached_property
+    def _jdf(self):
+        return self._session.createDataFrame(self._table, self._schema)._jdf
+
+    def collect(self) -> list[Row]:
+        row = Row(*self._schema.names)
+        return [row(*r) for r in zip(*(c.to_pylist() for c in self._table.columns))]
+
+    def count(self) -> int:
+        return self._table.num_rows
+
+    def toArrow(self) -> pa.Table:
+        large = self._session._jconf.arrowUseLargeVarTypes()
+        return self._table.cast(to_arrow_schema(self._schema, prefers_large_types=large))
+
+
 class SearchEngine:
     """Query-side handle on a built index directory: a point-in-time
     reader, like a Lucene ``IndexReader`` before reopen.  The engine reads
@@ -943,7 +997,7 @@ class SearchEngine:
         from apache___solr_spark.index.updates import load_deletes
 
         # tombstoned doc_ids (liveDocs mask) — None when never deleted; the
-        # driver placement masks with the same ids as a sorted array
+        # kernel's stage masks with the same ids as a sorted array
         self.deletes = load_deletes(spark, index_dir)
         self._deleted = (
             _EMPTY
@@ -1847,7 +1901,8 @@ class SearchEngine:
         docs (:meth:`_payload_rows`), in Spark the payload side table's
         rows of the salt, shuffled into its group with the postings.
 
-        Both placements return the root's (doc_id, score double) rows.
+        Both placements return the root's live (doc_id, score double)
+        rows: each salt's stage drops the tombstones of its doc-id range.
         ``out`` = (schema, fn) maps each salt's :func:`eval_tree` output to
         other rows (e.g. :func:`_node_rows`), returned as
         an Arrow table on either placement.  ``salts`` prunes the read."""
@@ -1862,12 +1917,25 @@ class SearchEngine:
         read = dict_rows.take(pc.index_in(terms, value_set=dict_rows["term"]))
         schema, per_salt = out or (_NO_HITS.schema, None)
         path = plan.root.path
+        # local names: the Spark placement pickles run's closure, not self
+        deleted, salt_range = self._deleted, self.cfg.salt_range
 
         def run(rows, payloads=None):
             if rows.num_rows == 0:
                 return schema.empty_table()
             res = eval_tree(rows, plan, payloads)
-            return per_salt(res) if per_salt else pa.table(list(res[path]), schema=schema)
+            if per_salt:
+                return per_salt(res)
+            ids, scores = res[path]
+            # the tombstones of this salt's doc-id range leave the root
+            lo = rows["salt"][0].as_py() * salt_range
+            dead = deleted[
+                np.searchsorted(deleted, lo) : np.searchsorted(deleted, lo + salt_range)
+            ]
+            if dead.size:
+                live = ~np.isin(ids, dead)
+                ids, scores = ids[live], scores[live]
+            return pa.table([ids, scores], schema=schema)
 
         n_salts = -(-int(self.stats["N"]) // self.cfg.salt_range)
         work = pc.sum(read["df"]).as_py() + _TERM_SALT_POSTINGS * n_salts * sum(
@@ -1960,14 +2028,12 @@ class SearchEngine:
         non-term node) appended.  Every node's score per hit doc comes from
         the query's own evaluator (:meth:`_evaluate` with
         :func:`_node_rows` of the hits, its read pruned to their salts)."""
-        hits = self._search_tree(tree, k=k, with_url=False).select(
-            "rank", "doc_id", "score"
-        ).collect()
-        if not hits:
+        hits = self._search_tree(tree, k=k, with_url=False)._table
+        if not hits.num_rows:
             return []
-        doc_ids = [int(r["doc_id"]) for r in hits]
-        rank_by_doc = {int(r["doc_id"]): int(r["rank"]) for r in hits}
-        score_by_doc = {int(r["doc_id"]): float(r["score"]) for r in hits}
+        doc_ids = hits["doc_id"].to_pylist()
+        rank_by_doc = dict(zip(doc_ids, hits["rank"].to_pylist()))
+        score_by_doc = dict(zip(doc_ids, hits["score"].to_pylist()))
         tree, resolved, found, weights, dict_rows = self._plan(tree)
         root = _compile(tree, resolved, found, self.sim, self.cfg.store_positions)
         salts = sorted({d // self.cfg.salt_range for d in doc_ids})
@@ -2112,8 +2178,8 @@ class SearchEngine:
         instead, :func:`_top_order`).  Phase 2 reads the
         display fields of JUST the page's docs on the driver (:meth:`_stored`,
         the per-hit stored-fields read of the reference), from the docs
-        files this engine opened on.  The page is a local Arrow relation,
-        so the caller's collect() runs no Spark job.
+        files this engine opened on.  The page is held on the driver
+        (:meth:`_page`), so the caller's collect() runs no JVM call.
 
         ``start``: offset paging (the reference's start/rows params) — the
         collector depth is :meth:`_depth`, sliced driver-side like
@@ -2129,22 +2195,22 @@ class SearchEngine:
 
     def _page(self, top: pa.Table, with_url: bool, start: int = 0) -> DataFrame:
         """The result page (rank, doc_id[, url], score) for ``top``'s
-        (doc_id, score) rows, in rank order, as an Arrow-backed
-        LocalRelation: collecting it runs no Spark job."""
+        (doc_id, score) rows, in rank order, held on the driver
+        (:class:`_Page`): its collect(), count(), toArrow() and schema
+        run no JVM call."""
         ids = top["doc_id"].combine_chunks()
         cols = {
             "rank": pa.array(range(start + 1, start + 1 + len(ids)), pa.int32()),
             "doc_id": ids,
         }
+        fields = [StructField("rank", IntegerType()), StructField("doc_id", LongType())]
         if with_url:
             cols["url"] = self._stored(ids, "url")
+            fields.append(StructField("url", StringType()))
         cols["score"] = top["score"]
-        schema = (
-            "rank int, doc_id long"
-            + (", url string" if with_url else "")
-            + f", score {self._sql_t}"
-        )
-        return self.spark.createDataFrame(pa.table(cols), schema)
+        score_t = DoubleType() if self._dtype == np.float64 else FloatType()
+        fields.append(StructField("score", score_t))
+        return _Page(pa.table(cols), StructType(fields), self.spark)
 
     def _stored(self, ids: pa.Array, col: str) -> pa.Array:
         """Stored field ``col`` of the docs ``ids``, in ``ids`` order: the
@@ -2295,14 +2361,13 @@ class SearchEngine:
         every term the tree reads, placed by :meth:`_evaluate` from the
         query's work.  Within the driver budget, the postings are a
         pyarrow read and ``doc_filter`` (which also prunes the read to its
-        salts), the tombstones and the top-k are numpy on the driver: the
-        query runs no Spark job.  Above it, and for every query with a
-        Spark tail (fq, ``bf``, ``boost``, docset()/scored_docset()),
-        evaluation is ONE bucket- and term-pruned scan, one shuffle by
-        salt and one Python stage; ``doc_filter``, the deletes anti-join,
-        the fq semi-join, ``bf``/``boost`` and the top-k are Spark
-        operations in the same plan, with no collects and no persisted
-        frames before the top-k."""
+        salts) and the top-k are numpy on the driver: the query runs no
+        Spark job.  Above it, and for every query with a Spark tail (fq,
+        ``bf``, ``boost``, docset()/scored_docset()), evaluation is ONE
+        bucket- and term-pruned scan, one shuffle by salt and one Python
+        stage; ``doc_filter``, the fq semi-join, ``bf``/``boost`` and the
+        top-k are Spark operations in the same plan, with no collects and
+        no persisted frames before the top-k."""
         if root is None:
             return self._page(_NO_HITS, with_url)
         salts = (
@@ -2325,11 +2390,10 @@ class SearchEngine:
         )
         if isinstance(res, pa.Table):  # the driver placement
             ids = res["doc_id"].to_numpy()
-            live = ~np.isin(ids, self._deleted)
+            scores = res["score"].to_numpy().astype(self._dtype)
             if doc_filter is not None:
-                live &= np.isin(ids, np.asarray(doc_filter, dtype=np.int64))
-            ids = ids[live]
-            scores = res["score"].to_numpy()[live].astype(self._dtype)
+                live = np.isin(ids, np.asarray(doc_filter, dtype=np.int64))
+                ids, scores = ids[live], scores[live]
             top = _top_order(ids, scores, self._depth(k, start))[int(start) :]
             return self._page(
                 pa.table({"doc_id": ids[top], "score": scores[top]}),
@@ -2338,8 +2402,6 @@ class SearchEngine:
             )
         if doc_filter is not None:
             res = res.filter(F.col("doc_id").isin([int(d) for d in doc_filter]))
-        if self.deletes is not None:
-            res = res.join(self.deletes, "doc_id", "left_anti")
         if _filter_docset is not None:
             # fq DocSet intersection: constant-score, applied before top-k
             res = res.join(_filter_docset, "doc_id", "left_semi")

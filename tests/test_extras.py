@@ -16,6 +16,7 @@ from apache___solr_spark.index.builder import build_index
 from apache___solr_spark.oracle import build_oracle_index, oracle_search
 from apache___solr_spark.query.engine import SearchEngine
 from apache___solr_spark.query.extras import (
+    mlt_like_content,
     more_like_this,
     reciprocal_rank_fusion,
     rerank,
@@ -94,6 +95,25 @@ def test_more_like_this(spark, built):
     assert [r["rank"] for r in hits] == list(range(1, len(hits) + 1))
     # unknown doc -> empty
     assert more_like_this(eng, doc_id=10**9, k=5).count() == 0
+
+
+def test_empty_mlt_page_schema_follows_score_type(spark, built):
+    """An empty MoreLikeThis page has the schema of the engine's empty
+    search page, whose score type follows the index's score dtype."""
+    from pyspark.sql.types import DoubleType
+
+    out, _ = built
+    eng = SearchEngine(spark, out, cfg=CFG)
+    eng._sql_t, eng._dtype = "double", np.float64
+    empty = eng.search("zzznotaterm").schema
+    assert empty["score"].dataType == DoubleType()
+    for page in (
+        more_like_this(eng, doc_id=10**9, k=5),  # no such doc
+        more_like_this(eng, doc_id=5, k=5, min_doc_freq=10**9),  # no terms
+        mlt_like_content(eng, ""),  # no tokens
+        mlt_like_content(eng, "zzznotaterm"),  # no indexed terms
+    ):
+        assert page.schema == empty and page.count() == 0
 
 
 def test_date_math(spark):

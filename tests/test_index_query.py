@@ -3500,13 +3500,30 @@ def _job_counter(spark):
     return jobs
 
 
+def _py4j_commands(fn):
+    """fn() and the number of py4j commands it sent to the JVM."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    sent = []
+
+    def counted(conn, command, *args, **kwargs):
+        sent.append(command)
+        return send(conn, command, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counted)
+        out = fn()
+    return out, len(sent)
+
+
 def test_warm_query_job_counts(spark, built, payload_built, mh_built):
     """On a warm engine a search() whose postings fit the driver runs no
-    Spark job: the kernel runs over a pyarrow read, the top-k is taken in
-    numpy and the page is a local relation whose collect() runs none.
-    Forced to the Spark placement, it runs only its scan and top-k (≤2).
-    So do the span, payload and constant-score operators, leaves of the
-    same kernel."""
+    Spark job and makes no JVM call: the kernel runs over a pyarrow read,
+    the top-k is taken in numpy and the page is held on the driver, so
+    its collect() makes none either.  Forced to the Spark placement, it
+    runs only its scan and top-k (≤2).  So do the span, payload and
+    constant-score operators, leaves of the same kernel."""
     from apache___solr_spark.query.localparams import dispatch_query
 
     eng = SearchEngine(spark, built, cfg=CFG)
@@ -3524,6 +3541,11 @@ def test_warm_query_job_counts(spark, built, payload_built, mh_built):
     assert n_collect == 0, n_collect
     rows, n_miss = jobs("miss", lambda: eng.search("zzznotaterm").collect())
     assert rows == [] and n_miss == 0, n_miss
+    # counted around the calls only: the job counter itself talks to the JVM
+    assert _py4j_commands(lambda: spark.conf.get("spark.app.name"))[1] > 0
+    for q in ("web data", "zzznotaterm"):
+        rows, sent = _py4j_commands(lambda: eng.search(q, k=10).collect())
+        assert sent == 0, (q, sent)
     # a nested tree with a phrase, a prefix and a MUST_NOT group, and a
     # {!maxscore} root: still no job
     for q, kw in (
@@ -3709,6 +3731,62 @@ def test_tombstones_masked_in_both_placements(spark, built, tmp_path):
     assert page and not {r["doc_id"] for r in page} & set(victims)
     assert not {d for (d,) in docset} & set(victims)
     assert not {d for d, _ in scored} & set(victims)
+    # the tombstones are masked in the kernel's stage: no extra job
+    jobs = _job_counter(spark)
+    eng._driver_budget = _SPARK
+    rows, n = jobs("spark tombstones", lambda: eng.search("web data", k=10).collect())
+    assert rows and 1 <= n <= 2, n
+
+
+def test_page_contract(spark, built):
+    """A result page is held on the driver, and answers like the Spark
+    relation of its own rows, ``createDataFrame(page.toArrow(),
+    page.schema)``: collect(), count(), schema and toArrow() equal that
+    relation's value by value and type by type, and the calls that build
+    its JVM relation (select, filter, orderBy, a join, a temp view,
+    toPandas) give the same results.  This pins the fields of PySpark's
+    classic DataFrame that the page relies on."""
+    import pandas as pd
+
+    eng = SearchEngine(spark, built, cfg=CFG)
+    seng = SearchEngine(spark, built, cfg=CFG)
+    seng._driver_budget = _SPARK
+    pages = {
+        "hits": lambda: eng.search("web data", k=10),
+        "empty": lambda: eng.search("zzznotaterm"),
+        "no url": lambda: eng.search("web data", k=10, with_url=False),
+        "start": lambda: eng.search("web page data", k=10, start=5),
+        "spark": lambda: seng.search("web data", k=10),
+        "span": lambda: eng.span_near(["web", "data"], dist=3, k=10),
+    }
+    docs = eng.docs.select("doc_id", "doclen")
+    for name, make in pages.items():
+        page = make()
+        ref = spark.createDataFrame(page.toArrow(), page.schema)
+        assert page.schema == ref.schema and page.columns == ref.columns, name
+        assert page.count() == ref.count(), name
+        got, want = page.collect(), ref.collect()
+        assert got == want and (name == "empty") == (not got), name
+        for g, w in zip(got, want):
+            assert g.asDict() == w.asDict(), name
+            assert [type(v) for v in g] == [type(v) for v in w], name
+        assert page.toArrow().equals(ref.toArrow(), check_metadata=True), name
+        for op in (
+            lambda df: df.select("doc_id", "score").collect(),
+            lambda df: df.filter(F.col("rank") % 2 == 0).collect(),
+            lambda df: df.orderBy("doc_id").collect(),
+            lambda df: df.join(docs, "doc_id").orderBy("rank").collect(),
+        ):
+            assert op(page) == op(ref), name
+        views = []
+        for df in (page, ref):
+            df.createOrReplaceTempView("contract_page")
+            views.append(
+                spark.sql("SELECT doc_id, score FROM contract_page ORDER BY rank").collect()
+            )
+        assert views[0] == views[1], name
+        pd.testing.assert_frame_equal(page.toPandas(), ref.toPandas())
+    spark.catalog.dropTempView("contract_page")
 
 
 @pytest.fixture(scope="module")
