@@ -1,23 +1,48 @@
-"""Distributed inverted-index build.
+"""Inverted-index build, in one of two placements.
 
-Pipeline (reference parity: the /update indexing path,
+Reference parity: the /update indexing path,
 solr/core/src/java/org/apache/solr/update/DirectUpdateHandler2.java:407-513 +
-DocumentBuilder.toDocument:99-123, re-expressed Spark-first):
+DocumentBuilder.toDocument:99-123.  ``build_index`` picks the placement
+from Catalyst's size estimate of the pages plan (:func:`_input_bytes`, no
+Spark job) against :func:`_build_budget` (host memory and the measured
+crossover of the placements).  Both run the same kernels
+(:func:`_analyze_batch`, :func:`_segment_encode` / :func:`_pack_groups`),
+walk the same five stages, publish the same per-stage ``_MANIFEST.json``
+and resume the same way, and their indexes are row-identical.
 
-  pages ──analysis UDF──► analyzed_raw checkpoint                [1 UDF pass]
-        ──repartitionByRange(url) + sort + persist──► url-ordered partitions
-          (executor MEMORY_AND_DISK; counts collect ⇒ offsets + stats)
-        ──mapInArrow──► numbered(url, doc_id, terms[], tfs[], positions,
-          doclen) — consumed STRAIGHT from the persisted frame by BOTH the
-          docs write and the segment encoder (no intermediate parquet hop;
-          a resume recomputes it from the analyzed_raw checkpoint)
-        ──numpy segment encode──► packed (term, salt) rows
-        ──repartition(bucket, salt) + sorted mapInArrow merge──► postings
-        ──metadata agg──► dictionary(term, df, cf, max_impact)
+Driver placement (the input fits the budget; Solr's in-process
+IndexWriter per core):
+
+  pages ──toArrow (the one Spark job after the pages' schema read)──►
+        ──_analyze_batch per 2,048 rows──► analyzed_raw checkpoint (pyarrow)
+        ──Arrow sort by (url, doclen, terms, tfs, positions)──► numbered
+          rows, doc_id = rank ──► docs
+        ──_segment_encode, one salt range at a time (every (term, salt)
+          group whole, so no merge) + numpy XXH64 buckets──► postings,
+          one file per bucket=N/
+        ──pyarrow group_by──► dictionary(term, df, cf, max_impact, bucket)
         plus scalar stats(N, avgdl).
 
-Scale decisions (each one exists because the naive version measurably
-failed — see BENCH/BASELINE.md history):
+Spark placement (above the budget):
+
+  pages ──mapInArrow(_analyze_batch)──► analyzed_raw checkpoint [1 UDF pass]
+        ──repartitionByRange(url) + sort + persist──► url-ordered partitions
+          (executor MEMORY_AND_DISK; counts collect ⇒ offsets + stats)
+        ──doc_id as a JVM projection──► numbered(url, doc_id, terms[],
+          tfs[], positions, doclen) — consumed STRAIGHT from the persisted
+          frame by BOTH the docs write and the segment encoder (no
+          intermediate parquet hop; a resume recomputes it from the
+          analyzed_raw checkpoint)
+        ──mapInArrow(_segment_encode)──► packed (term, salt) rows
+        ──repartition(bucket, salt) + sorted mapInArrow merge──► postings
+        ──metadata agg──► dictionary(term, df, cf, max_impact, bucket)
+        plus scalar stats(N, avgdl).
+
+Payload indexes add a stage 5, the payload side table, in Spark in
+either placement.
+
+Scale decisions of the Spark placement (each one exists because the naive
+version measurably failed — see BENCH/BASELINE.md history):
 
 - doc_id = global rank of url: range-shuffle on the raw pages FIRST, then
   run the (expensive) analysis UDF exactly once on the shuffled partitions.
@@ -51,14 +76,18 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
+from itertools import chain
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,6 +96,8 @@ from apache___solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from apache___solr_spark.index import checkpoint as ckpt
 from apache___solr_spark.index.codec import decode_vbyte, encode_vbyte_packed
 from apache___solr_spark.index.smallfloat import NORM_TABLE, int_to_byte4_np
+from apache___solr_spark.index.xxhash import term_buckets
+from apache___solr_spark.session import host_memory_mb
 from apache___solr_spark.sources.loaders import read_pages
 
 # Analyzed-row layout (analysis output AND, +doc_id, the numbered table):
@@ -139,71 +170,81 @@ def _input_digest(pages: DataFrame, source: str | None) -> str:
     return f"{source or 'df'}::{','.join(pages.columns)}"
 
 
-def _analyze_raw(pages: DataFrame, cfg: IndexConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Analysis UDF on the INPUT partitions: html never crosses a shuffle
-    (raw pages through the exchange measurably dominated the build; analyzed
-    rows are ~5x narrower), and the expensive UDF pass checkpoints on its
-    own before any id assignment."""
-    max_token_len = cfg.max_token_len
+ANALYZED_SCHEMA = (
+    "url string, terms array<string>, tfs binary, positions binary, doclen int"
+)
+
+
+def _analyze_batch(rb: pa.RecordBatch, cfg: IndexConfig) -> pa.RecordBatch:
+    """The analysis kernel, Arrow in and Arrow out: (url, html, text) rows
+    to (url, terms, tfs, positions, doclen) rows.  Both placements run it:
+    the Spark one through ``mapInArrow`` (:func:`_analyze_raw`), the
+    driver one over ``pages.toArrow()``.
+
+    The chain runs once per doc (the same Python the oracle runs); the
+    grouping of each doc's occurrences by term is one pass for the batch:
+    the batch's tokens are ranked by term (Arrow's byte order of UTF-8 is
+    Python's code-point order), stably sorted by (doc, term rank), so the
+    positions of a term stay ascending, and cut into runs.  ``terms`` holds
+    a doc's distinct terms in order, ``tfs`` one vbyte count per term and
+    ``positions`` the doc's positions, term-major (empty when positions
+    are not stored)."""
     analyze_ = analyzer_fn(cfg.analyzer)
-    store_positions = cfg.store_positions
-
-    def analyze_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms_col: list[list[str]] = []
-            tfs_flat: list[int] = []
-            pos_flat: list[int] = []
-            tf_starts: list[int] = [0]
-            pos_starts: list[int] = [0]
-            lens: list[int] = []
-            for h, t in zip(pdf["html"], pdf["text"]):
-                toks = analyze_(extract_text(h, t), max_token_len=max_token_len)
-                occ: dict[str, list[int]] = {}
-                for i, tok in enumerate(toks):
-                    occ.setdefault(tok, []).append(i)
-                items = sorted(occ.items())
-                terms_col.append([k for k, _ in items])
-                tfs_flat.extend(len(v) for _, v in items)
-                tf_starts.append(len(tfs_flat))
-                if store_positions:
-                    # flat, term-major (ascending within each term)
-                    pos_flat.extend(p for _, v in items for p in v)
-                pos_starts.append(len(pos_flat))
-                lens.append(len(toks))
-            # ONE vectorized vbyte pass per batch, sliced per doc (a per-doc
-            # encode_vbyte call costs ~20us fixed -> minutes at 10^6 docs)
-            tf_buf, tf_bounds = encode_vbyte_packed(
-                np.asarray(tfs_flat, dtype=np.int64),
-                np.asarray(tf_starts[:-1], dtype=np.int64),
-            )
-            pos_buf, pos_bounds = encode_vbyte_packed(
-                np.asarray(pos_flat, dtype=np.int64),
-                np.asarray(pos_starts[:-1], dtype=np.int64),
-            )
-            tf_raw, pos_raw = tf_buf.tobytes(), pos_buf.tobytes()
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"].to_numpy(),
-                    "terms": terms_col,
-                    "tfs": [
-                        tf_raw[int(tf_bounds[i]) : int(tf_bounds[i + 1])]
-                        for i in range(len(lens))
-                    ],
-                    "positions": [
-                        pos_raw[int(pos_bounds[i]) : int(pos_bounds[i + 1])]
-                        for i in range(len(lens))
-                    ],
-                    "doclen": lens,
-                }
-            )
-
-    return pages.select("url", "html", "text").mapInPandas(
-        analyze_batch,
-        schema=(
-            "url string, terms array<string>, tfs binary, "
-            "positions binary, doclen int"
-        ),
+    max_token_len = cfg.max_token_len
+    toks = [
+        analyze_(extract_text(h, t), max_token_len=max_token_len)
+        for h, t in zip(rb.column("html").to_pylist(), rb.column("text").to_pylist())
+    ]
+    n_docs = len(toks)
+    lens = np.fromiter(map(len, toks), np.int64, n_docs)
+    enc = pc.dictionary_encode(pa.array(list(chain.from_iterable(toks)), pa.string()))
+    ranked = pc.sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty(ranked.size, np.int64)
+    rank[ranked] = np.arange(ranked.size)
+    codes = rank[enc.indices.to_numpy()]
+    doc = np.repeat(np.arange(n_docs), lens)
+    order = np.argsort(doc * max(ranked.size, 1) + codes, kind="stable")
+    codes, doc = codes[order], doc[order]
+    run = np.ones(codes.size, bool)
+    run[1:] = (codes[1:] != codes[:-1]) | (doc[1:] != doc[:-1])
+    run_starts = np.flatnonzero(run)
+    tfs = np.diff(np.append(run_starts, codes.size))
+    terms_per_doc = np.bincount(doc[run_starts], minlength=n_docs)
+    term_offsets = np.concatenate(([0], np.cumsum(terms_per_doc)))
+    tok_starts = np.cumsum(lens) - lens
+    tf_buf, tf_bounds = encode_vbyte_packed(tfs, term_offsets[:-1])
+    if cfg.store_positions:
+        positions = order - np.repeat(tok_starts, lens)
+        pos_buf, pos_bounds = encode_vbyte_packed(positions, tok_starts)
+    else:
+        pos_buf, pos_bounds = encode_vbyte_packed(np.empty(0, np.int64), tok_starts)
+    return pa.RecordBatch.from_arrays(
+        [
+            rb.column("url"),
+            pa.ListArray.from_arrays(
+                pa.array(term_offsets.astype(np.int32)),
+                enc.dictionary.take(pa.array(ranked[codes[run_starts]])),
+            ),
+            _binary_from(tf_buf, tf_bounds),
+            _binary_from(pos_buf, pos_bounds),
+            pa.array(lens.astype(np.int32)),
+        ],
+        names=["url", "terms", "tfs", "positions", "doclen"],
     )
+
+
+def _analyze_raw(pages: DataFrame, cfg: IndexConfig = DEFAULT_CONFIG) -> DataFrame:
+    """The Spark placement of :func:`_analyze_batch`, on the INPUT
+    partitions: html never crosses a shuffle (raw pages through the
+    exchange measurably dominated the build; analyzed rows are ~5x
+    narrower), and the expensive UDF pass checkpoints on its own before
+    any id assignment."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            yield _analyze_batch(rb, cfg)
+
+    return pages.select("url", "html", "text").mapInArrow(run, schema=ANALYZED_SCHEMA)
 
 
 def _range_parts(rows: int | None, shuffle_parts: int, parallelism: int) -> int:
@@ -280,11 +321,12 @@ def _number_docs(
         .sortWithinPartitions("url", "doclen", "terms", "tfs", "positions")
         .persist()
     )
-    counts = (
+    # at most n_parts rows: sorted here, not by a range sort in Spark
+    counts = sorted(
         ranged.groupBy(F.spark_partition_id().alias("pid"))
         .agg(F.count(F.lit(1)).alias("count"), F.sum("doclen").alias("dl"))
-        .orderBy("pid")
-        .collect()
+        .collect(),
+        key=lambda r: r["pid"],
     )
     offsets = {}
     acc = 0
@@ -639,6 +681,385 @@ def _merge_segments(cfg: IndexConfig, avgdl: float):
     return run
 
 
+# ---- placement --------------------------------------------------------
+
+# the driver placement's peak RSS per byte of the input's size estimate
+# (see _build_budget)
+_RSS_PER_INPUT_BYTE = 10
+# input size estimate up to which the driver placement measured faster than
+# the Spark one (see _build_budget)
+_BUILD_CROSSOVER = 60 << 20
+
+
+def _build_budget() -> int:
+    """The largest input, by :func:`_input_bytes`, that builds in the
+    driver placement: ``min(MemTotal / 16 / _RSS_PER_INPUT_BYTE,
+    _BUILD_CROSSOVER)`` (60 MiB at 15.7 GiB, about 100k Zipf docs).
+
+    Measured on the Zipf corpus (``write_pages_parquet(n, seed=5,
+    docs_per_file=250)``, default config), 4 cores (``nproc`` 4), 15.7 GiB,
+    PySpark 4.1.2: per size and placement one process, a cold build, then
+    two warm ``build_index(..., resume=False)`` (their mean below).  Peak
+    RSS is the driver process's ``ru_maxrss`` less its RSS after the
+    session started (118 MB); the Spark placement's driver peaked 32 MB
+    above that at every size.
+
+    ========  =========  ===========  =========  ==========  ===========
+    docs      input      driver (s)   Spark (s)  driver      RSS per doc
+              (MB)                               RSS (MB)    (KB)
+    ========  =========  ===========  =========  ==========  ===========
+    2,000     1.25       0.87         4.99       55          27.5
+    10,000    6.33       2.73         6.35       158         15.8
+    20,000    12.6       4.08         7.63       220         11.0
+    50,000    31.5       9.37         12.61      280         5.6
+    100,000   62.9       21.69        23.17      450         4.5
+    ========  =========  ===========  =========  ==========  ===========
+
+    Time: the driver placement runs the analysis chain on one core (about
+    0.13 ms a doc, most of its wall) but pays none of Spark's fixed cost
+    per job and per Python task; the Spark placement runs the chain on
+    every core.  They near a tie at 100k docs, so ``_BUILD_CROSSOVER`` is
+    set at that input.  More cores speed the Spark placement only, so on
+    a larger host the crossover is lower than measured here.
+
+    Memory: the placement holds the pages' Arrow table, the analyzed and
+    numbered rows and the postings rows in this process.  Peak RSS per
+    input byte fell with size (44, 25, 17, 8.9 and 7.2 bytes from the
+    first row down), the fixed part dominating small inputs;
+    ``_RSS_PER_INPUT_BYTE`` rounds up the ratio near the budget.  A
+    sixteenth of the RAM, as for a driver-placed query
+    (``query.engine._driver_budget``), leaves the rest to the driver JVM,
+    the Python workers and the OS."""
+    mb = host_memory_mb() or 8 * 1024
+    return min((mb << 20) // 16 // _RSS_PER_INPUT_BYTE, _BUILD_CROSSOVER)
+
+
+def _input_bytes(pages: DataFrame) -> int:
+    """Catalyst's size estimate of the pages plan, read without a Spark
+    job: the input files' size for a file scan, scaled through the plan's
+    projections.  A plan Catalyst cannot size reports Long.MaxValue, so it
+    builds in Spark."""
+    stats = pages._jdf.queryExecution().optimizedPlan().stats()
+    return int(stats.sizeInBytes())
+
+
+def _write_stage(
+    stage_dir: str, files: dict, keys: list, dictionary: list = ()
+) -> None:
+    """Overwrite ``stage_dir`` with the driver placement's parquet files
+    (``{relative path: pa.Table}``), as Spark's overwrite mode replaces a
+    stage's directory.  The options keep the files no larger than
+    Spark's: min/max statistics only on the ``keys`` readers filter on
+    (those of the vbyte binaries would sit in every page header),
+    dictionary encoding only for the columns in ``dictionary``, whose
+    values repeat, and no stored Arrow schema."""
+    shutil.rmtree(stage_dir, ignore_errors=True)
+    os.makedirs(stage_dir)
+    for name, table in files.items():
+        path = os.path.join(stage_dir, name)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(
+            table,
+            path,
+            use_dictionary=list(dictionary) or False,
+            write_statistics=list(keys),
+            store_schema=False,
+        )
+
+
+def _number_table(raw: pa.Table) -> pa.Table:
+    """The analyzed rows in the Spark placement's numbering order, with
+    ``doc_id`` = rank: (url, doclen, terms, tfs, positions) ascending, a
+    total order over the row (see :func:`_number_docs`).  Arrow sorts by
+    (url, doclen); rows tied on both, rare, are put in order by Python's
+    comparison of their lists and bytes, which is Spark's ordering of
+    array<string> and binary."""
+    order = pc.sort_indices(
+        raw, [("url", "ascending"), ("doclen", "ascending")], null_placement="at_start"
+    ).to_numpy()
+    url = raw.column("url").take(order)
+    doclen = raw.column("doclen").take(order).to_numpy()
+    null = np.asarray(url.is_null())
+    tie = (
+        pc.fill_null(pc.equal(url[1:], url[:-1]), False).to_numpy(zero_copy_only=False)
+        | (null[1:] & null[:-1])
+    ) & (doclen[1:] == doclen[:-1])
+    if tie.any():
+        order = order.copy()
+        cols = [raw.column(c) for c in ("terms", "tfs", "positions")]
+        # tie runs [a, b]: tie[a:b] all set
+        edges = np.diff(np.concatenate(([0], tie.astype(np.int8), [0])))
+        for a, b in zip(np.flatnonzero(edges == 1), np.flatnonzero(edges == -1)):
+            order[a : b + 1] = sorted(
+                order[a : b + 1], key=lambda i: tuple(c[int(i)].as_py() for c in cols)
+            )
+    numbered = raw.take(order)
+    return numbered.add_column(
+        1, "doc_id", pa.array(np.arange(numbered.num_rows, dtype=np.int64))
+    )
+
+
+def _encode_postings(numbered: pa.Table, cfg: IndexConfig, avgdl: float):
+    """The postings rows of the numbered table, with their ``bucket``,
+    sorted by (bucket, term, salt); None when no doc has a term.  The map
+    side kernel :func:`_segment_encode` runs on one salt range of rows at
+    a time, so every (term, salt) group is whole and no merge is needed.
+    The buckets are one vectorised XXH64 pass over the distinct terms."""
+    batches = numbered.select(
+        ["doc_id", "doclen", "terms", "tfs", "positions"]
+    ).combine_chunks().to_batches()
+    if not batches:
+        return None
+    rb = batches[0]
+    encode = _segment_encode(cfg, avgdl)
+    salt_range = cfg.salt_range
+    segs = list(
+        encode(rb.slice(a, salt_range) for a in range(0, rb.num_rows, salt_range))
+    )
+    if not segs:
+        return None
+    rows = pa.Table.from_batches(segs)
+    terms = pc.unique(rows.column("term"))
+    buckets = term_buckets(terms, cfg.n_buckets)
+    rows = rows.append_column(
+        "bucket",
+        pa.array(buckets[pc.index_in(rows.column("term"), value_set=terms).to_numpy()]),
+    )
+    keys = [("bucket", "ascending"), ("term", "ascending"), ("salt", "ascending")]
+    return rows.take(pc.sort_indices(rows, keys))
+
+
+class _DriverStages:
+    """The driver placement of the build's stages: the same kernels over
+    pyarrow tables in this Python process, written with pyarrow.  Its only
+    Spark job is the read of the pages (``toArrow``)."""
+
+    def __init__(self, pages: DataFrame, paths: IndexPaths, cfg: IndexConfig) -> None:
+        self.pages, self.paths, self.cfg = pages, paths, cfg
+        self.raw = self.numbered = self.postings_rows = None
+
+    def analyze(self) -> None:
+        table = self.pages.select("url", "html", "text").toArrow()
+        # a few thousand docs per kernel call bounds the batch's Python
+        # token lists, the placement's largest transient
+        batches = table.to_batches(max_chunksize=2048) or [
+            pa.RecordBatch.from_pylist([], table.schema)
+        ]
+        del table
+        self.raw = pa.Table.from_batches([_analyze_batch(rb, self.cfg) for rb in batches])
+        del batches
+        _write_stage(
+            self.paths.analyzed_raw, {"part-00000.parquet": self.raw}, ["url"],
+            dictionary=["terms.list.element"],
+        )
+
+    def number(self) -> tuple[int, int, list]:
+        raw = self.raw
+        if raw is None:
+            raw = pq.read_table(self.paths.analyzed_raw)
+        self.raw = None
+        self.numbered = _number_table(raw)
+        n = self.numbered.num_rows
+        total = int(pc.sum(self.numbered.column("doclen")).as_py() or 0)
+        return n, total, [{"partition": 0, "rows": n}]
+
+    def docs(self) -> dict:
+        t = self.numbered
+        ids = t.column("doc_id").to_numpy()
+        doclen = t.column("doclen").to_numpy()
+        docs = pa.table(
+            {
+                "url": t.column("url"),
+                "doc_id": t.column("doc_id"),
+                "doclen": t.column("doclen"),
+                "norm_byte": pa.array(int_to_byte4_np(doclen).astype(np.int32)),
+            }
+        )
+        _write_stage(
+            self.paths.docs, {"part-00000.parquet": docs}, ["doc_id"],
+            dictionary=["doclen", "norm_byte"],
+        )
+        # the metrics the Spark placement observes on its docs write; the
+        # int64 sums are exact below ~2M docs, far above the budget
+        return {
+            "n": ids.size,
+            "mx": int(ids.max()) if ids.size else None,
+            "s": int(ids.sum()),
+            "sq": int((ids * ids).sum()),
+            "tl": int(doclen.sum()),
+        }
+
+    def doc_totals(self) -> tuple[int, int]:
+        doclen = pq.read_table(self.paths.docs, columns=["doclen"]).column("doclen")
+        return len(doclen), int(pc.sum(doclen).as_py() or 0)
+
+    def postings(self, avgdl: float) -> None:
+        rows = _encode_postings(self.numbered, self.cfg, avgdl)
+        files = {}
+        if rows is not None:
+            b = rows.column("bucket").to_numpy()
+            cuts = np.concatenate(([0], np.flatnonzero(np.diff(b)) + 1, [b.size]))
+            body = rows.drop_columns(["bucket"])
+            for lo, hi in zip(cuts[:-1], cuts[1:]):
+                files[f"bucket={b[lo]}/part-00000.parquet"] = body.slice(lo, hi - lo)
+        _write_stage(self.paths.postings, files, ["term", "salt"])
+        self.postings_rows = rows
+
+    def dictionary(self) -> None:
+        cols = ["term", "n_docs", "sum_tf", "max_impact", "bucket"]
+        rows = self.postings_rows
+        if rows is None:
+            rows = pads.dataset(
+                self.paths.postings,
+                format="parquet",
+                partitioning=pads.partitioning(
+                    pa.schema([("bucket", pa.int32())]), flavor="hive"
+                ),
+            ).to_table(columns=cols)
+        d = rows.select(cols).group_by("term").aggregate(
+            [("n_docs", "sum"), ("sum_tf", "sum"), ("max_impact", "max"), ("bucket", "min")]
+        )
+        names = {"n_docs_sum": "df", "sum_tf_sum": "cf", "max_impact_max": "max_impact",
+                 "bucket_min": "bucket"}
+        d = d.rename_columns([names.get(c, c) for c in d.column_names]).select(
+            ["term", "df", "cf", "max_impact", "bucket"]
+        )
+        d = d.take(pc.sort_indices(d, [("term", "ascending")]))
+        _write_stage(
+            self.paths.dictionary, {"part-00000.parquet": d}, ["term"],
+            dictionary=["df", "cf", "max_impact", "bucket"],
+        )
+        self.postings_rows = None
+
+    def release(self) -> None:
+        self.raw = self.numbered = None
+
+
+class _SparkStages:
+    """The Spark placement of the build's stages: every stage a Spark plan
+    over the executors (see the module docstring)."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        pages: DataFrame,
+        paths: IndexPaths,
+        cfg: IndexConfig,
+        n_parts: int,
+        n_parts_explicit: bool,
+    ) -> None:
+        self.spark, self.pages, self.paths, self.cfg = spark, pages, paths, cfg
+        self.n_parts, self.n_parts_explicit = n_parts, n_parts_explicit
+        self.numbered = self.ranged = None
+
+    def analyze(self) -> None:
+        _analyze_raw(self.pages, self.cfg).write.mode("overwrite").parquet(
+            self.paths.analyzed_raw
+        )
+
+    def number(self) -> tuple[int, int, list]:
+        # The numbered rows feed the docs write and the segment encoder
+        # straight from executor persist() storage (MEMORY_AND_DISK).
+        # Writing them to parquet and re-reading them twice was pure fixed
+        # cost at the 4N level (BENCH/BASELINE.md: the numbering stage
+        # scaled 1.66x against a 3.31x ceiling).  A resume that needs these
+        # rows recomputes them from the analyzed_raw checkpoint:
+        # rank-of-url is partition-invariant, so the doc_ids come out the
+        # same.
+        raw = self.spark.read.parquet(self.paths.analyzed_raw)
+        raw_rows = (ckpt.load_manifest(self.paths.analyzed_raw) or {}).get("rows")
+        n_range = (
+            self.n_parts
+            if self.n_parts_explicit
+            else _range_parts(
+                raw_rows, self.n_parts, self.spark.sparkContext.defaultParallelism
+            )
+        )
+        self.numbered, n_docs, total_len, self.ranged, part_counts = _number_docs(
+            self.spark, raw, n_range
+        )
+        return n_docs, total_len, part_counts
+
+    def docs(self) -> dict:
+        # The permutation guard and the global stats (exact — ExactStatsCache
+        # semantics, solr/core/.../search/stats/ExactStatsCache.java) both
+        # ride the docs write via df.observe(): zero extra Spark jobs.
+        from pyspark.sql import Observation
+
+        obs = Observation("docs_metrics")
+        (
+            self.numbered.select("url", "doc_id", "doclen")
+            .observe(obs, *_permutation_metrics())
+            .withColumn("norm_byte", _norm_byte(F.col("doclen")))
+            .write.mode("overwrite")
+            .parquet(self.paths.docs)
+        )
+        return obs.get
+
+    def doc_totals(self) -> tuple[int, int]:
+        agg = (
+            self.spark.read.parquet(self.paths.docs)
+            .agg(F.count("*").alias("n"), F.sum("doclen").alias("total_len"))
+            .collect()[0]
+        )
+        return agg["n"], int(agg["total_len"] or 0)
+
+    def postings(self, avgdl: float) -> None:
+        cfg = self.cfg
+        # segments: numpy explode+sort+encode inside the UDF — raw postings
+        # never cross the JVM or a shuffle
+        segments = self.numbered.select(
+            "doc_id", "doclen", "terms", "tfs", "positions"
+        ).mapInArrow(_segment_encode(cfg, avgdl), schema=SEGMENT_SCHEMA)
+        # merge shuffle moves only packed rows; key (term-bucket, salt) so
+        # head terms split across salts (skew) and each task writes into few
+        # bucket dirs.  first_doc in the sort keeps fragments in doc order.
+        # The reduce side gets a wave-aligned >=2-waves partition count:
+        # bare spark.sql.shuffle.partitions (= core count in our session
+        # factory) is exactly ONE wave, so a single straggling merge task
+        # sets the whole stage wall — measurably worse the more cores
+        # there are (r5 scaling sessions P1/P2).  Group integrity is
+        # unaffected: (bucket, salt) hash-routes every fragment of a
+        # (term, salt) group to one partition at any partition count.
+        if self.n_parts_explicit:
+            merge_parts = self.n_parts
+        else:
+            par = max(1, self.spark.sparkContext.defaultParallelism)
+            merge_parts = -(-max(self.n_parts, 2 * par) // par) * par
+        bucket_expr = F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)).cast("int")
+        (
+            segments.repartition(merge_parts, bucket_expr, F.col("salt"))
+            .sortWithinPartitions("term", "salt", "first_doc")
+            .mapInArrow(_merge_segments(cfg, avgdl), schema=SEGMENT_SCHEMA)
+            .withColumn("bucket", bucket_expr)
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(self.paths.postings)
+        )
+
+    def dictionary(self) -> None:
+        (
+            self.spark.read.parquet(self.paths.postings)
+            .groupBy("term")
+            .agg(
+                F.sum("n_docs").alias("df"),
+                F.sum("sum_tf").alias("cf"),
+                F.max("max_impact").alias("max_impact"),
+                F.first("bucket").alias("bucket"),
+            )
+            .write.mode("overwrite")
+            .parquet(self.paths.dictionary)
+        )
+
+    def release(self) -> None:
+        # unpersist the MEMORY_AND_DISK full corpus on EVERY exit: a failed
+        # docs/postings write or a tripped permutation check must not leak
+        # the cache for the life of the Spark session.
+        if self.ranged is not None:
+            self.ranged.unpersist()
+            self.ranged = None
+
+
 def build_index(
     spark: SparkSession,
     pages: DataFrame | str,
@@ -647,7 +1068,10 @@ def build_index(
     resume: bool = True,
     n_parts: int | None = None,
 ) -> IndexPaths:
-    """Build (or resume) the full index under ``out_dir``."""
+    """Build (or resume) the full index under ``out_dir``: in the driver
+    placement when the input's size estimate fits :func:`_build_budget`,
+    else in the Spark placement.  Both walk the same stages, publish the
+    same manifests and resume the same way."""
     source = pages if isinstance(pages, str) else None
     if isinstance(pages, str):
         # parquet path or Iceberg catalog table, auto-detected; Iceberg
@@ -661,21 +1085,26 @@ def build_index(
     os.makedirs(out_dir, exist_ok=True)
     cfg_digest = cfg.digest()
     in_digest = _input_digest(pages, source)
+    if _input_bytes(pages) <= _build_budget():
+        stages = _DriverStages(pages, paths, cfg)
+    else:
+        stages = _SparkStages(spark, pages, paths, cfg, n_parts, n_parts_explicit)
 
-    # ---- stage 1a: analysis UDF -> analyzed_raw checkpoint ---------------
-    t0 = time.time()
-    if not (resume and ckpt.stage_complete(paths.analyzed_raw, cfg_digest, in_digest)):
-        _analyze_raw(pages, cfg).write.mode("overwrite").parquet(paths.analyzed_raw)
-        lineage = ckpt.parquet_lineage(paths.analyzed_raw)
+    def publish(stage_dir: str, stage: str, t0: float, **kw) -> None:
+        if "partitions" not in kw:
+            kw["partitions"] = ckpt.parquet_lineage(stage_dir)
+            kw["rows"] = sum(p["rows"] for p in kw["partitions"])
         ckpt.publish_manifest(
-            paths.analyzed_raw,
-            stage="analyzed_raw",
+            stage_dir,
+            stage=stage,
             config_digest=cfg_digest,
             input_digest=in_digest,
-            rows=sum(p["rows"] for p in lineage),
-            partitions=lineage,
             started_at=t0,
+            **kw,
         )
+
+    def complete(stage_dir: str) -> bool:
+        return resume and ckpt.stage_complete(stage_dir, cfg_digest, in_digest)
 
     def _write_stats(n_docs: int, total: int) -> None:
         stats = {
@@ -710,178 +1139,77 @@ def build_index(
             and prev.get("input_digest") == in_digest
         )
 
-    # ---- stage plan ------------------------------------------------------
-    # Decide up front which stages need (re)building: the fused pipeline
-    # materializes the numbered analyzed rows only when some consumer stage
-    # actually runs (a fully-resumed build does zero numbering work).
-    need_docs = not (resume and ckpt.stage_complete(paths.docs, cfg_digest, in_digest))
-    need_postings = not (
-        resume and ckpt.stage_complete(paths.postings, cfg_digest, in_digest)
-    )
-
-    # ---- stage 1b: dense doc_id assignment (fused — no parquet hop) ------
-    # The numbered rows feed the docs write and the segment encoder straight
-    # from executor persist() storage (MEMORY_AND_DISK).  Writing them to
-    # parquet and re-reading them twice was pure fixed cost at the 4N level
-    # (BENCH/BASELINE.md: the numbering stage scaled 1.66x against a 3.31x
-    # ceiling).  A resume that needs these rows recomputes them from the
-    # analyzed_raw checkpoint: rank-of-url is partition-invariant, so the
-    # doc_ids come out the same.
-    analyzed = None
-    ranged = None
-    stats_fresh = False
     try:
+        # ---- stage 1a: analysis -> analyzed_raw checkpoint ---------------
+        t0 = time.time()
+        if not complete(paths.analyzed_raw):
+            stages.analyze()
+            publish(paths.analyzed_raw, "analyzed_raw", t0)
+
+        # ---- stage plan --------------------------------------------------
+        # Decide up front which stages need (re)building: the numbered
+        # rows are materialized only when some consumer stage actually
+        # runs (a fully-resumed build does zero numbering work).
+        need_docs = not complete(paths.docs)
+        need_postings = not complete(paths.postings)
+
+        # ---- stage 1b: dense doc_id assignment ---------------------------
+        stats_fresh = False
         if need_docs or need_postings:
             t0 = time.time()
-            raw = spark.read.parquet(paths.analyzed_raw)
-            raw_rows = (ckpt.load_manifest(paths.analyzed_raw) or {}).get("rows")
-            n_range = (
-                n_parts
-                if n_parts_explicit
-                else _range_parts(
-                    raw_rows, n_parts, spark.sparkContext.defaultParallelism
-                )
-            )
-            analyzed, n_docs_, total_len_, ranged, part_counts = _number_docs(
-                spark, raw, n_range
-            )
+            n_docs_, total_len_, part_counts = stages.number()
             if not _stats_reusable():
                 _write_stats(n_docs_, total_len_)
                 stats_fresh = True
             os.makedirs(paths.numbering, exist_ok=True)
-            ckpt.publish_manifest(
-                paths.numbering,
-                stage="numbering",
-                config_digest=cfg_digest,
-                input_digest=in_digest,
-                rows=n_docs_,
-                partitions=part_counts,
-                started_at=t0,
+            publish(
+                paths.numbering, "numbering", t0, rows=n_docs_, partitions=part_counts
             )
 
-        # ---- stage 1c: docs table (+ observed stats & permutation check) -----
-        # The permutation guard and the global stats (exact — ExactStatsCache
-        # semantics, solr/core/.../search/stats/ExactStatsCache.java) both ride
-        # the docs write via df.observe(): zero extra Spark jobs.
+        # ---- stage 1c: docs table (+ stats & permutation check) ----------
         t0 = time.time()
         if need_docs:
-            from pyspark.sql import Observation
-
-            obs = Observation("docs_metrics")
-            docs = (
-                analyzed.select("url", "doc_id", "doclen")
-                .observe(obs, *_permutation_metrics())
-                .withColumn("norm_byte", _norm_byte(F.col("doclen")))
-            )
-            docs.write.mode("overwrite").parquet(paths.docs)
-            m = obs.get
+            m = stages.docs()
             _assert_doc_id_permutation(m)
             _write_stats(int(m["n"]), int(m["tl"] or 0))
             stats_fresh = True
-            lineage = ckpt.parquet_lineage(paths.docs)
-            ckpt.publish_manifest(
-                paths.docs,
-                stage="docs",
-                config_digest=cfg_digest,
-                input_digest=in_digest,
-                rows=sum(p["rows"] for p in lineage),
-                partitions=lineage,
-                started_at=t0,
-            )
-        docs = spark.read.parquet(paths.docs)
+            publish(paths.docs, "docs", t0)
 
-        # ---- stage 2: stats fallback (resume path where both stage-1 outputs
-        # were reused but stats.json is missing/stale) -------------------------
+        # ---- stage 2: stats fallback (resume path where both stage-1
+        # outputs were reused but stats.json is missing/stale) ------------
         if not stats_fresh and not _stats_reusable():
-            agg = docs.agg(
-                F.count("*").alias("n"), F.sum("doclen").alias("total_len")
-            ).collect()[0]
-            _write_stats(agg["n"], int(agg["total_len"] or 0))
+            _write_stats(*stages.doc_totals())
         with open(paths.stats) as f:
             stats = json.load(f)
 
-        # ---- stage 3: postings (map-side segments -> salted merge) ----------
+        # ---- stage 3: postings (segment encode -> postings) --------------
         t0 = time.time()
         if need_postings:
-            # segments: numpy explode+sort+encode inside the UDF — raw postings
-            # never cross the JVM or a shuffle
-            segments = analyzed.select(
-                "doc_id", "doclen", "terms", "tfs", "positions"
-            ).mapInArrow(_segment_encode(cfg, stats["avgdl"]), schema=SEGMENT_SCHEMA)
-            # merge shuffle moves only packed rows; key (term-bucket, salt) so
-            # head terms split across salts (skew) and each task writes into few
-            # bucket dirs.  first_doc in the sort keeps fragments in doc order.
-            # The reduce side gets a wave-aligned >=2-waves partition count:
-            # bare spark.sql.shuffle.partitions (= core count in our session
-            # factory) is exactly ONE wave, so a single straggling merge task
-            # sets the whole stage wall — measurably worse the more cores
-            # there are (r5 scaling sessions P1/P2).  Group integrity is
-            # unaffected: (bucket, salt) hash-routes every fragment of a
-            # (term, salt) group to one partition at any partition count.
-            if n_parts_explicit:
-                merge_parts = n_parts
-            else:
-                par = max(1, spark.sparkContext.defaultParallelism)
-                merge_parts = -(-max(n_parts, 2 * par) // par) * par
-            bucket_expr = F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)).cast("int")
-            blocks = (
-                segments.repartition(merge_parts, bucket_expr, F.col("salt"))
-                .sortWithinPartitions("term", "salt", "first_doc")
-                .mapInArrow(_merge_segments(cfg, stats["avgdl"]), schema=SEGMENT_SCHEMA)
-                .withColumn("bucket", bucket_expr)
-            )
-            blocks.write.mode("overwrite").partitionBy("bucket").parquet(paths.postings)
-            lineage = ckpt.parquet_lineage(paths.postings)
-            ckpt.publish_manifest(
-                paths.postings,
-                stage="postings",
-                config_digest=cfg_digest,
-                input_digest=in_digest,
-                rows=sum(p["rows"] for p in lineage),
-                partitions=lineage,
-                started_at=t0,
+            stages.postings(stats["avgdl"])
+            publish(
+                paths.postings, "postings", t0,
                 extra={"avgdl": stats["avgdl"], "N": stats["N"]},
             )
     finally:
-        # unpersist the MEMORY_AND_DISK full corpus on EVERY exit:
-        # a failed docs/postings write or a tripped permutation check
-        # must not leak the cache for the life of the Spark session.
-        if ranged is not None:
-            ranged.unpersist()
-    postings = spark.read.parquet(paths.postings)
+        # the numbered rows go on every exit: a failed stage must not leak
+        # them for the life of the session
+        stages.release()
 
     # ---- stage 4: dictionary (term -> df, cf, global max impact) --------
     t0 = time.time()
-    if not (resume and ckpt.stage_complete(paths.dictionary, cfg_digest, in_digest)):
-        dictionary = postings.groupBy("term").agg(
-            F.sum("n_docs").alias("df"),
-            F.sum("sum_tf").alias("cf"),
-            F.max("max_impact").alias("max_impact"),
-            F.first("bucket").alias("bucket"),
-        )
-        dictionary.write.mode("overwrite").parquet(paths.dictionary)
-        lineage = ckpt.parquet_lineage(paths.dictionary)
-        ckpt.publish_manifest(
-            paths.dictionary,
-            stage="dictionary",
-            config_digest=cfg_digest,
-            input_digest=in_digest,
-            rows=sum(p["rows"] for p in lineage),
-            partitions=lineage,
-            started_at=t0,
-        )
+    if not complete(paths.dictionary):
+        stages.dictionary()
+        publish(paths.dictionary, "dictionary", t0)
 
     # ---- stage 5: per-doc payload side table (payload analyzers only) ---
     # Positions index the post-analysis token stream, so payloads[pos]
     # recovers any occurrence's payload — the PayloadScoreQuery /
     # PayloadCheckQuery data path (DelimitedPayloadTokenFilter.java)
     # without a postings-format change.  One extra pass over the raw
-    # text, paid only by payload indexes.
+    # text, paid only by payload indexes, in Spark in either placement.
     if cfg.analyzer == "whitespace_payload":
         t0 = time.time()
-        if not (
-            resume and ckpt.stage_complete(paths.payloads, cfg_digest, in_digest)
-        ):
+        if not complete(paths.payloads):
             docs_map = spark.read.parquet(paths.docs).select("url", "doc_id")
             (
                 _payload_arrays(pages)
@@ -892,16 +1220,7 @@ def build_index(
                 .write.mode("overwrite")
                 .parquet(paths.payloads)
             )
-            lineage = ckpt.parquet_lineage(paths.payloads)
-            ckpt.publish_manifest(
-                paths.payloads,
-                stage="payloads",
-                config_digest=cfg_digest,
-                input_digest=in_digest,
-                rows=sum(p["rows"] for p in lineage),
-                partitions=lineage,
-                started_at=t0,
-            )
+            publish(paths.payloads, "payloads", t0)
     return paths
 
 

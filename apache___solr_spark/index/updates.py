@@ -10,9 +10,11 @@ update/DirectUpdateHandler2.java:407-513):
 
 Spark-first mapping:
 - deletes: an append-only parquet of tombstone doc_ids under
-  <index>/deletes/; SearchEngine anti-joins the final score aggregation
-  against it (the liveDocs mask), so every query path (terms, phrases,
-  expansions, rerank) honors deletions without touching postings.
+  <index>/deletes/; a SearchEngine reads them at open and its query
+  kernel masks each salt's root rows by the tombstones of that salt's
+  doc-id range (the liveDocs mask), in either placement, so every query
+  path (terms, phrases, spans, expansions, rerank) honors deletions
+  without touching postings.
 - add_docs: analyzes the new pages with the index's own config, assigns
   doc_ids monotonically after the current N (so salt ranges keep extending
   and never collide), encodes segment rows with the SAME map-side encoder

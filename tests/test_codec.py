@@ -197,6 +197,47 @@ def test_merge_segments_equals_unsplit_encode(store_positions):
 
 
 @pytest.mark.parametrize("store_positions", [True, False])
+def test_analyze_batch_matches_per_doc_loop(store_positions):
+    """The analysis kernel's one-sort grouping gives, doc for doc, what a
+    per-doc dict of term -> positions sorted by term gives (the loop the
+    kernel replaced, kept here as the reference): terms, vbyte tfs,
+    term-major vbyte positions and doclen, over html and text docs, empty
+    and null ones, repeated and non-ASCII terms, in one batch."""
+    import pyarrow as pa
+
+    from apache___solr_spark.analysis.chain import analyze, extract_text
+    from apache___solr_spark.config import IndexConfig
+    from apache___solr_spark.index.builder import _analyze_batch
+
+    texts = [
+        "web data web page web", None, "", "the and of", "Über naïve café über web",
+        "中文 web 中文 data", "b a b a c", "data page " * 40,
+    ]
+    htmls = [None, b"<p>web <b>page</b> data page</p>", None, None, None, None, None, None]
+    rb = pa.RecordBatch.from_pydict(
+        {
+            "url": [f"u{i}" for i in range(len(texts))],
+            "html": pa.array(htmls, pa.binary()),
+            "text": pa.array(texts, pa.string()),
+        }
+    )
+    cfg = IndexConfig(store_positions=store_positions)
+    got = _analyze_batch(rb, cfg).to_pylist()
+    assert [r["url"] for r in got] == rb.column("url").to_pylist()
+    for h, t, row in zip(htmls, texts, got):
+        toks = analyze(extract_text(h, t), max_token_len=cfg.max_token_len)
+        occ: dict[str, list[int]] = {}
+        for i, tok in enumerate(toks):
+            occ.setdefault(tok, []).append(i)
+        items = sorted(occ.items())
+        assert row["terms"] == [k for k, _ in items]
+        assert row["doclen"] == len(toks)
+        assert row["tfs"] == encode_vbyte(np.array([len(v) for _, v in items]))
+        pos = [p for _, v in items for p in v] if store_positions else []
+        assert row["positions"] == encode_vbyte(np.array(pos, dtype=np.int64))
+
+
+@pytest.mark.parametrize("store_positions", [True, False])
 def test_query_decoders_roundtrip(store_positions, monkeypatch):
     """The query kernel, fed each salt's segment-encoder rows of a
     multi-salt corpus in 1-3 row batches, returns the corpus's own postings

@@ -47,6 +47,29 @@ def built(spark, corpus, tmp_path_factory):
     return out
 
 
+PLACEMENTS = ("driver", "spark")
+
+
+def _place_build(monkeypatch, placement):
+    """Force the build placement through its budget (a test seam, not an
+    option): every input fits the driver's, or none does."""
+    from apache___solr_spark.index import builder
+
+    budget = 1 << 62 if placement == "driver" else 0
+    monkeypatch.setattr(builder, "_build_budget", lambda: budget)
+
+
+@pytest.fixture(scope="module")
+def spark_built(spark, corpus, tmp_path_factory):
+    """The ``built`` corpus built in the Spark placement."""
+    path, _ = corpus
+    out = str(tmp_path_factory.mktemp("index_spark") / "idx")
+    with pytest.MonkeyPatch.context() as m:
+        _place_build(m, "spark")
+        build_index(spark, path, out, cfg=CFG)
+    return out
+
+
 def test_corpus_deterministic(corpus):
     _, table = corpus
     again = generate_pages(N_DOCS, seed=42)
@@ -138,36 +161,41 @@ def test_prune_equals_noprune(spark, built):
         assert a == b, spec
 
 
-def test_partitioning_invariance(spark, corpus, built, tmp_path_factory):
-    """1-partition build == many-partition build (control vs distributed)."""
+def test_partitioning_invariance(
+    spark, corpus, built, spark_built, tmp_path_factory, monkeypatch
+):
+    """1-partition build == many-partition build (control vs distributed),
+    in each placement against the default build of that placement."""
     path, _ = corpus
-    out2 = str(tmp_path_factory.mktemp("index1p") / "idx")
-    pages1 = spark.read.parquet(path).repartition(1)
-    build_index(spark, pages1, out2, cfg=CFG, n_parts=1)
-    a = (
-        spark.read.parquet(os.path.join(built, "docs"))
-        .orderBy("doc_id")
-        .collect()
-    )
-    b = (
-        spark.read.parquet(os.path.join(out2, "docs"))
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert a == b
-    da = spark.read.parquet(os.path.join(built, "dictionary")).orderBy("term").collect()
-    db = spark.read.parquet(os.path.join(out2, "dictionary")).orderBy("term").collect()
-    assert [(r["term"], r["df"], r["cf"]) for r in da] == [
-        (r["term"], r["df"], r["cf"]) for r in db
-    ]
-    # postings rows, every column: the 1-partition build encodes each
-    # (term, salt) group whole, the default build merges fragments
-    pa_ = spark.read.parquet(os.path.join(built, "postings")).collect()
-    pb_ = spark.read.parquet(os.path.join(out2, "postings")).collect()
-    rows_a = {(r["term"], r["salt"]): r.asDict() for r in pa_}
-    rows_b = {(r["term"], r["salt"]): r.asDict() for r in pb_}
-    assert len(rows_a) == len(pa_) and len(rows_b) == len(pb_)
-    assert rows_a == rows_b
+    for placement, default in zip(PLACEMENTS, (built, spark_built)):
+        _place_build(monkeypatch, placement)
+        out2 = str(tmp_path_factory.mktemp(f"index1p_{placement}") / "idx")
+        pages1 = spark.read.parquet(path).repartition(1)
+        build_index(spark, pages1, out2, cfg=CFG, n_parts=1)
+        a = (
+            spark.read.parquet(os.path.join(default, "docs"))
+            .orderBy("doc_id")
+            .collect()
+        )
+        b = (
+            spark.read.parquet(os.path.join(out2, "docs"))
+            .orderBy("doc_id")
+            .collect()
+        )
+        assert a == b, placement
+        da = spark.read.parquet(os.path.join(default, "dictionary")).orderBy("term").collect()
+        db = spark.read.parquet(os.path.join(out2, "dictionary")).orderBy("term").collect()
+        assert [(r["term"], r["df"], r["cf"]) for r in da] == [
+            (r["term"], r["df"], r["cf"]) for r in db
+        ], placement
+        # postings rows, every column: the 1-partition build encodes each
+        # (term, salt) group whole, the default build merges fragments
+        pa_ = spark.read.parquet(os.path.join(default, "postings")).collect()
+        pb_ = spark.read.parquet(os.path.join(out2, "postings")).collect()
+        rows_a = {(r["term"], r["salt"]): r.asDict() for r in pa_}
+        rows_b = {(r["term"], r["salt"]): r.asDict() for r in pb_}
+        assert len(rows_a) == len(pa_) and len(rows_b) == len(pb_)
+        assert rows_a == rows_b, placement
 
 
 def test_optimize_drops_fully_deleted_term(spark, built, oracle_idx, tmp_path):
@@ -239,20 +267,27 @@ def _persistent_rdd_ids(spark) -> set:
 
 
 @pytest.mark.parametrize(
-    "stage", ["analyzed_raw", "numbering", "docs", "postings", "dictionary"]
+    "stage, placement",
+    [
+        pytest.param(s, p, id=s if p == "driver" else f"{s}-{p}")
+        for p in PLACEMENTS
+        for s in ("analyzed_raw", "numbering", "docs", "postings", "dictionary")
+    ],
 )
 def test_crash_in_stage_resumes_identical(
-    spark, corpus, built, tmp_path_factory, monkeypatch, stage
+    spark, corpus, built, tmp_path_factory, monkeypatch, stage, placement
 ):
     """A build that dies inside a stage (its data written, its manifest
     not yet published) leaks no cached frame, and a resume finishes to an
     index row-identical to an uninterrupted build: docs, dictionary and
-    postings in every column, and the same N/avgdl."""
+    postings in every column, and the same N/avgdl.  Crash and resume run
+    in the placement under test; the uninterrupted build is ``built``."""
     from apache___solr_spark.index import checkpoint as ckpt
 
     path, _ = corpus
-    out = str(tmp_path_factory.mktemp(f"crash_{stage}") / "idx")
+    out = str(tmp_path_factory.mktemp(f"crash_{stage}_{placement}") / "idx")
     publish = ckpt.publish_manifest
+    _place_build(monkeypatch, placement)
 
     def crash_at_stage(stage_dir, **kw):
         if kw["stage"] == stage:
@@ -267,6 +302,7 @@ def test_crash_in_stage_resumes_identical(
     assert not os.path.exists(os.path.join(out, stage, "_MANIFEST.json"))
     monkeypatch.undo()
 
+    _place_build(monkeypatch, placement)
     build_index(spark, path, out, cfg=CFG, resume=True)
     for table, keys in (
         ("docs", ["doc_id"]),
@@ -3339,42 +3375,182 @@ def test_failed_build_unpersists_cache(spark, corpus, tmp_path_factory, monkeypa
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_before
 
 
-def test_duplicate_url_numbering_deterministic(spark, corpus, tmp_path_factory):
+def _dup_url_rows(table):
+    """The first 60 corpus rows with three urls shared by two or three rows
+    of different content — the dangerous case for the numbering."""
+    rows = table.to_pylist()[:60]
+    rows[1]["url"] = rows[0]["url"]
+    rows[7]["url"] = rows[0]["url"]
+    rows[13]["url"] = rows[12]["url"]
+    return rows
+
+
+def test_duplicate_url_numbering_deterministic(
+    spark, corpus, tmp_path_factory, monkeypatch
+):
     """Duplicate-url inputs: the numbering sort is a total order over the
     row, so a postings-only resume (docs kept, numbering recomputed from
     analyzed_raw) re-derives the SAME doc_id for each physical row even when
     urls tie — under a bare url sort the tie order was shuffle-refetch
-    nondeterministic and the dense-permutation check could not see a swap."""
+    nondeterministic and the dense-permutation check could not see a swap.
+    Both placements; the docs they number are equal."""
     import pyarrow as pa
 
     _, table = corpus
-    rows = table.to_pylist()[:60]
-    # same url, different content — the dangerous case
-    rows[1]["url"] = rows[0]["url"]
-    rows[7]["url"] = rows[0]["url"]
-    rows[13]["url"] = rows[12]["url"]
+    rows = _dup_url_rows(table)
     dup_path = str(tmp_path_factory.mktemp("dupurl") / "pages.parquet")
     pq.write_table(pa.Table.from_pylist(rows, schema=table.schema), dup_path)
-    out = str(tmp_path_factory.mktemp("dupidx") / "idx")
-    build_index(spark, dup_path, out, cfg=CFG)
-    docs = spark.read.parquet(os.path.join(out, "docs"))
-    assert docs.count() == 60  # every physical row numbered (dense: checked in-build)
-    assert docs.filter(F.col("url") == rows[0]["url"]).count() == 3
-    before = (
-        spark.read.parquet(os.path.join(out, "postings"))
-        .orderBy("term", "salt")
-        .collect()
+    numbered = []
+    for placement in PLACEMENTS:
+        _place_build(monkeypatch, placement)
+        out = str(tmp_path_factory.mktemp(f"dupidx_{placement}") / "idx")
+        build_index(spark, dup_path, out, cfg=CFG)
+        docs = spark.read.parquet(os.path.join(out, "docs"))
+        assert docs.count() == 60  # every physical row numbered (dense: checked in-build)
+        assert docs.filter(F.col("url") == rows[0]["url"]).count() == 3
+        before = (
+            spark.read.parquet(os.path.join(out, "postings"))
+            .orderBy("term", "salt")
+            .collect()
+        )
+        docs_before = docs.orderBy("doc_id").collect()
+        os.remove(os.path.join(out, "postings", "_MANIFEST.json"))
+        build_index(spark, dup_path, out, cfg=CFG)
+        after = (
+            spark.read.parquet(os.path.join(out, "postings"))
+            .orderBy("term", "salt")
+            .collect()
+        )
+        assert before == after, placement
+        assert docs_before == (
+            spark.read.parquet(os.path.join(out, "docs")).orderBy("doc_id").collect()
+        ), placement
+        numbered.append(docs_before)
+    assert numbered[0] == numbered[1]
+
+
+def _placement_tables(spark, root):
+    """Every row and column of an index's docs, dictionary and postings,
+    in key order, and its stats.json corpus figures."""
+    tables = [
+        spark.read.parquet(os.path.join(root, table)).orderBy(*keys).collect()
+        for table, keys in (
+            ("docs", ["doc_id"]),
+            ("dictionary", ["term"]),
+            ("postings", ["term", "salt"]),
+        )
+    ]
+    with open(os.path.join(root, "stats.json")) as f:
+        stats = json.load(f)
+    return tables, [stats[k] for k in ("N", "avgdl", "total_len")]
+
+
+def test_build_placements_agree(spark, corpus, built, spark_built, tmp_path_factory):
+    """The driver and the Spark placement of the build give row-identical
+    indexes: docs, dictionary (term, df, cf, max_impact, bucket), every
+    postings column and the stats, on the reference corpus, a
+    duplicate-url corpus (urls tied on doclen too, so the numbering's
+    order over terms, tfs and positions decides) and the theta-decoy
+    corpus.  Each index then takes the same add_docs, delete_docs and
+    optimize, and gives the same query pages after each."""
+    import shutil
+
+    import pyarrow as pa
+
+    from apache___solr_spark.index.updates import add_docs, delete_docs, optimize
+
+    path, table = corpus
+    rows = _dup_url_rows(table)
+    # tied on url and doclen: other terms, same terms in other positions,
+    # and two rows identical in every column
+    for text in ("alpha beta", "beta alpha", "alpha gamma", "alpha beta"):
+        rows.append({**rows[20], "url": rows[3]["url"], "html": None, "text": text})
+    dup = str(tmp_path_factory.mktemp("agree_pages") / "dup.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, schema=table.schema), dup)
+    added = spark.createDataFrame(
+        [
+            (f"zz-added-{i}", None, None, text, "en")
+            for i, text in enumerate(
+                ["alpha web data", "beta page web", "gamma data page alpha", "web web"]
+            )
+        ],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    docs_before = docs.orderBy("doc_id").collect()
-    os.remove(os.path.join(out, "postings", "_MANIFEST.json"))
-    build_index(spark, dup_path, out, cfg=CFG)
-    after = (
-        spark.read.parquet(os.path.join(out, "postings"))
-        .orderBy("term", "salt")
-        .collect()
-    )
-    assert before == after
-    assert docs_before == spark.read.parquet(os.path.join(out, "docs")).orderBy("doc_id").collect()
+    corpora = {"reference": None, "dup_url": dup, "decoy": _adversarial_pages(spark)}
+    for name, pages in corpora.items():
+        roots = {}
+        for placement in PLACEMENTS:
+            out = str(tmp_path_factory.mktemp(f"agree_{name}_{placement}") / "idx")
+            if pages is None:
+                shutil.copytree(built if placement == "driver" else spark_built, out)
+            else:
+                with pytest.MonkeyPatch.context() as m:
+                    _place_build(m, placement)
+                    build_index(spark, pages, out, cfg=CFG)
+            roots[placement] = out
+        want, got = (_placement_tables(spark, roots[p]) for p in PLACEMENTS)
+        assert want[0][0] and want[0][2], name
+        for table, a, b in zip(("docs", "dictionary", "postings"), want[0], got[0]):
+            assert a == b, (name, table)
+        assert want[1] == got[1], name
+
+        top = [
+            r["term"]
+            for r in spark.read.parquet(os.path.join(roots["driver"], "dictionary"))
+            .orderBy(F.desc("df"), "term")
+            .limit(3)
+            .collect()
+        ]
+        queries = [
+            " ".join(top), f"{top[0]} AND {top[1]}", f'"{top[0]} {top[1]}"',
+            "alpha web", "beta -alpha",
+        ]
+        gone = [
+            r["url"]
+            for r in spark.read.parquet(os.path.join(roots["driver"], "docs"))
+            .filter(F.col("doc_id").isin(0, 5))
+            .collect()
+        ]
+
+        def pages_of(root):
+            eng = SearchEngine(spark, root, cfg=CFG)
+            return [eng.search(q, k=20).collect() for q in queries]
+
+        for step in ("add_docs", "delete_docs", "optimize"):
+            for root in roots.values():
+                if step == "add_docs":
+                    add_docs(spark, root, added, cfg=CFG)
+                elif step == "delete_docs":
+                    delete_docs(spark, root, urls=gone)
+                else:
+                    optimize(spark, root, cfg=CFG)
+            a, b = (pages_of(roots[p]) for p in PLACEMENTS)
+            assert any(a), (name, step)
+            assert a == b, (name, step)
+
+
+def test_build_placement_follows_input_size(spark, corpus, tmp_path_factory, monkeypatch):
+    """The placement is the input's size estimate against the budget: a
+    corpus at the budget builds on the driver, and a warm build there runs
+    at most 2 Spark jobs (the pages' schema read and ``toArrow``); one
+    byte under it the same corpus builds through Spark."""
+    from apache___solr_spark.index import builder
+
+    path, _ = corpus
+    size = builder._input_bytes(spark.read.parquet(path))
+    assert 0 < size < 1 << 62
+    jobs = _job_counter(spark)
+    root = tmp_path_factory.mktemp("placement")
+    counts = {}
+    for placement, budget in (("driver", size), ("spark", size - 1)):
+        monkeypatch.setattr(builder, "_build_budget", lambda: budget)
+        build_index(spark, path, str(root / f"{placement}_cold"), cfg=CFG)
+        _, counts[placement] = jobs(
+            placement,
+            lambda: build_index(spark, path, str(root / f"{placement}_warm"), cfg=CFG),
+        )
+    assert counts["driver"] <= 2, counts
+    assert counts["spark"] > 2, counts
 
 
 def test_mlt_ignores_stale_analyzed_checkpoint(spark, corpus, tmp_path_factory):
@@ -3952,9 +4128,9 @@ def test_buckets_come_from_dictionary(spark, built, monkeypatch):
     want = pages()
 
     def no_hash(*args):
-        raise AssertionError("term_bucket called")
+        raise AssertionError("term_buckets called")
 
-    monkeypatch.setattr(xxhash, "term_bucket", no_hash)
+    monkeypatch.setattr(xxhash, "term_buckets", no_hash)
     assert pages() == want
 
 

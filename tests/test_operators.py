@@ -145,22 +145,47 @@ def test_cursor_page_walks_whole_set(spark):
 
 
 def test_python_xxhash_matches_spark(spark):
-    """term_bucket (driver-side XXH64) must equal Spark's xxhash64 — the
-    engine's bucket pruning depends on it."""
+    """The numpy XXH64 over an Arrow string array and the bucket function
+    built on it must equal Spark's xxhash64 and pmod(xxhash64, n): the
+    driver placement of the build writes postings under those buckets.
+    Every branch of the algorithm is covered: UTF-8 lengths 0, 1-3 (bytes
+    only), 4-7 (one 4-byte word), 8-31 (8-byte words) and >=32 (32-byte
+    stripes, then the tail), ASCII and multi-byte terms, and a sliced
+    array."""
     import random
     import string
 
-    from apache___solr_spark.index.xxhash import xxhash64
+    import pyarrow as pa
+
+    from apache___solr_spark.index.xxhash import term_buckets, xxhash64
 
     rnd = random.Random(7)
-    terms = [
-        "".join(rnd.choices(string.ascii_lowercase + "0123456789'é中", k=rnd.randint(1, 40)))
-        for _ in range(200)
-    ] + ["", "a", "web", "don't"]
+    alphabet = string.ascii_lowercase + "0123456789'é中"
+    terms = ["", "a", "web", "don't", "é", "中", "éa", "中文", "x" * 32, "y" * 33]
+    for lo, hi in ((1, 3), (4, 7), (8, 31), (32, 100)):
+        for _ in range(60):
+            terms.append("".join(rnd.choices(alphabet, k=rnd.randint(lo, hi))))
+    lengths = {len(t.encode()) for t in terms}
+    for lo, hi in ((0, 0), (1, 3), (4, 7), (8, 31), (32, 64), (65, 400)):
+        assert any(lo <= n <= hi for n in lengths), (lo, hi)
+    n_buckets = 64
     df = spark.createDataFrame([(t,) for t in terms], "t string")
-    got = {r["t"]: r["h"] for r in df.select("t", F.xxhash64("t").alias("h")).collect()}
-    for t in terms:
-        assert got[t] == xxhash64(t), t
+    got = {
+        r["t"]: (r["h"], r["b"])
+        for r in df.select(
+            "t",
+            F.xxhash64("t").alias("h"),
+            F.pmod(F.xxhash64("t"), F.lit(n_buckets)).alias("b"),
+        ).collect()
+    }
+    arr = pa.array(terms, pa.string())
+    hashes = xxhash64(arr)
+    buckets = term_buckets(arr, n_buckets)
+    for t, h, b in zip(terms, hashes, buckets):
+        assert got[t] == (int(h), int(b)), t
+    tail = arr.slice(5, 40)
+    assert list(xxhash64(tail)) == list(hashes[5:45])
+    assert list(xxhash64(pa.chunked_array([arr[:3], arr[3:]]))) == list(hashes)
 
 
 def test_merge_unique(spark):

@@ -5,7 +5,9 @@ first-attempt failure is injected into the pages scan of a real
 ``build_index`` run on ``local[4,3]`` (3 task attempts); the build must
 complete and produce an index identical to a clean build — which also
 proves the analysis/numbering/postings stages are idempotent and
-deterministic under partial re-execution.
+deterministic under partial re-execution.  It runs in both build
+placements; in the driver one the failing task is the read of the pages
+the driver analyzes.
 
 Runs in a subprocess: the shared test session is ``local[32]`` with
 fail-fast tasks, and one SparkContext per process is a Spark invariant.
@@ -26,7 +28,7 @@ work = sys.argv[2]
 from pyspark import TaskContext
 
 from apache___solr_spark.corpus import write_pages_parquet
-from apache___solr_spark.index.builder import build_index
+from apache___solr_spark.index import builder
 from apache___solr_spark.query.engine import SearchEngine
 from apache___solr_spark.config import IndexConfig
 from apache___solr_spark.session import get_spark
@@ -53,23 +55,28 @@ schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in pages.schema
 flaky_pages = pages.mapInPandas(flaky, schema=schema)
 
 cfg = IndexConfig(block_range=32, salt_range=128, n_buckets=8)
-out_flaky = os.path.join(work, "idx_flaky")
-out_clean = os.path.join(work, "idx_clean")
-build_index(spark, flaky_pages, out_flaky, cfg=cfg)
-build_index(spark, pages, out_clean, cfg=cfg)
+# each pass forces one placement through the build's budget
+for placement, budget in (("driver", 1 << 62), ("spark", 0)):
+    builder._build_budget = lambda: budget
+    if os.path.exists(marker):
+        os.remove(marker)
+    out_flaky = os.path.join(work, "idx_flaky_" + placement)
+    out_clean = os.path.join(work, "idx_clean_" + placement)
+    builder.build_index(spark, flaky_pages, out_flaky, cfg=cfg)
+    builder.build_index(spark, pages, out_clean, cfg=cfg)
 
-assert os.path.exists(marker), "failure was never injected"
-n_fail = sum(1 for _ in open(marker))
+    assert os.path.exists(marker), "failure was never injected"
+    n_fail = sum(1 for _ in open(marker))
 
-ef = SearchEngine(spark, out_flaky, cfg=cfg)
-ec = SearchEngine(spark, out_clean, cfg=cfg)
-df = sorted(map(tuple, ef.dictionary.select("term", "df", "cf").collect()))
-dc = sorted(map(tuple, ec.dictionary.select("term", "df", "cf").collect()))
-assert df == dc and df, (len(df), len(dc))
-qf = [(r["doc_id"], round(r["score"], 5)) for r in ef.search("web data", k=20).collect()]
-qc = [(r["doc_id"], round(r["score"], 5)) for r in ec.search("web data", k=20).collect()]
-assert qf == qc and qf
-print(f"RETRY-OK injected={n_fail} dict_terms={len(df)} hits={len(qf)}")
+    ef = SearchEngine(spark, out_flaky, cfg=cfg)
+    ec = SearchEngine(spark, out_clean, cfg=cfg)
+    df = sorted(map(tuple, ef.dictionary.select("term", "df", "cf").collect()))
+    dc = sorted(map(tuple, ec.dictionary.select("term", "df", "cf").collect()))
+    assert df == dc and df, (placement, len(df), len(dc))
+    qf = [(r["doc_id"], round(r["score"], 5)) for r in ef.search("web data", k=20).collect()]
+    qc = [(r["doc_id"], round(r["score"], 5)) for r in ec.search("web data", k=20).collect()]
+    assert qf == qc and qf, placement
+    print(f"RETRY-OK placement={placement} injected={n_fail} dict_terms={len(df)} hits={len(qf)}")
 spark.stop()
 """
 
@@ -90,6 +97,10 @@ def test_build_survives_injected_task_failures(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     ok = [l for l in proc.stdout.splitlines() if l.startswith("RETRY-OK")]
-    assert ok, proc.stdout[-2000:]
-    # the injection fired at least once and the index still matched clean
-    assert "injected=" in ok[0] and "injected=0" not in ok[0]
+    assert [l.split()[1] for l in ok] == ["placement=driver", "placement=spark"], (
+        proc.stdout[-2000:]
+    )
+    # in each placement the injection fired at least once and the index
+    # still matched the clean one
+    for line in ok:
+        assert "injected=" in line and "injected=0" not in line, line
