@@ -16,18 +16,11 @@ from dataclasses import asdict, dataclass, field
 class IndexConfig:
     """Configuration for an index build + the query engine reading it.
 
-    block_range: postings blocks are aligned on fixed doc_id ranges
-        (block_id = doc_id // block_range).  Aligned blocks make block-max
-        pruning sound for multi-term queries: a whole doc range can be
-        skipped when the sum of per-term block max-scores is below the
-        top-k threshold.  This replaces Lucene's per-list 128-doc blocks +
-        impacts (Lucene101PostingsFormat semantics) with a layout that
-        distributes: one DataFrame row per (term, block).
-    salt_range: doc_id range per merge salt.  The postings merge groups by
-        (term, doc_id // salt_range) instead of bare term so a head term
+    salt_range: doc_id range per merge salt.  The postings hold one row
+        per (term, doc_id // salt_range), not per bare term, so a head term
         appearing in 30%+ of docs is built by many tasks, not one
-        (north_rule: explicit skew handling).  Must be a multiple of
-        block_range so blocks never straddle salt boundaries.
+        (north_rule: explicit skew handling), and a query evaluates salt by
+        salt.
     bm25_k1 / bm25_b: BM25Similarity parameters.
     max_token_len: StandardTokenizer maxTokenLen (Lucene default 255).
     n_buckets: the postings table is written partitioned by
@@ -36,12 +29,12 @@ class IndexConfig:
         for Solr's term-dictionary seek).
     """
 
-    format_version: int = 4  # bump on any layout change (postings OR the
+    format_version: int = 5  # bump on any layout change (postings OR the
     # intermediate analyzed table): stale checkpoints then fail the manifest
     # digest check and rebuild instead of resuming with an incompatible
     # schema.  v3 added per-posting position streams (phrase queries /
-    # highlighting); v4 vbyte-packed analyzed.tfs/positions (shuffle payload).
-    block_range: int = 128
+    # highlighting); v4 vbyte-packed analyzed.tfs/positions (shuffle payload);
+    # v5 dropped the impact and skip-block columns no reader used.
     salt_range: int = 8192
     bm25_k1: float = 1.2
     bm25_b: float = 0.75
@@ -68,8 +61,6 @@ class IndexConfig:
     store_positions: bool = True
 
     def __post_init__(self) -> None:
-        if self.salt_range % self.block_range != 0:
-            raise ValueError("salt_range must be a multiple of block_range")
         if self.analyzer not in (
             "standard",
             "simple",

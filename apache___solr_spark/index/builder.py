@@ -20,7 +20,7 @@ IndexWriter per core):
         ──_segment_encode, one salt range at a time (every (term, salt)
           group whole, so no merge) + numpy XXH64 buckets──► postings,
           one file per bucket=N/
-        ──pyarrow group_by──► dictionary(term, df, cf, max_impact, bucket)
+        ──pyarrow group_by──► dictionary(term, df, cf, bucket)
         plus scalar stats(N, avgdl).
 
 Spark placement (above the budget):
@@ -35,7 +35,7 @@ Spark placement (above the budget):
           analyzed_raw checkpoint)
         ──mapInArrow(_segment_encode)──► packed (term, salt) rows
         ──repartition(bucket, salt) + sorted mapInArrow merge──► postings
-        ──metadata agg──► dictionary(term, df, cf, max_impact, bucket)
+        ──metadata agg──► dictionary(term, df, cf, bucket)
         plus scalar stats(N, avgdl).
 
 Payload indexes add a stage 5, the payload side table, in Spark in
@@ -51,13 +51,15 @@ version measurably failed — see BENCH/BASELINE.md history):
   single-file corpus would analyze on one task.
 - postings rows are keyed (term, salt) with salt = doc_id // salt_range:
   head terms (>30% of docs) are encoded by many tasks (north_rule skew
-  handling), and because salt ranges are doc-aligned ACROSS terms, the
-  block-max pruning ub(salt) = sum_t idf_t * max_impact(t, salt) is sound.
+  handling), and because salt ranges are doc-aligned ACROSS terms, a
+  query tree decomposes exactly by salt (query/engine.py's per-salt
+  kernel).
 - one row per (term, salt), not per 128-doc block: rare terms cost one row
-  instead of df rows.  Inside the row, postings are delta-gap varbyte with
-  128-POSTING skip blocks (block_first_docs / block_n / block_max_impacts
-  array columns = skip pointers + per-block max-score, Lucene
-  Lucene101PostingsFormat impact semantics).
+  instead of df rows.  Inside the row, postings are delta-gap varbyte
+  streams (doc gaps, tfs, norms, positions) plus the counts a reader uses
+  (n_docs, first_doc, sum_tf).  The row holds no skip blocks and no impact
+  bounds: no query pruned on them, and blocks without byte offsets could
+  not skip a decode.
 - every postings row is packed by ONE numpy group packer (_pack_groups),
   all (term, salt) groups of an Arrow batch at once: the map-side encode,
   the reduce-side merge and optimize() all end in it.  Every postings row
@@ -95,7 +97,7 @@ from apache___solr_spark.analysis.chain import analyzer_fn, extract_text
 from apache___solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from apache___solr_spark.index import checkpoint as ckpt
 from apache___solr_spark.index.codec import decode_vbyte, encode_vbyte_packed
-from apache___solr_spark.index.smallfloat import NORM_TABLE, int_to_byte4_np
+from apache___solr_spark.index.smallfloat import int_to_byte4_np
 from apache___solr_spark.index.xxhash import term_buckets
 from apache___solr_spark.session import host_memory_mb
 from apache___solr_spark.sources.loaders import read_pages
@@ -111,15 +113,14 @@ from apache___solr_spark.sources.loaders import read_pages
 # positions: one vbyte stream per (term, salt) row — for each posting, tf
 # position values (first raw, rest delta-gapped), indices into the
 # post-filter token stream.  Empty when store_positions=False.
+# first_doc is the merge's sort key and add_docs' new-range filter; sum_tf
+# and n_docs sum to the dictionary's cf and df.
 SEGMENT_SCHEMA = (
-    "term string, salt long, n_docs int, first_doc long, last_doc long, "
-    "doc_gaps binary, tfs binary, norms binary, positions binary, "
-    "sum_tf long, max_tf int, "
-    "max_impact float, block_first_docs array<long>, block_n array<int>, "
-    "block_max_impacts array<float>"
+    "term string, salt long, n_docs int, first_doc long, "
+    "doc_gaps binary, tfs binary, norms binary, positions binary, sum_tf long"
 )
 
-POSTINGS_SCHEMA = SEGMENT_SCHEMA + ", bucket int"
+DICTIONARY_COLUMNS = ["term", "df", "cf", "bucket"]
 
 
 @dataclass
@@ -390,24 +391,6 @@ def _assert_doc_id_permutation(m: dict) -> None:
         )
 
 
-class _Scorer:
-    """Shared float32 BM25 impact math (must match query/engine.py)."""
-
-    def __init__(self, cfg: IndexConfig, avgdl: float) -> None:
-        self.norm_table_f32 = NORM_TABLE.astype(np.float32)
-        self.k1f = np.float32(cfg.bm25_k1)
-        self.one_minus_b = np.float32(1.0 - cfg.bm25_b)
-        self.bf = np.float32(cfg.bm25_b)
-        self.avgdlf = np.float32(avgdl)
-
-    def impact(self, tfs: np.ndarray, norms: np.ndarray) -> np.ndarray:
-        dl = self.norm_table_f32[norms]
-        tf_f = tfs.astype(np.float32)
-        return tf_f / (
-            tf_f + self.k1f * (self.one_minus_b + self.bf * dl / self.avgdlf)
-        )
-
-
 def _flat_binary(arr) -> np.ndarray:
     """Contiguous uint8 view over ALL values of an Arrow BinaryArray (no
     nulls): the concatenation of the per-row byte strings, zero-copy."""
@@ -437,11 +420,7 @@ def _undelta_positions(gaps: np.ndarray, g_tfs: np.ndarray) -> np.ndarray:
     return cs - np.repeat(before, tfs64)
 
 
-_SEGMENT_COLUMNS = [
-    "term", "salt", "n_docs", "first_doc", "last_doc", "doc_gaps", "tfs",
-    "norms", "positions", "sum_tf", "max_tf", "max_impact",
-    "block_first_docs", "block_n", "block_max_impacts",
-]
+_SEGMENT_COLUMNS = [c.split()[0] for c in SEGMENT_SCHEMA.split(", ")]
 
 
 def _binary_from(buf: np.ndarray, bounds: np.ndarray) -> pa.Array:
@@ -458,9 +437,7 @@ def _binary_from(buf: np.ndarray, bounds: np.ndarray) -> pa.Array:
 
 
 def _pack_groups(
-    scorer: _Scorer,
     salt_range: int,
-    block: int,
     group_terms: pa.Array,
     salts: np.ndarray,
     doc_ids: np.ndarray,
@@ -477,9 +454,7 @@ def _pack_groups(
     are not stored.  The segment encoder, the merge and optimize all end
     here, so every postings row in the index is packed by this code."""
     n = doc_ids.size
-    gends = np.append(gstarts[1:], n)
-    glens = gends - gstarts
-    imp = scorer.impact(tfs, norms)
+    glens = np.append(gstarts[1:], n) - gstarts
     gaps = np.empty(n, dtype=np.int64)
     gaps[1:] = doc_ids[1:] - doc_ids[:-1]
     gaps[gstarts] = doc_ids[gstarts] - salts * salt_range
@@ -488,35 +463,16 @@ def _pack_groups(
     pos_buf, pos_bounds = encode_vbyte_packed(
         pos_gaps, (np.cumsum(tfs) - tfs)[gstarts]
     )
-
-    # inner skip blocks across ALL groups at once
-    idx_in_group = np.arange(n, dtype=np.int64) - np.repeat(gstarts, glens)
-    bl_starts = np.flatnonzero(idx_in_group % block == 0)
-    bl_counts = -(-glens // block)
-    bl_ends = np.minimum(bl_starts + block, np.repeat(gends, bl_counts))
-    bl_offs = pa.array(np.concatenate(([0], np.cumsum(bl_counts))).astype(np.int32))
-
     arrays = [
         group_terms,
         pa.array(salts),
         pa.array(glens.astype(np.int32)),
         pa.array(doc_ids[gstarts]),
-        pa.array(doc_ids[gends - 1]),
         _binary_from(gap_buf, gap_bounds),
         _binary_from(tf_buf, tf_bounds),
         _binary_from(norms, np.append(gstarts, n)),
         _binary_from(pos_buf, pos_bounds),
         pa.array(np.add.reduceat(tfs, gstarts)),
-        pa.array(np.maximum.reduceat(tfs, gstarts).astype(np.int32)),
-        pa.array(np.maximum.reduceat(imp, gstarts).astype(np.float32)),
-        pa.ListArray.from_arrays(bl_offs, pa.array(doc_ids[bl_starts])),
-        pa.ListArray.from_arrays(
-            bl_offs, pa.array((bl_ends - bl_starts).astype(np.int32))
-        ),
-        pa.ListArray.from_arrays(
-            bl_offs,
-            pa.array(np.maximum.reduceat(imp, bl_starts).astype(np.float32)),
-        ),
     ]
     return pa.RecordBatch.from_arrays(arrays, names=_SEGMENT_COLUMNS)
 
@@ -548,7 +504,7 @@ def _decode_rows(rb: pa.RecordBatch, salt_range: int) -> tuple:
     return doc_ids, tfs, norms, pos_gaps, row_starts
 
 
-def _segment_encode(cfg: IndexConfig, avgdl: float):
+def _segment_encode(cfg: IndexConfig):
     """MAP-SIDE segment build (the reference's per-segment index model,
     SolrIndexConfig ramBuffer->segment flush semantics): for one analyzed
     partition, explode to postings IN NUMPY (never through a JVM explode or
@@ -561,9 +517,7 @@ def _segment_encode(cfg: IndexConfig, avgdl: float):
     (term, doc_id, tf, norm) rows; this was the build bottleneck at 10^6
     docs and is the difference between shuffling ~2 bytes/posting and ~50.
     """
-    scorer = _Scorer(cfg, avgdl)
     salt_range = cfg.salt_range
-    block = cfg.block_range
 
     def run(batches):  # Iterator[pa.RecordBatch] -> Iterator[pa.RecordBatch]
         for rb in batches:
@@ -613,8 +567,8 @@ def _segment_encode(cfg: IndexConfig, avgdl: float):
                 )
             group_terms = enc.dictionary.take(pa.array(codes[gstarts]))
             yield _pack_groups(
-                scorer, salt_range, block, group_terms, salts[gstarts],
-                doc_ids, tfs, norms, pgaps, gstarts,
+                salt_range, group_terms, salts[gstarts], doc_ids, tfs, norms,
+                pgaps, gstarts,
             )
 
     return run
@@ -631,7 +585,7 @@ def _group_lens(rb: pa.RecordBatch) -> np.ndarray:
     return np.diff(np.concatenate(([0], change, [rb.num_rows])))
 
 
-def _merge_segments(cfg: IndexConfig, avgdl: float):
+def _merge_segments(cfg: IndexConfig):
     """REDUCE-SIDE merge, a mapInArrow over rows sorted by
     (term, salt, first_doc).  Per batch, single-fragment groups pass
     through undecoded, ahead of the merged rows.  Multi-fragment groups (a
@@ -642,9 +596,7 @@ def _merge_segments(cfg: IndexConfig, avgdl: float):
     concatenate as they are.  The streaming carry holds back each batch's
     last group, which may continue in the next batch.
     """
-    scorer = _Scorer(cfg, avgdl)
     salt_range = cfg.salt_range
-    block = cfg.block_range
 
     def merge_batch(rb: pa.RecordBatch):
         glens = _group_lens(rb)
@@ -658,7 +610,7 @@ def _merge_segments(cfg: IndexConfig, avgdl: float):
         first_rows = np.cumsum(mlens) - mlens
         doc_ids, tfs, norms, pos_gaps, row_starts = _decode_rows(multi, salt_range)
         yield _pack_groups(
-            scorer, salt_range, block, multi.column("term").take(pa.array(first_rows)),
+            salt_range, multi.column("term").take(pa.array(first_rows)),
             multi.column("salt").to_numpy()[first_rows],
             doc_ids, tfs, norms, pos_gaps, row_starts[first_rows],
         )
@@ -799,7 +751,7 @@ def _number_table(raw: pa.Table) -> pa.Table:
     )
 
 
-def _encode_postings(numbered: pa.Table, cfg: IndexConfig, avgdl: float):
+def _encode_postings(numbered: pa.Table, cfg: IndexConfig):
     """The postings rows of the numbered table, with their ``bucket``,
     sorted by (bucket, term, salt); None when no doc has a term.  The map
     side kernel :func:`_segment_encode` runs on one salt range of rows at
@@ -811,7 +763,7 @@ def _encode_postings(numbered: pa.Table, cfg: IndexConfig, avgdl: float):
     if not batches:
         return None
     rb = batches[0]
-    encode = _segment_encode(cfg, avgdl)
+    encode = _segment_encode(cfg)
     salt_range = cfg.salt_range
     segs = list(
         encode(rb.slice(a, salt_range) for a in range(0, rb.num_rows, salt_range))
@@ -893,8 +845,8 @@ class _DriverStages:
         doclen = pq.read_table(self.paths.docs, columns=["doclen"]).column("doclen")
         return len(doclen), int(pc.sum(doclen).as_py() or 0)
 
-    def postings(self, avgdl: float) -> None:
-        rows = _encode_postings(self.numbered, self.cfg, avgdl)
+    def postings(self) -> None:
+        rows = _encode_postings(self.numbered, self.cfg)
         files = {}
         if rows is not None:
             b = rows.column("bucket").to_numpy()
@@ -906,7 +858,7 @@ class _DriverStages:
         self.postings_rows = rows
 
     def dictionary(self) -> None:
-        cols = ["term", "n_docs", "sum_tf", "max_impact", "bucket"]
+        cols = ["term", "n_docs", "sum_tf", "bucket"]
         rows = self.postings_rows
         if rows is None:
             rows = pads.dataset(
@@ -917,17 +869,16 @@ class _DriverStages:
                 ),
             ).to_table(columns=cols)
         d = rows.select(cols).group_by("term").aggregate(
-            [("n_docs", "sum"), ("sum_tf", "sum"), ("max_impact", "max"), ("bucket", "min")]
+            [("n_docs", "sum"), ("sum_tf", "sum"), ("bucket", "min")]
         )
-        names = {"n_docs_sum": "df", "sum_tf_sum": "cf", "max_impact_max": "max_impact",
-                 "bucket_min": "bucket"}
+        names = {"n_docs_sum": "df", "sum_tf_sum": "cf", "bucket_min": "bucket"}
         d = d.rename_columns([names.get(c, c) for c in d.column_names]).select(
-            ["term", "df", "cf", "max_impact", "bucket"]
+            DICTIONARY_COLUMNS
         )
         d = d.take(pc.sort_indices(d, [("term", "ascending")]))
         _write_stage(
             self.paths.dictionary, {"part-00000.parquet": d}, ["term"],
-            dictionary=["df", "cf", "max_impact", "bucket"],
+            dictionary=["df", "cf", "bucket"],
         )
         self.postings_rows = None
 
@@ -1004,13 +955,13 @@ class _SparkStages:
         )
         return agg["n"], int(agg["total_len"] or 0)
 
-    def postings(self, avgdl: float) -> None:
+    def postings(self) -> None:
         cfg = self.cfg
         # segments: numpy explode+sort+encode inside the UDF — raw postings
         # never cross the JVM or a shuffle
         segments = self.numbered.select(
             "doc_id", "doclen", "terms", "tfs", "positions"
-        ).mapInArrow(_segment_encode(cfg, avgdl), schema=SEGMENT_SCHEMA)
+        ).mapInArrow(_segment_encode(cfg), schema=SEGMENT_SCHEMA)
         # merge shuffle moves only packed rows; key (term-bucket, salt) so
         # head terms split across salts (skew) and each task writes into few
         # bucket dirs.  first_doc in the sort keeps fragments in doc order.
@@ -1026,30 +977,21 @@ class _SparkStages:
         else:
             par = max(1, self.spark.sparkContext.defaultParallelism)
             merge_parts = -(-max(self.n_parts, 2 * par) // par) * par
-        bucket_expr = F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)).cast("int")
+        bucket = _bucket(cfg)
         (
-            segments.repartition(merge_parts, bucket_expr, F.col("salt"))
+            segments.repartition(merge_parts, bucket, F.col("salt"))
             .sortWithinPartitions("term", "salt", "first_doc")
-            .mapInArrow(_merge_segments(cfg, avgdl), schema=SEGMENT_SCHEMA)
-            .withColumn("bucket", bucket_expr)
+            .mapInArrow(_merge_segments(cfg), schema=SEGMENT_SCHEMA)
+            .withColumn("bucket", bucket)
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(self.paths.postings)
         )
 
     def dictionary(self) -> None:
-        (
-            self.spark.read.parquet(self.paths.postings)
-            .groupBy("term")
-            .agg(
-                F.sum("n_docs").alias("df"),
-                F.sum("sum_tf").alias("cf"),
-                F.max("max_impact").alias("max_impact"),
-                F.first("bucket").alias("bucket"),
-            )
-            .write.mode("overwrite")
-            .parquet(self.paths.dictionary)
-        )
+        _dictionary(self.spark.read.parquet(self.paths.postings)).write.mode(
+            "overwrite"
+        ).parquet(self.paths.dictionary)
 
     def release(self) -> None:
         # unpersist the MEMORY_AND_DISK full corpus on EVERY exit: a failed
@@ -1126,7 +1068,7 @@ def build_index(
     def _stats_reusable() -> bool:
         # like every other stage, reuse is gated on config AND input digests:
         # a rebuild with a changed config (e.g. max_token_len changes doclens)
-        # or different input must not bake a stale N/avgdl into the impacts.
+        # or different input must not leave a stale N/avgdl for the scorer.
         if not os.path.exists(paths.stats):
             return False
         try:
@@ -1179,23 +1121,18 @@ def build_index(
         # outputs were reused but stats.json is missing/stale) ------------
         if not stats_fresh and not _stats_reusable():
             _write_stats(*stages.doc_totals())
-        with open(paths.stats) as f:
-            stats = json.load(f)
 
         # ---- stage 3: postings (segment encode -> postings) --------------
         t0 = time.time()
         if need_postings:
-            stages.postings(stats["avgdl"])
-            publish(
-                paths.postings, "postings", t0,
-                extra={"avgdl": stats["avgdl"], "N": stats["N"]},
-            )
+            stages.postings()
+            publish(paths.postings, "postings", t0)
     finally:
         # the numbered rows go on every exit: a failed stage must not leak
         # them for the life of the session
         stages.release()
 
-    # ---- stage 4: dictionary (term -> df, cf, global max impact) --------
+    # ---- stage 4: dictionary (term -> df, cf, bucket) -------------------
     t0 = time.time()
     if not complete(paths.dictionary):
         stages.dictionary()
@@ -1276,4 +1213,23 @@ def _norm_byte(doclen: Column) -> Column:
         F.when(doclen < 8, doclen)
         .otherwise(mantissa.bitwiseOR(F.call_function("shiftleft", nb - 3, F.lit(3))))
         .cast("int")
+    )
+
+
+def _bucket(cfg: IndexConfig) -> Column:
+    """A postings row's ``bucket`` partition, ``pmod(xxhash64(term),
+    n_buckets)``: Spark's side of :func:`~apache___solr_spark.index.xxhash.
+    term_buckets`, which the driver placement computes in numpy."""
+    return F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)).cast("int")
+
+
+def _dictionary(postings: DataFrame) -> DataFrame:
+    """The ``DICTIONARY_COLUMNS`` rows of ``postings`` rows, one per term:
+    df and cf summed over the term's salts (a term's rows share its
+    bucket).  The Spark placement, ``add_docs`` and ``optimize`` write
+    it."""
+    return postings.groupBy("term").agg(
+        F.sum("n_docs").alias("df"),
+        F.sum("sum_tf").alias("cf"),
+        F.first("bucket").alias("bucket"),
     )

@@ -22,11 +22,12 @@ Spark-first mapping:
   the docs table and per-term dictionary rows.  The term dictionary may
   then hold several rows per term.
 - stats: N and total_len are updated; avgdl stays FROZEN at its value from
-  the initial build, because the stored per-block max_impact values were
-  computed against it — refreshing avgdl would make scores exceed their
-  pruning upper bounds.  optimize() (the forceMerge/expungeDeletes analog)
-  physically drops tombstones, folds segments, and re-baselines avgdl with
-  freshly-computed impacts.
+  the last build or optimize().  That is a scoring policy: no stored value
+  depends on avgdl, and whether it should follow the live corpus (Lucene
+  reads it from CollectionStatistics per search) is a scoring change for
+  the oracles to decide on its own.  optimize() (the forceMerge/
+  expungeDeletes analog) physically drops tombstones, folds segments, and
+  re-baselines N and avgdl over the live docs.
 """
 
 from __future__ import annotations
@@ -42,6 +43,8 @@ from apache___solr_spark.index.builder import (
     SEGMENT_SCHEMA,
     IndexPaths,
     _analyze_raw,
+    _bucket,
+    _dictionary,
     _norm_byte,
     _segment_encode,
 )
@@ -185,26 +188,17 @@ def add_docs(
     # into the bucket-partitioned postings layout
     segments = analyzed.select(
         "doc_id", "doclen", "terms", "tfs", "positions"
-    ).mapInArrow(_segment_encode(cfg, stats["avgdl"]), schema=SEGMENT_SCHEMA)
-    bucket_expr = F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)).cast("int")
-    segments.withColumn("bucket", bucket_expr).write.mode("append").partitionBy(
+    ).mapInArrow(_segment_encode(cfg), schema=SEGMENT_SCHEMA)
+    segments.withColumn("bucket", _bucket(cfg)).write.mode("append").partitionBy(
         "bucket"
     ).parquet(paths.postings)
 
-    # per-term dictionary rows for the new segment (summed at read time)
+    # per-term dictionary rows for the new segment (summed at read time),
+    # aggregated over the new doc range only
     seg = spark.read.parquet(paths.postings)
-    # cheaper: aggregate only the new doc range
-    new_dict = (
-        seg.filter(F.col("first_doc") >= base_n)
-        .groupBy("term")
-        .agg(
-            F.sum("n_docs").alias("df"),
-            F.sum("sum_tf").alias("cf"),
-            F.max("max_impact").alias("max_impact"),
-            F.first("bucket").alias("bucket"),
-        )
-    )
-    new_dict.write.mode("append").parquet(paths.dictionary)
+    _dictionary(seg.filter(F.col("first_doc") >= base_n)).write.mode(
+        "append"
+    ).parquet(paths.dictionary)
 
     agg = analyzed.agg(
         F.count("*").alias("n"), F.sum("doclen").alias("total")
@@ -212,10 +206,7 @@ def add_docs(
     n_new, len_new = int(agg["n"]), int(agg["total"] or 0)
     stats["N"] = base_n + n_new
     stats["total_len"] = int(stats["total_len"]) + len_new
-    # avgdl intentionally NOT refreshed (see module docstring) — record both
-    stats["avgdl_current"] = (
-        stats["total_len"] / stats["N"] if stats["N"] else 0.0
-    )
+    # avgdl stays frozen (see module docstring)
     tmp = paths.stats + ".tmp"
     with open(tmp, "w") as f:
         json.dump(stats, f)
@@ -230,25 +221,23 @@ def optimize(
 ) -> dict:
     """forceMerge/expungeDeletes equivalent: physically drop tombstoned docs
     from the postings, fold per-segment dictionary rows into one row per
-    term, and re-baseline exact stats (N, avgdl) — after which impacts are
-    recomputed against the fresh avgdl, so pruning bounds are tight again.
+    term, and re-baseline exact stats (N, avgdl) over the live docs.  avgdl
+    is frozen between builds and optimizes (the module docstring's policy);
+    no stored value depends on it.
 
     One distributed pass over the postings: a grouped re-shuffle folds
     (term, salt) fragments (the build's merge), then each Arrow batch is
     decoded in one vectorized pass, postings of deleted docs are dropped,
-    rows left empty vanish, and the rest are re-packed with impacts against
-    the fresh avgdl.  Narrow rewrites of docs/dictionary follow.  Returns
-    the new stats dict.
+    rows left empty vanish, and the rest are re-packed.  Narrow rewrites of
+    docs/dictionary follow.  Returns the new stats dict.
     """
     import numpy as np
     import pyarrow as pa
 
     from apache___solr_spark.index.builder import (
-        SEGMENT_SCHEMA,
         _decode_rows,
         _merge_segments,
         _pack_groups,
-        _Scorer,
     )
 
     paths = IndexPaths(index_dir)
@@ -276,8 +265,7 @@ def optimize(
     n_docs, total = int(agg["n"]), int(agg["total"] or 0)
     avgdl = (total / n_docs) if n_docs else 0.0
     b_dels = spark.sparkContext.broadcast(dels_arr)
-    scorer = _Scorer(cfg, avgdl)
-    salt_range, block = cfg.salt_range, cfg.block_range
+    salt_range = cfg.salt_range
 
     def rewrite(batches):  # Iterator[pa.RecordBatch] -> Iterator[pa.RecordBatch]
         dels = b_dels.value  # sorted int64 array, shared across all batches
@@ -298,7 +286,7 @@ def optimize(
             if pos_gaps.size:
                 pos_gaps = pos_gaps[np.repeat(keep, tfs)]
             yield _pack_groups(
-                scorer, salt_range, block,
+                salt_range,
                 rb.column("term").take(pa.array(live)),
                 rb.column("salt").to_numpy()[live],
                 doc_ids[keep], tfs[keep], norms[keep], pos_gaps,
@@ -307,14 +295,14 @@ def optimize(
 
     postings = spark.read.parquet(paths.postings)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    bucket_expr = F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)).cast("int")
+    bucket = _bucket(cfg)
     merged = (
         postings.drop("bucket")
-        .repartition(n_parts, bucket_expr, F.col("salt"))
+        .repartition(n_parts, bucket, F.col("salt"))
         .sortWithinPartitions("term", "salt", "first_doc")
-        .mapInArrow(_merge_segments(cfg, avgdl), schema=SEGMENT_SCHEMA)
+        .mapInArrow(_merge_segments(cfg), schema=SEGMENT_SCHEMA)
         .mapInArrow(rewrite, schema=SEGMENT_SCHEMA)
-        .withColumn("bucket", bucket_expr)
+        .withColumn("bucket", bucket)
     )
     tmp_postings = paths.postings + ".opt"
     merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp_postings)
@@ -323,15 +311,10 @@ def optimize(
     _swap_dir(tmp_postings, paths.postings)
 
     # rebuild the dictionary from the clean postings (one row per term)
-    postings2 = spark.read.parquet(paths.postings)
-    dictionary = postings2.groupBy("term").agg(
-        F.sum("n_docs").alias("df"),
-        F.sum("sum_tf").alias("cf"),
-        F.max("max_impact").alias("max_impact"),
-        F.first("bucket").alias("bucket"),
-    )
     tmp_dict = paths.dictionary + ".opt"
-    dictionary.write.mode("overwrite").parquet(tmp_dict)
+    _dictionary(spark.read.parquet(paths.postings)).write.mode("overwrite").parquet(
+        tmp_dict
+    )
     _swap_dir(tmp_dict, paths.dictionary)
 
     # rewrite docs without tombstones, clear the tombstone dir
@@ -365,7 +348,6 @@ def optimize(
     with open(paths.stats) as f:
         stats = json.load(f)
     stats.update({"N": n_docs, "total_len": total, "avgdl": avgdl})
-    stats.pop("avgdl_current", None)
     tmp = paths.stats + ".tmp"
     with open(tmp, "w") as f:
         json.dump(stats, f)

@@ -55,8 +55,8 @@ dl is the SmallFloat-quantized doc length (1-byte norms, decoded through the
 256-entry table — FieldLengthFeature.java:74-88 semantics), exactly as
 Lucene's BM25 length cache does.
 
-The postings and dictionary store per-block / per-term ``max_impact``
-(Lucene impacts); no query path reads it.
+The index stores no impact bounds or skip blocks (Lucene's ImpactsEnum):
+every query decodes the whole postings row of each (term, salt) it reads.
 """
 
 from __future__ import annotations
@@ -93,6 +93,7 @@ from apache___solr_spark.analysis.chain import analyzer_fn
 from apache___solr_spark.analysis.payloads import decode_payloads
 from apache___solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from apache___solr_spark.index.builder import (
+    DICTIONARY_COLUMNS,
     IndexPaths,
     _decode_rows,
     _undelta_positions,
@@ -950,14 +951,17 @@ class SearchEngine:
         with open(self.paths.stats) as f:
             self.stats = json.load(f)
         # the index's own config is authoritative: cfg=None loads it from
-        # the stats file; an explicit cfg must MATCH the build (a mismatch
-        # silently mis-prunes buckets/salts — fail loudly instead)
+        # the stats file (an index of an older format_version, whose digest
+        # covered retired fields, opens too); an explicit cfg must MATCH the
+        # build (a mismatch silently mis-prunes buckets/salts — fail loudly
+        # instead)
         stored = self.stats.get("config")
         if cfg is None:
-            cfg = (
-                IndexConfig.from_dict(stored) if stored else DEFAULT_CONFIG
-            )
-            if self.stats.get("config_digest") not in (None, cfg.digest()):
+            cfg = IndexConfig.from_dict(stored) if stored else DEFAULT_CONFIG
+            if not stored and self.stats.get("config_digest") not in (
+                None,
+                cfg.digest(),
+            ):
                 raise ValueError(
                     "index predates stored configs and was not built with "
                     "DEFAULT_CONFIG — pass the build cfg explicitly"
@@ -1010,27 +1014,21 @@ class SearchEngine:
         )
 
     # -- term dictionary ---------------------------------------------------
-    _META_COLS = ["term", "df", "cf", "max_impact", "bucket"]
-
     def _dict_rows(self, expr: pc.Expression) -> pa.Table:
-        """Aggregated dictionary rows (``_META_COLS``) of the terms matching
-        ``expr``, a predicate on ``term`` pushed down to the snapshot's
-        parquet files.  A term holds one row per segment after add_docs;
+        """Aggregated dictionary rows (``DICTIONARY_COLUMNS``) of the terms
+        matching ``expr``, a predicate on ``term`` pushed down to the
+        snapshot's parquet files.  A term holds one row per segment after add_docs;
         they are summed here (the ExactStatsCache merge).  The term-
         dictionary seek (Lucene's FST analog) is a pyarrow read on the
         driver: no Spark job."""
-        got = self._dict.to_table(columns=self._META_COLS, filter=expr)
+        got = self._dict.to_table(columns=DICTIONARY_COLUMNS, filter=expr)
+        # a term's rows share its bucket
         agg = got.group_by("term", use_threads=False).aggregate(
-            [
-                ("df", "sum"),
-                ("cf", "sum"),
-                ("max_impact", "max"),
-                ("bucket", "max"),  # a term's rows share its bucket
-            ]
+            [("df", "sum"), ("cf", "sum"), ("bucket", "max")]
         )
-        return agg.select(
-            ["term", "df_sum", "cf_sum", "max_impact_max", "bucket_max"]
-        ).rename_columns(self._META_COLS)
+        return agg.select(["term", "df_sum", "cf_sum", "bucket_max"]).rename_columns(
+            DICTIONARY_COLUMNS
+        )
 
     def _fuzzy_rows(self, q: str, max_edits: int) -> pa.Table:
         """Aggregated dictionary rows within ``max_edits`` code-point edits

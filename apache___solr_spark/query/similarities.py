@@ -36,8 +36,7 @@ matching Lucene's float arithmetic; float64 when cfg.score_dtype says so):
 
 Engine integration notes:
 
-- The stored per-block ``max_impact`` is a BM25 impact upper bound and
-  does not bound other similarities; no query path prunes on it today.
+- The index stores no score bounds, so no query path prunes by score.
   Bucket and salt pruning and term pushdown are score-independent and
   apply to every similarity.
 - Phrase/span clauses score BM25-style (tf = phrase freq, summed idf);

@@ -40,7 +40,6 @@ def register_index(spark: SparkSession, engine, prefix: str = "") -> None:
     engine.dictionary.groupBy("term").agg(
         F.sum("df").alias("df"),
         F.sum("cf").alias("cf"),
-        F.max("max_impact").alias("max_impact"),
         F.max("bucket").alias("bucket"),  # a term's rows share its bucket
     ).createOrReplaceTempView(prefix + "dictionary")
     engine.postings.createOrReplaceTempView(prefix + "postings")

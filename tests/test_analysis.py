@@ -389,7 +389,7 @@ def test_cjk_index_and_search(spark, tmp_path):
     path = str(tmp_path / "pages.parquet")
     pq.write_table(table, path)
     cfg = IndexConfig(
-        block_range=32, salt_range=128, n_buckets=4, analyzer="cjk"
+        salt_range=128, n_buckets=4, analyzer="cjk"
     )
     idx = str(tmp_path / "idx")
     build_index(spark, path, idx, cfg=cfg)
@@ -475,7 +475,7 @@ def test_icu_folding_index_and_search(spark, tmp_path):
     path = str(tmp_path / "pages.parquet")
     pq.write_table(table, path)
     cfg = IndexConfig(
-        block_range=32, salt_range=128, n_buckets=4, analyzer="icu_folding"
+        salt_range=128, n_buckets=4, analyzer="icu_folding"
     )
     idx = str(tmp_path / "idx")
     build_index(spark, path, idx, cfg=cfg)

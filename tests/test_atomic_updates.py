@@ -14,7 +14,7 @@ from apache___solr_spark.index.builder import build_index
 from apache___solr_spark.index.updates import atomic_merge, atomic_update
 from apache___solr_spark.query.engine import SearchEngine
 
-CFG = IndexConfig(block_range=32, salt_range=128, n_buckets=8)
+CFG = IndexConfig(salt_range=128, n_buckets=8)
 
 
 @pytest.fixture()

@@ -161,17 +161,16 @@ def test_merge_segments_equals_unsplit_encode(store_positions):
     from apache___solr_spark.config import IndexConfig
     from apache___solr_spark.index.builder import _merge_segments, _segment_encode
 
-    cfg = IndexConfig(block_range=4, salt_range=32, n_buckets=8)
-    avgdl = 7.5
+    cfg = IndexConfig(salt_range=32, n_buckets=8)
     parts = [range(0, 10), range(10, 20), range(20, 60)]  # cuts inside salt 0
     whole = pa.Table.from_batches(
-        _segment_encode(cfg, avgdl)(iter([_analyzed_batch(range(60), store_positions)]))
+        _segment_encode(cfg)(iter([_analyzed_batch(range(60), store_positions)]))
     )
     frags = pa.Table.from_batches(
         [
             out
             for p in parts
-            for out in _segment_encode(cfg, avgdl)(
+            for out in _segment_encode(cfg)(
                 iter([_analyzed_batch(range(60), store_positions).slice(p.start, len(p))])
             )
         ]
@@ -185,7 +184,7 @@ def test_merge_segments_equals_unsplit_encode(store_positions):
 
     batches = _in_batches(frags, frags.column_names)
     merged = [
-        r for out in _merge_segments(cfg, avgdl)(iter(batches)) for r in out.to_pylist()
+        r for out in _merge_segments(cfg)(iter(batches)) for r in out.to_pylist()
     ]
 
     want = {key(r): r for r in whole.to_pylist()}
@@ -253,10 +252,10 @@ def test_query_decoders_roundtrip(store_positions, monkeypatch):
     from apache___solr_spark.query.engine import TreePlan, _PlanNode, eval_tree
     from apache___solr_spark.query.similarities import get_similarity
 
-    cfg = IndexConfig(block_range=4, salt_range=32, n_buckets=8)
+    cfg = IndexConfig(salt_range=32, n_buckets=8)
     avgdl = 7.5
     corpus = _analyzed_batch(range(100), store_positions)
-    seg = pa.Table.from_batches(_segment_encode(cfg, avgdl)(iter([corpus])))
+    seg = pa.Table.from_batches(_segment_encode(cfg)(iter([corpus])))
     salts = sorted(set(seg.column("salt").to_pylist()))
     assert len(salts) == 4
 
@@ -353,7 +352,7 @@ def _kernel_fixture():
     from apache___solr_spark.index.builder import _segment_encode
     from apache___solr_spark.oracle import OracleIndex
 
-    cfg = IndexConfig(block_range=4, salt_range=32, n_buckets=8)
+    cfg = IndexConfig(salt_range=32, n_buckets=8)
     corpus = _analyzed_batch(range(140), True, seed=11)
     postings, positions, doclen = {}, {}, []
     for r in corpus.to_pylist():
@@ -375,9 +374,7 @@ def _kernel_fixture():
         positions=positions,
     )
     segs = [
-        pa.Table.from_batches(
-            _segment_encode(cfg, oracle.avgdl)(iter([corpus.slice(lo, 70)]))
-        )
+        pa.Table.from_batches(_segment_encode(cfg)(iter([corpus.slice(lo, 70)])))
         for lo in (0, 70)
     ]
     return cfg, oracle, segs

@@ -45,7 +45,6 @@ def dict_engine(tmp_path_factory):
                     "term": [t for t, _ in seg],
                     "df": pa.array([d for _, d in seg], pa.int64()),
                     "cf": pa.array([2 * d for _, d in seg], pa.int64()),
-                    "max_impact": pa.array([1.0] * len(seg), pa.float32()),
                     "bucket": pa.array([0] * len(seg), pa.int32()),
                 }
             ),

@@ -22,7 +22,7 @@ from apache___solr_spark.query.extras import (
     rerank,
 )
 
-CFG = IndexConfig(block_range=32, salt_range=128, n_buckets=8)
+CFG = IndexConfig(salt_range=128, n_buckets=8)
 
 
 @pytest.fixture(scope="module")

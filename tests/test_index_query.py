@@ -20,7 +20,7 @@ from apache___solr_spark.oracle import build_oracle_index, oracle_search
 from apache___solr_spark.query.engine import SearchEngine
 
 N_DOCS = 400
-CFG = IndexConfig(block_range=32, salt_range=128, n_buckets=8)
+CFG = IndexConfig(salt_range=128, n_buckets=8)
 
 
 @pytest.fixture(scope="module")
@@ -117,18 +117,10 @@ def test_postings_rows_decode_to_oracle(spark, built, oracle_idx):
             b["salt"] * CFG.salt_range,
         )
         tfs = decode_vbyte(bytes(b["tfs"]), b["n_docs"])
-        assert b["first_doc"] == ids[0] and b["last_doc"] == ids[-1]
+        assert b["first_doc"] == ids[0]
         assert (ids // CFG.salt_range == b["salt"]).all()
         assert (np.diff(ids) > 0).all()  # strictly increasing within a row
-        assert b["max_tf"] == tfs.max()
         assert b["sum_tf"] == tfs.sum()
-        # inner skip blocks: first docs at every block_range-th posting,
-        # per-block counts sum to n_docs
-        bl = np.arange(0, b["n_docs"], CFG.block_range)
-        assert b["block_first_docs"] == [int(x) for x in ids[bl]]
-        assert sum(b["block_n"]) == b["n_docs"]
-        assert len(b["block_max_impacts"]) == len(bl)
-        assert max(b["block_max_impacts"]) == pytest.approx(b["max_impact"])
         for i, t in zip(ids, tfs):
             assert per_term.setdefault(b["term"], {}).setdefault(int(i), int(t)) == int(t)
     assert per_term == oracle_idx.postings
@@ -321,17 +313,40 @@ def test_crash_in_stage_resumes_identical(
     assert stats[1]["avgdl"] == stats[0]["avgdl"]
 
 
+@pytest.mark.parametrize("placement", PLACEMENTS)
+def test_written_column_sets(spark, request, placement):
+    """Each placement writes the postings columns of SEGMENT_SCHEMA (plus
+    the bucket partition) and the dictionary's (term, df, cf, bucket):
+    no impact or skip-block column that no reader uses."""
+    from apache___solr_spark.index.builder import DICTIONARY_COLUMNS, _SEGMENT_COLUMNS
+
+    root = request.getfixturevalue("built" if placement == "driver" else "spark_built")
+    postings = [
+        "term", "salt", "n_docs", "first_doc", "doc_gaps", "tfs", "norms",
+        "positions", "sum_tf", "bucket",
+    ]
+    assert _SEGMENT_COLUMNS + ["bucket"] == postings
+    assert spark.read.parquet(os.path.join(root, "postings")).columns == postings
+    assert DICTIONARY_COLUMNS == ["term", "df", "cf", "bucket"]
+    assert (
+        spark.read.parquet(os.path.join(root, "dictionary")).columns
+        == DICTIONARY_COLUMNS
+    )
+
+
 def test_retired_config_key_keeps_digest(spark, built, tmp_path):
     """A stats file written while IndexConfig still had the (never
-    digested) checkpoint_numbered field keeps its digest and still opens:
-    from_dict ignores the retired key."""
+    digested) checkpoint_numbered field, or carrying the retired
+    block_range, keeps its digest and still opens: from_dict ignores the
+    retired keys.  The digest is format_version 5's: the postings and
+    dictionary layout changed with it."""
     import shutil
 
     from apache___solr_spark.config import DEFAULT_CONFIG
 
-    old = {**DEFAULT_CONFIG.to_dict(), "checkpoint_numbered": True}
-    assert IndexConfig.from_dict(old).digest() == "ae9ba006269b46a5"
-    assert DEFAULT_CONFIG.digest() == "ae9ba006269b46a5"
+    old = {**DEFAULT_CONFIG.to_dict(), "checkpoint_numbered": True, "block_range": 128}
+    assert IndexConfig.from_dict(old).digest() == "e21103c2dbdd42b0"
+    assert DEFAULT_CONFIG.digest() == "e21103c2dbdd42b0"
 
     copy = str(tmp_path / "idx")
     shutil.copytree(built, copy)
@@ -339,6 +354,7 @@ def test_retired_config_key_keeps_digest(spark, built, tmp_path):
     with open(stats_path) as f:
         stats = json.load(f)
     stats["config"]["checkpoint_numbered"] = False
+    stats["config"]["block_range"] = 32
     with open(stats_path, "w") as f:
         json.dump(stats, f)
     eng = SearchEngine(spark, copy)
@@ -346,6 +362,102 @@ def test_retired_config_key_keeps_digest(spark, built, tmp_path):
     want = SearchEngine(spark, built).search("web data", k=10).collect()
     assert want
     assert eng.search("web data", k=10).collect() == want
+
+
+def _v4_digest(config: dict) -> str:
+    """IndexConfig.digest() as format_version 4 computed it."""
+    import hashlib
+
+    return hashlib.sha256(json.dumps(config, sort_keys=True).encode()).hexdigest()[:16]
+
+
+def _tree_bytes(root: str) -> dict:
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            with open(os.path.join(d, n), "rb") as f:
+                out[os.path.relpath(os.path.join(d, n), root)] = f.read()
+    return out
+
+
+def test_v4_index_opens_and_refuses_updates(spark, built, tmp_path):
+    """An index written at format_version 4 (its postings carry the impact
+    and skip-block columns, its dictionary max_impact, its stats the v4
+    config and digest) still opens and answers search() in both query
+    placements.  add_docs and optimize refuse it with the config-digest
+    ValueError before they write, so no v5 row lands in its postings."""
+    import shutil
+
+    import pyarrow as pa
+
+    from apache___solr_spark.config import DEFAULT_CONFIG
+    from apache___solr_spark.index.updates import add_docs, optimize
+
+    v4_default = {**DEFAULT_CONFIG.to_dict(), "format_version": 4, "block_range": 128}
+    assert _v4_digest(v4_default) == "ae9ba006269b46a5"  # v4's pinned digest
+
+    copy = str(tmp_path / "idx")
+    shutil.copytree(built, copy)
+    for d, _, names in os.walk(copy):
+        for n in names:
+            f = os.path.join(d, n)
+            if not n.endswith(".parquet"):
+                continue
+            t = pq.ParquetFile(f).read()
+            rel = os.path.relpath(f, copy).split(os.sep)[0]
+            if rel == "postings":
+                first = t.column("first_doc").to_pylist()
+                n_docs = t.column("n_docs").to_pylist()
+                t = (
+                    t.append_column("last_doc", pa.array(first, pa.int64()))
+                    .append_column("max_tf", pa.array([1] * len(t), pa.int32()))
+                    .append_column("max_impact", pa.array([0.5] * len(t), pa.float32()))
+                    .append_column(
+                        "block_first_docs",
+                        pa.array([[x] for x in first], pa.list_(pa.int64())),
+                    )
+                    .append_column(
+                        "block_n", pa.array([[x] for x in n_docs], pa.list_(pa.int32()))
+                    )
+                    .append_column(
+                        "block_max_impacts",
+                        pa.array([[0.5]] * len(t), pa.list_(pa.float32())),
+                    )
+                )
+            elif rel == "dictionary":
+                t = t.append_column(
+                    "max_impact", pa.array([0.5] * len(t), pa.float32())
+                )
+            else:
+                continue
+            pq.write_table(t, f)
+    stats_path = os.path.join(copy, "stats.json")
+    with open(stats_path) as f:
+        stats = json.load(f)
+    stats["config"] = {**CFG.to_dict(), "format_version": 4, "block_range": 32}
+    stats["config_digest"] = _v4_digest(stats["config"])
+    with open(stats_path, "w") as f:
+        json.dump(stats, f)
+
+    want = SearchEngine(spark, built).search("web data", k=10).collect()
+    assert want
+    eng = SearchEngine(spark, copy)
+    assert eng.cfg.format_version == 4
+    assert eng.search("web data", k=10).collect() == want
+    eng._driver_budget = 0
+    assert eng.search("web data", k=10).collect() == want
+
+    postings = _tree_bytes(os.path.join(copy, "postings"))
+    pages = spark.createDataFrame(
+        [("zz-v4-added", None, None, "alpha web data", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    for cfg in (CFG, eng.cfg):
+        with pytest.raises(ValueError, match="does not match"):
+            add_docs(spark, copy, pages, cfg=cfg)
+        with pytest.raises(ValueError, match="does not match"):
+            optimize(spark, copy, cfg=cfg)
+    assert _tree_bytes(os.path.join(copy, "postings")) == postings
 
 
 def test_fused_resume_recomputes_numbering(spark, corpus, tmp_path_factory):
@@ -936,7 +1048,7 @@ def test_add_docs_rejects_mismatched_config(spark, corpus, built):
     from apache___solr_spark.index.updates import add_docs, optimize
 
     path, _ = corpus
-    other = IndexConfig(block_range=32, salt_range=64, n_buckets=8)
+    other = IndexConfig(salt_range=64, n_buckets=8)
     pages = spark.read.parquet(path).limit(5)
     with pytest.raises(ValueError, match="config"):
         add_docs(spark, built, pages, cfg=other)
@@ -1093,7 +1205,7 @@ def test_porter_analyzer_end_to_end(spark, tmp_path_factory):
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
     cfg = IndexConfig(
-        block_range=32, salt_range=128, n_buckets=8, analyzer="standard_porter"
+        salt_range=128, n_buckets=8, analyzer="standard_porter"
     )
     out = str(tmp_path_factory.mktemp("porter") / "idx")
     build_index(spark, pages, out, cfg=cfg)
@@ -2561,7 +2673,6 @@ def mh_built(spark, corpus, tmp_path_factory):
     cfg = IndexConfig(
         analyzer="min_hash",
         store_positions=False,
-        block_range=32,
         salt_range=128,
         n_buckets=8,
     )
@@ -2700,7 +2811,6 @@ def payload_built(spark, tmp_path_factory):
     idx = str(d / "idx")
     cfg = IndexConfig(
         analyzer="whitespace_payload",
-        block_range=32,
         salt_range=128,
         n_buckets=8,
     )
@@ -3447,7 +3557,7 @@ def _placement_tables(spark, root):
 
 def test_build_placements_agree(spark, corpus, built, spark_built, tmp_path_factory):
     """The driver and the Spark placement of the build give row-identical
-    indexes: docs, dictionary (term, df, cf, max_impact, bucket), every
+    indexes: docs, dictionary (term, df, cf, bucket), every
     postings column and the stats, on the reference corpus, a
     duplicate-url corpus (urls tied on doclen too, so the numbering's
     order over terms, tfs and positions decides) and the theta-decoy

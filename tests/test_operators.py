@@ -146,8 +146,10 @@ def test_cursor_page_walks_whole_set(spark):
 
 def test_python_xxhash_matches_spark(spark):
     """The numpy XXH64 over an Arrow string array and the bucket function
-    built on it must equal Spark's xxhash64 and pmod(xxhash64, n): the
-    driver placement of the build writes postings under those buckets.
+    built on it must equal Spark's xxhash64 and the builder's bucket
+    expression, pmod(xxhash64, n): the driver placement of the build writes
+    postings under those buckets, the Spark placement, add_docs and
+    optimize under the expression's.
     Every branch of the algorithm is covered: UTF-8 lengths 0, 1-3 (bytes
     only), 4-7 (one 4-byte word), 8-31 (8-byte words) and >=32 (32-byte
     stripes, then the tail), ASCII and multi-byte terms, and a sliced
@@ -157,6 +159,8 @@ def test_python_xxhash_matches_spark(spark):
 
     import pyarrow as pa
 
+    from apache___solr_spark.config import IndexConfig
+    from apache___solr_spark.index.builder import _bucket
     from apache___solr_spark.index.xxhash import term_buckets, xxhash64
 
     rnd = random.Random(7)
@@ -169,13 +173,13 @@ def test_python_xxhash_matches_spark(spark):
     for lo, hi in ((0, 0), (1, 3), (4, 7), (8, 31), (32, 64), (65, 400)):
         assert any(lo <= n <= hi for n in lengths), (lo, hi)
     n_buckets = 64
-    df = spark.createDataFrame([(t,) for t in terms], "t string")
+    df = spark.createDataFrame([(t,) for t in terms], "term string")
     got = {
-        r["t"]: (r["h"], r["b"])
+        r["term"]: (r["h"], r["b"])
         for r in df.select(
-            "t",
-            F.xxhash64("t").alias("h"),
-            F.pmod(F.xxhash64("t"), F.lit(n_buckets)).alias("b"),
+            "term",
+            F.xxhash64("term").alias("h"),
+            _bucket(IndexConfig(n_buckets=n_buckets)).alias("b"),
         ).collect()
     }
     arr = pa.array(terms, pa.string())

@@ -14,7 +14,7 @@ from apache___solr_spark.index.builder import build_index
 from apache___solr_spark.query.engine import SearchEngine
 from apache___solr_spark.query.phrases import identify_phrases
 
-CFG = IndexConfig(block_range=32, salt_range=64, n_buckets=4)
+CFG = IndexConfig(salt_range=64, n_buckets=4)
 
 
 def _texts() -> list[str]:

@@ -20,7 +20,7 @@ from apache___solr_spark.oracle import build_oracle_index, oracle_search
 from apache___solr_spark.query.engine import SearchEngine
 
 N_DOCS = 400
-CFG = IndexConfig(block_range=32, salt_range=128, n_buckets=8)
+CFG = IndexConfig(salt_range=128, n_buckets=8)
 
 SIMS = [
     "classic",

@@ -50,7 +50,7 @@ def test_streaming_incremental_index_equals_batch_build(spark, tmp_path):
     from apache___solr_spark.query.engine import SearchEngine
     from apache___solr_spark.streaming import index_topic
 
-    cfg = IndexConfig(block_range=32, salt_range=128, n_buckets=8)
+    cfg = IndexConfig(salt_range=128, n_buckets=8)
     base_tbl = generate_pages(120, seed=42)
     base_path = str(tmp_path / "base.parquet")
     paq.write_table(base_tbl, base_path)

@@ -54,7 +54,7 @@ def flaky(batches):
 schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in pages.schema.fields)
 flaky_pages = pages.mapInPandas(flaky, schema=schema)
 
-cfg = IndexConfig(block_range=32, salt_range=128, n_buckets=8)
+cfg = IndexConfig(salt_range=128, n_buckets=8)
 # each pass forces one placement through the build's budget
 for placement, budget in (("driver", 1 << 62), ("spark", 0)):
     builder._build_budget = lambda: budget
