@@ -64,14 +64,14 @@ version measurably failed — see BENCH/BASELINE.md history):
   all (term, salt) groups of an Arrow batch at once: the map-side encode,
   the reduce-side merge and optimize() all end in it.  Every postings row
   is read by ONE batch decoder (_decode_rows, one vbyte pass per column):
-  the merge, optimize() and every query-side scan (query/engine.py's
-  scoring, doc-id and positions mapInArrow fns).  There is no per-group
+  the merge, optimize() and every query-side read (query/engine.py's
+  per-salt kernel, in either query placement).  There is no per-group
   Python anywhere (applyInPandas per (term,salt) group was ~2ms overhead
   x #groups; the pandas per-group merge loop after it was still most of
   the postings stage).
 - the postings table is written partitioned by pmod(xxhash64(term),
-  n_buckets): a query prunes its scan to the buckets of its terms (the
-  term-dictionary-seek analog).
+  n_buckets) (:func:`_bucket`): a query prunes its scan to the buckets of
+  its terms (the term-dictionary-seek analog).
 """
 
 from __future__ import annotations

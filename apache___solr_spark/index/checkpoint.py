@@ -50,7 +50,6 @@ def publish_manifest(
     rows: int,
     partitions: list[dict[str, Any]] | None = None,
     started_at: float,
-    extra: dict | None = None,
 ) -> None:
     m = {
         "stage": stage,
@@ -59,7 +58,6 @@ def publish_manifest(
         "rows": rows,
         "partitions": partitions or [],
         "wall_sec": round(time.time() - started_at, 3),
-        "extra": extra or {},
     }
     tmp = manifest_path(stage_dir) + ".tmp"
     with open(tmp, "w") as f:
